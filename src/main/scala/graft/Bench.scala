@@ -375,7 +375,8 @@ object Bench {
               s""""gc_sec_high":${h.gcSec},"gc_sec_low":${l.gcSec},""" +
               s""""exec_gc_sec_high":${h.execGcSec},"exec_gc_sec_low":${l.execGcSec},""" +
               s""""shuffle_mb_high":${h.shuffleMb},"shuffle_mb_low":${l.shuffleMb},""" +
-              s""""shuffle_bytes_per_edge_high":${(h.shuffleMb << 20) / math.max(1L, h.edges)},""" +
+              s""""shuffle_bytes_per_edge_high":${h.shuffleBytes / math.max(1L, h.edges)},""" +
+              s""""shuffle_bytes_per_edge_low":${l.shuffleBytes / math.max(1L, l.edges)},""" +
               s""""weak_scaling":$weakJson,""" +
               s""""box_interference":$interfJson,""" +
               s""""efficiency_box_normalized":$effNormJson,"isolation":"local-cluster subprocess"}"""
@@ -479,7 +480,7 @@ object ScalingLeg {
     val gcSec = (gcMillis - gc0) / 1e3
     println(s"""LEG {"build_sec":$sec,"edges":$edges,"warm_sec":$warm,""" +
       s""""task_sec":${taskMillis.get / 1e3},"cpu_sec":${cpuNanos.get / 1e9},""" +
-      s""""spill_mb":${spilled.get >> 20},"shuffle_mb":${shufBytes.get >> 20},"gc_sec":$gcSec,""" +
+      s""""spill_mb":${spilled.get >> 20},"shuffle_bytes":${shufBytes.get},"gc_sec":$gcSec,""" +
       s""""exec_gc_sec":${execGcMillis.get / 1e3}}""")
     s.stop()
   }
@@ -494,7 +495,9 @@ object ScalingLeg {
   final case class LegResult(
       buildSec: Double, edges: Long, warmSec: Double,
       taskSec: Double, cpuSec: Double, gcSec: Double, execGcSec: Double,
-      shuffleMb: Long = 0L)
+      shuffleBytes: Long = 0L) {
+    def shuffleMb: Long = shuffleBytes >> 20
+  }
 
   /** Spawn a child JVM running `mainClass args...` with this JVM's flags
     * (the Spark add-opens set) minus heap sizing; `heap` replaces -Xmx.
@@ -533,10 +536,15 @@ object ScalingLeg {
   def await(proc: Process): Option[LegResult] = {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
     proc.waitFor()
+    parseLeg(out)
+  }
+
+  /** The leg's result from its stdout lines (the one `LEG {...}` line). */
+  def parseLeg(out: Seq[String]): Option[LegResult] = {
     val re =
       ("""LEG \{"build_sec":([0-9.Ee+-]+),"edges":(\d+),"warm_sec":([0-9.Ee+-]+),""" +
         """"task_sec":([0-9.Ee+-]+),"cpu_sec":([0-9.Ee+-]+),"spill_mb":\d+,""" +
-        """"shuffle_mb":(\d+),"gc_sec":([0-9.Ee+-]+),""" +
+        """"shuffle_bytes":(\d+),"gc_sec":([0-9.Ee+-]+),""" +
         """"exec_gc_sec":([0-9.Ee+-]+)\}""").r
     out.collectFirst { case re(b, e, w, t, c, sh, g, eg) =>
       LegResult(b.toDouble, e.toLong, w.toDouble, t.toDouble, c.toDouble, g.toDouble, eg.toDouble,

@@ -3,6 +3,7 @@ package graft.datapipe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.util.Ckpt._
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (vec_id, embedding: array<float>, label).
@@ -239,7 +240,9 @@ object Ann {
 
   /** IVF top-k over the TRAINED assignment — same probe as [[ivfTopK]]. */
   def ivfTopKTrained(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int): DataFrame = {
-    val assigned = ivfAssignTrained(emb, nCentroids).cache()
+    // read twice (queries, candidates): a lazy checkpoint lives exactly as
+    // long as the result, and the ContextCleaner frees it after
+    val assigned = ivfAssignTrained(emb, nCentroids).lcp(eager = false)
     val q = assigned
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cell"))
@@ -277,7 +280,7 @@ object Ann {
 
   /** IVF-style bucketed ANN: each query probes only its own cell. */
   def ivfTopK(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int): DataFrame = {
-    val assigned = ivfAssign(emb, nCentroids).cache()
+    val assigned = ivfAssign(emb, nCentroids).lcp(eager = false) // as ivfTopKTrained
     val q = assigned
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cell"))

@@ -24,7 +24,7 @@ object Query {
     * what makes the per-iteration joins exchange-free. One-shot queries keep
     * AQE on — runtime re-planning stays the production default.
     */
-  private def withAqeOff[A](spark: SparkSession)(f: => A): A = {
+  private[query] def withAqeOff[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -36,6 +36,12 @@ object Query {
     * `start` keys following `edgeTypes` (reversed for impact). Returns
     * (node_key, depth) with BFS min-depth semantics.
     * (mcp/src/graph/queries.ts:616-759; cli/src/deps.rs:247, impact.rs:482)
+    *
+    * The step relation is the [[Adjacency]] leaf of `edges` for this spec:
+    * hash-partitioned on the join key ONCE per edge frame per process, and
+    * reused by every later traversal over the same frame object (it lives
+    * as long as the caller holds that frame). A call pays one exchange for
+    * the leaf only the first time; after that only frontier-sized data moves.
     */
   def expand(
       edges: DataFrame,
@@ -43,17 +49,11 @@ object Query {
       depth: Int,
       edgeTypes: Seq[String] = Nil,
       reverse: Boolean = false
-  ): DataFrame = withAqeOff(edges.sparkSession) {
-    val filtered0 = if (edgeTypes.isEmpty) edges else edges.where(col("edge_type").isin(edgeTypes: _*))
-    val step =
-      if (reverse) filtered0.select(col("dst_key").as("from"), col("src_key").as("to"))
-      else filtered0.select(col("src_key").as("from"), col("dst_key").as("to"))
-    // leaf plan for the iterative loop, PRE-PARTITIONED on the join key:
-    // localCheckpoint preserves hash partitioning, so the per-level join
-    // never re-shuffles the (large) edge relation — one upfront shuffle
-    // replaces `depth` of them; per level only frontier-sized data moves
-    val stepC = step.repartition(col("from")).lcp()
+  ): DataFrame =
+    bfs(Adjacency.leaf(edges, Seq(Adjacency.Leg(edgeTypes, forward = !reverse))), start, depth)
 
+  /** Min-depth BFS of `start` over a resident (from, to) leaf. */
+  private def bfs(leaf: DataFrame, start: DataFrame, depth: Int): DataFrame = withAqeOff(leaf.sparkSession) {
     var visited = start.select(col("node_key"), lit(0).as("depth"))
       .repartition(col("node_key")).lcp()
     var frontier = visited
@@ -63,7 +63,7 @@ object Query {
       // pre-partitioned edge leaf — no per-level sort of |E|
       val next = frontier
         .hint("shuffle_hash")
-        .join(stepC, frontier("node_key") === stepC("from"))
+        .join(leaf, frontier("node_key") === leaf("from"))
         .select(col("to").as("node_key"))
         .distinct() // on node_key alone (depth is constant this level), so
         // the dedup shuffle lands on hash(node_key) and the anti-join below
@@ -96,13 +96,9 @@ object Query {
       start: DataFrame,
       targetKey: String,
       maxDepth: Int
-  ): DataFrame = {
-    val undirected = edges
-      .select(col("src_key"), col("dst_key"))
-      .unionByName(edges.select(col("dst_key").as("src_key"), col("src_key").as("dst_key")))
-      .withColumn("edge_type", lit("ANY"))
-    expand(undirected, start, maxDepth).where(col("node_key") === targetKey)
-  }
+  ): DataFrame =
+    bfs(Adjacency.leaf(edges, Adjacency.Undirected), start, maxDepth)
+      .where(col("node_key") === targetKey)
 
   /** Parse-plan node names a pure read-only query can produce (SELECT with
     * joins/aggregates/windows/set-ops/CTEs/subqueries/TVFs). Anything
@@ -149,11 +145,9 @@ object Query {
     * big-output query and stays distributed (no driver collect).
     */
   def repoMap(nodes: DataFrame, edges: DataFrame, maxDepth: Int): DataFrame = withAqeOff(nodes.sparkSession) {
-    val contains = edges
-      .where(col("edge_type") === "CONTAINS")
-      .select(col("src_key").as("from"), col("dst_key").as("to"))
-      .repartition(col("from")) // checkpoint keeps the partitioning: the
-      .lcp(eager = false) // per-level joins re-shuffle neither relation
+    // the resident CONTAINS leaf keeps its partitioning, as does the labels
+    // checkpoint: the per-level joins re-shuffle neither relation
+    val contains = Adjacency.leaf(edges, Seq(Adjacency.Leg(Seq("CONTAINS"), forward = true)))
     val labels = nodes
       .select(col("node_key"), col("node_type"), col("name"))
       .repartition(col("node_key"))
@@ -231,7 +225,7 @@ object Query {
     * keeps only edges whose BOTH ends are in the typed projection. Two
     * left-semi prunes of the edge table against the (small) typed key set;
     * at scale both are broadcast-able dimension joins, and the pruned
-    * relation is what [[shortestPath]]'s single upfront exchange partitions.
+    * relation is what [[shortestPath]]'s resident leaf partitions.
     */
   def typeProjectedEdges(nodes: DataFrame, edges: DataFrame, types: Seq[String]): DataFrame = {
     val keys = nodes.where(col("node_type").isin(types: _*)).select("node_key")
@@ -252,17 +246,9 @@ object Query {
   ): DataFrame = withAqeOff(edges.sparkSession) {
     val spark = edges.sparkSession
     import spark.implicits._
-    val undirected = edges
-      .select(col("src_key"), col("dst_key"))
-      .unionByName(edges.select(col("dst_key").as("src_key"), col("src_key").as("dst_key")))
-      // ONE shuffle for both dedup and loop partitioning: hash(src_key)
-      // already clusters (src_key, dst_key), so dropDuplicates after the
-      // repartition is partition-local (a separate distinct() would shuffle
-      // the 2|E| relation a second time)
-      .repartition(col("src_key"))
-      .dropDuplicates("src_key", "dst_key")
-      .lcp() // partitioning survives the checkpoint — the per-level join
-    // below never re-shuffles this 2|E| relation again
+    // resident, deduplicated 2|E| leaf partitioned on `from`: the per-level
+    // join below never re-shuffles it
+    val undirected = Adjacency.leaf(edges, Adjacency.Undirected)
 
     var visited = Seq((startKey, 0, null: String)).toDF("node_key", "depth", "parent")
       .lcp()
@@ -273,8 +259,8 @@ object Query {
     while (d < maxDepth && !found && !exhausted) {
       val next = frontier
         .hint("shuffle_hash") // build on the frontier, stream the 2|E| leaf
-        .join(undirected, frontier("node_key") === undirected("src_key"))
-        .select(col("dst_key").as("node_key"), col("src_key").as("parent"))
+        .join(undirected, frontier("node_key") === undirected("from"))
+        .select(col("to").as("node_key"), col("from").as("parent"))
         .groupBy("node_key")
         .agg(min("parent").as("parent"))
         .join(visited.select("node_key"), Seq("node_key"), "left_anti")
@@ -719,7 +705,8 @@ object Query {
     * follows a PER-EDGE-TYPE direction spec — `RENDERS>|CALLS>|CONTAINS>|
     * HANDLER>|<OPERAND` — not one global direction. `spec` maps edge type →
     * forward? (true = src→dst). Each leg contributes its own directed step
-    * relation; the union feeds the same min-depth BFS loop as [[expand]].
+    * relation; their union is one resident leaf feeding the same min-depth
+    * BFS loop as [[expand]].
     */
   def expandDirected(
       edges: DataFrame,
@@ -727,13 +714,8 @@ object Query {
       depth: Int,
       spec: Seq[(String, Boolean)]
   ): DataFrame = {
-    val legs = spec.map { case (et, fwd) =>
-      val e = edges.where(col("edge_type") === et)
-      if (fwd) e.select(col("src_key"), col("dst_key"))
-      else e.select(col("dst_key").as("src_key"), col("src_key").as("dst_key"))
-    }
-    val step = legs.reduce(_ unionByName _).withColumn("edge_type", lit("ANY"))
-    expand(step, start, depth)
+    val legs = spec.map { case (et, fwd) => Adjacency.Leg(Seq(et), fwd) }
+    bfs(Adjacency.leaf(edges, legs), start, depth)
   }
 
   /** The reference subtree's tail join (queries.ts:744-759): after the

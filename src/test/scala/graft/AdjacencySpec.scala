@@ -1,0 +1,169 @@
+package graft
+
+import java.lang.ref.WeakReference
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, GraftTestHooks}
+import org.apache.spark.sql.functions._
+import graft.query.{Adjacency, Query}
+import graft.query.Adjacency.Leg
+
+/** The resident adjacency leaf behind the BFS operators (PLAN_AUDIT.md
+  * invariant: the edge relation is partitioned once per edge frame per
+  * process). Traversals over a memoized leaf must return the rows a fresh
+  * frame returns; a repeat traversal must move only frontier-sized data; a
+  * leaf must survive losing its blocks; and leaves never cross frames.
+  */
+class AdjacencySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val types = Seq("CALLS", "CONTAINS", "OPERAND")
+
+  /** A seeded random multigraph: `n` nodes, `m` typed edges, with repeated
+    * (src, dst) pairs under different types and some exact duplicate rows.
+    */
+  private def edgeRows(n: Int, m: Int, seed: Long): Seq[(String, String, String)] = {
+    val rng = new scala.util.Random(seed)
+    val base = Seq.fill(m)((types(rng.nextInt(3)), s"n${rng.nextInt(n)}", s"n${rng.nextInt(n)}"))
+    base ++ base.take(m / 20) ++ base.take(m / 20).map { case (_, s, d) => ("CALLS", s, d) }
+  }
+
+  private def frame(rows: Seq[(String, String, String)]): DataFrame =
+    rows.toDF("edge_type", "src_key", "dst_key")
+
+  /** A copy with a new object identity, hence a new leaf. */
+  private def fresh(df: DataFrame): DataFrame = df.select("*")
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  /** Driver-side min-depth BFS: the semantics every traversal must keep. */
+  private def refBfs(
+      es: Seq[(String, String, String)], legs: Seq[Leg], start: String, depth: Int): Map[String, Int] = {
+    val adj = legs.flatMap { case Leg(ts, fwd) =>
+      es.filter(e => ts.isEmpty || ts.contains(e._1)).map(e => if (fwd) e._2 -> e._3 else e._3 -> e._2)
+    }.groupMap(_._1)(_._2)
+    var dist = Map(start -> 0)
+    var frontier = Set(start)
+    var d = 0
+    while (d < depth && frontier.nonEmpty) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(dist.contains)
+      dist ++= frontier.map(_ -> (d + 1))
+      d += 1
+    }
+    dist
+  }
+
+  private def shuffleWritten(f: => Unit): Long = {
+    val sc = spark.sparkContext
+    val bytes = new AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    GraftTestHooks.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { f; GraftTestHooks.drainListeners(sc) }
+    finally sc.removeSparkListener(listener)
+    bytes.get
+  }
+
+  private val es = edgeRows(n = 400, m = 1600, seed = 7)
+  private val edges = frame(es)
+  private val start = Seq("n1").toDF("node_key")
+
+  test("forward, reverse, typed, directed-spec and undirected traversals keep their rows") {
+    def bfsRows(legs: Seq[Leg], depth: Int): Seq[String] =
+      refBfs(es, legs, "n1", depth).toSeq.map { case (k, d) => s"[$k,$d]" }.sorted
+    val undirected = bfsRows(Adjacency.Undirected, 4)
+    val target = undirected.last.stripPrefix("[").takeWhile(_ != ',')
+    val cases: Seq[(String, Seq[String], DataFrame => DataFrame)] = Seq(
+      ("forward", bfsRows(Seq(Leg(Nil, true)), 3), e => Query.expand(e, start, 3)),
+      ("reverse", bfsRows(Seq(Leg(Nil, false)), 3), e => Query.expand(e, start, 3, reverse = true)),
+      ("typed", bfsRows(Seq(Leg(Seq("CALLS", "OPERAND"), true)), 3),
+        e => Query.expand(e, start, 3, Seq("CALLS", "OPERAND"))),
+      ("directed", bfsRows(Seq(Leg(Seq("CALLS"), true), Leg(Seq("OPERAND"), false)), 3),
+        e => Query.expandDirected(e, start, 3, Seq("CALLS" -> true, "OPERAND" -> false))),
+      ("undirected", undirected.filter(_.startsWith(s"[$target,")),
+        e => Query.shortestDist(e, start, target, 4))
+    )
+    cases.foreach { case (name, expected, run) =>
+      assert(expected.nonEmpty, name)
+      assert(rows(run(edges)) == expected, name)
+      assert(rows(run(edges)) == expected, s"$name, served from the resident leaf")
+      assert(rows(run(fresh(edges))) == expected, s"$name, on a fresh copy of the frame")
+    }
+  }
+
+  test("shortestPath and repoMap keep their rows over a resident leaf") {
+    val dist = refBfs(es, Adjacency.Undirected, "n1", 4)
+    val target = dist.collectFirst { case (k, 3) => k }.get
+    val path = rows(Query.shortestPath(edges, "n1", target, 4))
+    assert(path == rows(Query.shortestPath(edges, "n1", target, 4)))
+    assert(path == rows(Query.shortestPath(fresh(edges), "n1", target, 4)))
+    assert(path.size == 1 && path.head.endsWith(",3]"), path)
+
+    val nodes = (0 until 400)
+      .map(i => (s"n$i", if (i == 1) "Corpus" else "Turn", f"name$i%03d"))
+      .toDF("node_key", "node_type", "name")
+    val map = rows(Query.repoMap(nodes, edges, 2))
+    assert(map.nonEmpty)
+    assert(map == rows(Query.repoMap(nodes, edges, 2)))
+    assert(map == rows(Query.repoMap(nodes, fresh(edges), 2)))
+  }
+
+  test("a repeat expand over the same edge frame shuffles frontier-sized data") {
+    val big = frame(edgeRows(n = 20000, m = 40000, seed = 11))
+    val firstBytes = shuffleWritten(Query.expand(big, start, 2).count())
+    val againBytes = shuffleWritten(Query.expand(big, start, 2).count())
+    assert(againBytes * 100 < firstBytes, s"repeat wrote $againBytes B, first $firstBytes B")
+  }
+
+  test("a leaf whose blocks are lost is recomputed, not failed") {
+    val e = fresh(edges)
+    val expected = rows(Query.expand(e, start, 3))
+    val rdd = GraftTestHooks.leafRdd(Adjacency.leaf(e, Seq(Leg(Nil, true))))
+    assert(GraftTestHooks.cachedPartitions(rdd) > 0)
+    GraftTestHooks.dropBlocks(rdd)
+    assert(GraftTestHooks.cachedPartitions(rdd) == 0)
+    assert(rows(Query.expand(e, start, 3)) == expected)
+    assert(rows(Query.expand(e, start, 3)) == expected)
+    // the contrast: a localCheckpoint leaf cannot come back from the same loss
+    val ckpt = e.repartition(col("src_key")).localCheckpoint()
+    GraftTestHooks.dropBlocks(GraftTestHooks.leafRdd(ckpt))
+    intercept[Exception](ckpt.collect())
+  }
+
+  test("frames with the same schema but different rows never share a leaf") {
+    val a = frame(Seq(("CALLS", "n1", "a1"), ("CALLS", "a1", "a2")))
+    val b = frame(Seq(("CALLS", "n1", "b1")))
+    assert(rows(Query.expand(a, start, 3)) == Seq("[a1,1]", "[a2,2]", "[n1,0]"))
+    assert(rows(Query.expand(b, start, 3)) == Seq("[b1,1]", "[n1,0]"))
+    assert(Adjacency.leaf(a, Seq(Leg(Nil, true))) ne Adjacency.leaf(b, Seq(Leg(Nil, true))))
+
+    // equal PLANS, different rows: two reads of one path around an overwrite
+    val dir = java.nio.file.Files.createTempDirectory("adjacency").toString
+    frame(Seq(("CALLS", "n1", "p1"))).write.mode("overwrite").parquet(dir)
+    assert(rows(Query.expand(spark.read.parquet(dir), start, 2)) == Seq("[n1,0]", "[p1,1]"))
+    frame(Seq(("CALLS", "n1", "q1"))).write.mode("overwrite").parquet(dir)
+    assert(rows(Query.expand(spark.read.parquet(dir), start, 2)) == Seq("[n1,0]", "[q1,1]"))
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
+  test("a dropped edge frame releases its leaf") {
+    // built in a method so no local of this frame outlives the call
+    def build(): (WeakReference[DataFrame], WeakReference[DataFrame]) = {
+      val e = frame(Seq(("CALLS", "n1", "x1")))
+      Query.expand(e, start, 1).count()
+      (new WeakReference(e), new WeakReference(Adjacency.leaf(e, Seq(Leg(Nil, true)))))
+    }
+    val (frameRef, leafRef) = build()
+    var tries = 0
+    while ((frameRef.get != null || leafRef.get != null) && tries < 100) {
+      System.gc()
+      Thread.sleep(20)
+      tries += 1
+    }
+    assert(frameRef.get == null, "the memo must not keep the edge frame alive")
+    assert(leafRef.get == null, "the leaf must become unreachable once its frame is gone")
+  }
+}

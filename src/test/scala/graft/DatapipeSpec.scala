@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.GraftTestHooks
 import org.apache.spark.sql.functions._
 import graft.datapipe.{Ann, DocDedup, Multimodal, TextStats}
 
@@ -40,6 +41,12 @@ class DatapipeSpec extends SparkSpec {
       .join(sh, "doc_id")
       .groupBy("h").agg(countDistinct("simhash_bits").as("k"))
     assert(dupBits.where(col("k") > 1).isEmpty, "same text -> same simhash")
+  }
+
+  test("ANN: dp_ann_ivf leaves nothing in Spark's cache manager") {
+    val before = GraftTestHooks.cachedPlans(spark)
+    assert(SparkEntry.queries("dp_ann_ivf")(spark, sf0001).collect().nonEmpty)
+    assert(GraftTestHooks.cachedPlans(spark) == before, "dp_ann_ivf registered a cached plan it never releases")
   }
 
   test("ANN: IVF results are a subset of the brute-force candidate scores") {
