@@ -42,7 +42,7 @@ object Probe {
     // later phases' numbers)
     sys.env.get("SPARK_GRAFT_PROBE") match {
       case Some("cascade") =>
-        val m0 = Mentions.extractPartitioned(spark, t).toDF().localCheckpoint()
+        val m0 = Mentions.extract(t).localCheckpoint()
         // per-job wall time: find which of the cascade's jobs eats the clock
         val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
         spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -75,7 +75,7 @@ object Probe {
         }
         spark.stop(); return
       case Some("canon") =>
-        val m0 = Mentions.extractPartitioned(spark, t).toDF().localCheckpoint()
+        val m0 = Mentions.extract(t).localCheckpoint()
         val re0 = graft.resolve.CallResolver
           .resolveEntities(spark, m0.where(col("mention_type") === "Entity"))
         val names = time("canonNames distinct (localCheckpoint)") {
@@ -182,16 +182,11 @@ object Probe {
       case _ =>
     }
 
-    val mCatalyst = time("mentions Catalyst union (count)") {
-      val m = Mentions.extract(t); m.count(); m
+    val m = time("mentions (localCheckpoint)") {
+      Mentions.extract(t).localCheckpoint()
     }
-    val mTrie = time("mentions trie mapPartitions (localCheckpoint)") {
-      Mentions.extractPartitioned(spark, t).toDF().localCheckpoint()
-    }
-    println(s"[probe] mentions rows: ${mTrie.count()}")
+    println(s"[probe] mentions rows: ${m.count()}")
 
-    locally { val _ = mCatalyst }
-    val m = mTrie
     val full = sys.env.getOrElse("SPARK_GRAFT_FULL", "1") == "1"
     if (full) {
     import graft.resolve.CallResolver

@@ -613,7 +613,7 @@ object SparkEntry {
       // is genuinely exercised, not a single-batch degenerate case
       Transcripts.fromEvents(s, dir).repartition(4).write.parquet(corpus)
       streaming.GraphStream.extractAvailable(s, corpus, s"$base/mentions", s"$base/ckpt")
-      val g = GraphBuild.buildFromMentions(
+      val g = pipeline.Stages.fromMentions(
         s,
         s.read.parquet(corpus),
         streaming.GraphStream.mentionStore(s, s"$base/mentions")

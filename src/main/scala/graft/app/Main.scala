@@ -8,12 +8,14 @@ import graft.sources.Transcripts
   *
   *   spark-submit --class graft.app.Main <jar> <sfDir> <outDir> [runId]
   *
-  * Reads the transcript corpus, runs the checkpointed build
-  * ([[CheckpointedBuild]] — per-stage snapshot commits + per-partition
-  * lineage rows), and leaves the materialized node/edge tables plus the
-  * `_lineage` metrics table under <outDir>. Re-running with the same
-  * <outDir> resumes: committed stages are read back, not recomputed
-  * (the reference's update_incremental semantics, graph_ops.rs:95-274).
+  * Reads the transcript corpus and runs the build's one stage sequence
+  * (`graft.pipeline.Stages`, the same one `GraphBuild.build` runs in memory)
+  * through [[CheckpointedBuild]], which commits every stage as a snapshot
+  * with per-partition lineage rows. Leaves the seven stage tables, among
+  * them the materialized node/edge tables, plus the `_lineage` metrics table
+  * under <outDir>. Re-running with the same <outDir> resumes: committed
+  * stages are read back, not recomputed (the reference's update_incremental
+  * semantics, graph_ops.rs:95-274).
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -11,10 +11,10 @@ import graft.schema.LineageRow
   * timing logs builder/utils.rs:235-243).
   *
   * Each completed stage writes: its output via [[SnapshotTable.commit]] and
-  * one LineageRow per partition_key (row counts + wall time). On restart,
-  * [[StageRunner.run]] skips stages whose commit exists — a killed run
-  * resumes without recomputing committed work; changed-input reprocessing is
-  * an overwrite of the affected stage dirs (new snapshot).
+  * one LineageRow per partition_key (row counts, wall time, commit time).
+  * On restart, [[StageRunner.run]] skips stages whose commit exists — a
+  * killed run resumes without recomputing committed work; changed-input
+  * reprocessing is an overwrite of the affected stage dirs (new snapshot).
   */
 object Lineage {
 
@@ -27,7 +27,7 @@ object Lineage {
       wallMs: Long
   ): Unit = {
     import spark.implicits._
-    val now = new Timestamp(0L) // deterministic for tests; wall time in wallMs
+    val now = new Timestamp(System.currentTimeMillis())
     val rows = counts.map { case (pk, n) => LineageRow(runId, stage, pk, n, wallMs, now) }
     SnapshotTable.commit(rows.toDF(), lineageTable, s"lineage-$stage")
   }

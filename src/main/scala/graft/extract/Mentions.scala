@@ -1,6 +1,6 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.schema.MentionRow
 
@@ -9,17 +9,13 @@ import graft.schema.MentionRow
   * parse/collect.rs:132-159), with rule + dictionary extractors replacing
   * tree-sitter queries.
   *
-  * Two implementations with identical output (asserted by ExtractionSpec):
-  *
-  *  - [[extract]]: pure Catalyst (regexp_extract_all / explode) — whole-stage
-  *    codegen'd, used by the oracle-checked queries.
-  *  - [[extractPartitioned]]: `mapPartitions` with a broadcast dictionary trie
-  *    compiled once per partition (the reference memoizes compiled queries in
-  *    a DashMap, ast/src/lang/mod.rs:313-322) — the scale path the north rule
-  *    names; single pass per turn, no per-row regex recompilation, and the
-  *    five mention families are fused into ONE scan of the corpus (the
-  *    reference runs 10 sequential per-file stages; SURVEY.md §3.1 notes they
-  *    fuse because all scan the same turns).
+  * One extractor, [[extract]]: a `mapPartitions` pass with a broadcast
+  * dictionary trie compiled once per partition (the reference memoizes
+  * compiled queries in a DashMap, ast/src/lang/mod.rs:313-322). The five
+  * mention families are fused into ONE scan of the corpus (the reference
+  * runs 10 sequential per-file stages; SURVEY.md §3.1 notes they fuse
+  * because all scan the same turns). ExtractionSpec compares it against a
+  * pure-Catalyst regex union kept there as the reference.
   *
   * Emitted mention_type values: Entity (dictionary alias occurrence),
   * Function (definition in tool turns / call in user turns), Endpoint (tool
@@ -28,75 +24,69 @@ import graft.schema.MentionRow
   */
 object Mentions {
 
-  /** Driver-side count of extraction-plan constructions ([[extract]] +
-    * [[extractPartitioned]]). Extraction only enters a plan through these
-    * two entry points, so a resume path that must not re-extract can be
-    * asserted by this counter staying flat (ResumeSpec).
+  /** A4 oversize skip (builder/utils.rs:13 MAX_FILE_SIZE): turns longer than
+    * this are never extracted; the build keeps them in the spine with
+    * skipped=true (the reference skips parsing such files entirely).
+    */
+  val MaxTurnChars = 500000
+
+  /** Driver-side count of extraction-plan constructions. Extraction only
+    * enters a plan through [[extract]], so a resume path that must not
+    * re-extract can be asserted by this counter staying flat (ResumeSpec).
     */
   val extractionInvocations = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Test-only row probe: when set, [[extractPartitioned]] counts every
-    * input turn it actually scans into the accumulator — the hard evidence
-    * that an incremental path feeds the extractor ONLY the changed
-    * conversations' text (MergedIncrementalSpec). None in production: the
-    * captured Option is resolved once per plan, not per row.
+  /** Test-only row probe: when set, [[extract]] counts every input turn it
+    * actually scans into the accumulator — the hard evidence that an
+    * incremental path feeds the extractor ONLY the changed conversations'
+    * text (MergedIncrementalSpec). None in production: the captured Option
+    * is resolved once per plan, not per row.
     */
   @volatile var rowProbe: Option[org.apache.spark.util.LongAccumulator] = None
 
-  /** Pure-Catalyst extraction over the six-column transcript table. */
+  /** Mentions of the six-column transcript table, as [[MentionRow]] columns.
+    * Oversize turns (A4, [[MaxTurnChars]]) are dropped before the scan.
+    */
   def extract(transcripts: DataFrame): DataFrame = {
     extractionInvocations.incrementAndGet()
+    val spark = transcripts.sparkSession
+    import spark.implicits._
+    val dictBc = spark.sparkContext.broadcast(
+      Dictionary.aliasTable.map(_._2) :+ Dictionary.hotAlias
+    )
     val t = transcripts
-    val nullS = lit(null).cast("string")
+      .where(length(col("text")) <= MaxTurnChars)
+      .select("conv_id", "turn_idx", "role", "text", "tool")
+      .as[(String, Int, String, String, Option[String])]
 
-    val entities = t
-      .select(
-        col("conv_id"),
-        col("turn_idx"),
-        lit("Entity").as("mention_type"),
-        explode(regexp_extract_all(col("text"), lit(Dictionary.aliasPattern), lit(1)))
-          .as("name"),
-        nullS.as("verb"),
-        nullS.as("path")
-      )
-
-    val handlers = t
-      .withColumn("name", regexp_extract(col("text"), Dictionary.handlerPattern, 1))
-      .where(length(col("name")) > 0)
-      .select(
-        col("conv_id"),
-        col("turn_idx"),
-        when(col("role") === "tool", "FunctionDef").otherwise("FunctionCall").as("mention_type"),
-        col("name"),
-        nullS.as("verb"),
-        nullS.as("path")
-      )
-
-    val verbPath = t
-      .withColumn("verb", regexp_extract(col("text"), Dictionary.verbPathPattern, 1))
-      .withColumn("path", regexp_extract(col("text"), Dictionary.verbPathPattern, 2))
-      .where(length(col("verb")) > 0 && col("role").isin("tool", "assistant"))
-      .select(
-        col("conv_id"),
-        col("turn_idx"),
-        when(col("role") === "tool", "Endpoint").otherwise("Request").as("mention_type"),
-        col("path").as("name"),
-        col("verb"),
-        col("path")
-      )
-
-    val tools = t
-      .where(col("tool").isNotNull)
-      .select(
-        col("conv_id"),
-        col("turn_idx"),
-        lit("Tool").as("mention_type"),
-        col("tool").as("name"),
-        nullS.as("verb"),
-        nullS.as("path")
-      )
-
-    entities.unionByName(handlers).unionByName(verbPath).unionByName(tools)
+    val probe = rowProbe // resolve the hook once, on the driver
+    t.mapPartitions { rows =>
+      // compile matchers once per partition (reference B1 query cache analog)
+      val trie = new Trie(dictBc.value)
+      val handlerRe = java.util.regex.Pattern.compile(Dictionary.handlerPattern)
+      val verbPathRe = java.util.regex.Pattern.compile(Dictionary.verbPathPattern)
+      rows.flatMap { case (conv, idx, role, text, tool) =>
+        probe.foreach(_.add(1L))
+        val out = scala.collection.mutable.ListBuffer[MentionRow]()
+        trie.scan(text).foreach { a =>
+          out += MentionRow(conv, idx, "Entity", a, None, None)
+        }
+        val hm = handlerRe.matcher(text)
+        if (hm.find()) {
+          val mt = if (role == "tool") "FunctionDef" else "FunctionCall"
+          out += MentionRow(conv, idx, mt, hm.group(1), None, None)
+        }
+        if (role == "tool" || role == "assistant") {
+          val vm = verbPathRe.matcher(text)
+          if (vm.find()) {
+            val mt = if (role == "tool") "Endpoint" else "Request"
+            out += MentionRow(conv, idx, mt, vm.group(2), Some(vm.group(1)), Some(vm.group(2)))
+          }
+        }
+        tool.foreach(tl => out += MentionRow(conv, idx, "Tool", tl, None, None))
+        out
+      }
+    }.toDF()
   }
 
   /** C6 skip-list suppression (queries/mod.rs:367-369 + the skips dir): drop
@@ -139,10 +129,6 @@ object Mentions {
       )
       .select("conv_id", "turn_idx", "name", "docs")
   }
-
-  // ---------------------------------------------------------------------
-  // mapPartitions path
-  // ---------------------------------------------------------------------
 
   /** Longest-match-at-position multi-string scanner (Aho-Corasick-lite trie).
     * Serializable; broadcast to executors and compiled once per partition.
@@ -189,47 +175,6 @@ object Mentions {
         else i += 1
       }
       out.toList
-    }
-  }
-
-  /** Scale-path extraction: one fused mapPartitions pass, broadcast trie. */
-  def extractPartitioned(spark: SparkSession, transcripts: DataFrame): Dataset[MentionRow] = {
-    extractionInvocations.incrementAndGet()
-    import spark.implicits._
-    val dictBc = spark.sparkContext.broadcast(
-      Dictionary.aliasTable.map(_._2) :+ Dictionary.hotAlias
-    )
-    val t = transcripts
-      .select("conv_id", "turn_idx", "role", "text", "tool")
-      .as[(String, Int, String, String, Option[String])]
-
-    val probe = rowProbe // resolve the hook once, on the driver
-    t.mapPartitions { rows =>
-      // compile matchers once per partition (reference B1 query cache analog)
-      val trie = new Trie(dictBc.value)
-      val handlerRe = java.util.regex.Pattern.compile(Dictionary.handlerPattern)
-      val verbPathRe = java.util.regex.Pattern.compile(Dictionary.verbPathPattern)
-      rows.flatMap { case (conv, idx, role, text, tool) =>
-        probe.foreach(_.add(1L))
-        val out = scala.collection.mutable.ListBuffer[MentionRow]()
-        trie.scan(text).foreach { a =>
-          out += MentionRow(conv, idx, "Entity", a, None, None)
-        }
-        val hm = handlerRe.matcher(text)
-        if (hm.find()) {
-          val mt = if (role == "tool") "FunctionDef" else "FunctionCall"
-          out += MentionRow(conv, idx, mt, hm.group(1), None, None)
-        }
-        if (role == "tool" || role == "assistant") {
-          val vm = verbPathRe.matcher(text)
-          if (vm.find()) {
-            val mt = if (role == "tool") "Endpoint" else "Request"
-            out += MentionRow(conv, idx, mt, vm.group(2), Some(vm.group(1)), Some(vm.group(2)))
-          }
-        }
-        tool.foreach(tl => out += MentionRow(conv, idx, "Tool", tl, None, None))
-        out
-      }
     }
   }
 }

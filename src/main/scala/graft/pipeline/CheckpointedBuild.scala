@@ -1,29 +1,22 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.checkpoint.{SnapshotTable, StageRunner}
-import graft.extract.Mentions
-import graft.link.PathNorm
-import graft.resolve.CallResolver
 
-/** The checkpointed end-to-end build: every stage commits its output to an
-  * Iceberg-shaped snapshot table with per-partition lineage rows, so a killed
-  * run resumes without recomputing committed stages — the Spark re-expression
-  * of the reference's per-stage streaming flush + incremental update
-  * (ast/src/builder/streaming.rs:95-130; ast/src/lang/graphs/graph_ops.rs:95-274).
-  *
-  * Stage graph (each committed under `baseDir/<stage>`):
-  *
-  *   transcripts  (corpus normalization; per-turn text passthrough)
-  *   mentions     (fused extraction pass — partitioned by conv_id)
-  *   resolved_calls / resolved_entities / api_links (joins over mentions)
-  *   nodes / edges (materialized graph tables; MERGE-style dedup by key)
+/** The checkpointed end-to-end build: the [[Stages]] sequence with every
+  * stage committed to an Iceberg-shaped snapshot table with per-partition
+  * lineage rows, so a killed run resumes without recomputing committed
+  * stages — the Spark re-expression of the reference's per-stage streaming
+  * flush + incremental update (ast/src/builder/streaming.rs:95-130;
+  * ast/src/lang/graphs/graph_ops.rs:95-274). Each stage commits under
+  * `baseDir/<stage>`.
   *
   * Downstream stages consume the committed READ-BACK of upstream stages
   * (StageRunner.run returns the on-disk table), so resume consumes exactly
   * the bytes a previous run committed — byte-identical outputs either way
-  * (asserted by ResumeSpec).
+  * (asserted by ResumeSpec). A resume that finds mentions/resolution
+  * snapshots on disk performs ZERO extraction and ZERO resolution work;
+  * ResumeSpec counts extractor invocations to prove it.
   */
 object CheckpointedBuild {
 
@@ -36,44 +29,22 @@ object CheckpointedBuild {
       runId: String
   ): Result = {
     val r = new StageRunner(spark, baseDir, runId)
-
-    val t = r.run("transcripts", "conv_id")(transcripts)
-    val mentions = r.run("mentions", "mention_type")(Mentions.extract(t))
-
-    val calls = mentions.where(col("mention_type") === "FunctionCall")
-    val defs = mentions.where(col("mention_type") === "FunctionDef")
-    val resolvedCalls = r.run("resolved_calls", "strategy")(
-      CallResolver.resolveCalls(calls, defs, t)
-    )
-    val resolvedEntities = r.run("resolved_entities", "strategy")(
-      CallResolver.resolveEntities(spark, mentions.where(col("mention_type") === "Entity"))
-    )
-    val apiLinks = r.run("api_links", "verb")(
-      PathNorm.linkApi(
-        mentions.where(col("mention_type") === "Request"),
-        mentions.where(col("mention_type") === "Endpoint")
-      )
-    )
-    // Nodes/edges derive from the COMMITTED upstream tables: a resume that
-    // finds mentions/resolution snapshots on disk performs ZERO extraction
-    // and ZERO resolution work — only the (cheap, declarative) node/edge
-    // materialization re-runs. ResumeSpec counts extractor invocations to
-    // prove a kill-after-mentions resume never re-extracts.
-    val g = GraphBuild.buildFromStages(spark, t, mentions,
-      resolvedCalls, resolvedEntities, apiLinks)
-    // debug-mode invariant guard: branches emit key-unique rows by
-    // construction; duplicated input rows would silently break MERGE (A6)
-    if (sys.env.getOrElse("SPARK_GRAFT_VALIDATE", "0") == "1") {
-      GraphBuild.validateKeyUniqueness(g.nodes)
-    }
-    val nodes = r.run("nodes", "node_type")(g.nodes)
-    val edges = r.run("edges", "edge_type")(g.edges)
-    Result(nodes, edges, r)
+    val validate = sys.env.getOrElse("SPARK_GRAFT_VALIDATE", "0") == "1"
+    val g = Stages.run(spark, transcripts, new Stages.Sink {
+      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
+        r.run(stage.name, stage.partitionCol) {
+          val df = compute
+          // debug-mode invariant guard, before the node table commits:
+          // branches emit key-unique rows by construction; duplicated input
+          // rows would silently break MERGE (A6)
+          if (validate && stage == Stages.Nodes) GraphBuild.validateKeyUniqueness(df)
+          df
+        }
+    })
+    Result(g.nodes, g.edges, r)
   }
 
   /** True iff every stage of a prior run committed (nothing left to do). */
   def complete(baseDir: String): Boolean =
-    Seq("transcripts", "mentions", "resolved_calls", "resolved_entities",
-      "api_links", "nodes", "edges")
-      .forall(s => SnapshotTable.stageCommitted(s"$baseDir/$s", s))
+    Stages.All.forall(s => SnapshotTable.stageCommitted(s"$baseDir/${s.name}", s.name))
 }

@@ -5,13 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.extract.Mentions
 import graft.functions.Keys
 import graft.link.PathNorm
-import graft.resolve.CallResolver
 import graft.schema.{EdgeTypes, NodeTypes}
 import graft.util.Ckpt._
 
-/** Graph materialization — the transcript analog of the reference's
-  * 15-stage `build_graph` pipeline (ast/src/builder/core.rs:48-235) fused
-  * into declarative Dataset transforms:
+/** Graph materialization — the node/edge stage of the transcript analog of
+  * the reference's 15-stage `build_graph` pipeline
+  * (ast/src/builder/core.rs:48-235). The stage sequence itself lives in
+  * [[Stages]]; this object holds its last step ([[materialize]]) and the
+  * entry points that run the sequence:
   *
   *  stages 1–3  (repository/directory/file spine)  -> [[spineNodes]]
   *  stages 5–14 (extraction passes)                -> Mentions.extract (ONE
@@ -35,9 +36,9 @@ object GraphBuild {
   final case class Graph(nodes: DataFrame, edges: DataFrame, mentions: DataFrame)
 
   /** Committed state consumed by the MERGED incremental build
-    * ([[buildMerged]]): the prior run's own outputs, re-read instead of
-    * recomputed, so corpus TEXT is only ever scanned for changed
-    * conversations.
+    * ([[Stages.fromMentions]] with stores): the prior run's own outputs,
+    * re-read instead of recomputed, so corpus TEXT is only ever scanned for
+    * changed conversations.
     *
     *  - `localNodes`: committed node rows of the text-derived, conversation-
     *    local node types (Turn / Function / Var) restricted by the caller to
@@ -102,12 +103,6 @@ object GraphBuild {
     )
   }
 
-  /** A4 oversize skip (builder/utils.rs:13 MAX_FILE_SIZE): turns longer than
-    * this are materialized in the spine with skipped=true but excluded from
-    * extraction (the reference skips parsing such files entirely).
-    */
-  val MaxTurnChars = 500000
-
   private val nullConf: Column = lit(1.0)
 
   /** Empty map<string,string> literal for branches without meta. */
@@ -136,7 +131,7 @@ object GraphBuild {
       Keys.refId(key).as("ref_id"),
       // A4 per-document content hash + oversize marker (builder/core.rs:298-364)
       sha2(body, 256).as("hash"),
-      (length(body) > MaxTurnChars).as("skipped"),
+      (length(body) > Mentions.MaxTurnChars).as("skipped"),
       // NodeData.docs + meta bag (asg.rs:66-82,144-228): docs carry attached
       // comments (B13); meta carries the typed key/value facts the build
       // computes (verb, group, role, nested_in, date, kind)
@@ -185,79 +180,19 @@ object GraphBuild {
       .unionByName(mkNodes(roles, NodeTypes.Role, col("role"), lit(""), lit(-1)))
   }
 
-  /** Full build: nodes + edges + the raw mention table. */
-  def build(spark: SparkSession, transcripts: DataFrame): Graph = {
-    // Spread the corpus across shuffle.partitions tasks keyed by conv_id
-    // BEFORE materializing: the raw input is often few/small parquet files
-    // (one scan task), which would serialize the extraction pass and every
-    // map-side stage hanging off it. At 100 TB the input table is already
-    // bucketed by conv_id and this is a no-op repartition.
-    //
-    // localCheckpoint (not cache) on the two hot tables: ~15 downstream
-    // branches hang off t/mentions, and with full lineage each branch
-    // carries the whole scan->window->extract plan through analysis + AQE
-    // re-planning — at bench scale the single-threaded driver planning
-    // dominated wall clock (~8/32 cores busy). Truncating to RDD leaves
-    // makes every branch plan O(branch), not O(pipeline). The durable-table
-    // equivalent for real clusters is CheckpointedBuild's snapshot commits.
-    // t is a LAZY local checkpoint: the eager mentions checkpoint below
-    // materializes both in ONE job (t's partitions persist as they stream
-    // through the extractor), halving the up-front barrier count.
-    // Storage-level study (scale 64, local[8] / local[2] build seconds):
-    // deserialized localCheckpoint 115/177, columnar MEMORY_AND_DISK_SER
-    // 133/363, DISK_ONLY 156/321. localCheckpoint wins THROUGHPUT at both
-    // parallelism levels (its worse 2->8 ratio is the single-box GC/memory
-    // artifact, not plan behavior) — so it stays. On a real cluster each
-    // executor holds 1/N of the checkpoint, which removes the shared-heap
-    // residency that drives the artifact.
-    val t = transcripts.repartition(col("conv_id")).lcp(eager = false)
-    // ONE fused mapPartitions pass (broadcast trie) instead of the 4-branch
-    // Catalyst regex union — identical output (asserted by ExtractionSpec);
-    // the Catalyst twin remains the oracle-checked kg_mentions surface.
-    // Oversize turns (A4) are spine-only: never fed to the extractor.
-    val m = Mentions.extractPartitioned(spark, t.where(length(col("text")) <= MaxTurnChars))
-    buildCore(spark, t, m.toDF())
-  }
-
-  /** H1 entry point: everything downstream of extraction, over a mention
-    * table maintained INCREMENTALLY (see [[Incremental]]) — the reference
-    * re-parses only changed files, then re-links the whole (much smaller)
-    * graph (graph_ops.rs:95-274).
+  /** Full build: nodes + edges + the raw mention table, every stage kept in
+    * memory.
     */
-  def buildFromMentions(spark: SparkSession, transcripts: DataFrame, mentions: DataFrame): Graph = {
-    val t = transcripts.repartition(col("conv_id")).lcp(eager = false)
-    buildCore(spark, t, mentions)
-  }
+  def build(spark: SparkSession, transcripts: DataFrame): Graph =
+    Stages.run(spark, transcripts, Stages.InMemory)
 
-  /** MERGED incremental build (the reference's remove-by-file + rebuild-
-    * changed + restore shape, graph_ops.rs:95-274, made exact): corpus text
-    * flows ONLY through `deltaT` (the changed conversations); Turn/Function/
-    * Var node rows of unchanged conversations come verbatim from the
-    * committed node table, the D16 text scan from the committed dm_hits
-    * projection, and every remaining branch — global dimensions, resolution,
-    * all edges — recomputes from the (text-free) merged mention table plus
-    * the column-pruned `fullMeta` corpus projection. Output is byte-
-    * identical to a full rebuild over the current corpus (same oracle as
-    * kg_incremental_snapshot; MergedIncrementalSpec asserts nodes AND edges
-    * equal, and that the extractor touches only changed conversations).
-    */
-  def buildMerged(
-      spark: SparkSession,
-      deltaT: DataFrame,
-      mentions: DataFrame,
-      stores: MergedStores
-  ): Graph = {
-    val t = deltaT.repartition(col("conv_id")).lcp(eager = false)
-    buildCore(spark, t, mentions, merged = Some(stores))
-  }
-
-  /** Resume entry point for [[CheckpointedBuild]]: EVERY expensive upstream
-    * stage — mentions, call resolution, entity resolution, api links — is a
-    * committed table read back from disk, so a resumed run performs zero
-    * extraction and zero resolution work (ResumeSpec counts extractor
-    * invocations to prove it). `resolvedEntities` is the pre-canonicalization
-    * table (what `resolved_entities` commits); clustering still runs here —
-    * it operates on the tiny canonical dimension, not the corpus.
+  /** The stage sequence over upstream stages that are already committed
+    * tables read back from disk: mentions, call resolution, entity
+    * resolution and api links are served as given, so this performs zero
+    * extraction and zero resolution work. `resolvedEntities` is the
+    * pre-canonicalization table (what `resolved_entities` commits);
+    * clustering still runs — it operates on the tiny canonical dimension,
+    * not the corpus.
     */
   def buildFromStages(
       spark: SparkSession,
@@ -267,50 +202,40 @@ object GraphBuild {
       resolvedEntities: DataFrame,
       apiLinks: DataFrame
   ): Graph = {
-    val t = transcripts.repartition(col("conv_id")).lcp(eager = false)
-    buildCore(spark, t, mentions, Some(resolvedCalls), Some(resolvedEntities), Some(apiLinks))
+    val committed = Map(
+      Stages.Transcripts -> transcripts,
+      Stages.MentionTable -> mentions,
+      Stages.ResolvedCalls -> resolvedCalls,
+      Stages.ResolvedEntities -> resolvedEntities,
+      Stages.ApiLinks -> apiLinks)
+    Stages.run(spark, transcripts, new Stages.Sink {
+      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
+        committed.getOrElse(stage, compute)
+    })
   }
 
-  private def buildCore(
+  /** The node/edge stage: everything downstream of resolution. `t` is the
+    * conv_id-partitioned corpus checkpoint and `tMeta` its text-free twin
+    * (in merged mode `t` holds only the changed conversations and `tMeta`
+    * spans the whole corpus); `mentions` is checkpointed;
+    * `resolvedEntities0` is pre-canonicalization.
+    */
+  private[pipeline] def materialize(
       spark: SparkSession,
       t: DataFrame,
-      mentions0: DataFrame,
-      preResolvedCalls: Option[DataFrame] = None,
-      preResolvedEntities: Option[DataFrame] = None,
-      preApiLinks: Option[DataFrame] = None,
-      merged: Option[MergedStores] = None
+      tMeta: DataFrame,
+      mentions: DataFrame,
+      resolvedCalls0: DataFrame,
+      resolvedEntities0: DataFrame,
+      apiLinks: DataFrame,
+      merged: Option[MergedStores]
   ): Graph = {
-    // dev-only stage timing (SPARK_GRAFT_PROBE=1): prints the eager steps of
-    // graph construction so plan-build cost is attributable
-    val probeOn = sys.env.contains("SPARK_GRAFT_PROBE")
-    def probe[A](label: String)(f: => A): A =
-      if (!probeOn) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[buildcore] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    val mentions = probe("mentions lcp")(mentions0.lcp())
-    // Text-free twin of the corpus checkpoint: ~6 dimension/edge branches
-    // need only (conv_id, turn_idx, role, tool) but an RDD-leaf scan always
-    // deserializes whole rows — through the narrow twin they move ~10% of
-    // the bytes. Costs one extra full scan to build; saves one per branch.
-    // In MERGED mode `t` carries only the CHANGED conversations; the
-    // text-free meta twin must still span the whole corpus (spine dims,
-    // containment/role/tool edges, import sections, call resolution), so it
-    // comes from the stores' column-pruned full-corpus projection instead.
-    val tMeta = merged
-      .map(_.fullMeta.select("conv_id", "turn_idx", "role", "tool").lcp(eager = false))
-      .getOrElse(t.select("conv_id", "turn_idx", "role", "tool").lcp(eager = false))
     // changed-conversation dimension (merged mode only): scopes the
     // text-derived node branches to the delta so committed rows merge
     // without duplication
     lazy val deltaConvs = broadcast(t.select("conv_id").distinct())
 
-    val entityM = mentions.where(col("mention_type") === "Entity")
     val fnDefs = mentions.where(col("mention_type") === "FunctionDef")
-    val fnCalls = mentions.where(col("mention_type") === "FunctionCall")
     val endpoints = mentions.where(col("mention_type") === "Endpoint")
     val requests = mentions.where(col("mention_type") === "Request")
     val tools = mentions.where(col("mention_type") === "Tool")
@@ -322,26 +247,21 @@ object GraphBuild {
     // `sparkengine` into `spark`), and entity identity becomes the cluster
     // label. The cluster dimension is tiny (distinct canonicals), so the CC
     // loop runs on a broadcast-scale table regardless of corpus size.
-    val resolvedEntities0 =
-      preResolvedEntities.getOrElse(CallResolver.resolveEntities(spark, entityM))
-    // one eager materialization of the tiny canonical dimension: every CC
+    // One eager materialization of the tiny canonical dimension: every CC
     // consumer (vertices, shingles, candidate pairs) reads the 8-row leaf
     // instead of re-scanning the full mention table per use
-    val canonNames = probe("canonNames lcp")(resolvedEntities0
+    val canonNames = resolvedEntities0
       .select(col("canonical").as("name"))
       .distinct()
-      .lcp())
-    val clusters = probe("canon CC")(graft.canon.Canon
+      .lcp()
+    val clusters = graft.canon.Canon
       .clusters(canonNames, 0.3)
-      .withColumnRenamed("name", "canonical"))
+      .withColumnRenamed("name", "canonical")
     val resolvedEntities = resolvedEntities0
       .join(broadcast(clusters), Seq("canonical"))
       .withColumn("canonical", col("cluster"))
       .drop("cluster")
-    val resolvedCalls = probe("resolveCalls")(
-      preResolvedCalls.getOrElse(CallResolver.resolveCalls(fnCalls, fnDefs, tMeta)).cache())
-    val apiLinks = preApiLinks.getOrElse(PathNorm.linkApi(requests, endpoints))
-    val sectionT0 = System.nanoTime()
+    val resolvedCalls = resolvedCalls0.cache()
 
     // B9 nested scopes via a genuine non-equi RANGE join
     // (lang/mod.rs:667-706): a request is NESTED_IN the nearest preceding
@@ -427,10 +347,10 @@ object GraphBuild {
         .select(col("topic"), col("cluster"))
         .distinct()
     }
-    val planned = probe("batch plan (lcpAll x10)")(graft.util.Ckpt.lcpAll(Seq(
+    val planned = graft.util.Ckpt.lcpAll(Seq(
       nested0Raw, instanceIdsRaw, fnNodes0Raw, epIdsRaw,
       varNodesRaw, e2eRowsRaw, pageIdsRaw, dmWithinRaw,
-      pkgPairsRaw, conceptMembersRaw)))
+      pkgPairsRaw, conceptMembersRaw))
     val nested0 = planned(0)
     val instanceIds = planned(1)
     val fnNodes0 = planned(2)
@@ -630,12 +550,12 @@ object GraphBuild {
     // with NO global dedup either, so parity checks the invariant every
     // round; the write path (SnapshotTable overwrite) supplies MERGE-on-
     // rewrite semantics for incremental runs.
-    val nodes = probe("nodes union")(
+    val nodes =
       Seq(spine, toolNodes, entityNodes, fnNodes, stubNodes, epNodes, reqNodes,
         importNodes, pageNodes, groupNodes, instanceNodes, dmNodes, varNodes,
         integTestNodes, e2eTestNodes, classNodes, traitNodes, unitTestNodes, mockNodes,
         packageNodes, conceptNodes)
-        .reduce(_ unionByName _))
+        .reduce(_ unionByName _)
 
     // --- edges ---------------------------------------------------------
     def edgeC(et: Column, src: Column, dst: Column, conf: Column = nullConf,
@@ -706,7 +626,7 @@ object GraphBuild {
     val fnFirstDef = fnNodes0.select(col("name"), col("conv_id").as("resolved_conv"),
       col("turn_idx").as("def_turn"))
     // 2 consumers (turn-src + test-src edges): share the resolved-target join
-    val resolvedTargets = probe("resolvedTargets lcp")(resolvedCalls
+    val resolvedTargets = resolvedCalls
       .join(
         fnFirstDef.withColumnRenamed("name", "resolved_name"),
         Seq("resolved_name", "resolved_conv"),
@@ -715,7 +635,7 @@ object GraphBuild {
         "target_key",
         when(col("def_turn").isNull, fnKey(col("name"), lit("unverified"), lit(-1)))
           .otherwise(fnKey(col("resolved_name"), col("resolved_conv"), col("def_turn"))))
-      .lcp(eager = false))
+      .lcp(eager = false)
     val callsFn = resolvedTargets
       .select(edgeC(
         callEdgeType,
@@ -940,8 +860,6 @@ object GraphBuild {
     // mention per turn, distinct'd dimension inputs). A global distinct()
     // would re-shuffle all ~N_edges wide rows to eliminate nothing — the
     // oracle's SELECT DISTINCT edges proves the no-dup invariant each round.
-
-    probe(f"node/edge construction section (${(System.nanoTime() - sectionT0) / 1e9}%.2f s actual)")(())
     Graph(nodes, edges, mentions)
   }
 }

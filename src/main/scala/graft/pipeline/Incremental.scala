@@ -10,7 +10,9 @@ import graft.util.Ckpt._
   * `update_incremental` (ast/src/lang/graphs/graph_ops.rs:95-274): diff the
   * COMMITTED per-conversation fingerprint table against the current corpus
   * at conversation granularity, re-extract only the changed conversations,
-  * and rebuild the graph from the incrementally-maintained mention table.
+  * and rebuild the graph from the incrementally-maintained mention table by
+  * entering the build's stage sequence at its mentions stage
+  * ([[Stages.fromMentions]]), as the reference re-runs its one pipeline.
   *
   * The previous corpus is NEVER re-scanned: change detection consumes only
   * the committed fingerprint dimension (one 32-char hash per conversation)
@@ -88,13 +90,7 @@ object Incremental {
       newT: DataFrame
   ): GraphBuild.Graph = {
     val p = plan(committedFps, committedMentions, newT)
-    val deltaMentions = Mentions
-      .extractPartitioned(
-        spark,
-        p.deltaT.where(length(col("text")) <= GraphBuild.MaxTurnChars)
-      )
-      .toDF()
-    GraphBuild.buildFromMentions(spark, newT, p.unchangedMentions.unionByName(deltaMentions))
+    Stages.fromMentions(spark, newT, p.unchangedMentions.unionByName(Mentions.extract(p.deltaT)))
   }
 
   /** Commit the incremental inputs of a completed run: the mention table and
@@ -246,16 +242,7 @@ object Incremental {
       baseDir: String,
       corpusTable: String
   ): GraphBuild.Graph = {
-    val probeOn = sys.env.contains("SPARK_GRAFT_PROBE")
-    def probe[A](label: String)(f: => A): A =
-      if (!probeOn) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[mergedstore] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    val p = probe("planFromSnapshots")(planFromSnapshots(spark, baseDir, corpusTable))
+    val p = planFromSnapshots(spark, baseDir, corpusTable)
     def stored(name: String) = SnapshotTable
       .read(spark, s"$baseDir/$name")
       .getOrElse(sys.error(s"no committed $name table under $baseDir"))
@@ -263,29 +250,23 @@ object Incremental {
     val committedNodes = stored("nodes_store")
     val committedDmHits = stored("dm_hits")
     val newT = SnapshotTable.read(spark, corpusTable).get
-    val changed = probe("changed lcp")(p.changed.lcp())
-    val gone = probe("gone lcp")(p.removed.lcp())
+    val changed = p.changed.lcp()
+    val gone = p.removed.lcp()
     def unchangedOnly(df: DataFrame) = df
       .join(broadcast(changed), Seq("conv_id"), "left_anti")
       .join(broadcast(gone), Seq("conv_id"), "left_anti")
     val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
-    val deltaMentions = Mentions
-      .extractPartitioned(
-        spark,
-        deltaT.where(length(col("text")) <= GraphBuild.MaxTurnChars)
-      )
-      .toDF()
     val localNodes = unchangedOnly(
       committedNodes.where(
         col("node_type").isin(GraphBuild.MergedLocalTypes: _*) &&
           col("conv_id") =!= "unverified"))
     val dmHitsAll = unchangedOnly(committedDmHits)
       .unionByName(GraphBuild.dmHitsProjection(spark, deltaT))
-    probe("buildMerged total")(GraphBuild.buildMerged(
+    Stages.fromMentions(
       spark,
       deltaT,
-      unchangedOnly(mentions).unionByName(deltaMentions),
-      GraphBuild.MergedStores(localNodes, dmHitsAll, newT)))
+      unchangedOnly(mentions).unionByName(Mentions.extract(deltaT)),
+      Some(GraphBuild.MergedStores(localNodes, dmHitsAll, newT)))
   }
 
   /** End-to-end snapshot-metadata incremental: manifest diff in, full graph
@@ -308,12 +289,6 @@ object Incremental {
       .join(changed, Seq("conv_id"), "left_anti")
       .join(p.removed, Seq("conv_id"), "left_anti")
     val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
-    val deltaMentions = Mentions
-      .extractPartitioned(
-        spark,
-        deltaT.where(length(col("text")) <= GraphBuild.MaxTurnChars)
-      )
-      .toDF()
-    GraphBuild.buildFromMentions(spark, newT, unchangedMentions.unionByName(deltaMentions))
+    Stages.fromMentions(spark, newT, unchangedMentions.unionByName(Mentions.extract(deltaT)))
   }
 }

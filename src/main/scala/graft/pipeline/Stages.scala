@@ -1,0 +1,141 @@
+package graft.pipeline
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.extract.Mentions
+import graft.link.PathNorm
+import graft.resolve.CallResolver
+import graft.util.Ckpt._
+
+/** The build's stage sequence, written once — the analog of the reference's
+  * single staged `build_graph` (ast/src/builder/core.rs:48-235), which its
+  * incremental update re-runs over the changed files
+  * (graph_ops.rs:95-274):
+  *
+  *   transcripts -> mentions -> resolved_calls, resolved_entities, api_links
+  *               -> nodes, edges
+  *
+  * Every caller runs this sequence; they differ only in the [[Sink]] each
+  * stage's output goes through:
+  *
+  *  - [[CheckpointedBuild]] (the production job, `graft.app.Main`) commits
+  *    each stage through `StageRunner.run` — snapshot commit, read-back,
+  *    lineage — so a resumed run reads committed stages instead of
+  *    computing them;
+  *  - [[GraphBuild.build]] keeps every stage in memory ([[InMemory]]);
+  *  - [[GraphBuild.buildFromStages]] serves already-committed upstream
+  *    tables back to the sequence.
+  *
+  * Incremental builds and streaming ingest maintain the mention table
+  * themselves and enter at the mentions stage ([[fromMentions]]).
+  */
+object Stages {
+
+  /** One stage of the sequence: the table it commits and the column its
+    * lineage rows count by. Stages are declared only below, so [[All]] is
+    * the complete list the sequence can reach.
+    */
+  final class Stage private[Stages] (val name: String, val partitionCol: String)
+
+  private val declared = scala.collection.mutable.ArrayBuffer.empty[Stage]
+  private def stage(name: String, partitionCol: String): Stage = {
+    val s = new Stage(name, partitionCol)
+    declared += s
+    s
+  }
+
+  val Transcripts: Stage = stage("transcripts", "conv_id")
+  val MentionTable: Stage = stage("mentions", "mention_type")
+  val ResolvedCalls: Stage = stage("resolved_calls", "strategy")
+  val ResolvedEntities: Stage = stage("resolved_entities", "strategy")
+  val ApiLinks: Stage = stage("api_links", "verb")
+  val Nodes: Stage = stage("nodes", "node_type")
+  val Edges: Stage = stage("edges", "edge_type")
+
+  /** Every stage, in the order [[run]] reaches them. */
+  val All: Seq[Stage] = declared.toList
+
+  /** Where a stage's output goes. Returns the frame later stages read;
+    * `compute` is by-name so a sink that already holds the stage (a resumed
+    * run) never builds its plan.
+    */
+  trait Sink {
+    def apply(stage: Stage)(compute: => DataFrame): DataFrame
+  }
+
+  /** Keeps every stage in this process: later stages read the stage's plan
+    * itself, truncated only by the local checkpoints the sequence takes for
+    * every sink (corpus, mentions and the node/edge stage's shared
+    * subtrees).
+    */
+  object InMemory extends Sink {
+    def apply(stage: Stage)(compute: => DataFrame): DataFrame = compute
+  }
+
+  /** The full sequence over a transcript corpus. */
+  def run(spark: SparkSession, transcripts: DataFrame, sink: Sink): GraphBuild.Graph =
+    sequence(spark, transcripts, sink, Mentions.extract, merged = None)
+
+  /** The sequence over a mention table the caller maintains (H1 and
+    * snapshot incremental builds, streaming ingest) — the reference
+    * re-parses only changed files, then re-links the whole (much smaller)
+    * graph (graph_ops.rs:95-274). `transcripts` is the whole current corpus.
+    *
+    * With `merged` (the reference's remove-by-file + rebuild-changed +
+    * restore shape, made exact): corpus text flows ONLY through
+    * `transcripts`, which then holds just the changed conversations;
+    * Turn/Function/Var node rows of unchanged conversations come verbatim
+    * from the committed node table, the D16 text scan from the committed
+    * dm_hits projection, and every remaining branch — global dimensions,
+    * resolution, all edges — recomputes from the (text-free) merged mention
+    * table plus the column-pruned full-corpus projection
+    * ([[GraphBuild.MergedStores]]). Output is byte-identical to a full
+    * rebuild over the current corpus (MergedIncrementalSpec).
+    */
+  def fromMentions(
+      spark: SparkSession,
+      transcripts: DataFrame,
+      mentions: DataFrame,
+      merged: Option[GraphBuild.MergedStores] = None
+  ): GraphBuild.Graph =
+    sequence(spark, transcripts, InMemory, _ => mentions, merged)
+
+  private def sequence(
+      spark: SparkSession,
+      transcripts: DataFrame,
+      sink: Sink,
+      mentionsOf: DataFrame => DataFrame,
+      merged: Option[GraphBuild.MergedStores]
+  ): GraphBuild.Graph = {
+    // Spread the corpus across shuffle.partitions tasks keyed by conv_id
+    // before anything reads it: the raw input is often few/small parquet
+    // files (one scan task), which would serialize the extraction pass and
+    // every map-side stage hanging off it. At 100 TB the input table is
+    // already bucketed by conv_id and this is a no-op repartition.
+    // The checkpoint is LAZY: the first job that runs extraction over it
+    // materializes both together.
+    val t = sink(Transcripts)(transcripts).repartition(col("conv_id")).lcp(eager = false)
+    // localCheckpoint (not cache) on the two hot tables: ~15 downstream
+    // branches hang off t/mentions, and with full lineage each branch
+    // carries the whole scan->extract plan through analysis + AQE
+    // re-planning. Truncating to RDD leaves makes every branch plan
+    // O(branch), not O(pipeline).
+    val mentions = sink(MentionTable)(mentionsOf(t)).lcp()
+    // Text-free twin of the corpus checkpoint: resolution and ~6 dimension/
+    // edge branches need only (conv_id, turn_idx, role, tool), but an
+    // RDD-leaf scan always deserializes whole rows — through the narrow twin
+    // they move ~10% of the bytes. In merged mode `t` carries only the
+    // changed conversations, so the twin comes from the stores' column-
+    // pruned full-corpus projection instead.
+    val tMeta = merged.fold(t)(_.fullMeta)
+      .select("conv_id", "turn_idx", "role", "tool").lcp(eager = false)
+    def ofType(mt: String) = mentions.where(col("mention_type") === mt)
+    val calls = sink(ResolvedCalls)(
+      CallResolver.resolveCalls(ofType("FunctionCall"), ofType("FunctionDef"), tMeta))
+    val entities = sink(ResolvedEntities)(CallResolver.resolveEntities(spark, ofType("Entity")))
+    val links = sink(ApiLinks)(PathNorm.linkApi(ofType("Request"), ofType("Endpoint")))
+    // lazy: a run whose node and edge tables are already committed plans neither
+    lazy val g = GraphBuild.materialize(spark, t, tMeta, mentions, calls, entities, links, merged)
+    GraphBuild.Graph(sink(Nodes)(g.nodes), sink(Edges)(g.edges), mentions)
+  }
+}

@@ -1,18 +1,16 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.extract.Mentions
-import graft.pipeline.GraphBuild
 
 /** Streaming KG ingest — the Structured Streaming twin of the batch build's
   * extraction front end. The reference re-batches on a git revision
   * (ast/src/lang/graphs/graph_ops.rs:95 update_incremental); a transcript
   * corpus at 100 TB instead ARRIVES continuously, and the natural Spark
   * shape is: corpus table as a file stream → the per-turn mention extractor
-  * (a stateless, whole-stage-codegen'd projection — streaming-safe by
-  * construction) → an exactly-once parquet sink.
+  * (the batch build's own `Mentions.extract`, a stateless per-partition
+  * pass — streaming-safe by construction) → an exactly-once parquet sink.
   *
   * Scale/resume properties this buys for free from Structured Streaming:
   *  - each micro-batch extracts ONLY its new files (delta-only work, the
@@ -20,10 +18,11 @@ import graft.pipeline.GraphBuild
   *  - the file-source + file-sink pair is exactly-once under the query
   *    checkpoint: a killed and restarted query neither re-extracts nor
   *    duplicates committed batches (StreamingSpec proves both);
-  *  - the accumulated mention table feeds [[GraphBuild.buildFromMentions]]
-  *    unchanged, so the materialized graph is byte-identical to the batch
-  *    build over the same corpus (the st_graph_ingest oracle is the
-  *    kg_graph_size oracle).
+  *  - the accumulated mention table enters the batch build's stage
+  *    sequence at its mentions stage ([[graft.pipeline.Stages.fromMentions]]),
+  *    so the materialized graph is byte-identical to the batch build over
+  *    the same corpus (the st_graph_ingest oracle is the kg_graph_size
+  *    oracle).
   */
 object GraphStream {
 
@@ -48,10 +47,7 @@ object GraphStream {
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(corpusDir)
-    // same pre-extraction gate as the batch build (A4 oversize skip)
-    val mentions = Mentions.extract(
-      stream.where(length(col("text")) <= GraphBuild.MaxTurnChars)
-    )
+    val mentions = Mentions.extract(stream)
     val q = mentions.writeStream
       .format("parquet")
       .option("path", sinkDir)

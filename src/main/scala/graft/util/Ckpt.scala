@@ -18,16 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * downstream read. On a real cluster the same win holds per-executor
   * (fewer size-sampling walks, compact blocks); executors are typically
   * 4-8 cores, so the contention term is smaller but never negative.
-  *
-  * `SPARK_GRAFT_CKPT_LEVEL` overrides (any `StorageLevel.fromString` name)
-  * for A/B measurement.
   */
 object Ckpt {
 
-  val level: StorageLevel = sys.env
-    .get("SPARK_GRAFT_CKPT_LEVEL")
-    .map(StorageLevel.fromString)
-    .getOrElse(StorageLevel.MEMORY_AND_DISK_SER)
+  val level: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER
 
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
 
@@ -41,7 +35,7 @@ object Ckpt {
     * full analysis + optimization + physical planning, at call time — pure
     * single-threaded driver CPU. The graph build checkpoints ~8 independent
     * mention-derived subtrees back to back, and that sequential planning was
-    * measured at 3.2-3.7 s of every build (SPARK_GRAFT_PROBE breakdown);
+    * measured at 3.2-3.7 s of every build (per-step timing of the build);
     * planning them on parallel driver threads collapses it to ~the slowest
     * single subtree. Catalyst analysis of INDEPENDENT Datasets is
     * thread-safe (concurrent actions on one session are a supported core

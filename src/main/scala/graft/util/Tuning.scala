@@ -39,23 +39,6 @@ object Tuning {
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000"
   )
 
-  /** Experiment overrides: `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"` applied
-    * AFTER the pinned confs — a dev knob for A/B-ing engine conf (e.g.
-    * `spark.rdd.compress=true`) through the bench and scaling legs without
-    * a rebuild. Empty/unset = the pinned configuration exactly.
-    */
-  private def extra: Seq[(String, String)] =
-    sys.env
-      .get("SPARK_GRAFT_EXTRA_CONF")
-      .toSeq
-      .flatMap(_.split(';'))
-      .map(_.trim)
-      .filter(_.contains('='))
-      .map { kv =>
-        val i = kv.indexOf('=')
-        (kv.take(i).trim, kv.drop(i + 1).trim)
-      }
-
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    (confs ++ extra).foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+    confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 }

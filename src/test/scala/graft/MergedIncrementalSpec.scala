@@ -65,7 +65,7 @@ class MergedIncrementalSpec extends SparkSpec {
       } finally Mentions.rowProbe = None
     val changedTurns = v2
       .where(col("conv_id").isin(expChanged.toSeq: _*))
-      .where(length(col("text")) <= GraphBuild.MaxTurnChars)
+      .where(length(col("text")) <= Mentions.MaxTurnChars)
       .count()
     assert(probe.value == changedTurns,
       s"extractor scanned ${probe.value} turns; only the $changedTurns changed-conv turns allowed")

@@ -1,9 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{SnapshotTable, StageRunner}
-import graft.pipeline.CheckpointedBuild
+import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.extract.Mentions
 
 /** Resume-from-checkpoint idempotence (north rule; reference
@@ -14,8 +15,7 @@ import graft.extract.Mentions
   */
 class ResumeSpec extends SparkSpec {
 
-  private val stages = Seq("transcripts", "mentions", "resolved_calls",
-    "resolved_entities", "api_links", "nodes", "edges")
+  private val stages = Stages.All.map(_.name)
 
   private def snapIds(base: String): Map[String, Option[Int]] =
     stages.map(s => s -> SnapshotTable.latestSnapshotId(s"$base/$s")).toMap
@@ -66,7 +66,9 @@ class ResumeSpec extends SparkSpec {
   test("lineage rows carry per-partition counts and stage metrics") {
     val t = SparkTestSession.transcripts
     val dir = Files.createTempDirectory("graft-lineage").toString
+    val start = new java.sql.Timestamp(System.currentTimeMillis())
     val res = CheckpointedBuild.run(spark, t, dir, "run-lin")
+    val end = new java.sql.Timestamp(System.currentTimeMillis())
     val lin = graft.checkpoint.Lineage.read(spark, res.runner.lineageDir)
     val byStage = lin.groupBy("stage").agg(sum("row_count").as("rows")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -75,12 +77,34 @@ class ResumeSpec extends SparkSpec {
     assert(byStage("mentions") == Mentions.extract(t).count())
     assert(byStage("nodes") == res.nodes.count())
     assert(byStage("edges") == res.edges.count())
-    // every stage recorded wall time
+    // every stage recorded wall time, and its commit time within the run
     assert(lin.where(col("wall_ms") < 0).isEmpty)
+    assert(lin.where(col("committed_at") < lit(start) || col("committed_at") > lit(end)).isEmpty,
+      s"lineage rows must be stamped within the run [$start, $end]")
     // partition keys are real values of the partition column
     val mentionPks = lin.where(col("stage") === "mentions")
       .select("partition_key").collect().map(_.getString(0)).toSet
     assert(mentionPks.contains("Entity"))
+  }
+
+  test("committed and in-memory builds hold the same nodes, edges and mentions") {
+    val dir = Files.createTempDirectory("graft-sinks").toString
+    val res = CheckpointedBuild.run(spark, SparkTestSession.transcripts, dir, "run-sinks")
+    val g = SparkTestSession.graph
+    assertSameRows(g.nodes, res.nodes)
+    assertSameRows(g.edges, res.edges)
+    assertSameRows(g.mentions, SnapshotTable.read(spark, s"$dir/mentions").get)
+  }
+
+  test("the stage sequence reaches exactly Stages.All, in order") {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    Stages.run(spark, SparkTestSession.transcripts, new Stages.Sink {
+      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame = {
+        seen += stage.name
+        compute
+      }
+    })
+    assert(seen == stages)
   }
 
   test("H1 incremental: only changed conversations re-extract; output equals full rebuild") {

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.GraphBuild
+import graft.extract.Mentions
+import graft.pipeline.{CheckpointedBuild, GraphBuild}
 
 /** North-rule invariants on the corpus itself:
   *  - stable (conv_id, turn_idx) ordering: turn_idx is dense 0..n-1 per
@@ -66,15 +67,20 @@ class TranscriptSpec extends SparkSpec {
     GraphBuild.validateKeyUniqueness(SparkTestSession.graph.nodes)
   }
 
-  test("A4: oversize turns keep their spine node (skipped=true) but are never extracted") {
+  /** A4 fixture: turn 1 is longer than the size limit and full of aliases. */
+  private def oversizeFixture = {
     import spark.implicits._
-    val big = "Postgres " * (GraphBuild.MaxTurnChars / 9 + 2) // > MaxTurnChars, full of aliases
+    val big = "Postgres " * (Mentions.MaxTurnChars / 9 + 2) // > MaxTurnChars, full of aliases
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    val t = Seq(
+    Seq(
       ("conv-000900-x", 0, "user", "please check Postgres", None: Option[String], ts),
       ("conv-000900-x", 1, "user", big, None: Option[String], ts)
     ).toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val g = GraphBuild.build(spark, t)
+  }
+
+  test("A4: oversize turns keep their spine node (skipped=true) but are never extracted") {
+    import spark.implicits._
+    val g = GraphBuild.build(spark, oversizeFixture)
     val turns = g.nodes.where(col("node_type") === "Turn")
       .select("turn_idx", "skipped").as[(Int, Boolean)].collect().toMap
     assert(turns == Map(0 -> false, 1 -> true))
@@ -87,5 +93,13 @@ class TranscriptSpec extends SparkSpec {
       .select("hash").as[String].head()
     assert(h == java.security.MessageDigest.getInstance("SHA-256")
       .digest("please check Postgres".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+  }
+
+  test("A4: the committed build extracts nothing from oversize turns") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-a4").toString
+    val res = CheckpointedBuild.run(spark, oversizeFixture, dir, "run-a4")
+    val mentions = graft.checkpoint.SnapshotTable.read(spark, s"$dir/mentions").get
+    assert(mentions.where(col("turn_idx") === 1).isEmpty)
+    assert(res.edges.where(col("edge_type") === "MENTIONS").count() == 1)
   }
 }
