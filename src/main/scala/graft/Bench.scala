@@ -168,7 +168,7 @@ object Bench {
     * per-rep deltas go into the bench JSON so a slow rep is attributable
     * (GC residency vs genuine compute) instead of guessed at.
     */
-  private def gcMillis: Long = {
+  private[graft] def gcMillis: Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime)
@@ -475,21 +475,14 @@ object ScalingLeg {
         }
       }
     })
-    val gc0 = gcMillis
+    val gc0 = Bench.gcMillis
     val (sec, _, edges, warm) = Bench.timedBuild(s, sfDir, scale)
-    val gcSec = (gcMillis - gc0) / 1e3
+    val gcSec = (Bench.gcMillis - gc0) / 1e3
     println(s"""LEG {"build_sec":$sec,"edges":$edges,"warm_sec":$warm,""" +
       s""""task_sec":${taskMillis.get / 1e3},"cpu_sec":${cpuNanos.get / 1e9},""" +
       s""""spill_mb":${spilled.get >> 20},"shuffle_bytes":${shufBytes.get},"gc_sec":$gcSec,""" +
       s""""exec_gc_sec":${execGcMillis.get / 1e3}}""")
     s.stop()
-  }
-
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime)
-      .sum
   }
 
   final case class LegResult(
@@ -607,25 +600,18 @@ object HeadlineLeg {
     val s = Bench.session(cpus, parts)
     Bench.aqe(s, on = false)
     Bench.timedBuild(s, sfDir, math.max(1, scale / 8))
-    var gcPrev = { Bench.purgeExcept(s, Set.empty); System.gc(); gcMillis }
+    var gcPrev = { Bench.purgeExcept(s, Set.empty); System.gc(); Bench.gcMillis }
     (1 to reps).foreach { _ =>
       val (sec, nodes, edges, warm) = Bench.timedBuild(s, sfDir, scale)
       Bench.purgeExcept(s, Set.empty)
       System.gc()
-      val gcNow = gcMillis
+      val gcNow = Bench.gcMillis
       println(
         s"""HLEG {"build_sec":$sec,"nodes":$nodes,"edges":$edges,""" +
           s""""warm_sec":$warm,"gc_sec":${(gcNow - gcPrev) / 1e3}}""")
       gcPrev = gcNow
     }
     s.stop()
-  }
-
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime)
-      .sum
   }
 
   /** Run one rep child (carrying `reps` timed builds — boot + warmup

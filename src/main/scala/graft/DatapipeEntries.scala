@@ -261,7 +261,7 @@ FROM documents""",
 WITH filled AS (
   SELECT vec_id, label,
          CASE WHEN vec_id % 7 = 0
-              THEN list_transform(range(0, 64),
+              THEN list_transform(range(0, len(embedding)),
                    i -> CAST((vec_id*31 + i) % 997 AS REAL) / CAST(997 AS REAL))
               ELSE embedding END AS embedding,
          (vec_id % 7 = 0) AS backfilled

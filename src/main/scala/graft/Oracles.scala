@@ -499,7 +499,7 @@ object Oracles {
     * the oracle replicates that exact path).
     */
   def embSql(keyExpr: String, bodyExpr: String): String = s"""
-      list_transform(range(0, 64), i ->
+      list_transform(range(0, ${graft.datapipe.Ann.NodeDim}), i ->
         CAST(CAST((ascii(substr(md5($keyExpr || '|' || $bodyExpr),
                                 1 + ((CAST(i AS INTEGER) * 7 + 3) % 32), 1))
                    * (CAST(i AS INTEGER) + 1)) % 101 AS DOUBLE) / 101 AS FLOAT))"""

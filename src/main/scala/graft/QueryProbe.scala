@@ -34,39 +34,3 @@ object QueryProbe {
     spark.stop()
   }
 }
-
-/** Dev-only stage breakdown of the merged-incremental build (not contract). */
-object MergedProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Bench.session(32, 16)
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[mprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    // prime the shared store exactly like the queries do
-    val (store, corpus) = time("prime store") {
-      SparkEntry.queries("kg_incremental_merged") // force map init
-      val m = SparkEntry.getClass.getDeclaredMethods.find(_.getName == "snapStoreOf").get
-      m.setAccessible(true)
-      m.invoke(SparkEntry, spark, sfDir).asInstanceOf[(String, String)]
-    }
-    import graft.checkpoint.SnapshotTable
-    import graft.pipeline.{GraphBuild, Incremental}
-    import org.apache.spark.sql.functions._
-    val p = time("planFromSnapshots")(Incremental.planFromSnapshots(spark, store, corpus))
-    val changed = time("changed.lcp")(p.changed.localCheckpoint())
-    println(s"[mprobe] changed convs: ${changed.count()}")
-    val mentions = SnapshotTable.read(spark, s"$store/mentions_store").get
-    val nodesStore = SnapshotTable.read(spark, s"$store/nodes_store").get
-    time("committed mentions count")(println(s"  rows=${mentions.count()}"))
-    time("committed nodes count")(println(s"  rows=${nodesStore.count()}"))
-    val g = time("buildFromMergedStore plan")(Incremental.buildFromMergedStore(spark, store, corpus))
-    time("nodes.count")(println(s"  nodes=${g.nodes.count()}"))
-    val g2 = time("buildFromSnapshotStore plan")(Incremental.buildFromSnapshotStore(spark, store, corpus))
-    time("snapshot nodes.count")(println(s"  nodes=${g2.nodes.count()}"))
-    spark.stop()
-  }
-}

@@ -138,20 +138,6 @@ object SparkEntry {
         graft.checkpoint.SnapshotTable.commit(t.where(cut), corpus, "corpus")
         val v1 = graft.checkpoint.SnapshotTable.read(s, corpus).get
         pipeline.Incremental.commitStateSnapshot(s, store, corpus, Mentions.extract(v1))
-        // graph-side state for the MERGED incremental, committed while the
-        // corpus snapshot still IS v1. The rows the merged build consumes
-        // from this store are the CONVERSATION-LOCAL types only
-        // (MergedLocalTypes), and conv-local rows are byte-identical whether
-        // computed by a v1 run or projected from the session's full graph —
-        // so the store is written from the already-cached graph restricted
-        // to exactly what a v1 run would have committed for those types,
-        // instead of paying a second full build at prime time.
-        // (MergedIncrementalSpec commits a TRUE v1 run's nodes, so the
-        // store contract itself stays proven without the shortcut.)
-        val v1LocalNodes = graphOf(s, dir).nodes
-          .where(col("node_type").isin(GraphBuild.MergedLocalTypes: _*))
-          .join(v1.select("conv_id").distinct(), Seq("conv_id"), "left_semi")
-        pipeline.Incremental.commitGraphState(s, store, corpus, v1LocalNodes)
         graft.checkpoint.SnapshotTable.commit(t.where(!cut), corpus, "corpus")
         (store, corpus)
       }
@@ -933,14 +919,6 @@ object SparkEntry {
       val (store, corpus) = snapStoreOf(s, dir)
       withMetaKv(pipeline.Incremental.buildFromSnapshotStore(s, store, corpus).nodes)
     },
-    // H1 MERGED incremental: same manifest-diff planning, but unchanged
-    // conversations' text-derived node rows (Turn/Function/Var) come from
-    // the committed node table instead of a corpus re-scan — text is read
-    // for CHANGED conversations only; output ≡ full rebuild (same oracle)
-    "kg_incremental_merged" -> { (s, dir) =>
-      val (store, corpus) = snapStoreOf(s, dir)
-      withMetaKv(pipeline.Incremental.buildFromMergedStore(s, store, corpus).nodes)
-    },
     // D4 find_node_by_name_file_and_meta analog (graph.rs:199-204): lookup
     // filtered on a meta key/value — possible now that nodes carry the bag
     "kg_find_by_meta" -> { (s, dir) =>
@@ -1097,7 +1075,9 @@ object SparkEntry {
     * [[datapipe.Ann.ivfAssignTrained]] (2 Lloyd iterations): integer
     * vectors on the floor(x*1000) grid, centroids as exact (Σ vi, n)
     * rationals, argmax by IEEE double division of int64s with centroid-id
-    * tiebreak. Exposes the final assignment as `ta3`.
+    * tiebreak. Exposes the final assignment as `ta3`. The centroid update
+    * sums by vector position, as the Spark side's posexplode does, so the
+    * dimension is the embeddings' own, never a constant.
     */
   private lazy val ivfTrainedCtes: String = {
     def doti(a: String, b: String) =
@@ -1113,8 +1093,9 @@ object SparkEntry {
             FROM vint v, $cents c) WHERE rn = 1)"""
     def updateCte(out: String, a: String) = s"""
       , ${out}_ex AS (
-          SELECT a.cell, d.j, CAST(sum(a.vi[d.j + 1]) AS BIGINT) AS s
-          FROM $a a CROSS JOIN (SELECT unnest(range(0, 64)) AS j) d GROUP BY 1, 2)
+          SELECT cell, j, CAST(sum(v) AS BIGINT) AS s
+          FROM (SELECT cell, unnest(range(0, len(vi))) AS j, unnest(vi) AS v FROM $a)
+          GROUP BY 1, 2)
       , ${out}_den AS (SELECT cell, CAST(count(*) AS BIGINT) AS den FROM $a GROUP BY 1)
       , $out AS MATERIALIZED (
           SELECT e.cell AS centroid_id, list(e.s ORDER BY e.j) AS num, min(dn.den) AS den
@@ -1300,11 +1281,6 @@ object SparkEntry {
         "docs, meta_kv FROM nodes"
     ),
     "kg_incremental_snapshot" -> Oracles.withGraph(
-      "SELECT node_type, name, conv_id, turn_idx, body, node_key, ref_id, hash, skipped, " +
-        "docs, meta_kv FROM nodes"
-    ),
-    // merged incremental must equal the same full rebuild — identical oracle
-    "kg_incremental_merged" -> Oracles.withGraph(
       "SELECT node_type, name, conv_id, turn_idx, body, node_key, ref_id, hash, skipped, " +
         "docs, meta_kv FROM nodes"
     ),

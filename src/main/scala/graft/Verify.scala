@@ -16,7 +16,7 @@ object Verify {
     "kg_coverage_kinds", "kg_link_text_endpoints", "kg_hybrid_search_budget",
     "kg_subtree", "dp_ngram_jaccard", "kg_shortest_path", "dp_neardup_lsh",
     "kg_subtree_directed", "kg_path_typed", "kg_path", "kg_incremental_snapshot",
-    "kg_incremental", "kg_incremental_merged", "st_graph_ingest")
+    "kg_incremental", "st_graph_ingest")
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))

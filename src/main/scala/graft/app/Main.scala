@@ -30,13 +30,23 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val t = Transcripts.fromEvents(spark, sfDir)
-    val res = CheckpointedBuild.run(spark, t, outDir, runId)
+    val res = run(spark, sfDir, outDir, runId)
     val nNodes = res.nodes.count()
     val nEdges = res.edges.count()
     println(s"[graft] build complete: $nNodes nodes, $nEdges edges -> $outDir")
     spark.stop()
   }
+
+  /** The job itself, on a given session: read the corpus under `sfDir` and
+    * run (or resume) the committed build into `outDir`.
+    */
+  def run(
+      spark: SparkSession,
+      sfDir: String,
+      outDir: String,
+      runId: String
+  ): CheckpointedBuild.Result =
+    CheckpointedBuild.run(spark, Transcripts.fromEvents(spark, sfDir), outDir, runId)
 
   private def spark_master_set: Boolean =
     sys.props.contains("spark.master") || sys.env.contains("SPARK_MASTER")

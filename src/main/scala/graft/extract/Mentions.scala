@@ -39,8 +39,8 @@ object Mentions {
   /** Test-only row probe: when set, [[extract]] counts every input turn it
     * actually scans into the accumulator — the hard evidence that an
     * incremental path feeds the extractor ONLY the changed conversations'
-    * text (MergedIncrementalSpec). None in production: the captured Option
-    * is resolved once per plan, not per row.
+    * text (SnapshotIncrementalSpec, ResumeSpec). None in production: the
+    * captured Option is resolved once per plan, not per row.
     */
   @volatile var rowProbe: Option[org.apache.spark.util.LongAccumulator] = None
 

@@ -22,6 +22,12 @@ import graft.util.Ckpt._
   *  Neo4j MERGE upload                             -> dedup-by-key + write
   *               (dropDuplicates(node_key) ≡ MERGE, A6)
   *
+  * Every build reaches [[materialize]] with the whole current corpus and
+  * has no mode inside it: the full and committed builds, streaming ingest,
+  * and the one incremental rebuild ([[Incremental.rebuild]], fed by either
+  * change detector — fingerprint diff or snapshot-manifest diff), which
+  * differs from a full build only in where its mention table comes from.
+  *
   * Node identity follows create_node_key (utils.rs:82-136); function nodes
   * dedup to their first definition turn per conversation (the reference
   * dedups by NodeKeys, lang/mod.rs:624-640).
@@ -34,52 +40,6 @@ import graft.util.Ckpt._
 object GraphBuild {
 
   final case class Graph(nodes: DataFrame, edges: DataFrame, mentions: DataFrame)
-
-  /** Committed state consumed by the MERGED incremental build
-    * ([[Stages.fromMentions]] with stores): the prior run's own outputs,
-    * re-read instead of recomputed, so corpus TEXT is only ever scanned for
-    * changed conversations.
-    *
-    *  - `localNodes`: committed node rows of the text-derived, conversation-
-    *    local node types (Turn / Function / Var) restricted by the caller to
-    *    UNCHANGED conversations — for a conversation whose content did not
-    *    change these rows are byte-identical to what a full rebuild would
-    *    recompute, so they merge verbatim;
-    *  - `dmHits`: the FULL merged (fn_name, conv_id, canonical) projection
-    *    of the D16 body-contains scan (the only other text consumer) —
-    *    committed rows for unchanged conversations plus a delta-only scan;
-    *  - `fullMeta`: the text-free (conv_id, turn_idx, role, tool) projection
-    *    of the ENTIRE current corpus — parquet column pruning keeps this at
-    *    a fraction of the bytes (text dominates transcript storage), and at
-    *    100 TB it is the pruned-scan an Iceberg table serves natively.
-    */
-  final case class MergedStores(localNodes: DataFrame, dmHits: DataFrame, fullMeta: DataFrame)
-
-  /** The conversation-local, text-derived node types a merged incremental
-    * run reuses from the committed node table (everything else is either
-    * text-free — recomputed exactly from mentions/resolution — or a global
-    * dimension whose membership can shift when ANY conversation changes).
-    */
-  val MergedLocalTypes: Seq[String] = Seq(NodeTypes.Turn, NodeTypes.Function, NodeTypes.Var)
-
-  /** The conversation-local, pre-canonicalization projection of the D16
-    * body-contains scan: (fn_name, conv_id, canonical) per tool turn whose
-    * text names a dictionary alias. This is the ONLY text consumer outside
-    * the spine/docs/var branches, so committing it (and merging a delta-only
-    * scan) lets the merged incremental build avoid unchanged text entirely.
-    * Cluster identity is applied downstream (it is global and can change).
-    */
-  def dmHitsProjection(spark: SparkSession, t: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dictDf = graft.extract.Dictionary.aliasToCanonical.toSeq.toDF("alias", "canonical")
-    t.where(col("role") === "tool")
-      .select(col("conv_id"), col("text"),
-        regexp_extract(col("text"), graft.extract.Dictionary.handlerPattern, 1).as("fn_name"))
-      .where(length(col("fn_name")) > 0)
-      .join(broadcast(dictDf), instr(col("text"), col("alias")) > 0)
-      .select(col("fn_name"), col("conv_id"), col("canonical"))
-      .distinct()
-  }
 
   /** Guard for the MERGE invariant the build relies on instead of a global
     * dedup exchange: every branch emits key-unique rows by construction.
@@ -215,10 +175,9 @@ object GraphBuild {
   }
 
   /** The node/edge stage: everything downstream of resolution. `t` is the
-    * conv_id-partitioned corpus checkpoint and `tMeta` its text-free twin
-    * (in merged mode `t` holds only the changed conversations and `tMeta`
-    * spans the whole corpus); `mentions` is checkpointed;
-    * `resolvedEntities0` is pre-canonicalization.
+    * conv_id-partitioned corpus checkpoint and `tMeta` its text-free twin;
+    * `mentions` is checkpointed; `resolvedEntities0` is
+    * pre-canonicalization.
     */
   private[pipeline] def materialize(
       spark: SparkSession,
@@ -227,14 +186,8 @@ object GraphBuild {
       mentions: DataFrame,
       resolvedCalls0: DataFrame,
       resolvedEntities0: DataFrame,
-      apiLinks: DataFrame,
-      merged: Option[MergedStores]
+      apiLinks: DataFrame
   ): Graph = {
-    // changed-conversation dimension (merged mode only): scopes the
-    // text-derived node branches to the delta so committed rows merge
-    // without duplication
-    lazy val deltaConvs = broadcast(t.select("conv_id").distinct())
-
     val fnDefs = mentions.where(col("mention_type") === "FunctionDef")
     val endpoints = mentions.where(col("mention_type") === "Endpoint")
     val requests = mentions.where(col("mention_type") === "Request")
@@ -301,15 +254,10 @@ object GraphBuild {
       .withColumn("retval", regexp_extract(col("text"), "returned ([0-9]+)", 1))
       .where(length(col("retval")) > 0)
       .select(col("conv_id"), col("turn_idx"), col("retval"))
-    // text-derived + conv-local, so merged mode unions committed rows; the
-    // CONTAINS edge branch derives from THIS frame (name/conv/turn are the
-    // full edge identity), keeping nodes and edges in lockstep
-    val varNodesRaw = merged
-      .fold(mkNodes(varRows, NodeTypes.Var, col("retval"), col("conv_id"), col("turn_idx"))) {
-        m =>
-          mkNodes(varRows, NodeTypes.Var, col("retval"), col("conv_id"), col("turn_idx"))
-            .unionByName(m.localNodes.where(col("node_type") === NodeTypes.Var))
-      }
+    // the CONTAINS edge branch derives from THIS frame (name/conv/turn are
+    // the full edge identity), keeping nodes and edges in lockstep
+    val varNodesRaw =
+      mkNodes(varRows, NodeTypes.Var, col("retval"), col("conv_id"), col("turn_idx"))
     val e2eRowsRaw = requests
       .where(col("name").contains("${id}"))
       .select(col("conv_id"), col("turn_idx"), col("name"),
@@ -318,13 +266,24 @@ object GraphBuild {
       .select(regexp_extract(col("name"), "^/api/([a-z]+)", 1).as("name"))
       .where(length(col("name")) > 0)
       .distinct()
-    // pre-cluster hit projection ([[dmHitsProjection]]): recomputed from `t`
-    // in full mode; in merged mode the committed projection (plus the
-    // caller's delta scan) arrives via the stores — cluster identity is
-    // global, so it is applied here in BOTH modes, never persisted
-    val dmWithinRaw = merged
-      .map(_.dmHits)
-      .getOrElse(dmHitsProjection(spark, t))
+    // D16 data models as graph citizens (btreemap_graph.rs:643-662 + the
+    // Function-CONTAINS-DataModel edges of add_functions): a DataModel per
+    // canonical entity contract that appears INSIDE a function's defining
+    // turn body — broadcast dictionary substring theta-join over tool turns
+    // (the reference scans bodies, not the mention table), then cluster
+    // identity via the canonicalization stage
+    val dictDf = {
+      import spark.implicits._
+      graft.extract.Dictionary.aliasToCanonical.toSeq.toDF("alias", "canonical")
+    }
+    val dmWithinRaw = t
+      .where(col("role") === "tool")
+      .select(col("conv_id"), col("text"),
+        regexp_extract(col("text"), graft.extract.Dictionary.handlerPattern, 1).as("fn_name"))
+      .where(length(col("fn_name")) > 0)
+      .join(broadcast(dictDf), instr(col("text"), col("alias")) > 0)
+      .select(col("fn_name"), col("conv_id"), col("canonical"))
+      .distinct()
       .join(broadcast(clusters), Seq("canonical"))
       .select(col("fn_name"), col("conv_id"), col("cluster"))
       .distinct()
@@ -363,15 +322,7 @@ object GraphBuild {
     val conceptMembers = planned(9)
 
     // --- nodes ---------------------------------------------------------
-    // Merged mode: Corpus/Conversation/Role rows recompute from the full
-    // text-free meta twin (exact — they never read text); Turn rows come
-    // from the delta text plus the committed rows of unchanged convs.
-    val spine = merged match {
-      case None => spineNodes(spark, t, tMeta)
-      case Some(m) =>
-        spineNodes(spark, t, tMeta)
-          .unionByName(m.localNodes.where(col("node_type") === NodeTypes.Turn))
-    }
+    val spine = spineNodes(spark, t, tMeta)
 
     val toolNodes = mkNodes(tools.select(col("name")).distinct(),
       NodeTypes.Tool, col("name"), lit(""), lit(-1))
@@ -397,21 +348,10 @@ object GraphBuild {
     val fnDocs = Mentions.docsAttach(t)
 
     // function node = first definition turn per (name, conversation)
-    // Merged mode: docsAttach (a text scan) runs over the delta only, so the
-    // Function NODE branch is delta-scoped and committed rows of unchanged
-    // convs merge in verbatim; fnNodes0 itself stays FULL (it feeds the
-    // text-free fnFirstDef edge joins below for every conversation).
-    val fnNodesComputed = mkNodes(
-      merged.fold(fnNodes0)(_ => fnNodes0.join(deltaConvs, Seq("conv_id"), "left_semi"))
-        .join(fnDocs, Seq("conv_id", "turn_idx", "name"), "left"),
+    val fnNodes = mkNodes(
+      fnNodes0.join(fnDocs, Seq("conv_id", "turn_idx", "name"), "left"),
       NodeTypes.Function, col("name"), col("conv_id"), col("turn_idx"),
       docs = col("docs"), meta = fnMeta(col("conv_id")))
-    val fnNodes = merged match {
-      case None => fnNodesComputed
-      case Some(m) =>
-        fnNodesComputed
-          .unionByName(m.localNodes.where(col("node_type") === NodeTypes.Function))
-    }
 
     // unverified call targets become stub nodes (D13: file "<unverified>")
     val stubNodes = mkNodes(
@@ -460,20 +400,6 @@ object GraphBuild {
       .distinct()
     val groupNodes = mkNodes(groupIds, NodeTypes.EndpointGroup, col("name"), lit(""), lit(-1))
 
-    // D16 data models as graph citizens (btreemap_graph.rs:643-662 + the
-    // Function-CONTAINS-DataModel edges of add_functions): a DataModel per
-    // canonical entity contract that appears INSIDE a function's defining
-    // turn body — broadcast dictionary substring theta-join over tool turns
-    // (the reference scans bodies, not the mention table), then cluster
-    // identity via the canonicalization stage
-    val dictDf = {
-      import spark.implicits._
-      graft.extract.Dictionary.aliasToCanonical.toSeq.toDF("alias", "canonical")
-    }
-    // Pre-cluster hit projection ([[dmHitsProjection]]): recomputed from `t`
-    // in full mode; in merged mode the committed projection (plus the
-    // caller's delta scan) arrives via the stores — cluster identity is
-    // global, so it is applied here in BOTH modes, never persisted.
     val dmNodes = mkNodes(dmWithin.select(col("cluster")).distinct(),
       NodeTypes.DataModel, col("cluster"), lit(""), lit(-1))
 
@@ -676,8 +602,7 @@ object GraphBuild {
         fnKey(col("fn_name"), col("conv_id"), col("def_turn")),
         dmKey(col("cluster")), strat = lit("data_model")): _*)
 
-    // B5: turn -CONTAINS-> its Var binding (from the Var NODE frame, which
-    // in merged mode already spans committed + delta conversations)
+    // B5: turn -CONTAINS-> its Var binding (from the Var NODE frame)
     val varContainsE = varNodes
       .select(edge(EdgeTypes.Contains,
         turnKey(col("conv_id"), col("turn_idx")),
@@ -720,9 +645,8 @@ object GraphBuild {
     // node -IMPORTS-> each Tool it names (parse/collect.rs:424-581)
     def importKey(c: Column, i: Column) =
       Keys.nodeKey(lit(NodeTypes.Import), lit("imports"), c, i)
-    // sourced from the text-free meta twin (NOT `t`): identical columns in
-    // full mode, and in merged mode the twin spans the whole corpus while
-    // `t` carries only the delta
+    // sourced from the text-free meta twin (NOT `t`): same columns, a
+    // tenth of the bytes
     val importsE = tMeta
       .where(col("tool").isNotNull)
       .select(col("conv_id"), col("tool"))

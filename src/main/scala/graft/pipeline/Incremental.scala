@@ -6,26 +6,30 @@ import graft.checkpoint.SnapshotTable
 import graft.extract.Mentions
 import graft.util.Ckpt._
 
-/** H1 partition-level incremental rebuild — the Spark re-expression of
-  * `update_incremental` (ast/src/lang/graphs/graph_ops.rs:95-274): diff the
-  * COMMITTED per-conversation fingerprint table against the current corpus
-  * at conversation granularity, re-extract only the changed conversations,
-  * and rebuild the graph from the incrementally-maintained mention table by
-  * entering the build's stage sequence at its mentions stage
-  * ([[Stages.fromMentions]]), as the reference re-runs its one pipeline.
+/** Incremental rebuild — the Spark re-expression of the reference's one
+  * `update_incremental` (ast/src/lang/graphs/graph_ops.rs:95-274): find the
+  * conversations that changed since a committed run, re-extract only those,
+  * and re-run the build's stage sequence from its mentions stage
+  * ([[Stages.fromMentions]]) over the committed mentions of the unchanged
+  * conversations plus the fresh delta. Output equals `GraphBuild.build` over
+  * the current corpus.
   *
-  * The previous corpus is NEVER re-scanned: change detection consumes only
-  * the committed fingerprint dimension (one 32-char hash per conversation)
-  * and the committed mention table — [[build]] does not even accept the old
-  * corpus as an argument, so a regression cannot reintroduce the scan
-  * (ResumeSpec proves it by deleting the old corpus files before building).
-  * The reference diffs git revisions the same way: stored hashes vs the new
-  * tree (ast/src/repo.rs get_changed_files), re-parsing only the delta.
+  * Two change detectors serve the two corpus formats; both return one
+  * [[Plan]], and one [[rebuild]] turns any plan into a graph:
   *
-  * At 100 TB the new-side fingerprint scan is itself replaced by table
-  * metadata — an Iceberg snapshot diff yields the changed files/partitions
-  * without reading data; [[fingerprints]] is the sandbox stand-in that
-  * produces the identical changed-conversation set from raw parquet.
+  *  - [[plan]] diffs per-conversation content fingerprints ([[fingerprints]])
+  *    against the committed fingerprint table — for raw parquet corpora,
+  *    which is what `graft.app.Main` reads. The previous corpus is never
+  *    re-scanned: [[build]] does not even accept it (ResumeSpec deletes its
+  *    files before building). The reference diffs git revisions the same
+  *    way: stored hashes vs the new tree (ast/src/repo.rs get_changed_files).
+  *  - [[planFromSnapshots]] diffs SnapshotTable manifests — for corpora that
+  *    are themselves snapshot tables. Data dirs are immutable, so planning
+  *    reads only the ADDED dirs and never fingerprints anything (Iceberg's
+  *    snapshot-diff incremental read).
+  *
+  * Extraction runs on the changed conversations only; the later stages
+  * (resolution, the node/edge step) re-read the whole current corpus.
   */
 object Incremental {
 
@@ -55,87 +59,83 @@ object Incremental {
         ).as("fp")
       )
 
-  final case class Plan(changed: DataFrame, deltaT: DataFrame, unchangedMentions: DataFrame)
-
-  /** The incremental plan against COMMITTED state: conversations whose new
-    * fingerprint is absent from or differs against the committed fingerprint
-    * table are "changed" (new + modified); conversations absent from the new
-    * corpus drop out via the semi-join on the new conv dimension.
+  /** What changed since the committed run, as conv_id columns: `changed` =
+    * conversations to re-extract (new or modified); `removed` = committed
+    * conversations gone from the current corpus (their mentions drop).
     */
-  def plan(committedFps: DataFrame, committedMentions: DataFrame, newT: DataFrame): Plan = {
-    // one dimension-sized materialization: conv ids + hashes, reused by the
-    // change diff AND the deleted-conversation semi-join
+  final case class Plan(changed: DataFrame, removed: DataFrame)
+
+  /** Fingerprint change detection against COMMITTED state: conversations
+    * whose new fingerprint is absent from or differs against the committed
+    * fingerprint table changed; committed conversations missing from the
+    * new fingerprints are removed.
+    */
+  def plan(committedFps: DataFrame, newT: DataFrame): Plan = {
+    // one dimension-sized materialization: conv ids + hashes, read by both
+    // the change diff and the removal diff
     val newFps = fingerprints(newT).lcp()
     val changed = newFps
       .join(committedFps.withColumnRenamed("fp", "old_fp"), Seq("conv_id"), "left")
       .where(col("old_fp").isNull || col("fp") =!= col("old_fp"))
       .select("conv_id")
-      .lcp()
-    val unchangedMentions = committedMentions
-      .join(changed, Seq("conv_id"), "left_anti")
-      .join(newFps.select("conv_id"), Seq("conv_id"), "left_semi")
-    val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
-    Plan(changed, deltaT, unchangedMentions)
+    val removed = committedFps.select("conv_id").join(newFps, Seq("conv_id"), "left_anti")
+    Plan(changed, removed)
   }
 
-  /** Incremental build over the new corpus: output is identical to
-    * `GraphBuild.build(spark, newT)` (oracle-checked by kg_incremental and
-    * asserted by ResumeSpec), but only `plan.deltaT` flows through the
-    * extractor and the old corpus is never read.
+  /** The one incremental rebuild: the committed mentions of conversations
+    * the plan leaves untouched, plus [[Mentions.extract]] over the changed
+    * conversations of `newT` (the whole current corpus), enter the stage
+    * sequence at its mentions stage.
+    */
+  def rebuild(
+      spark: SparkSession,
+      newT: DataFrame,
+      committedMentions: DataFrame,
+      plan: Plan
+  ): GraphBuild.Graph = {
+    val changed = plan.changed.lcp()
+    val unchangedMentions = committedMentions
+      .join(changed, Seq("conv_id"), "left_anti")
+      .join(plan.removed, Seq("conv_id"), "left_anti")
+    val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
+    Stages.fromMentions(spark, newT, unchangedMentions.unionByName(Mentions.extract(deltaT)))
+  }
+
+  /** Fingerprint incremental over the new corpus, from the committed
+    * fingerprints and mentions (oracle-checked by kg_incremental).
     */
   def build(
       spark: SparkSession,
       committedFps: DataFrame,
       committedMentions: DataFrame,
       newT: DataFrame
-  ): GraphBuild.Graph = {
-    val p = plan(committedFps, committedMentions, newT)
-    Stages.fromMentions(spark, newT, p.unchangedMentions.unionByName(Mentions.extract(p.deltaT)))
-  }
+  ): GraphBuild.Graph =
+    rebuild(spark, newT, committedMentions, plan(committedFps, newT))
 
-  /** Commit the incremental inputs of a completed run: the mention table and
-    * the conversation fingerprints, via the snapshot protocol. A later
-    * [[buildFromStore]] resumes from exactly these bytes.
+  private def stored(spark: SparkSession, baseDir: String, name: String): DataFrame =
+    SnapshotTable
+      .read(spark, s"$baseDir/$name")
+      .getOrElse(sys.error(s"no committed $name table under $baseDir"))
+
+  /** Commit the incremental inputs of a completed run over a raw corpus: the
+    * mention table and the conversation fingerprints, via the snapshot
+    * protocol. A later [[buildFromStore]] resumes from exactly these bytes.
     */
   def commitState(spark: SparkSession, baseDir: String, t: DataFrame, mentions: DataFrame): Unit = {
     SnapshotTable.commit(mentions, s"$baseDir/mentions_store", "mentions")
     SnapshotTable.commit(fingerprints(t), s"$baseDir/conv_fps", "conv_fps")
   }
 
-  /** Incremental rebuild against the committed store at `baseDir` — the
-    * end-to-end H1 surface: committed fingerprints + committed mentions in,
-    * new corpus in, full graph out, delta-only extraction.
-    */
-  def buildFromStore(spark: SparkSession, baseDir: String, newT: DataFrame): GraphBuild.Graph = {
-    val fps = SnapshotTable
-      .read(spark, s"$baseDir/conv_fps")
-      .getOrElse(sys.error(s"no committed fingerprint table under $baseDir"))
-    val mentions = SnapshotTable
-      .read(spark, s"$baseDir/mentions_store")
-      .getOrElse(sys.error(s"no committed mention table under $baseDir"))
-    build(spark, fps, mentions, newT)
-  }
-
-  // ------------------------------------------------------------------
-  // Snapshot-METADATA incremental (the 100 TB path): when the corpus is
-  // itself a SnapshotTable, change detection is a manifest diff — data dirs
-  // are immutable, so a dir present in both the committed and the current
-  // manifest is byte-identical and its conversations need neither
-  // re-fingerprinting NOR re-reading. The only data read in planning is the
-  // ADDED dirs (to learn their conv ids); the full-corpus md5(to_json) scan
-  // of [[fingerprints]] disappears entirely. This is exactly Iceberg's
-  // snapshot-diff incremental-read contract; [[fingerprints]] remains the
-  // fallback for raw-parquet corpora without manifests.
-  // ------------------------------------------------------------------
+  /** Fingerprint incremental against the store [[commitState]] wrote. */
+  def buildFromStore(spark: SparkSession, baseDir: String, newT: DataFrame): GraphBuild.Graph =
+    build(spark, stored(spark, baseDir, "conv_fps"), stored(spark, baseDir, "mentions_store"), newT)
 
   private def readDir = regexp_extract(input_file_name(), "(data/[^/]+)/", 1)
 
   /** Commit the incremental state of a completed run over a SnapshotTable
     * corpus: the mention table, the corpus manifest's data-dir list, and a
-    * (conv_id, data_dir) lineage index — the per-partition lineage rows the
-    * north rule asks for, at dir granularity. The index is computed from the
-    * corpus the run already read; no extra scan at 100 TB (it rides the
-    * build's own pass as a cheap projection).
+    * (conv_id, data_dir) lineage index. The index is a cheap projection of
+    * the corpus the run already read.
     */
   def commitStateSnapshot(
       spark: SparkSession,
@@ -155,30 +155,19 @@ object Incremental {
     SnapshotTable.commit(convDirs, s"$baseDir/conv_dirs", "conv_dirs")
   }
 
-  /** `changed` = conversations needing re-extraction; `removed` =
-    * conversations gone from the corpus (their committed mentions drop).
-    */
-  final case class SnapPlan(
-      changed: DataFrame,
-      removed: DataFrame,
-      addedDirs: Seq[String],
-      removedDirs: Seq[String])
-
   /** Manifest-diff change detection. Reads: the two tiny store dimensions
     * (corpus_dirs, conv_dirs) and the ADDED data dirs only — never the
     * unchanged corpus partitions (SnapshotIncrementalSpec proves it by
     * deleting their bytes before planning).
     *
-    *  - added dirs' conversations: re-extract (new or modified content);
+    *  - added dirs' conversations: changed (new or modified content);
     *  - conversations touching a REMOVED dir but still present elsewhere:
-    *    re-extract (part of their data was rewritten/compacted away);
+    *    changed (part of their data was rewritten/compacted away);
     *  - conversations touching a removed dir and present nowhere: removed.
     */
-  def planFromSnapshots(spark: SparkSession, baseDir: String, corpusTable: String): SnapPlan = {
+  def planFromSnapshots(spark: SparkSession, baseDir: String, corpusTable: String): Plan = {
     import spark.implicits._
-    val oldDirs = SnapshotTable
-      .read(spark, s"$baseDir/corpus_dirs")
-      .getOrElse(sys.error(s"no committed corpus_dirs under $baseDir"))
+    val oldDirs = stored(spark, baseDir, "corpus_dirs")
       .as[String].collect().toSeq // dir-name dimension: O(manifest), tiny
     val newId = SnapshotTable
       .latestSnapshotId(corpusTable)
@@ -186,7 +175,7 @@ object Incremental {
     val newDirs = SnapshotTable.readManifest(corpusTable, newId)
     val added = newDirs.filterNot(oldDirs.contains)
     val removed = oldDirs.filterNot(newDirs.contains)
-    val convDirs = SnapshotTable.read(spark, s"$baseDir/conv_dirs").get
+    val convDirs = stored(spark, baseDir, "conv_dirs")
     val addedConvs =
       if (added.isEmpty) spark.emptyDataset[String].toDF("conv_id")
       else
@@ -203,76 +192,11 @@ object Incremental {
     val changed = addedConvs
       .unionByName(touched.join(surviving, Seq("conv_id"), "left_semi"))
       .distinct()
-    val removedConvs = touched.join(present, Seq("conv_id"), "left_anti")
-    SnapPlan(changed, removedConvs, added, removed)
+    Plan(changed, touched.join(present, Seq("conv_id"), "left_anti"))
   }
 
-  /** Commit the GRAPH-side state a merged incremental run consumes on top of
-    * [[commitStateSnapshot]]: the run's own node table (whose Turn/Function/
-    * Var rows are the only text-derived, conversation-local node rows — see
-    * [[GraphBuild.MergedLocalTypes]]) and the pre-cluster D16 hit projection.
-    * Both are outputs/by-products the pipeline materializes anyway; at
-    * 100 TB this is "keep what you already wrote", not an extra scan.
-    */
-  def commitGraphState(
-      spark: SparkSession,
-      baseDir: String,
-      corpusTable: String,
-      nodes: DataFrame
-  ): Unit = {
-    val t = SnapshotTable.read(spark, corpusTable).get
-    SnapshotTable.commit(nodes, s"$baseDir/nodes_store", "nodes")
-    SnapshotTable.commit(
-      GraphBuild.dmHitsProjection(spark, t), s"$baseDir/dm_hits", "dm_hits")
-  }
-
-  /** MERGED snapshot-metadata incremental — the full remove+rebuild+restore
-    * shape of the reference's `update_incremental` (graph_ops.rs:95-274),
-    * made exact: manifest diff in, full graph out, and corpus TEXT read only
-    * for changed conversations. Unchanged conversations contribute their
-    * committed mention rows, committed Turn/Function/Var node rows, and
-    * committed D16 hit rows; everything global recomputes from those
-    * text-free tables plus the column-pruned corpus meta projection. Output
-    * ≡ `GraphBuild.build` over the current corpus (same oracle as
-    * kg_incremental_snapshot; MergedIncrementalSpec asserts nodes AND edges
-    * byte-equal and delta-only extraction).
-    */
-  def buildFromMergedStore(
-      spark: SparkSession,
-      baseDir: String,
-      corpusTable: String
-  ): GraphBuild.Graph = {
-    val p = planFromSnapshots(spark, baseDir, corpusTable)
-    def stored(name: String) = SnapshotTable
-      .read(spark, s"$baseDir/$name")
-      .getOrElse(sys.error(s"no committed $name table under $baseDir"))
-    val mentions = stored("mentions_store")
-    val committedNodes = stored("nodes_store")
-    val committedDmHits = stored("dm_hits")
-    val newT = SnapshotTable.read(spark, corpusTable).get
-    val changed = p.changed.lcp()
-    val gone = p.removed.lcp()
-    def unchangedOnly(df: DataFrame) = df
-      .join(broadcast(changed), Seq("conv_id"), "left_anti")
-      .join(broadcast(gone), Seq("conv_id"), "left_anti")
-    val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
-    val localNodes = unchangedOnly(
-      committedNodes.where(
-        col("node_type").isin(GraphBuild.MergedLocalTypes: _*) &&
-          col("conv_id") =!= "unverified"))
-    val dmHitsAll = unchangedOnly(committedDmHits)
-      .unionByName(GraphBuild.dmHitsProjection(spark, deltaT))
-    Stages.fromMentions(
-      spark,
-      deltaT,
-      unchangedOnly(mentions).unionByName(Mentions.extract(deltaT)),
-      Some(GraphBuild.MergedStores(localNodes, dmHitsAll, newT)))
-  }
-
-  /** End-to-end snapshot-metadata incremental: manifest diff in, full graph
-    * out, with extraction confined to changed conversations and zero
-    * fingerprint scan. Output ≡ `GraphBuild.build` over the current corpus
-    * (SnapshotIncrementalSpec + the kg_incremental_snapshot oracle).
+  /** Manifest-diff incremental against the store [[commitStateSnapshot]]
+    * wrote (oracle-checked by kg_incremental_snapshot).
     */
   def buildFromSnapshotStore(
       spark: SparkSession,
@@ -280,15 +204,7 @@ object Incremental {
       corpusTable: String
   ): GraphBuild.Graph = {
     val p = planFromSnapshots(spark, baseDir, corpusTable)
-    val mentions = SnapshotTable
-      .read(spark, s"$baseDir/mentions_store")
-      .getOrElse(sys.error(s"no committed mention table under $baseDir"))
-    val newT = SnapshotTable.read(spark, corpusTable).get
-    val changed = p.changed.lcp()
-    val unchangedMentions = mentions
-      .join(changed, Seq("conv_id"), "left_anti")
-      .join(p.removed, Seq("conv_id"), "left_anti")
-    val deltaT = newT.join(broadcast(changed), Seq("conv_id"), "left_semi")
-    Stages.fromMentions(spark, newT, unchangedMentions.unionByName(Mentions.extract(deltaT)))
+    rebuild(spark, SnapshotTable.read(spark, corpusTable).get,
+      stored(spark, baseDir, "mentions_store"), p)
   }
 }

@@ -26,7 +26,7 @@ import graft.util.Ckpt._
   *  - [[GraphBuild.buildFromStages]] serves already-committed upstream
   *    tables back to the sequence.
   *
-  * Incremental builds and streaming ingest maintain the mention table
+  * The incremental rebuild and streaming ingest maintain the mention table
   * themselves and enter at the mentions stage ([[fromMentions]]).
   */
 object Stages {
@@ -74,38 +74,27 @@ object Stages {
 
   /** The full sequence over a transcript corpus. */
   def run(spark: SparkSession, transcripts: DataFrame, sink: Sink): GraphBuild.Graph =
-    sequence(spark, transcripts, sink, Mentions.extract, merged = None)
+    sequence(spark, transcripts, sink, Mentions.extract)
 
-  /** The sequence over a mention table the caller maintains (H1 and
-    * snapshot incremental builds, streaming ingest) — the reference
-    * re-parses only changed files, then re-links the whole (much smaller)
-    * graph (graph_ops.rs:95-274). `transcripts` is the whole current corpus.
-    *
-    * With `merged` (the reference's remove-by-file + rebuild-changed +
-    * restore shape, made exact): corpus text flows ONLY through
-    * `transcripts`, which then holds just the changed conversations;
-    * Turn/Function/Var node rows of unchanged conversations come verbatim
-    * from the committed node table, the D16 text scan from the committed
-    * dm_hits projection, and every remaining branch — global dimensions,
-    * resolution, all edges — recomputes from the (text-free) merged mention
-    * table plus the column-pruned full-corpus projection
-    * ([[GraphBuild.MergedStores]]). Output is byte-identical to a full
-    * rebuild over the current corpus (MergedIncrementalSpec).
+  /** The sequence over a mention table the caller maintains — the one
+    * incremental rebuild ([[Incremental.rebuild]]: committed mentions of
+    * unchanged conversations plus a delta-only extraction) and streaming
+    * ingest. The reference likewise re-parses only changed files, then
+    * re-links the whole graph (graph_ops.rs:95-274). `transcripts` is the
+    * whole current corpus: every later stage reads it as a full build does.
     */
   def fromMentions(
       spark: SparkSession,
       transcripts: DataFrame,
-      mentions: DataFrame,
-      merged: Option[GraphBuild.MergedStores] = None
+      mentions: DataFrame
   ): GraphBuild.Graph =
-    sequence(spark, transcripts, InMemory, _ => mentions, merged)
+    sequence(spark, transcripts, InMemory, _ => mentions)
 
   private def sequence(
       spark: SparkSession,
       transcripts: DataFrame,
       sink: Sink,
-      mentionsOf: DataFrame => DataFrame,
-      merged: Option[GraphBuild.MergedStores]
+      mentionsOf: DataFrame => DataFrame
   ): GraphBuild.Graph = {
     // Spread the corpus across shuffle.partitions tasks keyed by conv_id
     // before anything reads it: the raw input is often few/small parquet
@@ -124,18 +113,15 @@ object Stages {
     // Text-free twin of the corpus checkpoint: resolution and ~6 dimension/
     // edge branches need only (conv_id, turn_idx, role, tool), but an
     // RDD-leaf scan always deserializes whole rows — through the narrow twin
-    // they move ~10% of the bytes. In merged mode `t` carries only the
-    // changed conversations, so the twin comes from the stores' column-
-    // pruned full-corpus projection instead.
-    val tMeta = merged.fold(t)(_.fullMeta)
-      .select("conv_id", "turn_idx", "role", "tool").lcp(eager = false)
+    // they move ~10% of the bytes.
+    val tMeta = t.select("conv_id", "turn_idx", "role", "tool").lcp(eager = false)
     def ofType(mt: String) = mentions.where(col("mention_type") === mt)
     val calls = sink(ResolvedCalls)(
       CallResolver.resolveCalls(ofType("FunctionCall"), ofType("FunctionDef"), tMeta))
     val entities = sink(ResolvedEntities)(CallResolver.resolveEntities(spark, ofType("Entity")))
     val links = sink(ApiLinks)(PathNorm.linkApi(ofType("Request"), ofType("Endpoint")))
     // lazy: a run whose node and edge tables are already committed plans neither
-    lazy val g = GraphBuild.materialize(spark, t, tMeta, mentions, calls, entities, links, merged)
+    lazy val g = GraphBuild.materialize(spark, t, tMeta, mentions, calls, entities, links)
     GraphBuild.Graph(sink(Nodes)(g.nodes), sink(Edges)(g.edges), mentions)
   }
 }

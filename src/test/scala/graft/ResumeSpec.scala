@@ -4,13 +4,15 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{SnapshotTable, StageRunner}
+import graft.app.Main
 import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.extract.Mentions
 
 /** Resume-from-checkpoint idempotence (north rule; reference
   * update_incremental semantics graph_ops.rs:95-274):
-  *  - a killed-after-stage-N run, restarted, produces byte-identical output
-  *    tables WITHOUT recomputing committed stages;
+  *  - a killed-after-stage-N run, restarted through `graft.app.Main`,
+  *    produces byte-identical output tables WITHOUT recomputing committed
+  *    stages;
   *  - a full re-run over an already-complete output dir recomputes nothing.
   */
 class ResumeSpec extends SparkSpec {
@@ -36,10 +38,10 @@ class ResumeSpec extends SparkSpec {
     assert(idsAfterKill("transcripts").isDefined && idsAfterKill("mentions").isDefined)
     assert(idsAfterKill("nodes").isEmpty, "later stages must not exist yet")
 
-    // resume: committed mentions/resolution stages must be CONSUMED, not
-    // recomputed — the extractor must never run again (judge r3 ask #2)
+    // resume through the production entry: committed mentions/resolution
+    // stages must be CONSUMED, not recomputed — the extractor never runs
     val extractionsBefore = Mentions.extractionInvocations.get()
-    val resumed = CheckpointedBuild.run(spark, t, dirKilled, "run-resumed")
+    val resumed = Main.run(spark, sf0001, dirKilled, "run-resumed")
     assert(Mentions.extractionInvocations.get() == extractionsBefore,
       "resume after the mentions commit must perform no extraction")
     val idsAfterResume = snapIds(dirKilled)
@@ -110,30 +112,46 @@ class ResumeSpec extends SparkSpec {
   test("H1 incremental: only changed conversations re-extract; output equals full rebuild") {
     import graft.pipeline.{GraphBuild, Incremental}
     val newT = SparkTestSession.transcripts
-    // "previous" corpus: one conversation modified, the rest identical
-    val victim = newT.select("conv_id").orderBy("conv_id").first().getString(0)
+    // "previous" corpus: one conversation modified, one since removed (a
+    // renamed copy of another conversation), the rest identical
+    val convs = newT.select("conv_id").distinct().orderBy("conv_id")
+      .collect().map(_.getString(0))
+    val (victim, gone) = (convs(0), s"${convs(1)}-gone")
     val oldT = newT.withColumn(
       "text",
       when(col("conv_id") === victim, concat(col("text"), lit(" OLD"))).otherwise(col("text"))
-    )
+    ).unionByName(newT.where(col("conv_id") === convs(1)).withColumn("conv_id", lit(gone)))
     // the prior run's committed state: fingerprints + mention table
     val committedFps = Incremental.fingerprints(oldT)
     val oldMentions = Mentions.extract(oldT)
+    assert(!oldMentions.where(col("conv_id") === gone).isEmpty,
+      "the removed conversation must have committed mentions to drop")
 
-    // change detection: exactly the one modified conversation
-    val p = Incremental.plan(committedFps, oldMentions, newT)
+    // change detection: exactly the modified and the removed conversation
+    val p = Incremental.plan(committedFps, newT)
     val changed = p.changed.collect().map(_.getString(0)).toSet
     assert(changed == Set(victim), s"changed set must be exactly the modified conv: $changed")
-    // ...and only that conversation's turns flow into re-extraction
-    val deltaConvs = p.deltaT.select("conv_id").distinct().collect().map(_.getString(0)).toSet
-    assert(deltaConvs == Set(victim))
-    assert(p.deltaT.count() == newT.where(col("conv_id") === victim).count())
+    val removed = p.removed.collect().map(_.getString(0)).toSet
+    assert(removed == Set(gone), s"removed set must be exactly the dropped conv: $removed")
+
+    // ...and only that conversation's turns flow into extraction, per row
+    val probe = spark.sparkContext.longAccumulator("h1-extractor-rows")
+    Mentions.rowProbe = Some(probe)
+    val (n, e) =
+      try {
+        val g = Incremental.build(spark, committedFps, oldMentions, newT)
+        (g.nodes.localCheckpoint(), g.edges.localCheckpoint())
+      } finally Mentions.rowProbe = None
+    val victimTurns = newT
+      .where(col("conv_id") === victim && length(col("text")) <= Mentions.MaxTurnChars)
+      .count()
+    assert(probe.value == victimTurns,
+      s"extractor scanned ${probe.value} turns; only the victim's $victimTurns allowed")
 
     // the incremental graph equals the full rebuild
-    val inc = Incremental.build(spark, committedFps, oldMentions, newT)
     val full = GraphBuild.build(spark, newT)
-    assertSameRows(full.nodes, inc.nodes)
-    assertSameRows(full.edges, inc.edges)
+    assertSameRows(full.nodes, n)
+    assertSameRows(full.edges, e)
   }
 
   test("H1 incremental never re-scans the old corpus: build succeeds after its files are deleted") {
@@ -155,6 +173,9 @@ class ResumeSpec extends SparkSpec {
       .foreach(p => Files.delete(p))
 
     // change detection + rebuild from the committed store only
+    val p = Incremental.plan(SnapshotTable.read(spark, s"$storeDir/conv_fps").get, newT)
+    assert(p.changed.collect().map(_.getString(0)).toSet == Set(victim))
+    assert(p.removed.isEmpty)
     val inc = Incremental.buildFromStore(spark, storeDir, newT)
     val full = GraphBuild.build(spark, newT)
     assertSameRows(full.nodes, inc.nodes)
@@ -184,8 +205,15 @@ class ResumeSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/t/_snapshot-99.json.tmp"),
       """{"snapshot":99,"files":["data/bogus-99"]}"""
     )
+    // a writer killed between its data write and its manifest commit: a
+    // data dir no manifest names
+    Seq((99, "stray")).toDF("id", "v").write.parquet(s"$dir/t/data/s2-2-deadbeef")
     assert(SnapshotTable.latestSnapshotId(s"$dir/t").contains(1),
       "tmp manifest must be invisible to readers")
     assert(SnapshotTable.read(spark, s"$dir/t").get.count() == 2)
+    // the next commit succeeds over both leftovers, and still hides them
+    assert(SnapshotTable.commit(Seq((3, "c")).toDF("id", "v"), s"$dir/t", "s2") == 2)
+    val ids = SnapshotTable.read(spark, s"$dir/t").get.select("id").as[Int].collect().toSet
+    assert(ids == Set(1, 2, 3), s"committed rows only: $ids")
   }
 }

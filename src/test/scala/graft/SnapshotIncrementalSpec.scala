@@ -8,9 +8,11 @@ import graft.checkpoint.SnapshotTable
 import graft.extract.Mentions
 import graft.pipeline.{GraphBuild, Incremental}
 
-/** Snapshot-METADATA incremental (judge r3 ask #3): when the corpus is a
-  * SnapshotTable, change detection is a manifest diff — no full-corpus
-  * fingerprint scan, and unchanged data dirs are never read during planning.
+/** Snapshot-METADATA incremental: when the corpus is a SnapshotTable,
+  * change detection is a manifest diff — no full-corpus fingerprint scan,
+  * and unchanged data dirs are never read during planning. The rebuild's
+  * extractor sees the changed conversations' turns only (counted per row),
+  * and its nodes and edges equal a full rebuild's.
   *
   * Corpus fixture: v1 = dir A (stable convs) + dir B (old text of the
   * modified convs, plus the to-be-dropped convs); v2 = dir A + dir C (new
@@ -56,45 +58,71 @@ class SnapshotIncrementalSpec extends SparkSpec {
     (corpus, store, Set(g2), Set(g3), v2Expected)
   }
 
+  /** The inputs both tests run over: the fixture's store (one modified and
+    * one dropped conversation), and a store committed from the CURRENT
+    * corpus, against which nothing changed — the rebuild must then extract
+    * zero rows.
+    */
+  private def inputs(): Seq[(String, String, Set[String], Set[String], DataFrame)] = {
+    val changedInput @ (corpus, _, _, _, v2) = fixture()
+    val storeNow = Files.createTempDirectory("graft-snapstore-now").toString
+    Incremental.commitStateSnapshot(spark, storeNow, corpus,
+      Mentions.extract(SnapshotTable.read(spark, corpus).get))
+    Seq(changedInput, (corpus, storeNow, Set.empty[String], Set.empty[String], v2))
+  }
+
   test("manifest-diff plan: changed/removed exact, unchanged dirs never read") {
-    val (corpus, store, expChanged, expRemoved, _) = fixture()
-    // delete the bytes of every dir EXCEPT the added one — planning must
-    // still succeed, proving change detection reads only added dirs
-    val added = {
-      val newDirs = SnapshotTable
-        .readManifest(corpus, SnapshotTable.latestSnapshotId(corpus).get)
-      val oldDirs = SnapshotTable.read(spark, s"$store/corpus_dirs").get
-        .collect().map(_.getString(0)).toSet
-      newDirs.filterNot(oldDirs)
-    }
-    val dataRoot = java.nio.file.Paths.get(s"$corpus/data")
-    Files.list(dataRoot).iterator().asScala
-      .filterNot(p => added.contains(s"data/${p.getFileName}"))
-      .foreach { dir =>
-        Files.list(dir).iterator().asScala.foreach(Files.delete)
+    inputs().foreach { case (corpus, store, expChanged, expRemoved, _) =>
+      // delete the bytes of every dir EXCEPT the added ones — planning must
+      // still succeed, proving change detection reads only added dirs
+      val added = {
+        val newDirs = SnapshotTable
+          .readManifest(corpus, SnapshotTable.latestSnapshotId(corpus).get)
+        val oldDirs = SnapshotTable.read(spark, s"$store/corpus_dirs").get
+          .collect().map(_.getString(0)).toSet
+        newDirs.filterNot(oldDirs)
       }
-    val p = Incremental.planFromSnapshots(spark, store, corpus)
-    assert(p.addedDirs.toSet == added.toSet)
-    assert(p.removedDirs.size == 1)
-    val changed = p.changed.collect().map(_.getString(0)).toSet
-    val removed = p.removed.collect().map(_.getString(0)).toSet
-    assert(changed == expChanged, s"changed=$changed expected=$expChanged")
-    assert(removed == expRemoved, s"removed=$removed expected=$expRemoved")
+      val dataRoot = java.nio.file.Paths.get(s"$corpus/data")
+      Files.list(dataRoot).iterator().asScala
+        .filterNot(p => added.contains(s"data/${p.getFileName}"))
+        .foreach { dir =>
+          Files.list(dir).iterator().asScala.foreach(Files.delete)
+        }
+      val p = Incremental.planFromSnapshots(spark, store, corpus)
+      val changed = p.changed.collect().map(_.getString(0)).toSet
+      val removed = p.removed.collect().map(_.getString(0)).toSet
+      assert(changed == expChanged, s"changed=$changed expected=$expChanged")
+      assert(removed == expRemoved, s"removed=$removed expected=$expRemoved")
+    }
   }
 
   test("snapshot incremental ≡ full rebuild, extraction runs once on the delta only") {
-    val (corpus, store, expChanged, _, v2) = fixture()
-    val before = Mentions.extractionInvocations.get()
-    val inc = Incremental.buildFromSnapshotStore(spark, store, corpus)
-    // force the plan so extraction actually happens before counting
-    val (n, e) = (inc.nodes.localCheckpoint(), inc.edges.localCheckpoint())
-    assert(Mentions.extractionInvocations.get() == before + 1,
-      "exactly one extractor pass (the changed-conversation delta)")
-    val p = Incremental.planFromSnapshots(spark, store, corpus)
-    val deltaConvs = p.changed.collect().map(_.getString(0)).toSet
-    assert(deltaConvs == expChanged)
-    val full = GraphBuild.build(spark, v2)
-    assertSameRows(full.nodes, n)
-    assertSameRows(full.edges, e)
+    inputs().foreach { case (corpus, store, expChanged, _, v2) =>
+      val before = Mentions.extractionInvocations.get()
+      val probe = spark.sparkContext.longAccumulator("snapshot-extractor-rows")
+      Mentions.rowProbe = Some(probe)
+      val (n, e) =
+        try {
+          val g = Incremental.buildFromSnapshotStore(spark, store, corpus)
+          // force both plans so every extractor task has run before counting
+          (g.nodes.localCheckpoint(), g.edges.localCheckpoint())
+        } finally Mentions.rowProbe = None
+      assert(Mentions.extractionInvocations.get() == before + 1,
+        "exactly one extractor pass (the changed-conversation delta)")
+      // row-level: the extractor scanned exactly the changed conversations'
+      // turns — none of an unchanged conversation, none on a no-change run
+      val changedTurns = v2
+        .where(col("conv_id").isin(expChanged.toSeq: _*))
+        .where(length(col("text")) <= Mentions.MaxTurnChars)
+        .count()
+      assert(probe.value == changedTurns,
+        s"extractor scanned ${probe.value} turns; only the $changedTurns changed-conv turns allowed")
+      val p = Incremental.planFromSnapshots(spark, store, corpus)
+      val deltaConvs = p.changed.collect().map(_.getString(0)).toSet
+      assert(deltaConvs == expChanged)
+      val full = GraphBuild.build(spark, v2)
+      assertSameRows(full.nodes, n)
+      assertSameRows(full.edges, e)
+    }
   }
 }
