@@ -43,10 +43,37 @@ object SparkEntry {
   // stopped SparkSession would otherwise leak for the process lifetime, and
   // cached DataFrames whose localCheckpoint blocks died with the old context
   // would fail with "checkpoint block not found" instead of recomputing.
+  // Each first build is timed (see sharedSeconds).
   private def cached[V](cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V])(
       s: SparkSession, dir: String)(compute: => V): V = {
     cache.keys.filter(_._1.sparkContext.isStopped).foreach(cache.remove)
-    cache.getOrElseUpdate((s, dir), compute)
+    cache.getOrElse((s, dir), {
+      val clock = sharedClock.get
+      val t0 = System.nanoTime()
+      clock.depth += 1
+      try cache.getOrElseUpdate((s, dir), compute)
+      finally {
+        clock.depth -= 1
+        // a build nested in another (graphOf inside a store's build) is
+        // already inside the outer one's time
+        if (clock.depth == 0) clock.nanos += System.nanoTime() - t0
+      }
+    })
+  }
+
+  private final class SharedClock { var depth = 0; var nanos = 0L }
+  private val sharedClock = ThreadLocal.withInitial(() => new SharedClock)
+
+  /** Seconds this thread spent building shared cross-query state (the
+    * `cached` tables: graph, mentions, stores, indexes) since the last call.
+    * A query's time includes the shared state it is the first to ask for;
+    * this is that part.
+    */
+  def sharedSeconds(): Double = {
+    val clock = sharedClock.get
+    val s = clock.nanos / 1e9
+    clock.nanos = 0L
+    s
   }
 
   private val mentionCache =
@@ -278,7 +305,8 @@ object SparkEntry {
 
   private[graft] def prime(s: SparkSession, dir: String): Unit = {
     mentionsOf(s, dir)
-    graphOf(s, dir)
+    // with the graph's node leaf, which the lookups and search serve from
+    graft.query.Resident.nodes(graphOf(s, dir).nodes)
     resolvedCallsOf(s, dir)
     postingsOf(s, dir)
     nodeEmbOf(s, dir)

@@ -54,13 +54,17 @@ object Verify {
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .sortBy(kv => rank(kv._1))
     selected.foreach { case (name, fn) =>
+      SparkEntry.sharedSeconds()
       val t0 = System.nanoTime()
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         val rows = spark.read.parquet(s"$outDir/$name").count()
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[verify] PASS $name rows=$rows ${sec}%.1fs")
+        // shared: the part of the total spent building shared state (graph,
+        // stores, indexes) this query was the first to need; the caches are
+        // built lazily, so a killed run still finds the early dumps
+        println(f"[verify] PASS $name rows=$rows ${sec}%.1fs shared=${SparkEntry.sharedSeconds()}%.1fs")
         nPass += 1
       } catch { case e: Throwable =>
         System.err.println(s"[verify] FAIL $name: ${e.getMessage}")

@@ -108,8 +108,10 @@ object SnapshotTable {
     // SHARED dir would let the loser of the manifest race clobber the
     // winner's parquet files before retrying. A collision-free dir keeps
     // data writes strictly private; the manifest stays the only visibility
-    // point (mode is still overwrite so OUR OWN killed attempt's leftovers
-    // are reclaimed on retry with the same nonce source = new UUID).
+    // point. Every attempt draws a new nonce, so nothing reclaims a killed
+    // attempt's data dir: it stays on disk, invisible (no manifest names
+    // it). Deleting such dirs needs a liveness rule, because a concurrent
+    // writer's in-flight dir has no manifest yet either (ROADMAP).
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dataDir = s"data/$stage-$next-$nonce$suffix"
     df.write.mode("overwrite").format(format).save(s"$table/$dataDir")

@@ -1,34 +1,43 @@
 package graft.graphstore
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.query.Resident
 
 /** Graph-store operator surface — re-expression of the reference's `Graph`
   * trait (ast/src/lang/graphs/graph.rs:11-209; BTreeMap impl cited per-op).
-  * All lookups are declarative filters/joins over the materialized node/edge
-  * tables: partition pruning on node_type + predicate pushdown replace the
-  * reference's BTreeMap key-prefix range scans (btreemap_graph.rs:81-114).
+  * The node lookups (D3–D5) are filters over the resident node leaf of the
+  * node frame ([[Resident.nodes]]), decoded once per frame and projected
+  * back to the frame's columns: the stand-in for the reference's resident
+  * BTreeMap key-prefix range scans (btreemap_graph.rs:81-114). The other
+  * operators are declarative filters/joins over the node/edge tables.
   */
 object GraphOps {
 
+  /** Rows of the node leaf of `nodes` that satisfy `cond`, with `nodes`'
+    * own columns: the lookups' one scan.
+    */
+  private def lookup(nodes: DataFrame, cond: Column): DataFrame =
+    Resident.nodes(nodes).where(cond).select(nodes.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+
   /** D3 find_nodes_by_name (btreemap_graph.rs:81-94). */
   def findNodesByName(nodes: DataFrame, nodeType: String, name: String): DataFrame =
-    nodes.where(col("node_type") === nodeType && col("name") === name)
+    lookup(nodes, col("node_type") === nodeType && col("name") === name)
 
   /** D4 lookup family (graph.rs:117-204): suffix / substring / range. */
   def findNodesNameContains(nodes: DataFrame, nodeType: String, sub: String): DataFrame =
-    nodes.where(col("node_type") === nodeType && col("name").contains(sub))
+    lookup(nodes, col("node_type") === nodeType && col("name").contains(sub))
 
   def findNodeInRange(nodes: DataFrame, convId: String, lo: Int, hi: Int): DataFrame =
-    nodes.where(col("conv_id") === convId && col("turn_idx").between(lo, hi))
+    lookup(nodes, col("conv_id") === convId && col("turn_idx").between(lo, hi))
 
   /** D4 suffix lookup (find_node_by_name_ends_with, graph.rs:117-204). */
   def findNodesNameEndsWith(nodes: DataFrame, nodeType: String, suffix: String): DataFrame =
-    nodes.where(col("node_type") === nodeType && col("name").endsWith(suffix))
+    lookup(nodes, col("node_type") === nodeType && col("name").endsWith(suffix))
 
   /** D5 find_nodes_by_type (btreemap_graph.rs:978-985). */
   def findNodesByType(nodes: DataFrame, nodeType: String): DataFrame =
-    nodes.where(col("node_type") === nodeType)
+    lookup(nodes, col("node_type") === nodeType)
 
   /** D6 find_nodes_with_edge_type (btreemap_graph.rs:987-1010):
     * (srcType, dstType, edgeType) -> joined (src, dst) node pairs.

@@ -1,6 +1,5 @@
 package graft.query
 
-import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, GraftPersistedLeaf}
 import org.apache.spark.sql.functions._
 import graft.util.Ckpt
@@ -11,18 +10,9 @@ import graft.util.Ckpt
   *
   * A leaf is the `(from, to)` step relation of one edge frame under one step
   * spec, hash-partitioned on `from` so each level's frontier join streams it
-  * with no exchange on the leaf side. It is built at most once for as long
-  * as the caller holds the same edge `DataFrame` OBJECT: the memo is keyed
-  * by the frame's identity (never by its plan, so two frames with equal
-  * plans but different rows cannot share a leaf) and holds the frame
-  * weakly. Lifetime rule: once the frame is garbage, a Cleaner drops its
-  * leaves, and Spark's ContextCleaner then unpersists their blocks. The
-  * leaf keeps its lineage ([[GraftPersistedLeaf]]): a lost block is
-  * recomputed on the next read, where a `localCheckpoint` leaf kept across
-  * calls would fail that read and every later one.
-  *
-  * Builds run under one lock, so concurrent first traversals of the same
-  * frame build its leaf once.
+  * with no exchange on the leaf side. It lives in the [[Resident]] memo: it
+  * is built at most once for as long as the caller holds the same edge
+  * `DataFrame` object, and released once that frame is garbage.
   */
 object Adjacency {
 
@@ -34,24 +24,9 @@ object Adjacency {
   /** Both directions over every edge type: the shortest-path step. */
   val Undirected: Seq[Leg] = Seq(Leg(Nil, forward = true), Leg(Nil, forward = false))
 
-  private val cleaner = java.lang.ref.Cleaner.create()
-  // frame -> memo id; the frame is the weak key, so this map never keeps a
-  // frame alive, and a stale entry holds only a boxed id
-  private val ids = new java.util.WeakHashMap[DataFrame, java.lang.Long]()
-  private val leaves = mutable.Map.empty[Long, mutable.Map[Seq[Leg], DataFrame]]
-  private var lastId = 0L
-
   /** The resident leaf of `edges` under `legs`, built on first use. */
-  def leaf(edges: DataFrame, legs: Seq[Leg]): DataFrame = synchronized {
-    val id: Long = ids.computeIfAbsent(edges, { frame =>
-      lastId += 1
-      val id = lastId
-      // the action captures only the id: it must not keep the frame alive
-      cleaner.register(frame, () => Adjacency.synchronized { leaves.remove(id); () })
-      id
-    })
-    leaves.getOrElseUpdate(id, mutable.Map.empty).getOrElseUpdate(legs, build(edges, legs))
-  }
+  def leaf(edges: DataFrame, legs: Seq[Leg]): DataFrame =
+    Resident.leaf(edges, legs)(build(edges, legs))
 
   private def build(edges: DataFrame, legs: Seq[Leg]): DataFrame =
     Query.withAqeOff(edges.sparkSession) {

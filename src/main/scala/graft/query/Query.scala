@@ -8,7 +8,10 @@ import graft.util.Ckpt._
   * the Neo4j Cypher + TS layer + CLI, re-expressed as DataFrame programs).
   * Iterative operators (BFS expansion, PageRank) are driver loops over
   * DataFrames with localCheckpoint() per iteration to truncate lineage —
-  * the Spark analog of APOC expandConfig / GDS pagerank.
+  * the Spark analog of APOC expandConfig / GDS pagerank. A BFS level costs
+  * one Spark job: the level is a lazy checkpoint, and the full aggregate
+  * that answers the loop test is what materializes it. A last level has no
+  * loop test; the caller's action materializes it.
   */
 object Query {
 
@@ -23,14 +26,33 @@ object Query {
     * AdaptiveSparkPlan wrapper and records UnknownPartitioning), which is
     * what makes the per-iteration joins exchange-free. One-shot queries keep
     * AQE on — runtime re-planning stays the production default.
+    *
+    * Overlapping calls on one session (a server with two clients) nest: the
+    * first to enter saves the setting and turns AQE off, the last to leave
+    * restores it. The lock guards only that count, never the body.
     */
-  private[query] def withAqeOff[A](spark: SparkSession)(f: => A): A = {
+  private[graft] def withAqeOff[A](spark: SparkSession)(f: => A): A = {
     val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
+    aqeOff.synchronized {
+      val (n, saved) = aqeOff.getOrElse(spark, (0, null: String))
+      if (n == 0) {
+        aqeOff(spark) = (1, spark.conf.get(key))
+        spark.conf.set(key, "false")
+      } else aqeOff(spark) = (n + 1, saved)
+    }
     try f
-    finally spark.conf.set(key, prev)
+    finally aqeOff.synchronized {
+      val (n, saved) = aqeOff(spark)
+      if (n > 1) aqeOff(spark) = (n - 1, saved)
+      else {
+        aqeOff.remove(spark)
+        spark.conf.set(key, saved)
+      }
+    }
   }
+
+  // session -> (callers inside withAqeOff, the setting the first one saved)
+  private val aqeOff = scala.collection.mutable.Map.empty[SparkSession, (Int, String)]
 
   /** G6 get_subtree / G12 deps/impact: depth-bounded frontier expansion from
     * `start` keys following `edgeTypes` (reversed for impact). Returns
@@ -42,6 +64,9 @@ object Query {
     * reused by every later traversal over the same frame object (it lives
     * as long as the caller holds that frame). A call pays one exchange for
     * the leaf only the first time; after that only frontier-sized data moves.
+    * Each level costs one Spark job, so over a resident leaf a depth-d call
+    * runs at most d - 1 jobs, and the caller's action on the result
+    * materializes the last level.
     */
   def expand(
       edges: DataFrame,
@@ -52,13 +77,21 @@ object Query {
   ): DataFrame =
     bfs(Adjacency.leaf(edges, Seq(Adjacency.Leg(edgeTypes, forward = !reverse))), start, depth)
 
-  /** Min-depth BFS of `start` over a resident (from, to) leaf. */
+  /** Min-depth BFS of `start` over a resident (from, to) leaf. The start and
+    * every level are LAZY checkpoints: one job per level both materializes
+    * the level and counts it for the loop test. The test is a full
+    * aggregate, never `take(1)`/`head`: those read partitions incrementally
+    * and would leave a lazy checkpoint partly computed, for a job of its own
+    * to fill in. The level at `depth` needs no test, so it stays lazy until
+    * the caller's action reads it.
+    */
   private def bfs(leaf: DataFrame, start: DataFrame, depth: Int): DataFrame = withAqeOff(leaf.sparkSession) {
     var visited = start.select(col("node_key"), lit(0).as("depth"))
-      .repartition(col("node_key")).lcp()
+      .repartition(col("node_key")).lcp(eager = false)
     var frontier = visited
+    var more = true
     var d = 0
-    while (d < depth && !frontier.isEmpty) {
+    while (d < depth && more) {
       // shuffled-hash: build on the (small) frontier, STREAM the
       // pre-partitioned edge leaf — no per-level sort of |E|
       val next = frontier
@@ -69,8 +102,14 @@ object Query {
         // the dedup shuffle lands on hash(node_key) and the anti-join below
         // plus the NEXT level's edge join both line up exchange-free
         .withColumn("depth", lit(d + 1))
-        .join(visited.select("node_key"), Seq("node_key"), "left_anti")
-        .lcp() // truncate iterative lineage (SURVEY.md §7.5)
+        // hash, never broadcast: a small visited set would otherwise be
+        // broadcast, a job of its own per level, where the hash join reads
+        // it inside the level's one job
+        .join(visited.select("node_key").hint("shuffle_hash"), Seq("node_key"), "left_anti")
+        .lcp(eager = false) // truncate iterative lineage (SURVEY.md §7.5)
+      // the level's one job, where another level could follow (an empty
+      // start ends here)
+      more = d + 1 < depth && next.count() > 0
       // visited accumulates as a LAZY union of the per-level checkpoints —
       // re-checkpointing it each level would rewrite the whole visited set
       // (O(depth x |visited|) materialized rows); the anti-join above scans
@@ -79,9 +118,10 @@ object Query {
       // plan quadratically (each level re-plans a union of d leaves), so the
       // accumulator is compacted to a single leaf every 8 levels — bounded
       // plan width at depth >> the query surface's usual <= 4, while the
-      // shallow common case never pays a rewrite.
+      // shallow common case never pays a rewrite. The compaction is lazy
+      // too: the next level's job (or the caller's action) fills it.
       visited = visited.unionByName(next)
-      if ((d + 1) % 8 == 0) visited = visited.lcp()
+      if ((d + 1) % 8 == 0) visited = visited.lcp(eager = false)
       frontier = next
       d += 1
     }
@@ -156,18 +196,24 @@ object Query {
       .where(col("node_type") === "Corpus")
       .select(col("node_key"), col("node_type"), col("name"), lit(0).as("depth"),
         col("name").as("sort_path"))
-      .lcp()
+      .lcp(eager = false)
     var out = level
+    var more = true
     var d = 0
-    while (d < maxDepth && !level.isEmpty) {
+    while (d < maxDepth && more) {
+      // both joins hash-build on the level-sized side and stream the leaf
+      // and labels; as in bfs, a broadcast would cost a job of its own
       val next = level
         .select(col("node_key").as("from"), col("sort_path").as("parent_path"))
+        .hint("shuffle_hash")
         .join(contains, Seq("from"))
         .select(col("to").as("node_key"), col("parent_path"))
+        .hint("shuffle_hash")
         .join(labels, Seq("node_key"))
         .select(col("node_key"), col("node_type"), col("name"), lit(d + 1).as("depth"),
           concat(col("parent_path"), lit("/"), col("name")).as("sort_path"))
-        .lcp() // truncate iterative lineage
+        .lcp(eager = false) // truncate iterative lineage
+      more = d + 1 < maxDepth && next.count() > 0 // the level's one job, as in bfs
       out = out.unionByName(next)
       level = next
       d += 1
@@ -251,7 +297,7 @@ object Query {
     val undirected = Adjacency.leaf(edges, Adjacency.Undirected)
 
     var visited = Seq((startKey, 0, null: String)).toDF("node_key", "depth", "parent")
-      .lcp()
+      .lcp(eager = false)
     var frontier = visited.select("node_key")
     var found = startKey == targetKey
     var exhausted = false
@@ -263,13 +309,13 @@ object Query {
         .select(col("to").as("node_key"), col("from").as("parent"))
         .groupBy("node_key")
         .agg(min("parent").as("parent"))
-        .join(visited.select("node_key"), Seq("node_key"), "left_anti")
+        .join(visited.select("node_key").hint("shuffle_hash"), Seq("node_key"), "left_anti") // as in bfs
         .withColumn("depth", lit(d + 1))
         .select("node_key", "depth", "parent")
-        .lcp()
-      // lazy union (see expand) + ONE fused job answering both loop
-      // conditions — frontier emptiness and target membership — instead of
-      // two separate isEmpty scans per level
+        .lcp(eager = false)
+      // lazy union (see bfs) + ONE job per level: the fused aggregate that
+      // answers both loop conditions — frontier emptiness and target
+      // membership — is also what materializes the level
       visited = visited.unionByName(next)
       frontier = next.select("node_key")
       val (n, hits) = next
@@ -376,21 +422,26 @@ object Query {
   /** G3 CLI no-DB search scoring (cli/src/search.rs:93-132): additive
     * weights — exact name 100, name prefix 70, name contains 50, body
     * contains 25, conv path contains 20; top-k by (score desc, node_key).
+    * One scan of the resident node leaf of `nodes` ([[Resident.nodes]]),
+    * whose text columns are lower-cased once per frame, not per search.
     */
-  def search(nodes: DataFrame, term: String, limit: Int): DataFrame = {
-    val t = lit(term)
+  def search(nodes: DataFrame, term: String, limit: Int): DataFrame =
+    scored(Resident.nodes(nodes), term, limit)
+
+  /** [[search]]'s scoring over (a filter of) a node leaf. The term is folded
+    * by Catalyst's `lower`, as the leaf's columns were, so both sides fold
+    * case alike.
+    */
+  private def scored(leaf: DataFrame, term: String, limit: Int): DataFrame = {
+    val t = lower(lit(term))
+    val name = col(Resident.lc("name"))
     val score =
-      when(lower(col("name")) === lower(t), 100).otherwise(0) +
-        when(lower(col("name")).startsWith(lower(t)) && lower(col("name")) =!= lower(t), 70)
-          .otherwise(0) +
-        when(
-          lower(col("name")).contains(lower(t)) &&
-            !lower(col("name")).startsWith(lower(t)),
-          50
-        ).otherwise(0) +
-        when(lower(col("body")).contains(lower(t)), 25).otherwise(0) +
-        when(lower(col("conv_id")).contains(lower(t)), 20).otherwise(0)
-    nodes
+      when(name === t, 100).otherwise(0) +
+        when(name.startsWith(t) && name =!= t, 70).otherwise(0) +
+        when(name.contains(t) && !name.startsWith(t), 50).otherwise(0) +
+        when(col(Resident.lc("body")).contains(t), 25).otherwise(0) +
+        when(col(Resident.lc("conv_id")).contains(t), 20).otherwise(0)
+    leaf
       .withColumn("score", score.cast("int"))
       .where(col("score") > 0)
       .select("node_key", "node_type", "name", "score")
@@ -458,8 +509,8 @@ object Query {
     * schema's "no file", mirroring the reference's `node.file IS NULL` arm
     * (fails extensions/include, passes exclude). Empty filter list = filter
     * off, exactly as the Cypher CASE arms. All predicates are literal
-    * conjunctions — pure codegen'd scan filters, no joins, so at 100 TB this
-    * is one pushdown-friendly pass + TakeOrdered(limit).
+    * conjunctions — pure codegen'd scan filters over the node leaf, no
+    * joins: one pass + TakeOrdered(limit).
     */
   def searchFiltered(
       nodes: DataFrame,
@@ -487,7 +538,9 @@ object Query {
     val exclOk =
       if (excludePatterns.isEmpty) lit(true)
       else noFile || !anyOf(excludePatterns.map(p => col("conv_id").contains(lit(p))))
-    search(nodes.where(typeOk && skipOk && extOk && inclOk && exclOk), term, limit)
+    // filters the base frame's leaf: a filtered frame would be a new frame,
+    // hence a new leaf per call
+    scored(Resident.nodes(nodes).where(typeOk && skipOk && extOk && inclOk && exclOk), term, limit)
   }
 
   /** G3 pagerank-sorted search (mcp/src/graph/graph.ts:80-86,142 — the

@@ -166,4 +166,63 @@ class AdjacencySpec extends SparkSpec {
     assert(frameRef.get == null, "the memo must not keep the edge frame alive")
     assert(leafRef.get == null, "the leaf must become unreachable once its frame is gone")
   }
+
+  test("a BFS level costs one job: expand, shortestPath and repoMap") {
+    val e = fresh(edges)
+    Query.expand(e, start, 1).count() // warm the forward leaf
+    (1 to 4).foreach { d =>
+      assert(refBfs(es, Seq(Leg(Nil, true)), "n1", d).values.max == d, s"level $d is empty")
+      // one job per level that another level follows; the caller's count
+      // materializes the last level
+      val loopJobs = jobsRun(Query.expand(e, start, d))
+      assert(loopJobs == d - 1, s"expand at depth $d ran $loopJobs jobs")
+      val jobs = jobsRun(Query.expand(e, start, d).count())
+      assert(jobs <= d + 1, s"expand(...).count() at depth $d ran $jobs jobs")
+    }
+
+    val dist = refBfs(es, Adjacency.Undirected, "n1", 4)
+    val target = dist.collectFirst { case (k, 3) => k }.get
+    Query.shortestPath(e, "n1", "n1", 1) // warm the undirected leaf
+    // 3 levels, then the path read-back: the target's row and one row per hop
+    val pathJobs = jobsRun(Query.shortestPath(e, "n1", target, 4))
+    assert(pathJobs == 3 + 1 + 3, s"shortestPath ran $pathJobs jobs")
+
+    // a root whose CONTAINS tree has two levels
+    val contains = es.filter(_._1 == "CONTAINS")
+    val root = (0 until 400).map(i => s"n$i")
+      .find(k => refBfs(contains, Seq(Leg(Nil, true)), k, 2).values.max == 2).get
+    val nodes = (0 until 400)
+      .map(i => (s"n$i", if (s"n$i" == root) "Corpus" else "Turn", f"name$i%03d"))
+      .toDF("node_key", "node_type", "name")
+    Query.repoMap(nodes, e, 1) // warm the CONTAINS leaf
+    var map: DataFrame = null
+    val mapJobs = jobsRun { map = Query.repoMap(nodes, e, 2) }
+    assert(mapJobs == 1, s"repoMap over 2 levels ran $mapJobs jobs")
+    val readJobs = jobsRun(map.count())
+    assert(readJobs <= 2, s"counting a repo map ran $readJobs jobs")
+  }
+
+  test("overlapping withAqeOff calls on one session restore AQE once the last leaves") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    val aIn, bIn, aOut = new CountDownLatch(1)
+    @volatile var seenByB = ""
+    def await(l: CountDownLatch): Unit = assert(l.await(30, TimeUnit.SECONDS))
+    // the order that lost the setting: A enters, B enters, A leaves, B leaves
+    val a = new Thread(() => {
+      Query.withAqeOff(spark) { aIn.countDown(); await(bIn) }
+      aOut.countDown()
+    })
+    val b = new Thread(() => {
+      await(aIn)
+      Query.withAqeOff(spark) { bIn.countDown(); await(aOut); seenByB = spark.conf.get(key) }
+    })
+    try {
+      a.start(); b.start(); a.join(60000); b.join(60000)
+      assert(seenByB == "false", "AQE must stay off while a caller is still inside")
+      assert(spark.conf.get(key) == "true", "the last caller to leave must restore AQE")
+    } finally spark.conf.set(key, prior)
+  }
 }

@@ -37,6 +37,21 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   def sf0001: String = SparkTestSession.sf0001
 
+  /** Spark jobs that `f` runs. */
+  def jobsRun(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.GraftTestHooks.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.sql.GraftTestHooks.drainListeners(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     val ca = a.columns.sorted
