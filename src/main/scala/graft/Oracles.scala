@@ -1,6 +1,8 @@
 package graft
 
+import graft.canon.Canon
 import graft.extract.Dictionary
+import graft.similarity.Lsh
 import graft.sources.Transcripts
 
 /** DuckDB oracle fragments for the graph tables. Mirrors GraphBuild exactly;
@@ -49,30 +51,7 @@ object Oracles {
              i -> substr(lower(name), i, 3))) AS shingle
     FROM cvn WHERE length(name) >= 3
 )
-, csig AS (SELECT name, ${(0 until 8).map(i => s"min(md5('$i:' || shingle)) AS h$i").mkString(", ")} FROM csh GROUP BY name)
-, cbanded AS MATERIALIZED (${(0 until 4)
-      .map(b => s"SELECT name, $b AS band_idx, h${2 * b} || '|' || h${2 * b + 1} AS band_key FROM csig")
-      .mkString(" UNION ALL ")})
-, ccand AS MATERIALIZED (
-    SELECT DISTINCT x.name AS name_a, y.name AS name_b
-    FROM cbanded x JOIN cbanded y ON x.band_idx = y.band_idx AND x.band_key = y.band_key
-    WHERE x.name < y.name
-)
-, cinter AS (
-    SELECT c.name_a, c.name_b, count(*) AS inter
-    FROM ccand c JOIN csh a ON a.name = c.name_a
-                 JOIN csh b ON b.name = c.name_b AND b.shingle = a.shingle
-    GROUP BY 1, 2
-)
-, csizes AS MATERIALIZED (SELECT name, count(*) AS n FROM csh GROUP BY name)
-, cpairs AS MATERIALIZED (
-    SELECT c.name_a, c.name_b
-    FROM ccand c
-    LEFT JOIN cinter i ON i.name_a = c.name_a AND i.name_b = c.name_b
-    JOIN csizes sa ON sa.name = c.name_a
-    JOIN csizes sb ON sb.name = c.name_b
-    WHERE CAST(coalesce(i.inter, 0) AS DOUBLE) / (sa.n + sb.n - coalesce(i.inter, 0)) >= 0.3
-)
+${Lsh.pairsCtes("c", "csh", Canon.Names, 0.3)}
 , cbi AS MATERIALIZED (
     SELECT name_a AS src, name_b AS dst FROM cpairs
     UNION ALL
@@ -519,6 +498,11 @@ object Oracles {
     s"""list_sum(list_transform(list_zip($a, $b), s -> CAST(s[1] AS DOUBLE)*CAST(s[2] AS DOUBLE)))
           / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))
              * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"""
+
+  /** DuckDB twin of [[graft.datapipe.Ann.embeddingHash]]. */
+  def embHashSql(e: String): String =
+    s"md5(array_to_string(list_transform($e, " +
+      "x -> CAST(CAST(floor(CAST(x AS DOUBLE)*1000000) AS BIGINT) AS VARCHAR)), ','))"
 
   def withGraph(body: String): String =
     Transcripts.oracleCte + graphCte + "\n" + body

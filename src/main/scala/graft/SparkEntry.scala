@@ -474,7 +474,8 @@ object SparkEntry {
       )),
     // Learning + Scope system (learnings.ts:19-196, neo4j.ts:962-1090):
     // get_all_learnings_with_scopes / get_all_scopes / post_relevant_learnings
-    "kg_learnings" -> ((s, dir) => learningsOf(s, dir)),
+    "kg_learnings" -> ((s, dir) =>
+      learningsOf(s, dir).withColumn("scopes", Learnings.scopesText(col("scopes")))),
     // Hint overlay (queries.ts:88-98,307-311,356-386): Q&A hints with
     // entity anchors, per-anchor SIBLING chains, orphan/no-sibling
     // maintenance reads
@@ -485,7 +486,8 @@ object SparkEntry {
       Hints.withoutSiblings(hintsOf(s, dir))),
     "kg_scopes" -> ((s, dir) => Learnings.scopesOver(learningsOf(s, dir))),
     "kg_relevant_learnings" -> ((s, dir) =>
-      Learnings.relevantOver(learningsOf(s, dir), LearningsPrompt, 25)),
+      Learnings.relevantOver(learningsOf(s, dir), LearningsPrompt, 25)
+        .withColumn("scopes", Learnings.scopesText(col("scopes")))),
     // G11 coverage
     "kg_coverage" -> ((s, dir) => {
       val g = graphOf(s, dir); Query.coverage(g.nodes, g.edges)
@@ -589,7 +591,9 @@ object SparkEntry {
     },
     // node-attached embedding column (judge r3 ask #8): every node carries a
     // deterministic content embedding the ANN operators consume directly
-    "kg_node_embeddings" -> ((s, dir) => nodeEmbOf(s, dir)),
+    "kg_node_embeddings" -> ((s, dir) =>
+      nodeEmbOf(s, dir)
+        .select(col("node_key"), datapipe.Ann.embeddingHash(col("embedding")).as("emb_hash"))),
     // G4 twin over node vectors: top-k cosine against one query node
     "kg_node_vector_search" -> ((s, dir) =>
       datapipe.Ann.nodeVectorSearchOver(nodeEmbOf(s, dir), postgresEntityKey(s, dir), 0.2, 10)),
@@ -692,38 +696,6 @@ object SparkEntry {
     "kg_find_endswith" -> ((s, dir) =>
       GraphOps.findNodesNameEndsWith(graphOf(s, dir).nodes, "Request", "${id}")
         .select("node_key", "name", "conv_id", "turn_idx")),
-    // IVF recall vs the exact brute-force baseline: the single-probe
-    // approximation quality, measured (VERDICT round 1: "recall unmeasured")
-    "dp_ann_ivf_recall" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val exact = datapipe.Ann.bruteTopKDot(emb, 8, 5).select("query_id", "cand_id")
-      val approx = datapipe.Ann.ivfTopK(emb, 4, 8, 5).select("query_id", "cand_id")
-      exact
-        .join(approx.withColumn("hit", lit(1L)), Seq("query_id", "cand_id"), "left")
-        .groupBy("query_id")
-        .agg(
-          count(lit(1)).as("k"),
-          coalesce(sum("hit"), lit(0L)).as("hits")
-        )
-        .withColumn("recall", col("hits").cast("double") / col("k").cast("double"))
-    },
-
-    // TRAINED IVF: 2 exact-integer Lloyd iterations refining the first-N
-    // seeds (r4 honest limit "IVF centroids untrained" removed) + its
-    // recall vs brute force — the measured centroid-quality delta
-    "dp_ann_ivf_trained" -> ((s, dir) =>
-      datapipe.Ann.ivfTopKTrained(s.read.parquet(s"$dir/embeddings.parquet"), 4, 8, 5)),
-    "dp_ann_ivf_trained_recall" -> { (s, dir) =>
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val exact = datapipe.Ann.bruteTopKDot(emb, 8, 5).select("query_id", "cand_id")
-      val approx = datapipe.Ann.ivfTopKTrained(emb, 4, 8, 5).select("query_id", "cand_id")
-      exact
-        .join(approx.withColumn("hit", lit(1L)), Seq("query_id", "cand_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"), coalesce(sum("hit"), lit(0L)).as("hits"))
-        .withColumn("recall", col("hits").cast("double") / col("k").cast("double"))
-    },
-
     // B8 filter_nested range ANTI-join (builder/stages.rs:197-277): requests
     // outside every handler scope window — left_anti with a non-equi
     // conv-local range condition
@@ -1084,61 +1056,12 @@ object SparkEntry {
         HAVING arg_min(text, turn_idx) FILTER (WHERE role = 'tool') IS NOT NULL
       )"""
 
+  /** DuckDB twin of [[graft.query.Learnings.scopesText]]. */
+  private def scopesTextSql(e: String): String = s"array_to_string(list_sort($e), ',')"
+
   /** Key of the Entity 'postgres' anchor, as a SQL literal. */
   private val pgEntityKeySql: String =
     Oracles.key4("'Entity'", "'postgres'", "''", "-1")
-
-  /** Shared hybrid-fusion CTE chain: text search ⊕ node-vector source ⊕ RRF
-    * contributions (consumed by the plain and the token-budget variants).
-    */
-  /** floor(x*1000)-grid integer dot — DuckDB twin of
-    * [[graft.functions.DotQuant]] (same as dp_ann_ivf's inline helper).
-    */
-  private def dotq(a: String, b: String): String =
-    s"CAST(list_sum(list_transform(list_zip($a, $b), s -> " +
-      "CAST(floor(CAST(s[1] AS DOUBLE)*1000) AS BIGINT) * " +
-      s"CAST(floor(CAST(s[2] AS DOUBLE)*1000) AS BIGINT))) AS BIGINT)"
-
-  /** Trained-IVF oracle CTEs — the unrolled DuckDB twin of
-    * [[datapipe.Ann.ivfAssignTrained]] (2 Lloyd iterations): integer
-    * vectors on the floor(x*1000) grid, centroids as exact (Σ vi, n)
-    * rationals, argmax by IEEE double division of int64s with centroid-id
-    * tiebreak. Exposes the final assignment as `ta3`. The centroid update
-    * sums by vector position, as the Spark side's posexplode does, so the
-    * dimension is the embeddings' own, never a constant.
-    */
-  private lazy val ivfTrainedCtes: String = {
-    def doti(a: String, b: String) =
-      s"CAST(list_sum(list_transform(list_zip($a, $b), s -> " +
-        s"CAST(s[1] AS BIGINT) * CAST(s[2] AS BIGINT))) AS BIGINT)"
-    def assignCte(out: String, cents: String) = s"""
-      , $out AS MATERIALIZED (
-          SELECT vec_id, embedding, vi, centroid_id AS cell FROM (
-            SELECT v.vec_id, v.embedding, v.vi, c.centroid_id,
-                   row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                     CAST(${doti("v.vi", "c.num")} AS DOUBLE) / CAST(c.den AS DOUBLE) DESC,
-                     c.centroid_id) AS rn
-            FROM vint v, $cents c) WHERE rn = 1)"""
-    def updateCte(out: String, a: String) = s"""
-      , ${out}_ex AS (
-          SELECT cell, j, CAST(sum(v) AS BIGINT) AS s
-          FROM (SELECT cell, unnest(range(0, len(vi))) AS j, unnest(vi) AS v FROM $a)
-          GROUP BY 1, 2)
-      , ${out}_den AS (SELECT cell, CAST(count(*) AS BIGINT) AS den FROM $a GROUP BY 1)
-      , $out AS MATERIALIZED (
-          SELECT e.cell AS centroid_id, list(e.s ORDER BY e.j) AS num, min(dn.den) AS den
-          FROM ${out}_ex e JOIN ${out}_den dn ON dn.cell = e.cell GROUP BY e.cell)"""
-    """WITH vint AS MATERIALIZED (
-          SELECT vec_id, embedding,
-                 list_transform(embedding,
-                   x -> CAST(floor(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS vi
-          FROM embeddings)
-      , tc0 AS (SELECT vec_id AS centroid_id, vi AS num, CAST(1 AS BIGINT) AS den
-                FROM vint WHERE vec_id < 4)""" +
-      assignCte("ta1", "tc0") + updateCte("tc1", "ta1") +
-      assignCte("ta2", "tc1") + updateCte("tc2", "ta2") +
-      assignCte("ta3", "tc2")
-  }
 
   /** Inverted-index posting CTE — DuckDB twin of [[Query.buildPostings]]
     * (same tokenizer: lower(name ⊕ ' ' ⊕ body) split on non-alphanumeric).
@@ -1519,8 +1442,8 @@ object SparkEntry {
              (SELECT CAST(count(*) AS BIGINT) FROM rf) AS files_found
       FROM rf
     """),
-    "kg_learnings" -> O(learningsCte + """
-      SELECT id, rule, reason, scopes FROM lrn
+    "kg_learnings" -> O(learningsCte + s"""
+      SELECT id, rule, reason, ${scopesTextSql("scopes")} AS scopes FROM lrn
     """),
     "kg_scopes" -> O(learningsCte + """
       SELECT scope, CAST(count(*) AS BIGINT) AS n_learnings
@@ -1537,7 +1460,7 @@ object SparkEntry {
         SELECT DISTINCT l.id, l.rule, l.scopes
         FROM lrn l JOIN rel r ON list_contains(l.scopes, r.scope)
       )
-      SELECT id, rule, scopes, ${Oracles.cosSql("e", "q")} AS cos
+      SELECT id, rule, ${scopesTextSql("scopes")} AS scopes, ${Oracles.cosSql("e", "q")} AS cos
       FROM (
         SELECT id, rule, scopes,
                ${Oracles.embSql("id", "rule")} AS e,
@@ -1625,8 +1548,8 @@ object SparkEntry {
         FROM fused f JOIN ntoks t ON t.node_key = f.node_key
       ) WHERE running_tokens <= ${HybridTokenBudget}
     """),
-    "kg_node_embeddings" -> Oracles.withGraph(Oracles.nodeEmbCte + """
-      SELECT node_key, embedding FROM nemb
+    "kg_node_embeddings" -> Oracles.withGraph(Oracles.nodeEmbCte + s"""
+      SELECT node_key, ${Oracles.embHashSql("embedding")} AS emb_hash FROM nemb
     """),
     "kg_node_vector_search" -> Oracles.withGraph(Oracles.nodeEmbCte + s"""
       , nq AS (SELECT embedding AS qv FROM nemb WHERE node_key = $pgEntityKeySql)
@@ -2090,71 +2013,6 @@ object SparkEntry {
     "kg_find_endswith" -> Oracles.withGraph("""
       SELECT node_key, name, conv_id, turn_idx FROM nodes
       WHERE node_type = 'Request' AND name LIKE '%' || '$' || '{id}'
-    """),
-    "dp_ann_ivf_trained" -> (ivfTrainedCtes + s"""
-      , tq AS (SELECT vec_id AS query_id, embedding AS qv, cell FROM ta3 WHERE vec_id < 8)
-      , tsc AS (SELECT tq.query_id, tq.cell, a.vec_id AS cand_id,
-                       ${dotq("tq.qv", "a.embedding")} AS score
-                FROM tq JOIN ta3 a ON a.cell = tq.cell AND a.vec_id <> tq.query_id)
-      SELECT query_id, cell, cand_id, score, rank FROM (
-        SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY score DESC, cand_id) AS INTEGER) AS rank
-        FROM tsc) WHERE rank <= 5
-    """),
-    "dp_ann_ivf_trained_recall" -> (ivfTrainedCtes + s"""
-      , rex0 AS (SELECT q.vec_id AS query_id, e.vec_id AS cand_id,
-                        ${dotq("q.embedding", "e.embedding")} AS score
-                 FROM vint q, vint e WHERE q.vec_id < 8 AND e.vec_id <> q.vec_id)
-      , rex AS (SELECT query_id, cand_id FROM (
-                 SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, cand_id) AS rn FROM rex0) WHERE rn <= 5)
-      , rap0 AS (SELECT tq.query_id, a.vec_id AS cand_id,
-                        ${dotq("tq.qv", "a.embedding")} AS score
-                 FROM (SELECT vec_id AS query_id, embedding AS qv, cell
-                       FROM ta3 WHERE vec_id < 8) tq
-                 JOIN ta3 a ON a.cell = tq.cell AND a.vec_id <> tq.query_id)
-      , rap AS (SELECT query_id, cand_id FROM (
-                 SELECT *, row_number() OVER (PARTITION BY query_id
-                   ORDER BY score DESC, cand_id) AS rn FROM rap0) WHERE rn <= 5)
-      SELECT e.query_id, count(*) AS k,
-             CAST(coalesce(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END), 0)
-                  AS BIGINT) AS hits,
-             CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-               / count(*) AS recall
-      FROM rex e LEFT JOIN rap a ON a.query_id = e.query_id AND a.cand_id = e.cand_id
-      GROUP BY 1
-    """),
-    "dp_ann_ivf_recall" -> {
-      def dot(a: String, b: String) =
-        s"CAST(list_sum(list_transform(list_zip($a, $b), s -> " +
-          "CAST(floor(CAST(s[1] AS DOUBLE)*1000) AS BIGINT) * " +
-          s"CAST(floor(CAST(s[2] AS DOUBLE)*1000) AS BIGINT))) AS BIGINT)"
-      s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-      ex0 AS (SELECT q.query_id, e.vec_id AS cand_id, ${dot("q.qv", "e.embedding")} AS score
-              FROM q, embeddings e WHERE e.vec_id <> q.query_id),
-      ex AS (SELECT query_id, cand_id FROM (
-               SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rn
-               FROM ex0) WHERE rn <= 5),
-      cents AS (SELECT vec_id AS centroid_id, embedding AS centv FROM embeddings WHERE vec_id < 4),
-      assign0 AS (SELECT e.vec_id, e.embedding, c.centroid_id,
-                         ${dot("e.embedding", "c.centv")} AS cscore
-                  FROM embeddings e, cents c),
-      assigned AS (SELECT vec_id, embedding, centroid_id AS cell FROM (
-                     SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cscore DESC, centroid_id) AS rn
-                     FROM assign0) WHERE rn = 1),
-      qa AS (SELECT vec_id AS query_id, embedding AS qv, cell FROM assigned WHERE vec_id < 8),
-      ap0 AS (SELECT qa.query_id, a.vec_id AS cand_id, ${dot("qa.qv", "a.embedding")} AS score
-              FROM qa JOIN assigned a ON a.cell = qa.cell AND a.vec_id <> qa.query_id),
-      ap AS (SELECT query_id, cand_id FROM (
-               SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY score DESC, cand_id) AS rn
-               FROM ap0) WHERE rn <= 5)
-      SELECT e.query_id, count(*) AS k,
-             CAST(coalesce(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-             CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / count(*) AS recall
-      FROM ex e LEFT JOIN ap a ON a.query_id = e.query_id AND a.cand_id = e.cand_id
-      GROUP BY 1
-      """
-    }
+    """)
   )
 }

@@ -8,95 +8,42 @@ import graft.util.Ckpt._
   * reference only collapses EXACT canonical keys via MERGE, utils.rs:82-136,
   * so this stage GENERALIZES its F1/F2 identity semantics — SURVEY.md §2.F):
   *
-  *   character-3-gram shingles -> MinHash signatures -> LSH band buckets ->
-  *   candidate pairs -> exact-Jaccard scoring -> iterative-DataFrame
-  *   connected components -> cluster labels.
+  *   character-3-gram shingles -> the MinHash-LSH join of
+  *   [[graft.similarity.Lsh]] (band keys, candidate pairs, exact-Jaccard
+  *   scoring) -> connected components -> cluster labels (min name).
   *
-  * Portability trick: MinHash seed-i of a shingle set is
-  * `min(md5(i || ':' || shingle))` — min over hex STRINGS. md5 is identical
-  * everywhere, string min is byte order, so signatures are reproducible in
-  * the DuckDB oracle with zero numeric-hash drift. At scale the min-
-  * aggregation is a partial (map-side) aggregate and LSH banding turns the
-  * quadratic all-pairs problem into an equi-join on band keys; candidate
-  * scoring joins only within buckets.
+  * [[clusters]] is size-adaptive: a dimension under [[DriverCcMaxVertices]]
+  * names is clustered on the driver from one collect (band keys evaluated
+  * by Lsh's band expression, buckets and scores in memory, then
+  * [[unionFind]]); a larger one runs the distributed join and
+  * [[connectedComponents]], the label-propagation loop. CanonSpec holds the
+  * two equal.
   */
 object Canon {
+  import graft.similarity.Lsh
 
-  val K = 8 // minhash signature length
-  val BANDS = 4 // 4 bands x 2 rows
+  /** Pair-column names of canonicalization's LSH join. */
+  val Names = Lsh.Keys("name", "name_a", "name_b")
+
+  // lowercase character 3-grams of `lname`, in name order (repeats kept)
+  private val Grams = "transform(sequence(1, length(lname) - 2), i -> substr(lname, i, 3))"
 
   /** (name) -> (name, shingle): distinct lowercase character 3-grams. */
   def shingles(names: DataFrame): DataFrame =
     names
       .select(col("name"), lower(col("name")).as("lname"))
       .where(length(col("lname")) >= 3)
-      .select(
-        col("name"),
-        explode(
-          expr("transform(sequence(1, length(lname) - 2), i -> substr(lname, i, 3))")
-        ).as("shingle")
-      )
+      .select(col("name"), explode(expr(Grams)).as("shingle"))
       .distinct()
 
-  /** MinHash signature: K md5-min columns -> BANDS band keys. Output:
-    * (name, band_idx, band_key).
-    */
-  def bands(sh: DataFrame): DataFrame = {
-    val aggs = (0 until K).map(i =>
-      min(md5(concat(lit(i.toString), lit(":"), col("shingle")).cast("binary"))).as(s"h$i")
-    )
-    val mins = sh.groupBy("name").agg(aggs.head, aggs.tail: _*)
-    val rowsPerBand = K / BANDS
-    val bandCols = (0 until BANDS).map { b =>
-      val parts = (0 until rowsPerBand).map(r => col(s"h${b * rowsPerBand + r}"))
-      struct(lit(b).as("band_idx"), concat_ws("|", parts: _*).as("band_key"))
-    }
-    mins
-      .select(col("name"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("name"), col("bk.band_idx"), col("bk.band_key"))
-  }
+  /** MinHash band keys: (name, band_idx, band_key). */
+  def bands(sh: DataFrame): DataFrame = Lsh.bands(sh, "name")
 
-  /** LSH-blocked candidate pairs with exact Jaccard >= `minJaccard`.
-    * Pairs ordered name_a < name_b; Jaccard from distinct-shingle counts.
+  /** LSH-blocked candidate pairs with exact Jaccard >= `minJaccard`:
+    * (name_a, name_b, jaccard), name_a < name_b.
     */
-  def candidatePairs(names: DataFrame, minJaccard: Double = 0.5): DataFrame = {
-    // cached for its 3 consumers (bands, sizes, intersection join), then
-    // RELEASED before returning: the round-2 bench leaked one shingle cache
-    // per invocation across the 68-query loop, and the accumulated blocks
-    // drove the shared-heap GC residency behind the 37–244 s build spread.
-    // The returned pair set (above-threshold only) is eagerly materialized
-    // so unpersisting the input cannot trigger recomputation.
-    val sh = shingles(names).cache()
-    val b = bands(sh)
-    val cand = b
-      .as("x")
-      .join(b.as("y"), Seq("band_idx", "band_key"))
-      .where(col("x.name") < col("y.name"))
-      .select(col("x.name").as("name_a"), col("y.name").as("name_b"))
-      .distinct()
-    val sizes = sh.groupBy("name").agg(count(lit(1)).as("n"))
-    val shA = sh.select(col("name").as("name_a"), col("shingle"))
-    val shB = sh.select(col("name").as("name_b"), col("shingle"))
-    val inter = cand
-      .join(shA, Seq("name_a"))
-      .join(shB, Seq("name_b", "shingle"))
-      .groupBy("name_a", "name_b")
-      .agg(count(lit(1)).as("inter"))
-    val pairs = cand
-      .join(inter, Seq("name_a", "name_b"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(sizes.withColumnRenamed("name", "name_a").withColumnRenamed("n", "na"), Seq("name_a"))
-      .join(sizes.withColumnRenamed("name", "name_b").withColumnRenamed("n", "nb"), Seq("name_b"))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double")
-      )
-      .where(col("jaccard") >= minJaccard)
-      .select("name_a", "name_b", "jaccard")
-      .lcp()
-    sh.unpersist()
-    pairs
-  }
+  def candidatePairs(names: DataFrame, minJaccard: Double = 0.5): DataFrame =
+    Lsh.pairs(shingles(names), Names, minJaccard)
 
   /** UTF-8 byte order — the SAME total order Spark's UTF8String binary
     * comparisons (min("cluster"), col(a) < col(b)) use. Java String
@@ -112,142 +59,89 @@ object Canon {
     java.util.Arrays.compareUnsigned(x, y) < 0
   }
 
-  /** Per-bucket candidate budget for the driver-local [[clusters]] path: an
-    * LSH bucket of m names yields m(m-1)/2 driver-heap pairs, so a skewed
+  /** Per-bucket candidate budget for the driver fast path of [[clusters]]:
+    * an LSH bucket of m names yields m(m-1)/2 driver-heap pairs, so a skewed
     * bucket (many near-identical names) is quadratic where the distributed
-    * twin's bucket self-join would spill. [[DriverCcMaxVertices]] was
-    * calibrated for union-find over already-thresholded pairs; the full LSH
-    * path gets this tighter pair budget instead — exceeded, it falls back to
-    * the distributed pipeline (identical semantics).
+    * bucket self-join would spill. Past the budget the distributed join runs
+    * instead (identical semantics). A bucket over [[Lsh.MaxBucket]] names
+    * alone exceeds it, so the driver never pairs a bucket the join drops.
     */
   val DriverMaxCandidatePairs: Long = 2L << 20
 
-  /** End-to-end size-adaptive clustering: semantically IDENTICAL to
-    * `connectedComponents(names, candidatePairs(names, minJaccard))` — same
-    * shingles, same md5-hex-string MinHash, same band buckets, same exact-
-    * Jaccard gate, same min-name components (CanonSpec asserts equality
-    * against the distributed twin). Under [[DriverCcMaxVertices]] the whole
-    * computation runs on the driver from ONE collect of the name dimension:
-    * the LSH pipeline is ~6 Spark jobs whose fixed overhead dwarfs the work
-    * when the dimension is dictionary-bounded (the common case — it exists
-    * to merge aliases of a known vocabulary). Above the ceiling the
-    * distributed pipeline runs unchanged.
+  /** Vertex-count ceiling for the driver fast path of [[clusters]]. The
+    * canonical-name dimension is bounded by the dictionary (it exists to
+    * merge aliases of a known entity vocabulary), so in practice it is
+    * broadcast-scale: below the ceiling the distributed join and loop (~20
+    * Spark jobs of fixed cost) dwarf a driver pass over one collect. Above
+    * it the distributed path runs; correctness is identical, only the
+    * execution site adapts to the measured dimension size, like AQE picking
+    * a broadcast join under a size threshold.
+    */
+  val DriverCcMaxVertices: Long = 100000L
+
+  /** Size-adaptive clustering: (name, cluster), semantically IDENTICAL to
+    * `connectedComponents(names, candidatePairs(names, minJaccard))` (same
+    * shingles, band keys, buckets, exact-Jaccard gate and min-name
+    * components; CanonSpec asserts equality). Under [[DriverCcMaxVertices]]
+    * names it runs on the driver from ONE collect of the dimension, which
+    * carries each name's shingle set and its band keys from
+    * [[Lsh.bandKeys]]; candidates, scores and [[unionFind]] run in memory.
     */
   def clusters(names: DataFrame, minJaccard: Double = 0.5): DataFrame = {
     val spark = names.sparkSession
-    val n = names.count() // dimension-sized; callers pass a checkpointed frame
-    if (n > DriverCcMaxVertices)
-      return connectedComponentsLoop(names, candidatePairs(names, minJaccard))
     import spark.implicits._
-    val nm = names.select("name").collect().map(_.getString(0))
-    def md5hex(s: String): String =
-      java.security.MessageDigest
-        .getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_))
-        .mkString
-    def shinglesOf(x: String): Set[String] = {
-      val l = x.toLowerCase
-      if (l.length < 3) Set.empty
-      else (0 to l.length - 3).map(i => l.substring(i, i + 3)).toSet
+    def distributed = connectedComponents(names, candidatePairs(names, minJaccard))
+    // dimension-sized; callers pass a checkpointed frame
+    if (names.count() > DriverCcMaxVertices) return distributed
+    val rows = names
+      .select(col("name"), lower(col("name")).as("lname"))
+      .select(col("name"), when(length(col("lname")) >= 3, array_distinct(expr(Grams))).as("sh"))
+      .select(col("name"), col("sh"), Lsh.bandKeys(col("sh")).as("keys"))
+      .collect()
+    val nm = rows.map(_.getString(0)).toSeq
+    // <3-char names have no shingles, hence no bands
+    val sh = rows.filter(!_.isNullAt(1)).map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
+    val buckets = rows.filter(!_.isNullAt(1)).toSeq
+      .flatMap(r => r.getSeq[String](2).zipWithIndex.map(bk => bk -> r.getString(0)))
+      .groupMap(_._1)(_._2)
+    // pair budget BEFORE materializing pairs on the driver heap
+    if (buckets.values.map(xs => xs.size.toLong * (xs.size - 1) / 2).sum > DriverMaxCandidatePairs)
+      return distributed
+    def jaccard(a: String, b: String): Double = {
+      val inter = (sh(a) & sh(b)).size
+      inter.toDouble / (sh(a).size + sh(b).size - inter)
     }
-    val sh = nm.map(x => x -> shinglesOf(x)).toMap
-    val rowsPerBand = K / BANDS
-    val buckets =
-      scala.collection.mutable.HashMap.empty[(Int, String), scala.collection.mutable.ListBuffer[String]]
-    nm.foreach { x =>
-      val s = sh(x)
-      if (s.nonEmpty) { // <3-char names have no shingles, hence no bands
-        val hs = (0 until K).map(i => s.map(g => md5hex(s"$i:$g")).min)
-        (0 until BANDS).foreach { b =>
-          val key = (b, (0 until rowsPerBand).map(r => hs(b * rowsPerBand + r)).mkString("|"))
-          buckets.getOrElseUpdate(key, scala.collection.mutable.ListBuffer.empty) += x
-        }
-      }
-    }
-    // pair budget BEFORE materializing: a skewed bucket (or many medium
-    // ones) would otherwise build O(m^2) pairs on the driver heap — past the
-    // budget the distributed pipeline (which spills its bucket self-join)
-    // runs instead, semantics unchanged
-    val pairBound = buckets.values.iterator.map { xs =>
-      val m = xs.distinct.size.toLong; m * (m - 1) / 2
-    }.sum
-    if (pairBound > DriverMaxCandidatePairs)
-      return connectedComponentsLoop(names, candidatePairs(names, minJaccard))
-    val cand = scala.collection.mutable.HashSet.empty[(String, String)]
-    buckets.values.foreach { xs =>
-      val arr = xs.distinct.sorted
-      var i = 0
-      while (i < arr.length) {
-        var j = i + 1
-        while (j < arr.length) { cand += ((arr(i), arr(j))); j += 1 }
-        i += 1
-      }
-    }
-    val parent = scala.collection.mutable.HashMap.from(nm.map(x => x -> x))
+    val pairs = buckets.values.flatMap(_.combinations(2)).toSeq.distinct
+      .collect { case Seq(a, b) if jaccard(a, b) >= minJaccard => (a, b) }
+    unionFind(nm, pairs).toDF("name", "cluster")
+  }
+
+  /** The driver union-find: (name, cluster) for every name, cluster = the
+    * min name of its component under `pairs` (pairs naming an unknown
+    * vertex are ignored). The larger root always hangs under the smaller in
+    * UTF-8 byte order, Spark's string order, so every component's root IS
+    * its min name: the fixpoint [[connectedComponents]] converges to.
+    */
+  def unionFind(names: Seq[String], pairs: Seq[(String, String)]): Seq[(String, String)] = {
+    val parent = scala.collection.mutable.HashMap.from(names.map(x => x -> x))
     @annotation.tailrec
     def find(x: String): String =
       if (parent(x) == x) x else { parent(x) = parent(parent(x)); find(parent(x)) }
-    cand.foreach { case (a, b) =>
-      val (sa, sb) = (sh(a), sh(b))
-      val inter = (sa & sb).size
-      val uni = sa.size + sb.size - inter
-      if (uni > 0 && inter.toDouble / uni >= minJaccard) {
+    pairs.foreach { case (a, b) =>
+      if (parent.contains(a) && parent.contains(b)) {
         val (ra, rb) = (find(a), find(b))
         if (utf8Lt(ra, rb)) parent(rb) = ra else if (utf8Lt(rb, ra)) parent(ra) = rb
       }
     }
-    nm.toSeq.map(x => (x, find(x))).toDF("name", "cluster")
+    names.map(x => (x, find(x)))
   }
 
-  /** Vertex-count ceiling for the driver-local union-find fast path of
-    * [[connectedComponents]]. The canonical-name dimension is bounded by the
-    * dictionary (it exists to merge aliases of a known entity vocabulary),
-    * so in practice it is broadcast-scale; below this ceiling the iterative
-    * DataFrame loop's fixed per-iteration cost (joins + checkpoint + a
-    * convergence count, x ~3-5 iterations ≈ seconds) dwarfs a <100 ms
-    * driver union-find over the collected pairs. Above it, the distributed
-    * loop runs — correctness is identical (same min-label semantics), only
-    * the execution site adapts to the measured dimension size, like AQE
-    * picking a broadcast join under a size threshold.
+  /** Connected components over the pair graph, distributed: (name,
+    * cluster), cluster = min name in the component, by smallest-label
+    * propagation over undirected pair edges until fixpoint, localCheckpoint
+    * per iteration (north rule; SURVEY.md §7.5 item 3).
     */
-  val DriverCcMaxVertices: Long = 100000L
-
-  /** Connected components over the candidate-pair graph: cluster = min name
-    * in the component. Size-adaptive: driver union-find under
-    * [[DriverCcMaxVertices]] vertices, iterative-DataFrame smallest-label
-    * propagation (north rule; SURVEY.md §7.5 item 3) above it.
-    */
-  def connectedComponents(vertices: DataFrame, pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = vertices.sparkSession
-    val n = vertices.count() // dimension-sized; callers pass a checkpointed frame
-    if (n <= DriverCcMaxVertices) {
-      import spark.implicits._
-      val names = vertices.select("name").collect().map(_.getString(0))
-      val prs = pairs.select("name_a", "name_b").collect()
-      val parent = scala.collection.mutable.HashMap.from(names.map(x => x -> x))
-      @annotation.tailrec
-      def find(x: String): String =
-        if (parent(x) == x) x else { parent(x) = parent(parent(x)); find(parent(x)) }
-      prs.foreach { r =>
-        val (a, b) = (r.getString(0), r.getString(1))
-        if (parent.contains(a) && parent.contains(b)) {
-          val (ra, rb) = (find(a), find(b))
-          // always hang the LARGER root under the smaller (UTF-8 byte
-          // order, matching Spark's UTF8String comparisons), so the final
-          // root of every component IS its min name — the exact fixpoint
-          // the distributed loop converges to
-          if (utf8Lt(ra, rb)) parent(rb) = ra else if (utf8Lt(rb, ra)) parent(ra) = rb
-        }
-      }
-      names.toSeq.map(x => (x, find(x))).toDF("name", "cluster")
-    } else connectedComponentsLoop(vertices, pairs, maxIter)
-  }
-
-  /** The distributed path: smallest-label propagation over undirected pair
-    * edges until fixpoint, localCheckpoint per iteration.
-    */
-  def connectedComponentsLoop(
+  def connectedComponents(
       vertices: DataFrame,
       pairs: DataFrame,
       maxIter: Int = 50

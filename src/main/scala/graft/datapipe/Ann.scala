@@ -14,11 +14,12 @@ import graft.util.Ckpt._
   *    near-tie rankings.
   *  - [[bruteTopKCosine]]: true float cosine via zip_with/aggregate HOFs
   *    (codegen'd, no UDF) — the correctness baseline for the IVF path.
-  *  - [[ivfTopK]]: the scale path — coarse IVF quantization: assign every
-  *    vector to its nearest of `nCentroids` deterministic centroids (the
-  *    first vectors by vec_id), probe only the query's cell. At 100 TB the
-  *    cell assignment is a broadcast join + one shuffle by cell id, and
-  *    probing touches 1/nCentroids of the data.
+  *  - [[ivfTopK]]: the scale path — coarse IVF quantization by
+  *    [[ivfAssign]] (seed centroids = the first vectors by vec_id, refined
+  *    by a given number of Lloyd iterations), probing only the query's
+  *    cell. At 100 TB the cell assignment is a broadcast join + one shuffle
+  *    by cell id, and probing touches 1/nCentroids of the data.
+  *    [[ivfRecall]] measures it against the exact top-k.
   */
 object Ann {
   import org.apache.spark.sql.GraftColumnBridge.{column => toCol, expression => toExpr}
@@ -77,6 +78,19 @@ object Ann {
     nodes.select(
       col("node_key"),
       nodeEmbedding(col("node_key"), col("body")).as("embedding"))
+
+  /** An embedding as one comparable scalar: md5 of its components on the
+    * floor(x*1e6) integer grid, comma-joined. The grid is integer-exact on
+    * both engines, so a checked query returns this hash instead of the raw
+    * array column, which the driver's comparer cannot sort.
+    * [[graft.Oracles.embHashSql]] is the DuckDB twin.
+    */
+  def embeddingHash(e: Column): Column =
+    md5(
+      array_join(
+        transform(e, x => floor(x.cast("double") * 1000000).cast("bigint").cast("string")),
+        ","
+      ).cast("binary"))
 
   /** [[nodeVectorSearch]] over a PRE-materialized embedding table. */
   def nodeVectorSearchOver(emb: DataFrame, queryKey: String, threshold: Double, k: Int): DataFrame = {
@@ -144,49 +158,29 @@ object Ann {
       .limit(k)
   }
 
-  /** IVF coarse quantization: assign every vector to its max-inner-product
-    * centroid (centroids = first `nCentroids` vectors by vec_id,
-    * deterministic quantized scores). Shared by [[ivfTopK]] and
-    * [[embeddingNearDupPairs]] — at 100 TB this is one broadcast join + a
-    * per-vector argmax, and every downstream probe touches only its cell.
-    */
-  def ivfAssign(emb: DataFrame, nCentroids: Int): DataFrame = {
-    val cents = emb
-      .where(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("centv"))
-    emb
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(cents))
-      .withColumn("cscore", dotInt("embedding", "centv"))
-      .withColumn(
-        "arank",
-        row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("cscore").desc, col("centroid_id"))
-        )
-      )
-      .where(col("arank") === 1)
-      .select(col("vec_id"), col("embedding"), col("centroid_id").as("cell"))
-  }
-
-  /** TRAINED IVF coarse quantizer: `iters` Lloyd (k-means) iterations
-    * refining the first-N seed centroids — the round-4 honest limit "IVF
-    * centroids untrained" made real. Measured on the driver's synthetic
-    * embedding table (which is near-uniform, the hardest case for k-means):
-    * training tightens cell balance (max cell 142→130 at sf0.001, 539→512
-    * at sf0.1 — the property that bounds worst-cell probe cost at scale)
-    * while single-probe recall@5 moves −0.08/−0.10/+0.03 vs the seed
-    * quantizer across sf0.001/0.01/0.1 — the classic balance-vs-recall
-    * trade, reported by the dp_ann_ivf_trained_recall entry rather than
-    * assumed. On clustered real embeddings the trained centroids are where
-    * the recall comes from. Cross-engine exactness is the design
-    * constraint: every quantity is integer (vectors on the floor(x*1000)
-    * grid [[bruteTopKDot]] already uses; a centroid is the exact rational
-    * (Σ vi, n) — numerator array of int64 column sums, denominator the
-    * member count), and the argmax compares CAST(dot AS DOUBLE)/den — an
-    * int64-ratio division both engines round identically under IEEE — with
-    * a centroid-id tiebreak. So the trained assignment is oracle-checkable
-    * row-for-row, like everything else. Empty cells drop out on both sides
-    * identically.
+  /** IVF coarse quantizer: (vec_id, embedding, cell), every vector
+    * assigned to its max-inner-product centroid. The centroids start as the
+    * first `nCentroids` vectors by vec_id; `iters` Lloyd (k-means)
+    * iterations refine them, and `iters = 0` is the untrained seed
+    * quantizer. Shared by [[ivfTopK]] and [[embeddingNearDupPairs]].
+    *
+    * Measured on the driver's synthetic embedding table (near-uniform, the
+    * hardest case for k-means), 2 iterations tighten cell balance (max
+    * cell 142→130 at sf0.001, 539→512 at sf0.1, the property that bounds
+    * worst-cell probe cost at scale) while single-probe recall@5 moves
+    * −0.08/−0.10/+0.03 against the seed quantizer across sf0.001/0.01/0.1:
+    * the classic balance-vs-recall trade, reported by the recall entries
+    * rather than assumed. On clustered real embeddings the trained
+    * centroids are where the recall comes from.
+    *
+    * Cross-engine exactness is the design constraint: every quantity is
+    * integer. Vectors sit on the floor(x*1000) grid [[bruteTopKDot]] uses; a
+    * centroid is the exact rational (Σ vi, n), an int64 numerator array over
+    * the member count (a seed centroid is (vi, 1)); the argmax compares
+    * CAST(dot AS DOUBLE)/den, an int64-ratio division both engines round
+    * identically under IEEE, with a centroid-id tie-break. So the
+    * assignment is oracle-checkable row for row. Empty cells drop out on
+    * both sides identically.
     *
     * Scale shape per iteration: centroids broadcast (nCentroids × dim
     * int64s), assignment is a scan + per-row argmax, and the update is a
@@ -194,7 +188,7 @@ object Ann {
     * nCentroids×dim rows. The iteration count is fixed and small, exactly
     * like the pagerank loop.
     */
-  def ivfAssignTrained(emb: DataFrame, nCentroids: Int, iters: Int = 2): DataFrame = {
+  def ivfAssign(emb: DataFrame, nCentroids: Int, iters: Int): DataFrame = {
     val vint = emb.select(
       col("vec_id"),
       col("embedding"),
@@ -238,11 +232,15 @@ object Ann {
     assign(cents).select("vec_id", "embedding", "cell")
   }
 
-  /** IVF top-k over the TRAINED assignment — same probe as [[ivfTopK]]. */
-  def ivfTopKTrained(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int): DataFrame = {
+  /** IVF top-k: (query_id, cell, cand_id, score, rank) for the queries
+    * vec_id < `nQueries`, each probing only its own cell of the
+    * [[ivfAssign]] quantizer trained for `iters` iterations. Deterministic
+    * tie-break (score desc, cand_id asc).
+    */
+  def ivfTopK(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int, iters: Int): DataFrame = {
     // read twice (queries, candidates): a lazy checkpoint lives exactly as
     // long as the result, and the ContextCleaner frees it after
-    val assigned = ivfAssignTrained(emb, nCentroids).lcp(eager = false)
+    val assigned = ivfAssign(emb, nCentroids, iters).lcp(eager = false)
     val q = assigned
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cell"))
@@ -259,16 +257,30 @@ object Ann {
       .select("query_id", "cell", "cand_id", "score", "rank")
   }
 
+  /** Recall@k of [[ivfTopK]] against the exact [[bruteTopKDot]]: (query_id,
+    * k, hits, recall), the measured single-probe approximation quality.
+    */
+  def ivfRecall(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int, iters: Int): DataFrame =
+    bruteTopKDot(emb, nQueries, k).select("query_id", "cand_id")
+      .join(
+        ivfTopK(emb, nCentroids, nQueries, k, iters).select("query_id", "cand_id")
+          .withColumn("hit", lit(1L)),
+        Seq("query_id", "cand_id"),
+        "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("k"), coalesce(sum("hit"), lit(0L)).as("hits"))
+      .withColumn("recall", col("hits").cast("double") / col("k").cast("double"))
+
   /** Embedding-cosine near-duplicate pairs — the vector-space member of the
     * dedup family (exact / MinHash-LSH / SimHash / n-gram Jaccard live in
     * [[DocDedup]]): all (a < b) pairs whose cosine clears `threshold`,
-    * blocked by IVF cell so the self-join is CELL-LOCAL — the bucketed
-    * 100 TB shape (a brute all-pairs self-join is |V|² and never runs).
-    * Same blocking-recall trade as the LSH path: cross-cell near-dups are
-    * missed by design and the cell count tunes it.
+    * blocked by the untrained IVF cell so the self-join is CELL-LOCAL — the
+    * bucketed 100 TB shape (a brute all-pairs self-join is |V|² and never
+    * runs). Same blocking-recall trade as the LSH path: cross-cell near-dups
+    * are missed by design and the cell count tunes it.
     */
   def embeddingNearDupPairs(emb: DataFrame, nCentroids: Int, threshold: Double): DataFrame = {
-    val assigned = ivfAssign(emb, nCentroids)
+    val assigned = ivfAssign(emb, nCentroids, iters = 0)
     val a = assigned.select(col("cell"), col("vec_id").as("a_id"), col("embedding").as("av"))
     val b = assigned.select(col("cell"), col("vec_id").as("b_id"), col("embedding").as("bv"))
     a.join(b, Seq("cell"))
@@ -276,25 +288,5 @@ object Ann {
       .withColumn("cos", cosine("av", "bv"))
       .where(col("cos") >= threshold)
       .select("cell", "a_id", "b_id", "cos")
-  }
-
-  /** IVF-style bucketed ANN: each query probes only its own cell. */
-  def ivfTopK(emb: DataFrame, nCentroids: Int, nQueries: Int, k: Int): DataFrame = {
-    val assigned = ivfAssign(emb, nCentroids).lcp(eager = false) // as ivfTopKTrained
-    val q = assigned
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("cell"))
-    val scored = q
-      .join(
-        assigned.select(col("vec_id").as("cand_id"), col("embedding").as("cv"), col("cell")),
-        Seq("cell")
-      )
-      .where(col("query_id") =!= col("cand_id"))
-      .withColumn("score", dotInt("qv", "cv"))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("cand_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "cell", "cand_id", "score", "rank")
   }
 }

@@ -7,13 +7,18 @@ import graft.util.Ckpt._
 /** Document deduplication family for large-scale training-data pipelines,
   * over the `documents` table (doc_id, text, lang, source, n_chars).
   *
-  * Exact dedup is a hash group-by; near-dup uses the same portable
-  * md5-MinHash machinery as [[graft.canon.Canon]] but over word shingles.
-  * At 100 TB: the md5-min signature is a partial aggregate (map-side
-  * combine), band buckets bound join fan-out, and no stage ever joins the
-  * full text — only (doc_id, shingle) projections.
+  * Exact dedup is a hash group-by. Near-dup runs the one MinHash-LSH join
+  * of [[graft.similarity.Lsh]] (the one canonicalization runs) over word
+  * 3-gram shingles; the n-gram Jaccard baseline counts shared shingles for
+  * every pair and scores them with the same exact-Jaccard scorer. At 100 TB
+  * the band buckets bound join fan-out, and no stage ever joins the full
+  * text — only (doc_id, shingle) projections.
   */
 object DocDedup {
+  import graft.similarity.Lsh
+
+  /** Pair-column names of the document LSH join. */
+  val Docs = Lsh.Keys("doc_id", "doc_a", "doc_b")
 
   /** Exact dedup: keep min doc_id per md5(text); emit survivors with their
     * duplicate counts (groupBy-hash — the classic exact pass).
@@ -23,94 +28,27 @@ object DocDedup {
       .groupBy(md5(col("text").cast("binary")).as("text_hash"))
       .agg(min("doc_id").as("keep_doc_id"), count(lit(1)).as("n_dups"))
 
-  /** (doc_id, shingle): distinct word `n`-gram shingles of lowercased text. */
-  def wordShingles(docs: DataFrame, n: Int = 3): DataFrame =
+  /** (doc_id, shingle): distinct word 3-gram shingles of lowercased text.
+    * A document under 3 tokens has none.
+    */
+  def wordShingles(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
+      .where(size(col("toks")) >= 3) // sequence(1, 0) would slice from 0
       .select(
         col("doc_id"),
         explode(
-          expr(
-            s"transform(sequence(1, greatest(size(toks) - ${n - 1}, 0)), " +
-              s"i -> array_join(slice(toks, i, $n), ' '))"
-          )
+          expr("transform(sequence(1, size(toks) - 2), " +
+            "i -> array_join(slice(toks, i, 3), ' '))")
         ).as("shingle")
       )
       .distinct()
 
-  /** MinHash signatures (K md5-min strings) per document. */
-  def minhash(sh: DataFrame, k: Int = 8): DataFrame = {
-    val aggs = (0 until k).map(i =>
-      min(md5(concat(lit(i.toString), lit(":"), col("shingle")).cast("binary"))).as(s"h$i")
-    )
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH candidate pairs (band collision) with exact shingle-Jaccard.
-    *
-    * `maxBucket` is the degenerate-bucket guard: a band key shared by B
-    * documents produces B² candidate pairs, so one pathological bucket
-    * (e.g. many near-empty docs sharing a signature) turns the blocked join
-    * quadratic. Buckets larger than the cap are dropped — a documented
-    * recall tradeoff; such documents still pair through their other bands.
-    * The cap never triggers on the sf corpora (largest bucket ≤ 5), so the
-    * oracle needs no mirror term.
+  /** Near-duplicate pairs by the LSH join: (doc_a, doc_b, jaccard), exact
+    * shingle-Jaccard ≥ `minJaccard`, doc_a < doc_b.
     */
-  def nearDupPairs(
-      docs: DataFrame,
-      minJaccard: Double,
-      k: Int = 8,
-      bands: Int = 4,
-      maxBucket: Int = 10000
-  ): DataFrame = {
-    val sh = wordShingles(docs).cache()
-    val sig = minhash(sh, k)
-    val rows = k / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(
-        lit(b).as("band_idx"),
-        concat_ws("|", (0 until rows).map(r => col(s"h${b * rows + r}")): _*).as("band_key")
-      )
-    }
-    val banded0 = sig
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band_idx"), col("bk.band_key"))
-    val bucketSizes = banded0
-      .groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("bucket_n"))
-    val banded = banded0
-      .join(bucketSizes.where(col("bucket_n") <= maxBucket), Seq("band_idx", "band_key"))
-      .drop("bucket_n")
-    val cand = banded
-      .as("x")
-      .join(banded.as("y"), Seq("band_idx", "band_key"))
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val shA = sh.select(col("doc_id").as("doc_a"), col("shingle"))
-    val shB = sh.select(col("doc_id").as("doc_b"), col("shingle"))
-    val inter = cand
-      .join(shA, Seq("doc_a"))
-      .join(shB, Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    // materialize the (above-threshold, small) pair set, then RELEASE the
-    // shingle cache — leaked caches across a long query loop were the
-    // round-2 GC-residency driver (VERDICT r2 "What's wrong #1b")
-    val pairs = inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), Seq("doc_a"))
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), Seq("doc_b"))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double")
-      )
-      .where(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
-      .lcp()
-    sh.unpersist()
-    pairs
-  }
+  def nearDupPairs(docs: DataFrame, minJaccard: Double): DataFrame =
+    Lsh.pairs(wordShingles(docs), Docs, minJaccard)
 
   /** SimHash (32-bit) per document as a '0'/'1' bit-string — bit j is the
     * majority vote of md5-hex-char parities across word tokens. Bit-string
@@ -136,27 +74,18 @@ object DocDedup {
   }
 
   /** N-gram-Jaccard near-dup without LSH (the exact quadratic baseline,
-    * bounded by an inverted-index join — for parity testing the LSH path).
+    * bounded by an inverted-index join — for parity testing the LSH path):
+    * every pair sharing a shingle, scored by [[Lsh.scored]].
     */
   def ngramJaccardPairs(docs: DataFrame, minJaccard: Double): DataFrame = {
     val sh = wordShingles(docs).cache()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh
       .as("x")
       .join(sh.as("y"), Seq("shingle"))
       .where(col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    val pairs = inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), Seq("doc_a"))
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), Seq("doc_b"))
-      .withColumn(
-        "jaccard",
-        col("inter").cast("double") / (col("na") + col("nb") - col("inter")).cast("double")
-      )
-      .where(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
-      .lcp() // see nearDupPairs: materialize, then release input
+    val pairs = Lsh.scored(sh, inter, Docs, minJaccard).lcp() // as in Lsh.pairs
     sh.unpersist()
     pairs
   }

@@ -195,11 +195,11 @@ object GraphBuild {
 
     // F2 wiring (north rule: canonicalize BEFORE materializing): after the
     // dictionary resolves aliases to canonical ids, MinHash-LSH blocking +
-    // iterative connected components (canon/Canon.scala) cluster near-
-    // duplicate canonical ids (char-3-gram Jaccard >= 0.3 — merges the hot
+    // connected components (Canon.clusters) cluster near-duplicate
+    // canonical ids (char-3-gram Jaccard >= 0.3 — merges the hot
     // `sparkengine` into `spark`), and entity identity becomes the cluster
-    // label. The cluster dimension is tiny (distinct canonicals), so the CC
-    // loop runs on a broadcast-scale table regardless of corpus size.
+    // label. The cluster dimension is tiny (distinct canonicals), so it is
+    // clustered on the driver regardless of corpus size.
     // One eager materialization of the tiny canonical dimension: every CC
     // consumer (vertices, shingles, candidate pairs) reads the 8-row leaf
     // instead of re-scanning the full mention table per use

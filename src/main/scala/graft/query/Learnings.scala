@@ -63,6 +63,12 @@ object Learnings {
       )
       .where(col("rule").isNotNull)
 
+  /** A scope set as one comparable scalar: sorted, comma-joined. Checked
+    * queries return this instead of the array column, which the driver's
+    * comparer cannot sort; the stored table keeps its array.
+    */
+  def scopesText(scopes: Column): Column = array_join(array_sort(scopes), ",")
+
   /** Scope inventory — get_all_scopes (neo4j.ts:1056-1064) plus the
     * HAS_SCOPE in-degree (how many learnings carry each scope).
     */

@@ -259,12 +259,6 @@ object Query {
         lit(" ("), col("tokens"), lit(")")).as("render"))
   }
 
-  /** G9 shortest_path WITH path reconstruction (queries.ts:820-849 returns
-    * the actual node sequence). BFS with deterministic min-parent tracking;
-    * the ≤ maxDepth backtrack is a driver loop of single-row lookups — a
-    * point query, like the reference's. Output: one row (path, depth), or
-    * empty if unreachable.
-    */
   /** G9 node-type constraint (mcp/src/graph/queries.ts:820-849): the
     * reference's shortest_path restricts traversal to
     * Page|Function|Request|Endpoint|Datamodel nodes — the BFS edge relation
@@ -284,6 +278,12 @@ object Query {
   val PathNodeTypes: Seq[String] =
     Seq("Page", "Function", "Request", "Endpoint", "DataModel")
 
+  /** G9 shortest_path WITH path reconstruction (queries.ts:820-849 returns
+    * the actual node sequence). BFS with deterministic min-parent tracking:
+    * every level row carries its node's path through its min parent, so the
+    * level's one job also returns the target's path, and the call runs no
+    * read-back job. Output: one row (path, depth), or empty if unreachable.
+    */
   def shortestPath(
       edges: DataFrame,
       startKey: String,
@@ -296,52 +296,35 @@ object Query {
     // join below never re-shuffles it
     val undirected = Adjacency.leaf(edges, Adjacency.Undirected)
 
-    var visited = Seq((startKey, 0, null: String)).toDF("node_key", "depth", "parent")
-      .lcp(eager = false)
-    var frontier = visited.select("node_key")
-    var found = startKey == targetKey
+    // each node carries its path: the path of its min parent, then itself
+    var visited = Seq(startKey).toDF("node_key").lcp(eager = false)
+    var frontier = Seq((startKey, startKey)).toDF("node_key", "path")
+    var found = if (startKey == targetKey) Some(startKey) else None
     var exhausted = false
     var d = 0
-    while (d < maxDepth && !found && !exhausted) {
+    while (d < maxDepth && found.isEmpty && !exhausted) {
       val next = frontier
         .hint("shuffle_hash") // build on the frontier, stream the 2|E| leaf
         .join(undirected, frontier("node_key") === undirected("from"))
-        .select(col("to").as("node_key"), col("from").as("parent"))
-        .groupBy("node_key")
-        .agg(min("parent").as("parent"))
-        .join(visited.select("node_key").hint("shuffle_hash"), Seq("node_key"), "left_anti") // as in bfs
-        .withColumn("depth", lit(d + 1))
-        .select("node_key", "depth", "parent")
+        .groupBy(col("to").as("node_key"))
+        // min over (parent, path): the min parent, with the path through it
+        .agg(min(struct(col("from").as("parent"), concat(col("path"), lit("->"), col("to")).as("path")))
+          .getField("path").as("path"))
+        .join(visited.hint("shuffle_hash"), Seq("node_key"), "left_anti") // as in bfs
         .lcp(eager = false)
       // lazy union (see bfs) + ONE job per level: the fused aggregate that
-      // answers both loop conditions — frontier emptiness and target
-      // membership — is also what materializes the level
-      visited = visited.unionByName(next)
-      frontier = next.select("node_key")
-      val (n, hits) = next
-        .agg(count(lit(1)), count(when(col("node_key") === targetKey, 1)))
-        .as[(Long, Long)].first()
+      // answers both loop conditions — frontier emptiness and the target's
+      // path — is also what materializes the level
+      visited = visited.unionByName(next.select("node_key"))
+      frontier = next
+      val (n, hit) = next
+        .agg(count(lit(1)), min(when(col("node_key") === targetKey, col("path"))))
+        .as[(Long, Option[String])].first()
       exhausted = n == 0L
-      found = hits > 0L
+      found = hit
       d += 1
     }
-    val vc = visited.cache()
-    val hit = vc.where(col("node_key") === targetKey)
-      .select("depth", "parent").as[(Int, String)].collect().headOption
-    val out = hit match {
-      case None => Seq.empty[(String, Int)]
-      case Some((depth, parent0)) =>
-        var path = List(targetKey)
-        var cur = parent0
-        while (cur != null) {
-          path = cur :: path
-          cur = vc.where(col("node_key") === cur)
-            .select("parent").as[String].collect().headOption.orNull
-        }
-        Seq((path.mkString("->"), depth))
-    }
-    vc.unpersist()
-    out.toDF("path", "depth")
+    found.map(p => (p, d)).toSeq.toDF("path", "depth")
   }
 
   /** G10 pagerank: fixed 20 iterations, damping 0.85 over the projected

@@ -70,14 +70,16 @@ class CanonSpec extends SparkSpec {
       .map(i => (f"r$i%02d", f"r${(i + 1) % 10}%02d"))
       .map { case (a, b) => if (a < b) (a, b) else (b, a) } ++
       Seq(("c0", "c1"), ("c1", "c2"))).toDF("name_a", "name_b")
-    val fast = Canon.connectedComponents(vs, edges) // n << threshold: driver path
-    val loop = Canon.connectedComponentsLoop(vs, edges)
+    val fast = Canon
+      .unionFind(vs.as[String].collect().toSeq, edges.as[(String, String)].collect().toSeq)
+      .toDF("name", "cluster")
+    val loop = Canon.connectedComponents(vs, edges)
     assertSameRows(fast, loop)
   }
 
   test("adaptive driver clustering ≡ distributed LSH pipeline end-to-end") {
     val adaptive = Canon.clusters(names, 0.3)
-    val distributed = Canon.connectedComponentsLoop(names, Canon.candidatePairs(names, 0.3))
+    val distributed = Canon.connectedComponents(names, Canon.candidatePairs(names, 0.3))
     assertSameRows(adaptive, distributed)
   }
 }

@@ -53,7 +53,7 @@ class DatapipeSpec extends SparkSpec {
     val brute = Ann.bruteTopKDot(emb, nQueries = 5, k = 10)
       .select("query_id", "cand_id", "score").as[(Long, Long, Long)].collect()
       .map { case (q, c, s) => (q, c) -> s }.toMap
-    val ivf = Ann.ivfTopK(emb, nCentroids = 4, nQueries = 5, k = 10)
+    val ivf = Ann.ivfTopK(emb, nCentroids = 4, nQueries = 5, k = 10, iters = 0)
       .select("query_id", "cand_id", "score").as[(Long, Long, Long)].collect()
     assert(ivf.nonEmpty)
     // scores agree wherever both considered the pair
@@ -82,7 +82,7 @@ class DatapipeSpec extends SparkSpec {
       assert(c >= thr, s"pair ($a,$b) below threshold: $c")
     }
     // cross-check against an independent cell-local brute computation
-    val assigned = Ann.ivfAssign(emb, 4)
+    val assigned = Ann.ivfAssign(emb, 4, iters = 0)
       .select("vec_id", "cell").as[(Long, Long)].collect().toMap
     pairs.foreach { case (cell, a, b, _) =>
       assert(assigned(a) == cell && assigned(b) == cell, s"pair ($a,$b) not cell-local")
