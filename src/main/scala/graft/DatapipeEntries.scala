@@ -11,7 +11,8 @@ import graft.similarity.Lsh
   * `embeddings` parquet tables, plus the canonicalization stage (MinHash-LSH
   * blocking + connected components) over transcript mention names.
   *
-  * Every entry has a DuckDB oracle twin computing the identical result with
+  * [[entries]] are this family's [[SparkEntry.registry]] records; each
+  * entry's DuckDB oracle computes the identical result with
   * engine-portable primitives (md5 hex strings, double-widened quantized dot
   * products) — see the portability notes in [[graft.similarity.Lsh]] and
   * [[graft.datapipe.Ann]]. Each similarity primitive has one oracle
@@ -34,64 +35,6 @@ object DatapipeEntries {
       .where(col("mention_type") === "Entity")
       .select("name")
       .distinct()
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // --- dedup family (exact, MinHash-LSH, SimHash, n-gram Jaccard) -------
-    "dp_dedup_exact" -> ((s, dir) => DocDedup.exact(docs(s, dir))),
-    "dp_neardup_lsh" -> ((s, dir) => DocDedup.nearDupPairs(docs(s, dir), 0.5)),
-    "dp_simhash" -> ((s, dir) => DocDedup.simhash(docs(s, dir))),
-    "dp_ngram_jaccard" -> ((s, dir) => DocDedup.ngramJaccardPairs(docs(s, dir), 0.8)),
-
-    // --- text analysis ----------------------------------------------------
-    "dp_langid" -> ((s, dir) => TextStats.langId(docs(s, dir))),
-    "dp_quality" -> ((s, dir) => TextStats.quality(docs(s, dir))),
-    "dp_token_counts" -> ((s, dir) => TextStats.tokenCounts(docs(s, dir))),
-    "dp_fingerprint" -> ((s, dir) => TextStats.fingerprint(docs(s, dir))),
-
-    // --- multimodal binary-column plumbing --------------------------------
-    "dp_media_features" -> ((s, dir) =>
-      Multimodal.stubDecodeCatalyst(Multimodal.asBinary(docs(s, dir)))),
-    // mapPartitions twin (real per-partition batch decode path) — must equal
-    // the Catalyst twin, so it shares the same oracle SQL
-    "dp_media_features_mp" -> ((s, dir) =>
-      Multimodal.stubDecode(s, Multimodal.asBinary(docs(s, dir))).toDF()),
-
-    // --- H5 embeddings backfill (batched mapPartitions over null vectors).
-    // The raw array column is unsortable by the driver's pandas comparer
-    // (round-1 oracle err), so the checked surface is a quantized md5 of the
-    // vector: floor(x*1e6) per component is integer-exact on both engines.
-    "dp_backfill_embeddings" -> ((s, dir) =>
-      Backfill
-        .backfill(s, Backfill.markMissing(emb(s, dir)))
-        .toDF()
-        .select(
-          col("vec_id"),
-          col("label"),
-          Ann.embeddingHash(col("embedding")).as("emb_hash"),
-          col("backfilled")
-        )),
-
-    // --- similarity search ------------------------------------------------
-    "dp_ann_dot" -> ((s, dir) => Ann.bruteTopKDot(emb(s, dir), 8, 5)),
-    "dp_ann_cosine" -> ((s, dir) => Ann.bruteTopKCosine(emb(s, dir), 8, 5)),
-    "dp_ann_ivf" -> ((s, dir) => Ann.ivfTopK(emb(s, dir), 4, 8, 5, iters = 0)),
-    // IVF recall vs the exact brute-force baseline: the single-probe
-    // approximation quality, measured (VERDICT round 1: "recall unmeasured")
-    "dp_ann_ivf_recall" -> ((s, dir) => Ann.ivfRecall(emb(s, dir), 4, 8, 5, iters = 0)),
-    // TRAINED IVF: 2 exact-integer Lloyd iterations refining the first-N
-    // seeds (r4 honest limit "IVF centroids untrained" removed) + its
-    // recall vs brute force — the measured centroid-quality delta
-    "dp_ann_ivf_trained" -> ((s, dir) => Ann.ivfTopK(emb(s, dir), 4, 8, 5, iters = 2)),
-    "dp_ann_ivf_trained_recall" -> ((s, dir) => Ann.ivfRecall(emb(s, dir), 4, 8, 5, iters = 2)),
-    // embedding-cosine near-dup: the vector-space dedup member — IVF
-    // cell-local pair generation, cosine >= 0.3 (the synthetic embeddings
-    // center near cos 0, so 0.3 keeps ~1% of cell-local pairs)
-    "dp_neardup_embedding" -> ((s, dir) => Ann.embeddingNearDupPairs(emb(s, dir), 4, 0.3)),
-
-    // --- canonicalization (north rule: LSH blocking + connected components)
-    "kg_canon_pairs" -> ((s, dir) => Canon.candidatePairs(mentionNames(s, dir), 0.5)),
-    "kg_canon_clusters" -> ((s, dir) => Canon.clusters(mentionNames(s, dir), 0.5))
-  )
 
   // ------------------------------------------------------------------ SQL
 
@@ -235,26 +178,34 @@ SELECT doc_id,
        substr(md5(text), 1, 8) AS checksum_prefix
 FROM documents"""
 
-  val oracleSql: Map[String, String] = Map(
-    "dp_dedup_exact" -> """
+  val entries: Seq[Entry] = Seq(
+    // --- dedup family (exact, MinHash-LSH, SimHash, n-gram Jaccard) -------
+    Entry("dp_dedup_exact", (s, dir) => DocDedup.exact(docs(s, dir)),
+      """
 SELECT md5(text) AS text_hash, min(doc_id) AS keep_doc_id, count(*) AS n_dups
-FROM documents GROUP BY 1""",
-    "dp_neardup_lsh" -> s"""$wordShingleCte${Lsh.pairsCtes("", "sh", DocDedup.Docs, 0.5)}
-SELECT doc_a, doc_b, jaccard FROM pairs""",
-    "dp_simhash" -> s"""
+FROM documents GROUP BY 1"""),
+    Entry("dp_neardup_lsh", (s, dir) => DocDedup.nearDupPairs(docs(s, dir), 0.5),
+      s"""$wordShingleCte${Lsh.pairsCtes("", "sh", DocDedup.Docs, 0.5)}
+SELECT doc_a, doc_b, jaccard FROM pairs""", tier = 7),
+    Entry("dp_simhash", (s, dir) => DocDedup.simhash(docs(s, dir)),
+      s"""
 WITH t0 AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
 ), t1 AS (SELECT doc_id, md5(tok) AS h FROM t0 WHERE length(tok) > 0),
 votes AS (SELECT doc_id, $simhashVotes FROM t1 GROUP BY doc_id)
-SELECT doc_id, $simhashBits AS simhash_bits FROM votes""",
-    "dp_ngram_jaccard" -> s"""$wordShingleCte,
+SELECT doc_id, $simhashBits AS simhash_bits FROM votes"""),
+    Entry("dp_ngram_jaccard", (s, dir) => DocDedup.ngramJaccardPairs(docs(s, dir), 0.8),
+      s"""$wordShingleCte,
 inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
   FROM sh a JOIN sh b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )${Lsh.scoredCtes("", "sh", DocDedup.Docs, 0.8)}
-SELECT doc_a, doc_b, jaccard FROM pairs""",
-    "dp_langid" -> """
+SELECT doc_a, doc_b, jaccard FROM pairs""", tier = 5),
+
+    // --- text analysis ----------------------------------------------------
+    Entry("dp_langid", (s, dir) => TextStats.langId(docs(s, dir)),
+      """
 WITH t0 AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
 ), t1 AS (SELECT doc_id, tok FROM t0 WHERE length(tok) > 0)
@@ -264,8 +215,9 @@ SELECT doc_id, count(*) AS n_tokens,
          / count(*) AS stop_ratio,
        CASE WHEN CAST(sum(CASE WHEN tok IN ('the','a','of','and','is','to','in') THEN 1 ELSE 0 END) AS DOUBLE)
          / count(*) >= 0.05 THEN 'en' ELSE 'unk' END AS pred_lang
-FROM t1 GROUP BY doc_id""",
-    "dp_quality" -> """
+FROM t1 GROUP BY doc_id"""),
+    Entry("dp_quality", (s, dir) => TextStats.quality(docs(s, dir)),
+      """
 WITH t0 AS (
   SELECT doc_id, n_chars, unnest(string_split(text, ' ')) AS tok FROM documents
 ), t1 AS (SELECT doc_id, n_chars, tok FROM t0 WHERE length(tok) > 0)
@@ -273,19 +225,44 @@ SELECT doc_id, count(*) AS n_tokens, max(n_chars) AS n_chars,
        CAST(sum(length(tok)) AS DOUBLE) / count(*) AS avg_tok_len,
        CAST(sum(CASE WHEN lower(tok) IN ('the','a','of','and','is','to','in') THEN 1 ELSE 0 END) AS DOUBLE)
          / count(*) AS stop_ratio
-FROM t1 GROUP BY doc_id""",
-    "dp_token_counts" -> """
+FROM t1 GROUP BY doc_id"""),
+    Entry("dp_token_counts", (s, dir) => TextStats.tokenCounts(docs(s, dir)),
+      """
 SELECT doc_id,
        CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
        CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens
-FROM documents""",
-    "dp_fingerprint" -> """
+FROM documents"""),
+    Entry("dp_fingerprint", (s, dir) => TextStats.fingerprint(docs(s, dir)),
+      """
 SELECT doc_id,
        md5(array_to_string(list_sort(list_distinct(string_split(lower(text), ' '))), ' ')) AS fingerprint
-FROM documents""",
-    "dp_media_features" -> mediaSql,
-    "dp_media_features_mp" -> mediaSql,
-    "dp_backfill_embeddings" -> s"""
+FROM documents"""),
+
+    // --- multimodal binary-column plumbing --------------------------------
+    Entry("dp_media_features", (s, dir) =>
+      Multimodal.stubDecodeCatalyst(Multimodal.asBinary(docs(s, dir))),
+      mediaSql),
+    // mapPartitions twin (real per-partition batch decode path) — must equal
+    // the Catalyst twin, so it shares the same oracle SQL
+    Entry("dp_media_features_mp", (s, dir) =>
+      Multimodal.stubDecode(s, Multimodal.asBinary(docs(s, dir))).toDF(),
+      mediaSql),
+
+    // --- H5 embeddings backfill (batched mapPartitions over null vectors).
+    // The raw array column is unsortable by the driver's pandas comparer
+    // (round-1 oracle err), so the checked surface is a quantized md5 of the
+    // vector: floor(x*1e6) per component is integer-exact on both engines.
+    Entry("dp_backfill_embeddings", (s, dir) =>
+      Backfill
+        .backfill(s, Backfill.markMissing(emb(s, dir)))
+        .toDF()
+        .select(
+          col("vec_id"),
+          col("label"),
+          Ann.embeddingHash(col("embedding")).as("emb_hash"),
+          col("backfilled")
+        ),
+      s"""
 WITH filled AS (
   SELECT vec_id, label,
          CASE WHEN vec_id % 7 = 0
@@ -296,11 +273,15 @@ WITH filled AS (
   FROM embeddings
 )
 SELECT vec_id, label, ${Oracles.embHashSql("embedding")} AS emb_hash, backfilled
-FROM filled""",
-    "dp_ann_dot" -> s"""
+FROM filled"""),
+
+    // --- similarity search ------------------------------------------------
+    Entry("dp_ann_dot", (s, dir) => Ann.bruteTopKDot(emb(s, dir), 8, 5),
+      s"""
 WITH ${bruteCte(8, 5)}
-SELECT query_id, cand_id, score, rank FROM brute""",
-    "dp_ann_cosine" -> s"""
+SELECT query_id, cand_id, score, rank FROM brute"""),
+    Entry("dp_ann_cosine", (s, dir) => Ann.bruteTopKCosine(emb(s, dir), 8, 5),
+      s"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
 scored AS (
   SELECT q.query_id, e.vec_id AS cand_id, ${Oracles.cosSql("q.qv", "e.embedding")} AS cos
@@ -310,26 +291,43 @@ ranked AS (
   SELECT *, CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS INTEGER) AS rank
   FROM scored
 )
-SELECT query_id, cand_id, cos, rank FROM ranked WHERE rank <= 5""",
-    "dp_ann_ivf" -> s"""
+SELECT query_id, cand_id, cos, rank FROM ranked WHERE rank <= 5"""),
+    Entry("dp_ann_ivf", (s, dir) => Ann.ivfTopK(emb(s, dir), 4, 8, 5, iters = 0),
+      s"""
 WITH ${ivfCtes(4, 0)}, ${probeCte(8, 5)}
-SELECT query_id, cell, cand_id, score, rank FROM probe""",
-    "dp_ann_ivf_recall" -> ivfRecallSql(0),
-    "dp_ann_ivf_trained" -> s"""
+SELECT query_id, cell, cand_id, score, rank FROM probe"""),
+    // IVF recall vs the exact brute-force baseline: the single-probe
+    // approximation quality, measured (VERDICT round 1: "recall unmeasured")
+    Entry("dp_ann_ivf_recall", (s, dir) => Ann.ivfRecall(emb(s, dir), 4, 8, 5, iters = 0),
+      ivfRecallSql(0)),
+    // TRAINED IVF: 2 exact-integer Lloyd iterations refining the first-N
+    // seeds (r4 honest limit "IVF centroids untrained" removed) + its
+    // recall vs brute force — the measured centroid-quality delta
+    Entry("dp_ann_ivf_trained", (s, dir) => Ann.ivfTopK(emb(s, dir), 4, 8, 5, iters = 2),
+      s"""
 WITH ${ivfCtes(4, 2)}, ${probeCte(8, 5)}
-SELECT query_id, cell, cand_id, score, rank FROM probe""",
-    "dp_ann_ivf_trained_recall" -> ivfRecallSql(2),
-    "dp_neardup_embedding" -> s"""
+SELECT query_id, cell, cand_id, score, rank FROM probe"""),
+    Entry("dp_ann_ivf_trained_recall", (s, dir) => Ann.ivfRecall(emb(s, dir), 4, 8, 5, iters = 2),
+      ivfRecallSql(2)),
+    // embedding-cosine near-dup: the vector-space dedup member — IVF
+    // cell-local pair generation, cosine >= 0.3 (the synthetic embeddings
+    // center near cos 0, so 0.3 keeps ~1% of cell-local pairs)
+    Entry("dp_neardup_embedding", (s, dir) => Ann.embeddingNearDupPairs(emb(s, dir), 4, 0.3),
+      s"""
 WITH ${ivfCtes(4, 0)}
 , pairs AS (
   SELECT a.cell, a.vec_id AS a_id, b.vec_id AS b_id,
          ${Oracles.cosSql("a.embedding", "b.embedding")} AS cos
   FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
 )
-SELECT cell, a_id, b_id, cos FROM pairs WHERE cos >= 0.3""",
-    "kg_canon_pairs" -> Oracles.withGraph(s"""$namePairsCte
-SELECT name_a, name_b, jaccard FROM npairs"""),
-    "kg_canon_clusters" -> Oracles.withGraph(s"""$namePairsCte
+SELECT cell, a_id, b_id, cos FROM pairs WHERE cos >= 0.3"""),
+
+    // --- canonicalization (north rule: LSH blocking + connected components)
+    Entry("kg_canon_pairs", (s, dir) => Canon.candidatePairs(mentionNames(s, dir), 0.5),
+      Oracles.withGraph(s"""$namePairsCte
+SELECT name_a, name_b, jaccard FROM npairs""")),
+    Entry("kg_canon_clusters", (s, dir) => Canon.clusters(mentionNames(s, dir), 0.5),
+      Oracles.withGraph(s"""$namePairsCte
 , nedges AS (
   SELECT name_a AS src, name_b AS dst FROM npairs
   UNION ALL
@@ -340,6 +338,6 @@ SELECT name_a, name_b, jaccard FROM npairs"""),
   UNION
   SELECT c.a, e.dst FROM closure c JOIN nedges e ON e.src = c.b
 )
-SELECT a AS name, min(b) AS cluster FROM closure GROUP BY a""")
+SELECT a AS name, min(b) AS cluster FROM closure GROUP BY a"""))
   )
 }

@@ -507,6 +507,10 @@ ${Lsh.pairsCtes("c", "csh", Canon.Names, 0.3)}
   def withGraph(body: String): String =
     Transcripts.oracleCte + graphCte + "\n" + body
 
+  /** [[withGraph]] over the corpus slice `keep` (see [[Transcripts.oracleCteWhere]]). */
+  def withGraphWhere(keep: String, body: String): String =
+    Transcripts.oracleCteWhere(keep) + graphCte + "\n" + body
+
   /** G9 oracle: BFS layers as chained MATERIALIZED CTEs with deterministic
     * min-parent tracking, then a backtrack join chain reconstructing the
     * path string — twin of [[graft.query.Query.shortestPath]].

@@ -1,22 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each [[SparkEntry.registry]] query's result
+  * → parquet, plus oracle_sql.json, for the driver's DuckDB compare. Both
+  * follow [[Entry.inRunOrder]], and a query whose output breaks
+  * [[Entry.contract]] fails the run. */
 object Verify {
-
-  /** Gate ordering: cheapest queries FIRST, the measured heavy tail LAST
-    * (Spark-side costs from the committed bench JSONs; every oracle is now
-    * <0.5 s after the MATERIALIZED-CTE fix). A time-budgeted driver gate
-    * that kills the run mid-way then still finds complete parquet dumps for
-    * the bulk of the suite — partial, never empty. Every name must be a
-    * `SparkEntry.queries` entry with an oracle; a test holds it to that.
-    */
-  val heavyTail: Seq[String] = Seq(
-    "kg_coverage_kinds", "kg_link_text_endpoints", "kg_hybrid_search_budget",
-    "kg_subtree", "dp_ngram_jaccard", "kg_shortest_path", "dp_neardup_lsh",
-    "kg_subtree_directed", "kg_path_typed", "kg_path", "kg_incremental_snapshot",
-    "kg_incremental", "st_graph_ingest")
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -43,31 +32,31 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    def rank(n: String): (Int, String) = (heavyTail.indexOf(n), n)
+    val entries = Entry.inRunOrder(SparkEntry.registry)
     // Written BEFORE the query loop (same order): a mid-run kill must leave
     // a readable oracle map alongside whatever parquet dirs finished.
-    val json = SparkEntry.oracleSql.toSeq.sortBy(kv => rank(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = entries.map(e => s"${q(e.name)}: ${q(e.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     var nPass, nFail = 0
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy(kv => rank(kv._1))
-    selected.foreach { case (name, fn) =>
+    val selected = entries.filter(e => only.forall(_.contains(e.name)))
+    selected.foreach { e =>
       SparkEntry.sharedSeconds()
       val t0 = System.nanoTime()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        val rows = spark.read.parquet(s"$outDir/$name").count()
+        val out = e.run(spark, sfDir)
+        out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${e.name}")
+        val rows = spark.read.parquet(s"$outDir/${e.name}").count()
         val sec = (System.nanoTime() - t0) / 1e9
+        val breaches = Entry.contract(out.schema, rows)
+        if (breaches.nonEmpty) throw new IllegalStateException(
+          s"output contract: ${breaches.mkString("; ")} (rows=$rows)")
         // shared: the part of the total spent building shared state (graph,
         // stores, indexes) this query was the first to need; the caches are
         // built lazily, so a killed run still finds the early dumps
-        println(f"[verify] PASS $name rows=$rows ${sec}%.1fs shared=${SparkEntry.sharedSeconds()}%.1fs")
+        println(f"[verify] PASS ${e.name} rows=$rows ${sec}%.1fs shared=${SparkEntry.sharedSeconds()}%.1fs")
         nPass += 1
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] FAIL $name: ${e.getMessage}")
+      } catch { case err: Throwable =>
+        System.err.println(s"[verify] FAIL ${e.name}: ${err.getMessage}")
         nFail += 1
       }
     }

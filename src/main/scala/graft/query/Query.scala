@@ -646,26 +646,29 @@ object Query {
     * · (0.5 + 0.5·norm), k=5 (graph.ts:78). Sources are top-k result lists
     * (dimension-sized), so the unpartitioned ranking windows are safe.
     */
-  def rrfFuse(sources: Seq[(DataFrame, Double)], k: Int = 5, limit: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = sources.zipWithIndex.map { case ((df, boost), i) =>
-      val w = Window.orderBy(col("score").desc, col("node_key"))
-      df.select(col("node_key"), col("score").cast("double").as("score"))
-        .withColumn("rank", row_number().over(w))
-        .withColumn("max_score", max(col("score")).over(Window.partitionBy(lit(1))))
-        .withColumn(
-          "rrf",
-          lit(boost) * (lit(1.0) / (lit(k.toDouble) + col("rank"))) *
-            (lit(0.5) + lit(0.5) * col("score") / col("max_score"))
-        )
-        .select(col("node_key"), col("rrf"))
-    }
-    scored
+  def rrfFuse(sources: Seq[(DataFrame, Double)], k: Int = 5, limit: Int = 10): DataFrame =
+    sources
+      .map { case (df, boost) => rrfRanked(df, boost, k).select(col("node_key"), col("rrf")) }
       .reduce(_ unionByName _)
       .groupBy("node_key")
       .agg(sum("rrf").as("fused_score"))
       .orderBy(col("fused_score").desc, col("node_key"))
       .limit(limit)
+
+  /** One RRF source: its (node_key, score) rows with `rank` by (score desc,
+    * node_key) and `rrf` = boost · 1/(k + rank) · (0.5 + 0.5 · score/max).
+    */
+  private def rrfRanked(df: DataFrame, boost: Double, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.orderBy(col("score").desc, col("node_key"))
+    df.select(col("node_key"), col("score").cast("double").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .withColumn("max_score", max(col("score")).over(Window.partitionBy(lit(1))))
+      .withColumn(
+        "rrf",
+        lit(boost) * (lit(1.0) / (lit(k.toDouble) + col("rank"))) *
+          (lit(0.5) + lit(0.5) * col("score") / col("max_score"))
+      )
   }
 
   /** G5 provenance surface (searchWithProvenance, graph.ts:119-249): the
@@ -681,17 +684,8 @@ object Query {
       k: Int = 5,
       limit: Int = 10
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = sources.map { case (src, df, boost) =>
-      val w = Window.orderBy(col("score").desc, col("node_key"))
-      df.select(col("node_key"), col("score").cast("double").as("score"))
-        .withColumn("rank", row_number().over(w))
-        .withColumn("max_score", max(col("score")).over(Window.partitionBy(lit(1))))
-        .withColumn(
-          "rrf",
-          lit(boost) * (lit(1.0) / (lit(k.toDouble) + col("rank"))) *
-            (lit(0.5) + lit(0.5) * col("score") / col("max_score"))
-        )
+      rrfRanked(df, boost, k)
         .select(col("node_key"), lit(src).as("source"), col("rank"), col("score"), col("rrf"))
     }
     val pivots = sources.flatMap { case (src, _, _) =>

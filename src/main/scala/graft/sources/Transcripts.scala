@@ -150,11 +150,25 @@ object Transcripts {
       .map { case (i, a, _) => s"WHEN $i THEN '$a'" }
       .mkString("CASE (event_id % 12) ", " ", " END")
 
+  private val transcriptsCte: String = """, transcripts AS MATERIALIZED (
+  SELECT conv_id, turn_idx, role, text, tool, ts FROM enriched
+)"""
+
   /** DuckDB CTE prefix re-deriving `enriched` + `transcripts` from the same
     * events parquet. Prepended to every oracle SQL by [[oracle]].
     */
-  val oracleCte: String =
-    s"""WITH RECURSIVE enriched AS MATERIALIZED (
+  val oracleCte: String = enrichedCte("enriched") + transcriptsCte
+
+  /** [[oracleCte]] over a slice of the corpus: the `enriched` rows that
+    * satisfy the SQL predicate `keep`, applied after `turn_idx` is assigned
+    * (as a Spark-side `where` over [[fromEvents]] is).
+    */
+  def oracleCteWhere(keep: String): String =
+    enrichedCte("enriched_all") +
+      s", enriched AS MATERIALIZED (SELECT * FROM enriched_all WHERE $keep)" + transcriptsCte
+
+  private def enrichedCte(name: String): String =
+    s"""WITH RECURSIVE $name AS MATERIALIZED (
   SELECT *,
     CAST(row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE) ORDER BY ts, event_id) - 1 AS INTEGER) AS turn_idx,
     CASE
@@ -183,8 +197,6 @@ object Transcripts {
       'conv-' || lpad(CAST(user_id AS VARCHAR), 6, '0') || '-' || strftime(ts, '%Y%m%d') AS conv_id
     FROM events
   )
-), transcripts AS MATERIALIZED (
-  SELECT conv_id, turn_idx, role, text, tool, ts FROM enriched
 )"""
 
   /** Wrap an oracle query body with the shared derivation CTEs. */

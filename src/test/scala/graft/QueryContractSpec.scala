@@ -1,0 +1,30 @@
+package graft
+
+/** The registry's executable contract: every query has one record, and its
+  * output at sf0.001 meets [[Entry.contract]] — scalar columns only, and at
+  * least one row, so no oracle match is two empty results agreeing.
+  */
+class QueryContractSpec extends SparkSpec {
+
+  test("every query is declared once, with an oracle") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size, s"declared twice: ${names.diff(names.distinct)}")
+    SparkEntry.registry.foreach(e => assert(e.oracle.trim.nonEmpty, s"${e.name} has no oracle"))
+  }
+
+  test("prime leaves no shared table unbuilt") {
+    SparkEntry.prime(spark, sf0001)
+    assert(SparkEntry.sharedTables.nonEmpty)
+    SparkEntry.sharedTables.zipWithIndex.foreach { case (t, i) =>
+      assert(t.isBuilt(spark, sf0001), s"shared table #$i is not built by prime")
+    }
+  }
+
+  Entry.inRunOrder(SparkEntry.registry).foreach { e =>
+    test(s"${e.name} meets the output contract") {
+      val out = e.run(spark, sf0001)
+      val breaches = Entry.contract(out.schema, out.count())
+      assert(breaches.isEmpty, breaches.mkString("; "))
+    }
+  }
+}

@@ -11,6 +11,8 @@ Two comparisons per query:
   - strict: pandas-dtype value-exact compare approximating the driver/judge
     hash gate (DuckDB results fetched via .df(), so HUGEINT->float64 and
     similar coercions show up exactly as they do in the real gate)
+A query whose Spark output and oracle are both empty fails as `vacuous`:
+two empty results agreeing check nothing.
 """
 import json
 import math
@@ -106,6 +108,10 @@ def main(sf_dir, out_dir):
             continue
         a = rows_of(spark_cols, spark_tbl, rounded=True)
         b = rows_of(duck_cols, duck_tbl, rounded=True)
+        if not a and not b:
+            print(f"FAIL {name}: vacuous (0 rows on both sides)")
+            fail += 1
+            continue
         if a != b:
             print(f"FAIL {name}: rows spark={len(a)} duck={len(b)}")
             onlya = [r for r in a if r not in set(b)][:3]
