@@ -31,7 +31,7 @@ import graft.sources.Transcripts
   * behavior. A third measurement (4 fully independent copies of the small
   * job, run concurrently) quantifies the box's own degradation under load —
   * `efficiency_box_normalized` = raw efficiency x that factor is the
-  * engine-attributable number. See ScalingLeg Scaladoc for the full design
+  * engine-attributable number. See BuildLeg Scaladoc for the full design
   * rationale and measurements.
   *
   * Env knobs:
@@ -44,11 +44,12 @@ import graft.sources.Transcripts
   *   SPARK_GRAFT_SCALE   corpus replication factor R (default 16): input is
   *                       unioned R times with distinct conv_id suffixes so
   *                       fixed planning overhead doesn't dominate
-  *   SPARK_GRAFT_REPS    headline build repetitions (default 5, median; an
-  *                       UNTIMED 1/8-scale warmup build runs first so rep 1
-  *                       doesn't pay JIT compilation + heap first-touch)
+  *   SPARK_GRAFT_REPS    headline build repetitions (default 5, median),
+  *                       run in [[BuildLeg]] child JVMs
   *   SPARK_GRAFT_QUERIES "0" skips the per-query suite
   *   SPARK_GRAFT_SCALING "0" skips the scaling legs
+  *   SPARK_GRAFT_SCALING_SCALE replication factor of the scaling legs
+  *                       (default 64)
   */
 object Bench {
 
@@ -67,30 +68,27 @@ object Bench {
         .drop("rep")
   }
 
-  private[graft] def session(cpus: Int, parts: Int): SparkSession = {
-    // scratch (shuffle files, disk-spilled blocks) on tmpfs: /tmp here is a
-    // SHARED virtio disk whose host-side state moved identical runs by 1.6×
-    // (sys time ~15% of user); on a real cluster every node brings its own
-    // local disks, so a box-shared spindle is a harness artifact, not an
-    // engine property. RAM-backed scratch restores per-run comparability.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-bench")
-    new java.io.File(localDir).mkdirs()
-    // SPARK_GRAFT_MASTER (env or -D) overrides the master URL — used by the
-    // scaling legs to run `local-cluster[n,2,mem]` (n separate 2-core
-    // executor JVMs on this box: the honest analog of an n-node cluster;
-    // executor SHAPE held constant, only the count varies). Executor JVMs
-    // need our classes on their own classpath and the same module opens as
-    // the driver.
-    val master = sys.props.get("spark.graft.master")
-      .orElse(sys.env.get("SPARK_GRAFT_MASTER"))
-      .getOrElse(s"local[$cpus]")
+  /** Scratch (shuffle files, disk-spilled blocks) on tmpfs: /tmp here is a
+    * SHARED virtio disk whose host-side state moved identical runs by 1.6×
+    * (sys time ~15% of user); on a real cluster every node brings its own
+    * local disks, so a box-shared spindle is a harness artifact, not an
+    * engine property. RAM-backed scratch restores per-run comparability.
+    */
+  private val LocalDir = "/dev/shm/graft-bench"
+
+  /** A bench session on `master`: `local[n]`, or `local-cluster[n,c,mem]`
+    * for the scaling legs (n separate c-core executor JVMs on this box: the
+    * honest analog of an n-node cluster).
+    */
+  private[graft] def session(master: String, parts: Int): SparkSession = {
+    new java.io.File(LocalDir).mkdirs()
     val b0 = SparkSession
       .builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", parts.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir)
-      .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
+      .config("spark.local.dir", LocalDir)
+      .config("spark.ui.enabled", "false")
     val b =
       if (!master.startsWith("local-cluster")) b0
       else {
@@ -102,14 +100,13 @@ object Bench {
           case ("--add-opens", v) => s"--add-opens=$v"
           case (f, _) if f.startsWith("--add-opens=") => f
         }.distinct.mkString(" ")
-        // executor JVMs: same module opens; JIT/GC thread pools sized to the
-        // executor's core count (as a per-node cgroup limit would do), not
-        // to the host's 32 cores
-        val execCores = sys.env.getOrElse("SPARK_GRAFT_EXEC_CORES", "2")
+        // executor JVMs need our classes and the driver's module opens; their
+        // JIT/GC thread pools are sized to the executor's core count (as a
+        // per-node cgroup limit would do), not to the host's cores
         b0.config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
           .config("spark.executor.extraJavaOptions",
-            s"$opens -XX:ActiveProcessorCount=$execCores")
-          .config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
+            s"$opens -XX:ActiveProcessorCount=${BuildLeg.ExecCores}")
+          .config("spark.executor.memory", s"${BuildLeg.ExecMemMb}m")
       }
     val s = graft.util.Tuning(b).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -164,17 +161,6 @@ object Bench {
     (sec, counts.getOrElse("nodes", 0L), counts.getOrElse("edges", 0L), warmSec)
   }
 
-  /** Cumulative stop-the-world GC milliseconds of this JVM (all collectors):
-    * per-rep deltas go into the bench JSON so a slow rep is attributable
-    * (GC residency vs genuine compute) instead of guessed at.
-    */
-  private[graft] def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime)
-      .sum
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
@@ -185,87 +171,48 @@ object Bench {
     val runScaling = sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
     val heapGb = Runtime.getRuntime.maxMemory / 1e9
 
-    // Headline reps: ONE FRESH CHILD JVM PER REP (default; exactly the
-    // isolation the scaling legs already use). Round 4's driver median was
+    // Headline reps: fresh child JVMs, two reps each (boot + warmup
+    // amortized; GC stays flat, measured). Round 4's headline median was
     // destroyed by shared-JVM GC residency — five reps in one long-lived
     // ~100 GB heap measured per-rep GC of [29.3, 4.5, 2.1, 15.9, 26.9] s and
-    // a 67–183 s spread on identical work. A per-rep JVM makes reps i.i.d.:
+    // a 67–183 s spread on identical work. A fresh JVM keeps reps i.i.d.:
     // each child pays its own untimed 1/8-scale warmup (JIT + first-touch),
-    // builds once, reports, and dies — no block residency can leak across
-    // reps. Runs BEFORE the parent session exists so children never compete
-    // with a populated parent heap. SPARK_GRAFT_ISOLATE_REPS=0 restores the
-    // in-JVM loop (dev fast path).
-    val isolateReps = sys.env.getOrElse("SPARK_GRAFT_ISOLATE_REPS", "1") != "0"
-    val repsPerChild = 2 // boot+warmup amortized; GC stays flat (measured)
-    val isolated: Seq[(Double, Long, Long, Double, Double)] =
-      if (!isolateReps) Seq.empty
-      else {
-        val want = math.max(1, reps)
-        Iterator
-          .continually(())
-          .scanLeft(Seq.empty[(Double, Long, Long, Double, Double)]) { (acc, _) =>
-            acc ++ HeadlineLeg.runIsolated(
-              sfDir, scale, cpus, parts, math.min(repsPerChild, want - acc.size))
-          }
-          .zipWithIndex
-          // child-failure backstop: stop once we have `want` reps or after
-          // `want` children (a dead child contributes nothing; don't spin)
-          .collectFirst { case (acc, i) if acc.size >= want || i >= want => acc }
-          .getOrElse(Seq.empty)
-          .take(want)
-      }
-
-    val spark = session(cpus, parts)
-    aqe(spark, on = false)
-    val gcSecs = scala.collection.mutable.ListBuffer.empty[Double]
-    val runs: Seq[(Double, Long, Long, Double)] =
-      if (isolated.nonEmpty) {
-        gcSecs ++= isolated.map(_._5)
-        isolated.map(r => (r._1, r._2, r._3, r._4))
-      } else {
-        // in-JVM fallback (SPARK_GRAFT_ISOLATE_REPS=0, or every child died):
-        // untimed warmup at 1/8 scale so the full code path JIT-compiles and
-        // the heap takes its first-touch page faults OUTSIDE the timed reps
-        // (round-3 rep 1 ran 267 s vs 70 s for rep 3 on an idle box)
-        timedBuild(spark, sfDir, math.max(1, scale / 8))
-        purgeExcept(spark, Set.empty)
-        System.gc()
-        var gcPrev = gcMillis
-        (1 to math.max(1, reps)).map { _ =>
-          val r = timedBuild(spark, sfDir, scale)
-          // release the rep's checkpoint/cache blocks before the next rep:
-          // the shared caches are not populated yet, so everything is
-          // garbage here
-          purgeExcept(spark, Set.empty)
-          System.gc()
-          val gcNow = gcMillis
-          gcSecs += (gcNow - gcPrev) / 1e3
-          gcPrev = gcNow
-          r
-        }
-      }
-    aqe(spark, on = true)
-    val warmSec = runs.map(_._4).min
-    val buildSecs = runs.map(_._1).sorted
+    // and no block residency leaks across children. Runs BEFORE the parent
+    // session exists so children never compete with a populated parent heap.
+    val want = math.max(1, reps)
+    val runs = scala.collection.mutable.ArrayBuffer.empty[BuildLeg.LegResult]
+    var children = 0
+    // a dead child contributes nothing: stop after `want` children
+    while (runs.size < want && children < want) {
+      runs ++= BuildLeg.await(BuildLeg.spawn(sfDir, scale, s"local[$cpus]", parts,
+        math.min(2, want - runs.size), BuildLeg.HeadlineHeap))
+      children += 1
+    }
+    if (runs.isEmpty) {
+      System.err.println(s"[bench] none of $children headline build legs returned a rep; " +
+        "their stderr is above")
+      sys.exit(1)
+    }
+    val warmSec = runs.map(_.warmSec).min
+    val buildSecs = runs.map(_.buildSec).sorted
     val buildSec = buildSecs(buildSecs.length / 2) // median (headline)
     val buildSecMin = buildSecs.head // best-of-N (variance on this box ±50%)
-    val nNodes = runs.head._2
-    val nEdges = runs.head._3
+    val nNodes = runs.head.nodes
+    val nEdges = runs.head.edges
     val triplesPerSec = nEdges / buildSec
 
     // prime the UNSCALED shared caches once (untimed in the per-query
     // numbers) so graph queries measure the operator, not the first-touch
     // build, then snapshot the protected persistent-RDD set
-    val p0 = System.nanoTime()
-    if (runQueries) SparkEntry.prime(spark, sfDir)
-    val primeSec = (System.nanoTime() - p0) / 1e9
-    val protectedIds: Set[Int] =
-      spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-    val results: Map[String, Double] =
-      if (!runQueries) Map.empty
-      else
-        SparkEntry.queries.map { case (name, fn) =>
+    val (primeSec, results) =
+      if (!runQueries) (0.0, Map.empty[String, Double])
+      else {
+        val spark = session(s"local[$cpus]", parts)
+        val p0 = System.nanoTime()
+        SparkEntry.prime(spark, sfDir)
+        val primeSec = (System.nanoTime() - p0) / 1e9
+        val protectedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+        val results = SparkEntry.queries.map { case (name, fn) =>
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() }
           catch { case _: Throwable => -1L }
@@ -273,10 +220,17 @@ object Bench {
           purgeExcept(spark, protectedIds) // drop this query's private blocks
           name -> sec
         }
+        // the scaling legs are subprocesses: release this (potentially
+        // 100 GiB) JVM's blocks and heap first so parent residency doesn't
+        // compete with 4 concurrent driver+executor pairs
+        spark.stop()
+        System.gc()
+        (primeSec, results)
+      }
 
     // Scaling legs: same job, same input, 1-executor vs 4-executor
     // local-cluster (the north-rule N -> 4N cluster-size pair; identical
-    // 2-core/6 GiB executor JVMs, real netty shuffle — see ScalingLeg
+    // 2-core/6 GiB executor JVMs, real netty shuffle — see BuildLeg
     // Scaladoc), at a LARGER replication (default 64, ~6.4M turns) than the
     // headline so the parallel term dominates fixed overhead. A third
     // measurement — 4 fully INDEPENDENT copies of the small job run
@@ -288,22 +242,16 @@ object Bench {
     val scalingJson =
       if (!runScaling) "null"
       else {
-        // the legs are subprocesses; release this (potentially 100 GiB) JVM's
-        // cached blocks and heap first so parent residency doesn't compete
-        // with 4 concurrent driver+executor pairs for the box's 128 GiB
-        purgeExcept(spark, Set.empty)
-        spark.stop()
-        System.gc()
         val ratio = hiCpus.toDouble / lowCpus
         val weakScale = math.max(1, scalingScale / 4)
-        val hi = ScalingLeg.runIsolated(sfDir, scalingScale, hiCpus)
-        val lo = ScalingLeg.runIsolated(sfDir, scalingScale, lowCpus)
+        val hi = BuildLeg.runCluster(sfDir, scalingScale, hiCpus)
+        val lo = BuildLeg.runCluster(sfDir, scalingScale, lowCpus)
         // WEAK-scaling leg (fixed work PER executor): 1 executor at W/4 —
         // the 4-executor leg above carries 4x its work, so ideal weak
         // scaling is equal wall time. This leg doubles as the interference
         // control's solo reference (same config), saving one child run.
-        val weakLo = ScalingLeg.runIsolated(sfDir, weakScale, lowCpus)
-        val interf = ScalingLeg.interferenceFactor(
+        val weakLo = BuildLeg.runCluster(sfDir, weakScale, lowCpus)
+        val interf = BuildLeg.interferenceFactor(
           sfDir, weakScale, copies = hiCpus / lowCpus, soloIn = weakLo)
         (hi, lo) match {
           case (Some(h), Some(l)) =>
@@ -366,8 +314,8 @@ object Bench {
                 "strong NtoN4 x box-interference control, clamped <=1; raw fields attached"
               else "raw strong NtoN4 (interference control missing)"
             s"""{"efficiency":$headlineEff,"efficiency_basis":"$headlineBasis",""" +
-              s""""scale":$scalingScale,"cluster_high":"4x${ScalingLeg.ExecCores}-core","build_sec_high":${h.buildSec},""" +
-              s""""triples_per_sec_high":$hiTp,"cluster_low":"1x${ScalingLeg.ExecCores}-core","build_sec_low":${l.buildSec},""" +
+              s""""scale":$scalingScale,"cluster_high":"4x${BuildLeg.ExecCores}-core","build_sec_high":${h.buildSec},""" +
+              s""""triples_per_sec_high":$hiTp,"cluster_low":"1x${BuildLeg.ExecCores}-core","build_sec_low":${l.buildSec},""" +
               s""""triples_per_sec_low":$lowTp,"efficiency_${lowCpus}_to_$hiCpus":$eff,""" +
               s""""warm_sec_high":${h.warmSec},"warm_sec_low":${l.warmSec},""" +
               s""""efficiency_warm_${lowCpus}_to_$hiCpus":$effWarm,""" +
@@ -386,8 +334,8 @@ object Bench {
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = buildSec + results.values.sum
-    val runsJson = runs.map(_._1).mkString("[", ",", "]")
-    val gcJson = gcSecs.mkString("[", ",", "]")
+    val runsJson = runs.map(_.buildSec).mkString("[", ",", "]")
+    val gcJson = runs.map(_.gcSec).mkString("[", ",", "]")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
         s""""cpus":$cpus,"parts":$parts,"scale":$scale,"build_sec":$buildSec,""" +
@@ -399,12 +347,21 @@ object Bench {
   }
 }
 
-/** One scaling leg in an isolated child JVM — an n-node cluster emulated on
-  * this box with Spark's `local-cluster[n, 2, mem]` master: n SEPARATE
+/** One child JVM of timed builds: the headline reps (on a `local[n]`
+  * master) and the scaling legs (on `local-cluster[n, 2, mem]`: n SEPARATE
   * 2-core/6 GiB executor JVMs plus a driver JVM, real netty shuffle between
-  * them.
+  * them, an n-node cluster emulated on this box). Each child pays its own
+  * untimed 1/8-scale warmup build (JIT compilation of the build path, ~40 s
+  * at any size, and heap first-touch), then prints one `LEG {...}` line per
+  * timed build, measured through [[graft.obs.Meter]].
   *
-  * Design (each choice measured, round 3):
+  * The headline reps run in a fresh heap so GC residency from prior reps
+  * (the round-4 amplifier: per-rep GC 2.1–29.3 s in one shared ~100 GB
+  * heap) cannot contaminate the median. Their 32g heap is right-sized for
+  * one sf0.1 × scale-16 build (a working set of a few GiB), which keeps
+  * collections short.
+  *
+  * Scaling-leg design (each choice measured, round 3):
   *  - Cluster size is the ONLY variable. The north rule's criterion compares
   *    two cluster sizes; a cluster grows by adding identical nodes, not by
   *    quadrupling one JVM's thread count. The earlier local[2]→local[8]
@@ -422,81 +379,77 @@ object Bench {
   *    guidance is 2-3 tasks per core). Coupling partitions to cluster size
   *    would make the legs run different physical plans (~25% more task-CPU
   *    at 8 partitions than at 2 on this DAG, measured at equal threads).
-  *
-  * The parent parses one `LEG {...}` line.
   */
-object ScalingLeg {
+object BuildLeg {
 
-  /** Partitions for both legs: enough for the WIDE leg to use every core. */
+  /** Partitions for both scaling legs: enough for the WIDE leg to use every core. */
   val LegParts = 8
 
   /** Cores per executor JVM — the fixed "node shape". */
   val ExecCores = 2
 
-  /** Child entry: build on a local-cluster of `cpus / ExecCores` executors,
-    * print one result line. An untimed 1/8-scale build runs first so the leg
-    * measures the engine, not JIT compilation of the build path (~40 s at
-    * any size).
-    */
+  /** Memory per executor JVM. */
+  val ExecMemMb = 6144
+
+  /** Driver heap of a scaling leg. */
+  val LegHeap = "8g"
+
+  /** Heap of a headline-rep child. */
+  val HeadlineHeap = "32g"
+
+  /** Child entry: args `sfDir scale master parts reps`. */
   def main(args: Array[String]): Unit = {
-    val (sfDir, scale, cpus) = (args(0), args(1).toInt, args(2).toInt)
-    val parts = sys.env.get("SPARK_GRAFT_LEG_PARTS").map(_.toInt).getOrElse(LegParts)
-    val nExec = math.max(1, cpus / ExecCores)
-    val memMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "6144")
-    sys.props.getOrElseUpdate("spark.graft.master", s"local-cluster[$nExec,$ExecCores,$memMb]")
-    val s = Bench.session(cpus, parts)
+    val (sfDir, scale, master, parts, reps) =
+      (args(0), args(1).toInt, args(2), args(3).toInt, args(4).toInt)
+    val s = Bench.session(master, parts)
     Bench.aqe(s, on = false)
     Bench.timedBuild(s, sfDir, math.max(1, scale / 8))
-    Bench.purgeExcept(s, Set.empty)
-    System.gc()
-    // attribution counters for the timed build: task wall (duration) vs
-    // actual on-CPU time (executorCpuTime) separates real per-row cost from
-    // blocked/scheduler time; spill bytes test execution-memory pressure;
-    // gc_sec is this JVM's stop-the-world total
-    val taskMillis = new java.util.concurrent.atomic.AtomicLong()
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong()
-    val spilled = new java.util.concurrent.atomic.AtomicLong()
-    val shufBytes = new java.util.concurrent.atomic.AtomicLong()
-    val execGcMillis = new java.util.concurrent.atomic.AtomicLong()
-    s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        taskMillis.addAndGet(e.taskInfo.duration)
-        val m = e.taskMetrics
-        if (m != null) {
-          cpuNanos.addAndGet(m.executorCpuTime + m.shuffleWriteMetrics.writeTime)
-          spilled.addAndGet(m.memoryBytesSpilled)
-          // total shuffle WRITE bytes of the timed build: the per-edge
-          // quotient is the number a shuffle-shrink claim must cite
-          shufBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          // EXECUTOR-side GC: under local-cluster all task execution lives
-          // in separate executor JVMs, so this driver's GC MXBeans see none
-          // of it — jvmGCTime per task is the number a GC claim must cite
-          execGcMillis.addAndGet(m.jvmGCTime)
-        }
-      }
-    })
-    val gc0 = Bench.gcMillis
-    val (sec, _, edges, warm) = Bench.timedBuild(s, sfDir, scale)
-    val gcSec = (Bench.gcMillis - gc0) / 1e3
-    println(s"""LEG {"build_sec":$sec,"edges":$edges,"warm_sec":$warm,""" +
-      s""""task_sec":${taskMillis.get / 1e3},"cpu_sec":${cpuNanos.get / 1e9},""" +
-      s""""spill_mb":${spilled.get >> 20},"shuffle_bytes":${shufBytes.get},"gc_sec":$gcSec,""" +
-      s""""exec_gc_sec":${execGcMillis.get / 1e3}}""")
+    (1 to reps).foreach { _ =>
+      Bench.purgeExcept(s, Set.empty)
+      System.gc()
+      val ((sec, nodes, edges, warm), m) =
+        graft.obs.Meter.measure(s.sparkContext)(Bench.timedBuild(s, sfDir, scale))
+      println(LegResult(sec, nodes, edges, warm, m.taskMillis / 1e3, m.cpuNanos / 1e9,
+        m.spillBytes >> 20, m.shuffleBytes, m.gcMillis / 1e3, m.execGcMillis / 1e3).line)
+    }
     s.stop()
   }
 
+  /** One timed build. `gcSec` is the driver JVM's stop-the-world GC during
+    * it; `execGcSec` the executors' (under local-cluster every task runs in
+    * an executor JVM). `shuffleBytes` is the build's raw shuffle-write total:
+    * the per-edge quotient is the number a shuffle-shrink claim must cite.
+    */
   final case class LegResult(
-      buildSec: Double, edges: Long, warmSec: Double,
-      taskSec: Double, cpuSec: Double, gcSec: Double, execGcSec: Double,
-      shuffleBytes: Long = 0L) {
+      buildSec: Double, nodes: Long, edges: Long, warmSec: Double, taskSec: Double,
+      cpuSec: Double, spillMb: Long, shuffleBytes: Long, gcSec: Double, execGcSec: Double) {
     def shuffleMb: Long = shuffleBytes >> 20
+
+    /** The child's result line; [[parse]] reads it back. */
+    def line: String =
+      s"""LEG {"build_sec":$buildSec,"nodes":$nodes,"edges":$edges,"warm_sec":$warmSec,""" +
+        s""""task_sec":$taskSec,"cpu_sec":$cpuSec,"spill_mb":$spillMb,""" +
+        s""""shuffle_bytes":$shuffleBytes,"gc_sec":$gcSec,"exec_gc_sec":$execGcSec}"""
   }
 
-  /** Spawn a child JVM running `mainClass args...` with this JVM's flags
-    * (the Spark add-opens set) minus heap sizing; `heap` replaces -Xmx.
-    * Shared by the scaling legs and the headline reps (does not block).
+  /** Every `LEG {...}` line among a child's stdout lines. */
+  def parse(out: Seq[String]): Seq[LegResult] = out.collect {
+    case l if l.startsWith("LEG {") =>
+      val f = l.stripPrefix("LEG {").stripSuffix("}").split(',').map { kv =>
+        val (k, v) = kv.splitAt(kv.indexOf(':'))
+        k.stripPrefix("\"").stripSuffix("\"") -> v.drop(1)
+      }.toMap
+      LegResult(f("build_sec").toDouble, f("nodes").toLong, f("edges").toLong,
+        f("warm_sec").toDouble, f("task_sec").toDouble, f("cpu_sec").toDouble,
+        f("spill_mb").toLong, f("shuffle_bytes").toLong, f("gc_sec").toDouble,
+        f("exec_gc_sec").toDouble)
+  }
+
+  /** Spawn a child JVM of `reps` timed builds (does not block). It gets
+    * this JVM's flags (the Spark add-opens set) minus heap sizing and
+    * processor pinning; `heap` replaces -Xmx.
     */
-  private[graft] def spawnJvm(mainClass: String, heap: String, args: Seq[String]): Process = {
+  def spawn(sfDir: String, scale: Int, master: String, parts: Int, reps: Int, heap: String): Process = {
     import scala.jdk.CollectionConverters._
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val inherited = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
@@ -509,8 +462,8 @@ object ScalingLeg {
       s"-Xmx$heap",
       "-cp",
       System.getProperty("java.class.path"),
-      mainClass
-    ) ++ args
+      "graft.BuildLeg",
+      sfDir, scale.toString, master, parts.toString, reps.toString)
     val pb = new ProcessBuilder(cmd.asJava)
       .redirectError(ProcessBuilder.Redirect.INHERIT)
     // local-cluster executor launch needs a Spark layout + scala version
@@ -519,34 +472,21 @@ object ScalingLeg {
     pb.start()
   }
 
-  /** Spawn one leg child (does not block). Driver JVM -Xmx identical on
-    * every leg (see Scaladoc).
-    */
-  def spawn(sfDir: String, scale: Int, cpus: Int): Process =
-    spawnJvm("graft.ScalingLeg", "8g", Seq(sfDir, scale.toString, cpus.toString))
-
-  /** Block on a spawned leg and parse its LEG line. */
-  def await(proc: Process): Option[LegResult] = {
+  /** Block on a spawned child and parse its LEG lines. */
+  def await(proc: Process): Seq[LegResult] = {
     val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    proc.waitFor()
-    parseLeg(out)
+    val code = proc.waitFor()
+    if (code != 0) System.err.println(s"[bench] build leg exited with code $code")
+    parse(out)
   }
 
-  /** The leg's result from its stdout lines (the one `LEG {...}` line). */
-  def parseLeg(out: Seq[String]): Option[LegResult] = {
-    val re =
-      ("""LEG \{"build_sec":([0-9.Ee+-]+),"edges":(\d+),"warm_sec":([0-9.Ee+-]+),""" +
-        """"task_sec":([0-9.Ee+-]+),"cpu_sec":([0-9.Ee+-]+),"spill_mb":\d+,""" +
-        """"shuffle_bytes":(\d+),"gc_sec":([0-9.Ee+-]+),""" +
-        """"exec_gc_sec":([0-9.Ee+-]+)\}""").r
-    out.collectFirst { case re(b, e, w, t, c, sh, g, eg) =>
-      LegResult(b.toDouble, e.toLong, w.toDouble, t.toDouble, c.toDouble, g.toDouble, eg.toDouble,
-        sh.toLong)
-    }
-  }
+  /** Spawn one scaling leg: one build on `cpus / ExecCores` executors. */
+  def spawnCluster(sfDir: String, scale: Int, cpus: Int): Process = spawn(
+    sfDir, scale, s"local-cluster[${math.max(1, cpus / ExecCores)},$ExecCores,$ExecMemMb]",
+    LegParts, 1, LegHeap)
 
-  def runIsolated(sfDir: String, scale: Int, cpus: Int): Option[LegResult] =
-    await(spawn(sfDir, scale, cpus))
+  def runCluster(sfDir: String, scale: Int, cpus: Int): Option[LegResult] =
+    await(spawnCluster(sfDir, scale, cpus)).headOption
 
   /** Box-interference factor: per-edge task-CPU of one 1-executor job run
     * ALONE vs the average of `copies` IDENTICAL, fully independent jobs
@@ -567,72 +507,13 @@ object ScalingLeg {
   ): Option[(Double, Double, Double)] = {
     // solo reference: reusable from the weak-scaling leg (same config —
     // 1 executor at `scale`), so the control costs `copies` extra runs only
-    val solo = soloIn.orElse(runIsolated(sfDir, scale, ExecCores))
-    val procs = (1 to copies).map(_ => spawn(sfDir, scale, ExecCores))
+    val solo = soloIn.orElse(runCluster(sfDir, scale, ExecCores))
+    val procs = (1 to copies).map(_ => spawnCluster(sfDir, scale, ExecCores))
     val rs = procs.flatMap(await)
     for (s <- solo if rs.nonEmpty) yield {
       val soloPerEdge = s.cpuSec / s.edges
       val concPerEdge = rs.map(r => r.cpuSec / r.edges).sum / rs.size
       (concPerEdge / soloPerEdge, s.cpuSec, rs.map(_.cpuSec).sum / rs.size)
-    }
-  }
-}
-
-/** One headline rep in an isolated child JVM: same `local[cpus]` master,
-  * same shuffle partitioning, same scale as the in-JVM loop it replaces —
-  * the ONLY difference is that each rep gets a fresh heap, so GC residency
-  * from prior reps (the round-4 amplifier: per-rep GC 2.1–29.3 s in one
-  * shared ~100 GB heap) cannot contaminate the median. The child pays its
-  * own untimed 1/8-scale warmup (JIT + first-touch), times ONE build, prints
-  * one `HLEG {...}` line, and exits.
-  *
-  * Child heap defaults to 32g (env SPARK_GRAFT_HEADLINE_HEAP): the sf0.1 ×
-  * scale-16 build's working set is a few GiB, and a right-sized fresh heap
-  * keeps collections short — the parent's ~100 GB heap was sized for the
-  * whole bench (reps + prime + 107-query suite), not for one build.
-  */
-object HeadlineLeg {
-
-  def main(args: Array[String]): Unit = {
-    val (sfDir, scale, cpus, parts) =
-      (args(0), args(1).toInt, args(2).toInt, args(3).toInt)
-    val reps = args.lift(4).map(_.toInt).getOrElse(1)
-    val s = Bench.session(cpus, parts)
-    Bench.aqe(s, on = false)
-    Bench.timedBuild(s, sfDir, math.max(1, scale / 8))
-    var gcPrev = { Bench.purgeExcept(s, Set.empty); System.gc(); Bench.gcMillis }
-    (1 to reps).foreach { _ =>
-      val (sec, nodes, edges, warm) = Bench.timedBuild(s, sfDir, scale)
-      Bench.purgeExcept(s, Set.empty)
-      System.gc()
-      val gcNow = Bench.gcMillis
-      println(
-        s"""HLEG {"build_sec":$sec,"nodes":$nodes,"edges":$edges,""" +
-          s""""warm_sec":$warm,"gc_sec":${(gcNow - gcPrev) / 1e3}}""")
-      gcPrev = gcNow
-    }
-    s.stop()
-  }
-
-  /** Run one rep child (carrying `reps` timed builds — boot + warmup
-    * amortized over a couple of reps; GC stays flat in the right-sized
-    * fresh heap) and parse its HLEG lines:
-    * (buildSec, nodes, edges, warmSec, gcSec) per rep.
-    */
-  def runIsolated(
-      sfDir: String, scale: Int, cpus: Int, parts: Int, reps: Int = 1
-  ): Seq[(Double, Long, Long, Double, Double)] = {
-    val heap = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_HEAP", "32g")
-    val proc = ScalingLeg.spawnJvm(
-      "graft.HeadlineLeg", heap,
-      Seq(sfDir, scale.toString, cpus.toString, parts.toString, reps.toString))
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
-    proc.waitFor()
-    val re =
-      ("""HLEG \{"build_sec":([0-9.Ee+-]+),"nodes":(\d+),"edges":(\d+),""" +
-        """"warm_sec":([0-9.Ee+-]+),"gc_sec":([0-9.Ee+-]+)\}""").r
-    out.collect { case re(b, n, e, w, g) =>
-      (b.toDouble, n.toLong, e.toLong, w.toDouble, g.toDouble)
     }
   }
 }

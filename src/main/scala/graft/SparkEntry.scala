@@ -26,13 +26,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val t = Transcripts.fromEvents(spark, dir)
-    val m = Mentions.extract(t).cache()
-    CallResolver.resolveCalls(
-      m.where(col("mention_type") === "FunctionCall"),
-      m.where(col("mention_type") === "FunctionDef"),
-      t
-    )
+    resolvedCallsOf(spark, dir)
   }
 
   /** One cross-query table (mention table, graph, stores, indexes), built
@@ -90,12 +84,20 @@ object SparkEntry {
     c
   }
 
+  /** The transcript corpus ([[Transcripts.fromEvents]]): every query and
+    * every other shared table reads it, so the events scan and the
+    * (user, day) window that numbers the turns run once per (session,
+    * sfDir), not once per query.
+    */
+  private val corpusOf: Shared[DataFrame] = shared((s, dir) =>
+    Transcripts.fromEvents(s, dir).lcp())
+
   private[graft] val mentionsOf: Shared[DataFrame] = shared((s, dir) =>
-    Mentions.extract(Transcripts.fromEvents(s, dir)).lcp())
+    Mentions.extract(corpusOf(s, dir)).lcp())
 
   // one graph build per (session, sfDir) within a Verify/Bench run
   private val graphOf: Shared[GraphBuild.Graph] = shared { (s, dir) =>
-    val g = GraphBuild.build(s, Transcripts.fromEvents(s, dir))
+    val g = GraphBuild.build(s, corpusOf(s, dir))
     // eager localCheckpoint: collapses the (large) build plan to a
     // LogicalRDD leaf so every downstream query plans/executes against
     // materialized tables — without it, iterative consumers (pagerank,
@@ -114,7 +116,7 @@ object SparkEntry {
     CallResolver.resolveCalls(
       m.where(col("mention_type") === "FunctionCall"),
       m.where(col("mention_type") === "FunctionDef"),
-      Transcripts.fromEvents(s, dir)
+      corpusOf(s, dir)
     ).lcp()
   }
 
@@ -179,21 +181,20 @@ object SparkEntry {
   private val hintsOf: Shared[DataFrame] = shared { (s, dir) =>
     val re = CallResolver.resolveEntities(
       s, mentionsOf(s, dir).where(col("mention_type") === "Entity"))
-    Hints.hints(Transcripts.fromEvents(s, dir), re).lcp()
+    Hints.hints(corpusOf(s, dir), re).lcp()
   }
 
   // the Learning rule store: the reference writes Learning/Scope nodes once
   // via upsert and serves many reads — three query entries consume this table
   private val learningsOf: Shared[DataFrame] = shared((s, dir) =>
-    Learnings.learnings(Transcripts.fromEvents(s, dir)).lcp())
+    Learnings.learnings(corpusOf(s, dir)).lcp())
 
   // the prior run's committed incremental state (fingerprint dimension +
   // mention table) — the stand-in for Incremental's snapshot store so
   // kg_incremental measures the incremental path (new-side diff + delta
   // extraction + relink), not the prior run's work
   private val incStateOf: Shared[(DataFrame, DataFrame)] = shared { (s, dir) =>
-    val oldT = Transcripts
-      .fromEvents(s, dir)
+    val oldT = corpusOf(s, dir)
       .where(col("ts") < lit("2024-01-08").cast("timestamp"))
     (pipeline.Incremental.fingerprints(oldT).lcp(), Mentions.extract(oldT).lcp())
   }
@@ -207,7 +208,7 @@ object SparkEntry {
     val base = java.nio.file.Files.createTempDirectory("graft-snapinc").toString
     val corpus = s"$base/corpus"
     val store = s"$base/store"
-    val t = Transcripts.fromEvents(s, dir)
+    val t = corpusOf(s, dir)
     // "one new day lands on the standing corpus": conversations are
     // user-DAYS (they never span the cutoff), so the delta is the last
     // day's ~3% of conversations — the realistic daily-increment shape
@@ -524,7 +525,7 @@ object SparkEntry {
   lazy val registry: Seq[Entry] = DatapipeEntries.entries ++ Seq(
     // A1/A3 corpus scan + normalization: the input table itself, proving
     // per-turn text equality + stable (conv_id, turn_idx) ordering survive.
-    Entry("kg_transcripts", (s, dir) => Transcripts.fromEvents(s, dir),
+    Entry("kg_transcripts", (s, dir) => corpusOf(s, dir),
       O("SELECT conv_id, turn_idx, role, text, tool, ts FROM transcripts")),
 
     // B2/B9/B10/B11 mention extraction (rule + dictionary emitters)
@@ -627,8 +628,7 @@ object SparkEntry {
     // D21 create_filtered_graph: rev-scoped node subset
     Entry("kg_filtered_nodes", { (s, dir) =>
       val g = graphOf(s, dir)
-      val convs = Transcripts
-        .fromEvents(s, dir)
+      val convs = corpusOf(s, dir)
         .select("conv_id")
         .where(col("conv_id").startsWith("conv-000001-"))
         .distinct()
@@ -639,7 +639,7 @@ object SparkEntry {
     """)),
     // G13/H1 changes: node-key diff between two snapshots (ts cutoff)
     Entry("kg_changes", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val cutoff = lit("2024-01-08").cast("timestamp")
       val before = GraphBuild.spineNodes(s, t).where(col("node_type") === "Turn")
       val after = GraphBuild.spineNodes(s, t.where(col("ts") < cutoff))
@@ -1157,7 +1157,7 @@ object SparkEntry {
     """)),
     // G14 inventory pagination: tool usage counts, page 1 (offset 0 limit 5)
     Entry("kg_tool_inventory", (s, dir) =>
-      Query.toolInventory(Transcripts.fromEvents(s, dir), 0, 5),
+      Query.toolInventory(corpusOf(s, dir), 0, 5),
       O("""
       SELECT name, n_uses, rn FROM (
         SELECT tool AS name, count(*) AS n_uses,
@@ -1172,7 +1172,7 @@ object SparkEntry {
     Entry("kg_mock_inventory", { (s, dir) =>
       val mockedDef = col("role") === "tool" &&
         regexp_extract(col("text"), Dictionary.handlerPattern, 1).isin(mockedHandlers: _*)
-      val g = GraphBuild.build(s, Transcripts.fromEvents(s, dir).where(!mockedDef))
+      val g = GraphBuild.build(s, corpusOf(s, dir).where(!mockedDef))
       Query.mockInventory(g.nodes, g.edges, 0, 10)
     }, Oracles.withGraphWhere(
       s"NOT (role = 'tool' AND alias || '_handler' IN (${mockedHandlers.map(h => s"'$h'").mkString(", ")}))",
@@ -1239,7 +1239,7 @@ object SparkEntry {
       val corpus = s"$base/corpus"
       // 4 files → 4 micro-batches at maxFilesPerTrigger=1: the stream path
       // is genuinely exercised, not a single-batch degenerate case
-      Transcripts.fromEvents(s, dir).repartition(4).write.parquet(corpus)
+      corpusOf(s, dir).repartition(4).write.parquet(corpus)
       streaming.GraphStream.extractAvailable(s, corpus, s"$base/mentions", s"$base/ckpt")
       val g = pipeline.Stages.fromMentions(
         s,
@@ -1251,7 +1251,7 @@ object SparkEntry {
     // H4 muted-state restore: flags captured on a pre-cutoff snapshot
     // survive a full rebuild via canonical-key join
     Entry("kg_restore_state", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val cutoff = lit("2024-01-08").cast("timestamp")
       val state = GraphBuild
         .spineNodes(s, t.where(col("ts") < cutoff))
@@ -1304,7 +1304,7 @@ object SparkEntry {
     // table: the reference scans bodies)
     Entry("kg_datamodels_within", { (s, dir) =>
       import s.implicits._
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val dict = Dictionary.aliasToCanonical.toSeq.toDF("alias", "canonical")
       val fnTurns = t.where(col("role") === "tool")
         .select(col("conv_id"), col("turn_idx"), col("text"),
@@ -1360,7 +1360,7 @@ object SparkEntry {
     // E4 link_integration_tests analog (linker.rs:34-211): broadcast
     // body-contains theta-join — endpoint dimension scanned inside turn text
     Entry("kg_link_text_endpoints", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val eps = mentionsOf(s, dir)
         .where(col("mention_type") === "Endpoint")
         .select(col("verb"), col("path"))
@@ -1453,7 +1453,7 @@ object SparkEntry {
     // E5 link_e2e_tests_pages analog (linker.rs:213-235): page names scanned
     // in turn text via broadcast contains
     Entry("kg_link_pages", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val pages = mentionsOf(s, dir)
         .where(col("mention_type") === "Request")
         .select(regexp_extract(col("name"), "^/api/([a-z]+)", 1).as("page"))
@@ -1469,7 +1469,7 @@ object SparkEntry {
         ON instr(t.text, '/' || p.page || '/') > 0
     """)),
     // B13 comments->docs attach (lag window over conversation order)
-    Entry("kg_docs_attach", (s, dir) => Mentions.docsAttach(Transcripts.fromEvents(s, dir)),
+    Entry("kg_docs_attach", (s, dir) => Mentions.docsAttach(corpusOf(s, dir)),
       O("""
       SELECT conv_id, turn_idx, name, docs FROM (
         SELECT conv_id, turn_idx, role, alias || '_handler' AS name,
@@ -1481,7 +1481,7 @@ object SparkEntry {
     """)),
     // A2 corpus profiling (Repo::new_multi_detect analog)
     Entry("kg_profile", (s, dir) =>
-      Transcripts.fromEvents(s, dir).groupBy("role", "tool").agg(count(lit(1)).as("n")),
+      corpusOf(s, dir).groupBy("role", "tool").agg(count(lit(1)).as("n")),
       O(
       "SELECT role, tool, count(*) AS n FROM transcripts GROUP BY 1, 2"
     )),
@@ -1489,12 +1489,12 @@ object SparkEntry {
     // conversation — turn count, start/end/duration, input vs output token
     // sums, modal tool
     Entry("kg_agent_sessions", (s, dir) =>
-      AgentSessions.sessions(Transcripts.fromEvents(s, dir)),
+      AgentSessions.sessions(corpusOf(s, dir)),
       O(sessionsCte + "\nSELECT * FROM sess")),
     // session_stats route (benchmark/sessions.ts:427-520): the per-group
     // totals the reference loops over all session rows to build
     Entry("kg_session_stats", (s, dir) =>
-      AgentSessions.stats(AgentSessions.sessions(Transcripts.fromEvents(s, dir))),
+      AgentSessions.stats(AgentSessions.sessions(corpusOf(s, dir))),
       O(sessionsCte + """
       SELECT primary_tool,
              count(*) AS sessions,
@@ -1651,7 +1651,7 @@ object SparkEntry {
     // D22 extend_graph: merge a rev-scoped subgraph back in, MERGE dedup
     Entry("kg_extend_graph", { (s, dir) =>
       val g = graphOf(s, dir)
-      val convs = Transcripts.fromEvents(s, dir)
+      val convs = corpusOf(s, dir)
         .select("conv_id")
         .where(col("conv_id").startsWith("conv-000001-"))
         .distinct()
@@ -1696,7 +1696,7 @@ object SparkEntry {
       Oracles.withGraph("SELECT node_key FROM nodes")),
     // G15 scan family: returned-value extraction from tool turns
     Entry("kg_caps_scan", { (s, dir) =>
-      Transcripts.fromEvents(s, dir)
+      corpusOf(s, dir)
         .withColumn("retval", regexp_extract(col("text"), "returned ([0-9]+)", 1))
         .where(length(col("retval")) > 0)
         .select(col("conv_id"), col("turn_idx"), col("retval").cast("long").as("retval"))
@@ -1706,7 +1706,7 @@ object SparkEntry {
     """)),
     // B14 test collectors: integration (rerun calls) + e2e (template paths)
     Entry("kg_test_collect", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val integ = t.where(col("role") === "user")
         .withColumn("name", regexp_extract(col("text"), "rerun ([A-Za-z0-9-]+_handler)", 1))
         .where(length(col("name")) > 0)
@@ -1725,7 +1725,7 @@ object SparkEntry {
     """)),
     // A3 filtered scan honoring skip-lists (roles + conv prefix dictionary)
     Entry("kg_filtered_scan", (s, dir) =>
-      Transcripts.fromEvents(s, dir)
+      corpusOf(s, dir)
         .where(col("role") =!= "tool" && !col("conv_id").startsWith("conv-000002-"))
         .select("conv_id", "turn_idx", "role", "text"),
       O("""
@@ -1744,7 +1744,7 @@ object SparkEntry {
     // re-extract only changed conversations; the node table must equal the
     // full rebuild's (same oracle as kg_nodes)
     Entry("kg_incremental", { (s, dir) =>
-      val newT = Transcripts.fromEvents(s, dir)
+      val newT = corpusOf(s, dir)
       val (committedFps, committedMentions) = incStateOf(s, dir)
       withMetaKv(pipeline.Incremental.build(s, committedFps, committedMentions, newT).nodes)
     }, nodesOracle, tier = 12),
@@ -1786,7 +1786,7 @@ object SparkEntry {
     """)),
     // E7 package nodes: tool-name prefix dimension
     Entry("kg_packages", { (s, dir) =>
-      Transcripts.fromEvents(s, dir)
+      corpusOf(s, dir)
         .where(col("tool").isNotNull)
         .select(split(col("tool"), "_").getItem(0).as("package"), col("tool"))
         .distinct()
@@ -1802,7 +1802,7 @@ object SparkEntry {
     // longest path prefix; the conversation is the containment scope here.
     // ALL-CAPS token scan ≡ extractEnvVarNames' regex sweep (service.ts:176)
     Entry("kg_services", { (s, dir) =>
-      val t = Transcripts.fromEvents(s, dir)
+      val t = corpusOf(s, dir)
       val svc = t
         .where(col("tool").isNotNull)
         .select(col("conv_id"), split(col("tool"), "_").getItem(0).as("service"))

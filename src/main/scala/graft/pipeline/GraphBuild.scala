@@ -214,7 +214,9 @@ object GraphBuild {
       .join(broadcast(clusters), Seq("canonical"))
       .withColumn("canonical", col("cluster"))
       .drop("cluster")
-    val resolvedCalls = resolvedCalls0.cache()
+    // a local checkpoint, not `cache()`: a cache registers a cache-manager
+    // entry that nothing releases, one more per build in a long-lived session
+    val resolvedCalls = resolvedCalls0.lcp(eager = false)
 
     // B9 nested scopes via a genuine non-equi RANGE join
     // (lang/mod.rs:667-706): a request is NESTED_IN the nearest preceding

@@ -1,8 +1,6 @@
 package graft
 
 import java.lang.ref.WeakReference
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftTestHooks}
 import org.apache.spark.sql.functions._
 import graft.query.{Adjacency, Query}
@@ -53,19 +51,8 @@ class AdjacencySpec extends SparkSpec {
     dist
   }
 
-  private def shuffleWritten(f: => Unit): Long = {
-    val sc = spark.sparkContext
-    val bytes = new AtomicLong()
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    GraftTestHooks.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try { f; GraftTestHooks.drainListeners(sc) }
-    finally sc.removeSparkListener(listener)
-    bytes.get
-  }
+  private def shuffleWritten(f: => Unit): Long =
+    graft.obs.Meter.measure(spark.sparkContext)(f)._2.shuffleBytes
 
   private val es = edgeRows(n = 400, m = 1600, seed = 7)
   private val edges = frame(es)

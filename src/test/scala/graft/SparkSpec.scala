@@ -38,19 +38,8 @@ abstract class SparkSpec extends AnyFunSuite {
   def sf0001: String = SparkTestSession.sf0001
 
   /** Spark jobs that `f` runs. */
-  def jobsRun(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.sql.GraftTestHooks.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try { f; org.apache.spark.sql.GraftTestHooks.drainListeners(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get
-  }
+  def jobsRun(f: => Unit): Int =
+    graft.obs.Meter.measure(spark.sparkContext)(f)._2.jobs.toInt
 
   /** Order-insensitive DataFrame equality on collected rows. */
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {

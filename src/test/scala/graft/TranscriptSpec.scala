@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.GraftTestHooks
 import org.apache.spark.sql.functions._
 import graft.extract.Mentions
 import graft.pipeline.{CheckpointedBuild, GraphBuild}
+import graft.sources.Transcripts
 
 /** North-rule invariants on the corpus itself:
   *  - stable (conv_id, turn_idx) ordering: turn_idx is dense 0..n-1 per
@@ -52,6 +54,13 @@ class TranscriptSpec extends SparkSpec {
 
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("a graph build and the flagship entry leave nothing in Spark's cache manager") {
+    val before = GraftTestHooks.cachedPlans(spark)
+    assert(GraphBuild.build(spark, Transcripts.fromEvents(spark, sf0001)).edges.count() > 0)
+    assert(SparkEntry.entry(spark).count() > 0)
+    assert(GraftTestHooks.cachedPlans(spark) == before, "a build registered a cached plan it never releases")
   }
 
   test("duplicated input rows are caught by the key-uniqueness guard") {

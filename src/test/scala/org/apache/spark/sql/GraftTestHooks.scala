@@ -1,18 +1,15 @@
 package org.apache.spark.sql
 
-import org.apache.spark.{SparkContext, SparkEnv}
+import org.apache.spark.SparkEnv
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.RDDBlockId
 
-/** Test access to Spark internals that are package-private: the listener
-  * bus drain, the block manager, the cache manager's entry count, and the
-  * RDD under a materialized leaf.
+/** Test access to Spark internals that are package-private: the block
+  * manager, the cache manager's entry count, and the RDD under a
+  * materialized leaf.
   */
 object GraftTestHooks {
-
-  /** Waits until every posted listener event has been delivered. */
-  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** Removes every stored block of `rdd`, as losing the executors that hold
     * them would, while the RDD stays marked as persisted.
