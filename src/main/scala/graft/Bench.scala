@@ -23,7 +23,7 @@ import graft.sources.Transcripts
   *
   * Scaling (north-rule two-cluster-size criterion, N -> 4N, efficiency
   * ≥ 0.8; no real cluster in this sandbox): the pair is a 1-executor vs
-  * 4-executor `local-cluster` — separate 2-core/6 GiB executor JVMs with
+  * 4-executor `local-cluster` — separate 2-core executor JVMs with
   * real netty shuffle, i.e. cluster SIZE is the only variable, with the
   * executor shape held constant. Round 2's local[2] -> local[32] pair (and
   * this round's interim local[2] -> local[8] single-JVM pair) conflated
@@ -230,14 +230,14 @@ object Bench {
 
     // Scaling legs: same job, same input, 1-executor vs 4-executor
     // local-cluster (the north-rule N -> 4N cluster-size pair; identical
-    // 2-core/6 GiB executor JVMs, real netty shuffle — see BuildLeg
+    // 2-core executor JVMs, real netty shuffle — see BuildLeg
     // Scaladoc), at a LARGER replication (default 64, ~6.4M turns) than the
     // headline so the parallel term dominates fixed overhead. A third
     // measurement — 4 fully INDEPENDENT copies of the small job run
     // concurrently — separates box-level co-tenancy degradation from
     // engine-attributable scaling loss (efficiency_box_normalized).
-    val lowCpus = 2
-    val hiCpus = 8 // pinned 2->8 cores = 1->4 executors: the N->4N pair
+    val lowCpus = BuildLeg.ExecCores
+    val hiCpus = BuildLeg.HiCpus
     val scalingScale = sys.env.getOrElse("SPARK_GRAFT_SCALING_SCALE", "64").toInt
     val scalingJson =
       if (!runScaling) "null"
@@ -349,7 +349,7 @@ object Bench {
 
 /** One child JVM of timed builds: the headline reps (on a `local[n]`
   * master) and the scaling legs (on `local-cluster[n, 2, mem]`: n SEPARATE
-  * 2-core/6 GiB executor JVMs plus a driver JVM, real netty shuffle between
+  * 2-core executor JVMs plus a driver JVM, real netty shuffle between
   * them, an n-node cluster emulated on this box). Each child pays its own
   * untimed 1/8-scale warmup build (JIT compilation of the build path, ~40 s
   * at any size, and heap first-touch), then prints one `LEG {...}` line per
@@ -370,9 +370,11 @@ object Bench {
   *    at 2 in ONE heap (allocation/cache interaction; ALU, DRAM bandwidth
   *    and latency microbenchmarks all scale ≥0.9, tools/MemBw.java), an
   *    executor-shape effect a real N→4N comparison holds constant.
-  *  - Executor SHAPE identical on both legs: 2 cores, 6 GiB, GC/JIT pools
-  *    pinned via -XX:ActiveProcessorCount=2. Driver JVM identical on both
-  *    legs (8 GiB, unpinned).
+  *  - Executor SHAPE identical on every leg: 2 cores, [[ExecMemMb]] of
+  *    memory, GC/JIT pools pinned via -XX:ActiveProcessorCount=2. Driver
+  *    JVM identical on every leg ([[LegHeap]], unpinned). Both sizes follow
+  *    from the box's memory and the most JVMs the legs start at once, so
+  *    the legs fit the box they run on.
   *  - FIXED shuffle partitioning on both legs (8 at the default scale):
   *    partitioning is a property of the dataset, not of the cluster — the
   *    1-executor leg runs an 8-partition job as 4 waves (Spark's own
@@ -388,11 +390,43 @@ object BuildLeg {
   /** Cores per executor JVM — the fixed "node shape". */
   val ExecCores = 2
 
-  /** Memory per executor JVM. */
-  val ExecMemMb = 6144
+  /** Cores of the wide scaling leg: 2 -> 8 cores = 1 -> 4 executors, the
+    * N -> 4N pair.
+    */
+  val HiCpus = 8
 
-  /** Driver heap of a scaling leg. */
-  val LegHeap = "8g"
+  /** The most JVMs the scaling legs run at once: the box-interference
+    * control's `HiCpus / ExecCores` concurrent 1-executor copies, a driver
+    * and an executor each (the 4-executor leg alone starts five).
+    */
+  val PeakJvms: Int = 2 * (HiCpus / ExecCores)
+
+  /** The box's physical memory in MiB (`MemTotal`), if it can be read. */
+  private def memTotalMb: Option[Long] =
+    try {
+      val src = scala.io.Source.fromFile("/proc/meminfo")
+      try src.getLines().collectFirst {
+        case l if l.startsWith("MemTotal:") => l.split("\\s+")(1).toLong / 1024
+      } finally src.close()
+    } catch { case _: java.io.IOException => None }
+
+  /** Heap for each of [[PeakJvms]] JVMs running at once: an equal share of
+    * three quarters of the box's memory (the rest is left to the parent
+    * JVM and the OS), less 384 MiB for each JVM's off-heap use; never more
+    * than `capMb`, never less than 1 GiB. On a 16 GiB box a share is about
+    * 1 GiB; on a box of 90 GiB or more both caps hold.
+    */
+  private def heapShareMb(capMb: Int): Int =
+    memTotalMb.fold(capMb)(m => (m * 3 / 4 / PeakJvms - 384).toInt.max(1024).min(capMb))
+
+  /** Memory per executor JVM: 6 GiB where the box holds [[PeakJvms]] such
+    * JVMs, less where it does not (the kernel's OOM killer would take an
+    * executor).
+    */
+  val ExecMemMb: Int = heapShareMb(6144)
+
+  /** Driver heap of a scaling leg: 8 GiB, or less as for [[ExecMemMb]]. */
+  val LegHeap: String = s"${heapShareMb(8192)}m"
 
   /** Heap of a headline-rep child. */
   val HeadlineHeap = "32g"

@@ -86,18 +86,24 @@ object Canon {
     * names it runs on the driver from ONE collect of the dimension, which
     * carries each name's shingle set and its band keys from
     * [[Lsh.bandKeys]]; candidates, scores and [[unionFind]] run in memory.
+    * That collect is limited to one row past the ceiling and decides the
+    * path itself, so no count runs first: over a one-partition dimension
+    * (a small checkpointed `distinct`, as the build passes) the driver path
+    * is one Spark job.
     */
   def clusters(names: DataFrame, minJaccard: Double = 0.5): DataFrame = {
     val spark = names.sparkSession
     import spark.implicits._
     def distributed = connectedComponents(names, candidatePairs(names, minJaccard))
-    // dimension-sized; callers pass a checkpointed frame
-    if (names.count() > DriverCcMaxVertices) return distributed
+    // dimension-sized; callers pass a checkpointed frame. One row past the
+    // ceiling is enough to tell a dimension too large for the driver.
     val rows = names
+      .limit((DriverCcMaxVertices + 1).toInt)
       .select(col("name"), lower(col("name")).as("lname"))
       .select(col("name"), when(length(col("lname")) >= 3, array_distinct(expr(Grams))).as("sh"))
       .select(col("name"), col("sh"), Lsh.bandKeys(col("sh")).as("keys"))
       .collect()
+    if (rows.length > DriverCcMaxVertices) return distributed
     val nm = rows.map(_.getString(0)).toSeq
     // <3-char names have no shingles, hence no bands
     val sh = rows.filter(!_.isNullAt(1)).map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Manifest publication strategy — the one filesystem primitive the snapshot
   * protocol needs: make manifest `name` visible in `dir` atomically, exactly
@@ -169,14 +170,24 @@ object SnapshotTable {
   }
 
   /** Read the latest committed snapshot (union of its data dirs, grouped by
-    * their formats).
+    * their formats). Parquet infers the schema from the files, which costs a
+    * Spark job.
     */
-  def read(spark: SparkSession, table: String): Option[DataFrame] =
+  def read(spark: SparkSession, table: String): Option[DataFrame] = load(spark, table, None)
+
+  /** [[read]] with the table's schema known (the frame just committed, a
+    * fixed row type): no inference job runs.
+    */
+  def read(spark: SparkSession, table: String, schema: StructType): Option[DataFrame] =
+    load(spark, table, Some(schema))
+
+  private def load(spark: SparkSession, table: String, schema: Option[StructType]): Option[DataFrame] =
     latestSnapshotId(table).map { id =>
       readManifest(table, id)
         .groupBy(formatOf)
         .map { case (fmt, dirs) =>
-          spark.read.format(fmt).load(dirs.map(d => s"$table/$d"): _*)
+          val reader = spark.read.format(fmt)
+          schema.fold(reader)(reader.schema).load(dirs.map(d => s"$table/$d"): _*)
         }
         .reduce(_ unionByName _)
     }

@@ -19,9 +19,9 @@ import graft.util.Ckpt._
   * stage's output goes through:
   *
   *  - [[CheckpointedBuild]] (the production job, `graft.app.Main`) commits
-  *    each stage through `StageRunner.run` — snapshot commit, read-back,
-  *    lineage — so a resumed run reads committed stages instead of
-  *    computing them;
+  *    each stage through `StageRunner.run` — one snapshot write that also
+  *    counts the stage's lineage rows, then a read-back that runs no job —
+  *    so a resumed run reads committed stages instead of computing them;
   *  - [[GraphBuild.build]] keeps every stage in memory ([[InMemory]]);
   *  - [[GraphBuild.buildFromStages]] serves already-committed upstream
   *    tables back to the sequence.

@@ -11,6 +11,7 @@ import graft.query.Adjacency.Leg
   * process). Traversals over a memoized leaf must return the rows a fresh
   * frame returns; a repeat traversal must move only frontier-sized data; a
   * leaf must survive losing its blocks; and leaves never cross frames.
+  * Job budgets live here too: a BFS level, and a whole committed build.
   */
 class AdjacencySpec extends SparkSpec {
   import spark.implicits._
@@ -187,6 +188,29 @@ class AdjacencySpec extends SparkSpec {
     assert(mapJobs == 1, s"repoMap over 2 levels ran $mapJobs jobs")
     val readJobs = jobsRun(map.count())
     assert(readJobs <= 2, s"counting a repo map ran $readJobs jobs")
+  }
+
+  test("a committed build runs its pinned job budget") {
+    // One CheckpointedBuild.run over the sf0.001 fixture, 88 jobs. A computed
+    // stage's commit path is its snapshot write and nothing more; the jobs
+    // each stage's sink call runs, compute included:
+    //   transcripts        1  the write
+    //   mentions           1  the write (extraction runs inside it)
+    //                      2  the local checkpoint of the mention read-back
+    //   resolved_calls    23  the resolver's checkpoints and AQE query stages
+    //   resolved_entities  2  the write's AQE query stages
+    //   api_links          3  the write's AQE query stages
+    //   nodes             39  GraphBuild.materialize's checkpoints, canon's
+    //                         one driver-path collect, the write's stages
+    //   edges             16  the write's AQE query stages
+    //   _lineage           1  the run's one lineage commit
+    // A job added to the commit path (an inference read-back, a lineage
+    // count, a per-stage lineage commit) fails this test.
+    val t = SparkTestSession.transcripts
+    t.count()
+    val dir = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val jobs = jobsRun(graft.pipeline.CheckpointedBuild.run(spark, t, dir, "run-budget"))
+    assert(jobs == 88, s"a committed build ran $jobs jobs, against a budget of 88")
   }
 
   test("overlapping withAqeOff calls on one session restore AQE once the last leaves") {

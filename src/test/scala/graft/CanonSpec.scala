@@ -77,6 +77,13 @@ class CanonSpec extends SparkSpec {
     assertSameRows(fast, loop)
   }
 
+  test("the driver path of clusters runs one job") {
+    // checkpointed like the build's canonical-name dimension
+    val dim = names.distinct().localCheckpoint()
+    val jobs = jobsRun(Canon.clusters(dim, 0.3))
+    assert(jobs == 1, s"driver clustering ran $jobs jobs")
+  }
+
   test("adaptive driver clustering ≡ distributed LSH pipeline end-to-end") {
     val adaptive = Canon.clusters(names, 0.3)
     val distributed = Canon.connectedComponents(names, Canon.candidatePairs(names, 0.3))

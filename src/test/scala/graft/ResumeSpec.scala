@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.checkpoint.{SnapshotTable, StageRunner}
+import graft.checkpoint.{Lineage, SnapshotTable, StageRunner}
 import graft.app.Main
 import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.extract.Mentions
@@ -13,7 +13,9 @@ import graft.extract.Mentions
   *  - a killed-after-stage-N run, restarted through `graft.app.Main`,
   *    produces byte-identical output tables WITHOUT recomputing committed
   *    stages;
-  *  - a full re-run over an already-complete output dir recomputes nothing.
+  *  - a full re-run over an already-complete output dir recomputes nothing;
+  *  - a computed stage costs one Spark job, its snapshot write, and its
+  *    lineage counts equal the committed table's.
   */
 class ResumeSpec extends SparkSpec {
 
@@ -53,6 +55,27 @@ class ResumeSpec extends SparkSpec {
 
     assertSameRows(full.nodes, resumed.nodes)
     assertSameRows(full.edges, resumed.edges)
+
+    // the killed run never flushed its lineage, as a SIGKILL'd run does: the
+    // lineage table holds the resumed run's rows, for the stages it computed
+    val lin = Lineage.read(spark, s"$dirKilled/_lineage")
+      .select("run_id", "stage").distinct().collect().map(r => (r.getString(0), r.getString(1)))
+    assert(lin.sortBy(r => stages.indexOf(r._2)).toSeq == stages.drop(2).map(("run-resumed", _)),
+      s"lineage must name exactly the resumed run's computed stages: ${lin.mkString(", ")}")
+  }
+
+  test("a computed stage costs exactly its snapshot write") {
+    val df = SparkTestSession.transcripts.where(col("turn_idx") < 3).localCheckpoint()
+    val dir = Files.createTempDirectory("graft-overhead").toString
+    val writeJobs = jobsRun(SnapshotTable.commit(df, s"$dir/plain", "transcripts"))
+    val r = new StageRunner(spark, dir, "run-overhead")
+    var back: DataFrame = null
+    val stageJobs = jobsRun { back = r.run("transcripts", "conv_id")(df) }
+    assert(stageJobs == writeJobs,
+      s"StageRunner.run ran $stageJobs jobs; the snapshot write alone runs $writeJobs")
+    // the read-back without inference has the schema inference would give
+    assert(back.schema == SnapshotTable.read(spark, s"$dir/transcripts").get.schema)
+    assert(r.rowsCommitted("transcripts").contains(df.count()))
   }
 
   test("re-run over a complete dir recomputes nothing (snapshot ids frozen)") {
@@ -71,7 +94,9 @@ class ResumeSpec extends SparkSpec {
     val start = new java.sql.Timestamp(System.currentTimeMillis())
     val res = CheckpointedBuild.run(spark, t, dir, "run-lin")
     val end = new java.sql.Timestamp(System.currentTimeMillis())
-    val lin = graft.checkpoint.Lineage.read(spark, res.runner.lineageDir)
+    val lin = Lineage.read(spark, res.runner.lineageDir)
+    // one lineage commit per run
+    assert(SnapshotTable.latestSnapshotId(res.runner.lineageDir).contains(1))
     val byStage = lin.groupBy("stage").agg(sum("row_count").as("rows")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // per-partition counts must sum to the committed table sizes
@@ -79,6 +104,15 @@ class ResumeSpec extends SparkSpec {
     assert(byStage("mentions") == Mentions.extract(t).count())
     assert(byStage("nodes") == res.nodes.count())
     assert(byStage("edges") == res.edges.count())
+    // ...and, key by key, equal a groupBy of each committed table
+    Stages.All.foreach { st =>
+      def pairs(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+      val observed = pairs(lin.where(col("stage") === st.name).select("partition_key", "row_count"))
+      val grouped = pairs(SnapshotTable.read(spark, s"$dir/${st.name}").get
+        .groupBy(coalesce(col(st.partitionCol).cast("string"), lit("null"))).count())
+      assert(observed == grouped, s"${st.name}: lineage counts differ from the committed table")
+      assert(res.runner.rowsCommitted(st.name).contains(grouped.map(_._2).sum))
+    }
     // every stage recorded wall time, and its commit time within the run
     assert(lin.where(col("wall_ms") < 0).isEmpty)
     assert(lin.where(col("committed_at") < lit(start) || col("committed_at") > lit(end)).isEmpty,
