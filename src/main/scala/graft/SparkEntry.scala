@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.extract.{Dictionary, Mentions}
 import graft.graphstore.GraphOps
 import graft.link.PathNorm
-import graft.pipeline.GraphBuild
+import graft.pipeline.{GraphBuild, Stages}
 import graft.query.{AgentSessions, Hints, Importance, Learnings, Query}
 import graft.resolve.CallResolver
 import graft.sources.Transcripts
@@ -95,9 +95,10 @@ object SparkEntry {
   private[graft] val mentionsOf: Shared[DataFrame] = shared((s, dir) =>
     Mentions.extract(corpusOf(s, dir)).lcp())
 
-  // one graph build per (session, sfDir) within a Verify/Bench run
-  private val graphOf: Shared[GraphBuild.Graph] = shared { (s, dir) =>
-    val g = GraphBuild.build(s, corpusOf(s, dir))
+  // one graph build per (session, sfDir) within a Verify/Bench run, over
+  // the shared mention table: the session extracts the corpus once
+  private[graft] val graphOf: Shared[GraphBuild.Graph] = shared { (s, dir) =>
+    val g = Stages.fromMentions(s, corpusOf(s, dir), mentionsOf(s, dir))
     // eager localCheckpoint: collapses the (large) build plan to a
     // LogicalRDD leaf so every downstream query plans/executes against
     // materialized tables — without it, iterative consumers (pagerank,

@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.sources.Transcripts
 
@@ -11,12 +11,12 @@ import graft.sources.Transcripts
   * Reads the transcript corpus and runs the build's one stage sequence
   * (`graft.pipeline.Stages`, the same one `GraphBuild.build` runs in memory)
   * through [[CheckpointedBuild]], which commits every stage as a snapshot
-  * with per-partition lineage rows. Leaves the seven stage tables, among
-  * them the materialized node/edge tables, plus the `_lineage` metrics table
-  * under <outDir>. Re-running with the same <outDir> resumes: committed
-  * stages are read back, not recomputed (the reference's update_incremental
-  * semantics, graph_ops.rs:95-274). The closing node and edge totals come
-  * from the lineage counts of the writes, so they cost no job.
+  * whose manifest carries its lineage. Leaves the seven stage tables, among
+  * them the materialized node/edge tables, under <outDir>. Re-running with
+  * the same <outDir> and corpus resumes: committed stages are read back, not
+  * recomputed (the reference's update_incremental semantics,
+  * graph_ops.rs:95-274); another corpus fails the run. The closing node and
+  * edge totals come from the manifests' lineage counts, so cost no job.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -32,11 +32,8 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val res = run(spark, sfDir, outDir, runId)
-    // the lineage counts of the write; a stage this run resumed is counted
-    def rows(stage: Stages.Stage, table: DataFrame) =
-      res.runner.rowsCommitted(stage.name).getOrElse(table.count())
-    val nNodes = rows(Stages.Nodes, res.nodes)
-    val nEdges = rows(Stages.Edges, res.edges)
+    val nNodes = res.runner.rowsCommitted(Stages.Nodes.name)
+    val nEdges = res.runner.rowsCommitted(Stages.Edges.name)
     println(s"[graft] build complete: $nNodes nodes, $nEdges edges -> $outDir")
     spark.stop()
   }

@@ -1,8 +1,9 @@
 package graft.checkpoint
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -11,8 +12,8 @@ import org.apache.spark.sql.types.StructType
   * once. Everything else in [[SnapshotTable]] is plain immutable-file I/O
   * that any object store supports.
   *
-  *  - Local/HDFS: stage to a temp file, ATOMIC_MOVE rename
-  *    ([[AtomicRenameCommitter]]).
+  *  - Local/HDFS: stage to a private temp file, then hard-link it to the
+  *    final name ([[AtomicLinkCommitter]]).
   *  - Object stores (S3 et al.) have NO atomic rename — renames are
   *    copy+delete and not atomic. The correct primitive there is
   *    conditional PUT: `PutObject` with `If-None-Match: *` on the FINAL
@@ -28,16 +29,21 @@ trait ManifestCommitter {
   def publish(dir: Path, name: String, bytes: Array[Byte]): Boolean
 }
 
-object AtomicRenameCommitter extends ManifestCommitter {
+/** A rename (`ATOMIC_MOVE`) would not do: POSIX rename silently replaces an
+  * existing target, so the loser of a race would overwrite the winner's
+  * manifest. `link` publishes the fully written temp file atomically and
+  * fails if the name exists.
+  */
+object AtomicLinkCommitter extends ManifestCommitter {
   def publish(dir: Path, name: String, bytes: Array[Byte]): Boolean = {
-    val tmp = dir.resolve(s"$name.tmp")
+    val tmp = dir.resolve(s"$name.${java.util.UUID.randomUUID()}.tmp")
     Files.write(tmp, bytes)
     try {
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      Files.createLink(dir.resolve(name), tmp)
       true
     } catch {
-      case _: java.nio.file.FileAlreadyExistsException => Files.deleteIfExists(tmp); false
-    }
+      case _: java.nio.file.FileAlreadyExistsException => false
+    } finally Files.deleteIfExists(tmp)
   }
 }
 
@@ -59,7 +65,9 @@ object PutIfAbsentCommitter extends ManifestCommitter {
   *
   *   table/
   *     data/<stage>-<n>[.<format>]/...        (immutable data files)
-  *     _snapshot-N.json    (committed file-list; writers commit through a
+  *     _snapshot-N.json    ({"snapshot":N,"files":[...],"summary":{...}}:
+  *                          the committed file list and an optional writer
+  *                          summary; writers commit through a
   *                          [[ManifestCommitter]] — readers pin latest)
   *
   * Matches the reference's per-stage delta flush + MERGE upload semantics
@@ -74,34 +82,41 @@ object SnapshotTable {
   /** Process-wide committer; tests swap in [[PutIfAbsentCommitter]] to prove
     * the object-store variant end-to-end.
     */
-  @volatile var committer: ManifestCommitter = AtomicRenameCommitter
+  @volatile var committer: ManifestCommitter = AtomicLinkCommitter
+
+  val Json = new ObjectMapper()
+
+  /** A published snapshot: its data dirs and its writer's summary, if any. */
+  final case class Manifest(files: Seq[String], summary: Option[JsonNode])
 
   private def snapDir(table: String): Path = Paths.get(table)
 
-  def latestSnapshotId(table: String): Option[Int] = {
-    val dir = snapDir(table)
-    if (!Files.exists(dir)) None
-    else {
-      val ids = Files
-        .list(dir)
-        .iterator()
-        .asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.startsWith("_snapshot-") && s.endsWith(".json") =>
-          s.stripPrefix("_snapshot-").stripSuffix(".json").toInt
-        }
-        .toSeq
-      if (ids.isEmpty) None else Some(ids.max)
-    }
-  }
+  private val SnapshotFile = """_snapshot-(\d+)\.json""".r
+
+  /** Every published snapshot id of `table`, ascending. */
+  def snapshotIds(table: String): Seq[Int] =
+    if (!Files.exists(snapDir(table))) Nil
+    else
+      Files.list(snapDir(table)).iterator().asScala.map(_.getFileName.toString)
+        .collect { case SnapshotFile(id) => id.toInt }.toSeq.sorted
+
+  def latestSnapshotId(table: String): Option[Int] = snapshotIds(table).lastOption
 
   /** Commit `df` as a new named data dir + snapshot N+1. The data write is
     * to a location invisible to readers; the snapshot manifest is published
     * atomically through the [[committer]] — a killed writer leaves no
     * partial snapshot, and a lost publication race retries with N+1
-    * (resume idempotence suite asserts this).
+    * (resume idempotence suite asserts this). `summary` is evaluated once,
+    * after the data write, and published in the same manifest as the data,
+    * so the two become visible together.
     */
-  def commit(df: DataFrame, table: String, stage: String, format: String = "parquet"): Int = {
+  def commit(
+      df: DataFrame,
+      table: String,
+      stage: String,
+      format: String = "parquet",
+      summary: => Option[JsonNode] = None
+  ): Int = {
     val next = latestSnapshotId(table).getOrElse(0) + 1
     val suffix = if (format == "parquet") "" else s".$format"
     // Per-writer nonce in the dir name: two concurrent writers committing
@@ -116,21 +131,8 @@ object SnapshotTable {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dataDir = s"data/$stage-$next-$nonce$suffix"
     df.write.mode("overwrite").format(format).save(s"$table/$dataDir")
-    Files.createDirectories(snapDir(table))
-    var id = math.max(next, latestSnapshotId(table).getOrElse(0) + 1)
-    var done = false
-    while (!done) {
-      val priorFiles = latestSnapshotId(table)
-        .map(p => readManifest(table, p))
-        .getOrElse(Seq.empty)
-      val manifest = (priorFiles :+ dataDir).distinct // append-style lineage
-      val json = manifest.map(f => "\"" + f + "\"").mkString("[", ",", "]")
-      val bytes =
-        s"""{"snapshot":$id,"files":$json}""".getBytes(StandardCharsets.UTF_8)
-      if (committer.publish(snapDir(table), s"_snapshot-$id.json", bytes)) done = true
-      else id += 1 // another writer won this snapshot id: rebase and retry
-    }
-    id
+    // append-style: each snapshot lists its predecessor's dirs plus this one
+    publish(table, summary)(prior => prior.fold(Seq.empty[String])(readManifest(table, _)) :+ dataDir)
   }
 
   /** Publish a snapshot with an EXPLICIT data-dir list and no data write —
@@ -141,27 +143,32 @@ object SnapshotTable {
     * incremental planner ([[graft.pipeline.Incremental.planFromSnapshots]])
     * relies on.
     */
-  def commitFiles(table: String, files: Seq[String]): Int = {
+  def commitFiles(table: String, files: Seq[String]): Int = publish(table, None)(_ => files)
+
+  /** The one publish loop: snapshot N+1 over the latest snapshot N, with the
+    * files `filesOver(N)`; a writer that loses N+1 rebases on the winner.
+    */
+  private def publish(table: String, summary: Option[JsonNode])(filesOver: Option[Int] => Seq[String]): Int = {
     Files.createDirectories(snapDir(table))
-    var id = latestSnapshotId(table).getOrElse(0) + 1
-    var done = false
-    while (!done) {
-      val json = files.map(f => "\"" + f + "\"").mkString("[", ",", "]")
-      val bytes =
-        s"""{"snapshot":$id,"files":$json}""".getBytes(StandardCharsets.UTF_8)
-      if (committer.publish(snapDir(table), s"_snapshot-$id.json", bytes)) done = true
-      else id += 1
+    @tailrec def attempt(): Int = {
+      val prior = latestSnapshotId(table)
+      val id = prior.getOrElse(0) + 1
+      val m = Json.createObjectNode().put("snapshot", id)
+      val files = m.putArray("files")
+      filesOver(prior).foreach(files.add)
+      summary.foreach(m.set[JsonNode]("summary", _))
+      if (committer.publish(snapDir(table), s"_snapshot-$id.json", Json.writeValueAsBytes(m))) id
+      else attempt()
     }
-    id
+    attempt()
   }
 
-  def readManifest(table: String, id: Int): Seq[String] = {
-    val txt = new String(
-      Files.readAllBytes(snapDir(table).resolve(s"_snapshot-$id.json")),
-      StandardCharsets.UTF_8
-    )
-    "\"(data/[^\"]+)\"".r.findAllMatchIn(txt).map(_.group(1)).toSeq
+  def manifest(table: String, id: Int): Manifest = {
+    val m = Json.readTree(snapDir(table).resolve(s"_snapshot-$id.json").toFile)
+    Manifest(m.get("files").elements().asScala.map(_.asText).toSeq, Option(m.get("summary")))
   }
+
+  def readManifest(table: String, id: Int): Seq[String] = manifest(table, id).files
 
   private def formatOf(dataDir: String): String = {
     val name = dataDir.stripPrefix("data/")
@@ -170,18 +177,11 @@ object SnapshotTable {
   }
 
   /** Read the latest committed snapshot (union of its data dirs, grouped by
-    * their formats). Parquet infers the schema from the files, which costs a
-    * Spark job.
+    * their formats). Without `schema`, parquet infers it from the files,
+    * which costs a Spark job; with it (the frame just committed, a fixed row
+    * type) no job runs.
     */
-  def read(spark: SparkSession, table: String): Option[DataFrame] = load(spark, table, None)
-
-  /** [[read]] with the table's schema known (the frame just committed, a
-    * fixed row type): no inference job runs.
-    */
-  def read(spark: SparkSession, table: String, schema: StructType): Option[DataFrame] =
-    load(spark, table, Some(schema))
-
-  private def load(spark: SparkSession, table: String, schema: Option[StructType]): Option[DataFrame] =
+  def read(spark: SparkSession, table: String, schema: Option[StructType] = None): Option[DataFrame] =
     latestSnapshotId(table).map { id =>
       readManifest(table, id)
         .groupBy(formatOf)
@@ -192,9 +192,7 @@ object SnapshotTable {
         .reduce(_ unionByName _)
     }
 
-  /** Has `stage` already committed into this table? (resume check) */
-  def stageCommitted(table: String, stage: String): Boolean =
-    latestSnapshotId(table).exists(id =>
-      readManifest(table, id).exists(_.startsWith(s"data/$stage-"))
-    )
+  /** The latest manifest, if it lists a data dir of `stage` (resume check). */
+  def committed(table: String, stage: String): Option[Manifest] =
+    latestSnapshotId(table).map(manifest(table, _)).filter(_.files.exists(_.startsWith(s"data/$stage-")))
 }

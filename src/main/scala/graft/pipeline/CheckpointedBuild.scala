@@ -1,5 +1,8 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.checkpoint.{SnapshotTable, StageRunner}
 
@@ -9,16 +12,16 @@ import graft.checkpoint.{SnapshotTable, StageRunner}
   * of the reference's per-stage streaming flush + incremental update
   * (ast/src/builder/streaming.rs:95-130;
   * ast/src/lang/graphs/graph_ops.rs:95-274). Each stage commits under
-  * `baseDir/<stage>` in one Spark job, its snapshot write, which also counts
-  * the stage's per-partition lineage rows ([[StageRunner]]); the run commits
-  * all of its lineage rows to `baseDir/_lineage` once, as it ends.
+  * `baseDir/<stage>` in one Spark job, its snapshot write, whose manifest
+  * also carries the stage's per-partition lineage ([[StageRunner]]).
   *
   * Downstream stages consume the committed READ-BACK of upstream stages
   * (StageRunner.run returns the on-disk table), so resume consumes exactly
   * the bytes a previous run committed — byte-identical outputs either way
   * (asserted by ResumeSpec). A resume that finds mentions/resolution
   * snapshots on disk performs ZERO extraction and ZERO resolution work;
-  * ResumeSpec counts extractor invocations to prove it.
+  * ResumeSpec counts extractor invocations to prove it; one over another
+  * corpus fails ([[inputIdentity]]).
   */
 object CheckpointedBuild {
 
@@ -30,26 +33,36 @@ object CheckpointedBuild {
       baseDir: String,
       runId: String
   ): Result = {
-    val r = new StageRunner(spark, baseDir, runId)
+    val r = new StageRunner(spark, baseDir, runId, inputIdentity(transcripts))
     val validate = sys.env.getOrElse("SPARK_GRAFT_VALIDATE", "0") == "1"
-    // one `_lineage` commit per run, also for a run that throws
-    try {
-      val g = Stages.run(spark, transcripts, new Stages.Sink {
-        def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
-          r.run(stage.name, stage.partitionCol) {
-            val df = compute
-            // debug-mode invariant guard, before the node table commits:
-            // branches emit key-unique rows by construction; duplicated input
-            // rows would silently break MERGE (A6)
-            if (validate && stage == Stages.Nodes) GraphBuild.validateKeyUniqueness(df)
-            df
-          }
-      })
-      Result(g.nodes, g.edges, r)
-    } finally r.flush()
+    val g = Stages.run(spark, transcripts, new Stages.Sink {
+      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
+        r.run(stage.name, stage.partitionCol) {
+          val df = compute
+          // debug-mode invariant guard, before the node table commits:
+          // branches emit key-unique rows by construction; duplicated input
+          // rows would silently break MERGE (A6)
+          if (validate && stage == Stages.Nodes) GraphBuild.validateKeyUniqueness(df)
+          df
+        }
+    })
+    Result(g.nodes, g.edges, r)
+  }
+
+  /** The corpus's identity: sha256 over the sorted (path, length, mtime) of
+    * its input files, from the Hadoop file status (no Spark job). A corpus
+    * with no input files (an in-memory frame) hashes the empty list.
+    */
+  def inputIdentity(transcripts: DataFrame): String = {
+    val conf = transcripts.sparkSession.sparkContext.hadoopConfiguration
+    val files = transcripts.inputFiles.sorted.map { f =>
+      val st = new Path(f).getFileSystem(conf).getFileStatus(new Path(f))
+      s"$f\t${st.getLen}\t${st.getModificationTime}\n"
+    }
+    MessageDigest.getInstance("SHA-256").digest(files.mkString.getBytes(UTF_8)).map(b => f"$b%02x").mkString
   }
 
   /** True iff every stage of a prior run committed (nothing left to do). */
   def complete(baseDir: String): Boolean =
-    Stages.All.forall(s => SnapshotTable.stageCommitted(s"$baseDir/${s.name}", s.name))
+    Stages.All.forall(s => SnapshotTable.committed(s"$baseDir/${s.name}", s.name).isDefined)
 }

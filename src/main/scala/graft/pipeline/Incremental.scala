@@ -133,9 +133,9 @@ object Incremental {
   private def readDir = regexp_extract(input_file_name(), "(data/[^/]+)/", 1)
 
   /** Commit the incremental state of a completed run over a SnapshotTable
-    * corpus: the mention table, the corpus manifest's data-dir list, and a
-    * (conv_id, data_dir) lineage index. The index is a cheap projection of
-    * the corpus the run already read.
+    * corpus: the mention table, whose manifest summary records the corpus
+    * snapshot the run read, and a (conv_id, data_dir) lineage index. The
+    * index is a cheap projection of the corpus the run already read.
     */
   def commitStateSnapshot(
       spark: SparkSession,
@@ -143,22 +143,21 @@ object Incremental {
       corpusTable: String,
       mentions: DataFrame
   ): Unit = {
-    import spark.implicits._
     val snapId = SnapshotTable
       .latestSnapshotId(corpusTable)
       .getOrElse(sys.error(s"$corpusTable has no committed snapshot"))
-    val dirs = SnapshotTable.readManifest(corpusTable, snapId)
     val t = SnapshotTable.read(spark, corpusTable).get
-    SnapshotTable.commit(mentions, s"$baseDir/mentions_store", "mentions")
-    SnapshotTable.commit(dirs.toDF("data_dir"), s"$baseDir/corpus_dirs", "corpus_dirs")
+    SnapshotTable.commit(mentions, s"$baseDir/mentions_store", "mentions",
+      summary = Some(SnapshotTable.Json.createObjectNode().put("corpus_snapshot", snapId)))
     val convDirs = t.select(col("conv_id"), readDir.as("data_dir")).distinct()
     SnapshotTable.commit(convDirs, s"$baseDir/conv_dirs", "conv_dirs")
   }
 
-  /** Manifest-diff change detection. Reads: the two tiny store dimensions
-    * (corpus_dirs, conv_dirs) and the ADDED data dirs only — never the
-    * unchanged corpus partitions (SnapshotIncrementalSpec proves it by
-    * deleting their bytes before planning).
+  /** Manifest-diff change detection. Reads: two corpus manifests (the one
+    * the store was committed against and the latest), the tiny conv_dirs
+    * dimension and the ADDED data dirs only — never the unchanged corpus
+    * partitions (SnapshotIncrementalSpec proves it by deleting their bytes
+    * before planning).
     *
     *  - added dirs' conversations: changed (new or modified content);
     *  - conversations touching a REMOVED dir but still present elsewhere:
@@ -167,8 +166,10 @@ object Incremental {
     */
   def planFromSnapshots(spark: SparkSession, baseDir: String, corpusTable: String): Plan = {
     import spark.implicits._
-    val oldDirs = stored(spark, baseDir, "corpus_dirs")
-      .as[String].collect().toSeq // dir-name dimension: O(manifest), tiny
+    val store = s"$baseDir/mentions_store"
+    val oldId = SnapshotTable.latestSnapshotId(store).flatMap(SnapshotTable.manifest(store, _).summary)
+      .fold(sys.error(s"$store records no corpus snapshot"))(_.get("corpus_snapshot").asInt)
+    val oldDirs = SnapshotTable.readManifest(corpusTable, oldId)
     val newId = SnapshotTable
       .latestSnapshotId(corpusTable)
       .getOrElse(sys.error(s"$corpusTable has no committed snapshot"))

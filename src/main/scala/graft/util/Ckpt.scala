@@ -32,15 +32,18 @@ object Ckpt {
   /** LAZY local-checkpoint a batch of independent subtrees with their
     * analysis overlapped. `localCheckpoint(eager = false)` is lazy about
     * DATA but not about PLANNING: it resolves `queryExecution.toRdd`, i.e.
-    * full analysis + optimization + physical planning, at call time — pure
-    * single-threaded driver CPU. The graph build checkpoints ~8 independent
+    * full analysis + optimization + physical planning, at call time on the
+    * calling thread. The graph build checkpoints ~8 independent
     * mention-derived subtrees back to back, and that sequential planning was
     * measured at 3.2-3.7 s of every build (per-step timing of the build);
     * planning them on parallel driver threads collapses it to ~the slowest
     * single subtree. Catalyst analysis of INDEPENDENT Datasets is
     * thread-safe (concurrent actions on one session are a supported core
-    * pattern); no job runs here — data still materializes lazily on first
-    * use, exactly as with sequential lcp(eager = false).
+    * pattern). The subtrees' final data still materializes lazily on first
+    * use, exactly as with sequential lcp(eager = false), but jobs DO run
+    * here: under AQE, planning goes through `AdaptiveSparkPlanExec`, which
+    * executes each subtree's shuffle query stages at call time (14 of a
+    * `graft.app.Main` build's 90 jobs over the seed-3 build_cold corpus).
     */
   def lcpAll(dfs: Seq[org.apache.spark.sql.DataFrame]): Seq[org.apache.spark.sql.DataFrame] = {
     import scala.concurrent.{Await, ExecutionContext, Future}

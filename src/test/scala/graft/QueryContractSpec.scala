@@ -20,6 +20,16 @@ class QueryContractSpec extends SparkSpec {
     }
   }
 
+  test("the session's graph reuses its shared mention table: no second extraction") {
+    // a session of its own, so no other test has built its shared tables
+    val s = spark.newSession()
+    SparkEntry.mentionsOf(s, sf0001)
+    val before = graft.extract.Mentions.extractionInvocations.get()
+    assert(SparkEntry.graphOf(s, sf0001).nodes.count() > 0)
+    assert(graft.extract.Mentions.extractionInvocations.get() == before,
+      "building the graph after mentionsOf must not extract the corpus again")
+  }
+
   Entry.inRunOrder(SparkEntry.registry).foreach { e =>
     test(s"${e.name} meets the output contract") {
       val out = e.run(spark, sf0001)

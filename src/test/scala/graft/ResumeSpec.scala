@@ -1,12 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{Lineage, SnapshotTable, StageRunner}
 import graft.app.Main
 import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.extract.Mentions
+import graft.sources.Transcripts
 
 /** Resume-from-checkpoint idempotence (north rule; reference
   * update_incremental semantics graph_ops.rs:95-274):
@@ -14,8 +15,9 @@ import graft.extract.Mentions
   *    produces byte-identical output tables WITHOUT recomputing committed
   *    stages;
   *  - a full re-run over an already-complete output dir recomputes nothing;
-  *  - a computed stage costs one Spark job, its snapshot write, and its
-  *    lineage counts equal the committed table's.
+  *  - a resume over another corpus fails instead of reading its stages back;
+  *  - a computed stage costs one Spark job, its snapshot write, and the
+  *    lineage counts its manifest carries equal the committed table's.
   */
 class ResumeSpec extends SparkSpec {
 
@@ -32,8 +34,10 @@ class ResumeSpec extends SparkSpec {
     // uninterrupted run -> the expected final tables
     val full = CheckpointedBuild.run(spark, t, dirFull, "run-full")
 
-    // simulate a run killed after committing the first two stages
-    val r = new StageRunner(spark, dirKilled, "run-killed")
+    // simulate a run killed after committing the first two stages, over
+    // the corpus Main.run reads (the same input identity)
+    val input = CheckpointedBuild.inputIdentity(Transcripts.fromEvents(spark, sf0001))
+    val r = new StageRunner(spark, dirKilled, "run-killed", input)
     val t1 = r.run("transcripts", "conv_id")(t)
     r.run("mentions", "mention_type")(Mentions.extract(t1))
     val idsAfterKill = snapIds(dirKilled)
@@ -56,26 +60,65 @@ class ResumeSpec extends SparkSpec {
     assertSameRows(full.nodes, resumed.nodes)
     assertSameRows(full.edges, resumed.edges)
 
-    // the killed run never flushed its lineage, as a SIGKILL'd run does: the
-    // lineage table holds the resumed run's rows, for the stages it computed
-    val lin = Lineage.read(spark, s"$dirKilled/_lineage")
+    // each stage's lineage committed with its data: the killed run's two
+    // stages, then the five the resumed run computed
+    val lin = Lineage.read(spark, dirKilled)
       .select("run_id", "stage").distinct().collect().map(r => (r.getString(0), r.getString(1)))
-    assert(lin.sortBy(r => stages.indexOf(r._2)).toSeq == stages.drop(2).map(("run-resumed", _)),
-      s"lineage must name exactly the resumed run's computed stages: ${lin.mkString(", ")}")
+    assert(lin.sortBy(r => stages.indexOf(r._2)).toSeq ==
+      stages.take(2).map(("run-killed", _)) ++ stages.drop(2).map(("run-resumed", _)),
+      s"lineage must name the killed run's and the resumed run's stages: ${lin.mkString(", ")}")
+  }
+
+  test("a kill between a stage's data write and its manifest: the resume recomputes it") {
+    val t = SparkTestSession.transcripts
+    val dir = Files.createTempDirectory("graft-stray").toString
+    val input = CheckpointedBuild.inputIdentity(t)
+    val killed = new StageRunner(spark, dir, "run-killed", input)
+    val t1 = killed.run("transcripts", "conv_id")(t)
+    // the killed run wrote the mentions data dir but never published it
+    val stray = "data/mentions-1-deadbeef"
+    Mentions.extract(t1).write.parquet(s"$dir/mentions/$stray")
+    assert(SnapshotTable.latestSnapshotId(s"$dir/mentions").isEmpty)
+
+    val resumed = new StageRunner(spark, dir, "run-resumed", input)
+    val t2 = resumed.run("transcripts", "conv_id")(sys.error("transcripts is committed"))
+    val m = resumed.run("mentions", "mention_type")(Mentions.extract(t2))
+    assert(SnapshotTable.snapshotIds(s"$dir/mentions") == Seq(1))
+    assert(!SnapshotTable.readManifest(s"$dir/mentions", 1).contains(stray),
+      "the stray data dir must stay invisible")
+    assertSameRows(Mentions.extract(t), m)
+    val lin = Lineage.read(spark, dir).where(col("stage") === "mentions")
+    assert(lin.select("run_id").distinct().collect().map(_.getString(0)).toSeq == Seq("run-resumed"))
+    assert(lin.count() == m.select("mention_type").distinct().count(),
+      "one lineage row set for mentions: a row per mention type")
+    assert(lin.agg(sum("row_count")).head().getLong(0) == m.count())
+  }
+
+  test("a resume over another corpus fails, naming the committed table") {
+    val dir = Files.createTempDirectory("graft-othercorpus").toString
+    Main.run(spark, sf0001, dir, "run-small")
+    val sf001 = Paths.get(sf0001).resolveSibling("sf0.01").toString
+    val e = intercept[IllegalStateException](Main.run(spark, sf001, dir, "run-big"))
+    assert(e.getMessage.contains(s"$dir/transcripts"), e.getMessage)
+    // a committed stage that records no corpus at all fails the same way
+    val bare = Files.createTempDirectory("graft-bare").toString
+    SnapshotTable.commit(SparkTestSession.transcripts, s"$bare/transcripts", "transcripts")
+    val e2 = intercept[IllegalStateException](Main.run(spark, sf0001, bare, "run-bare"))
+    assert(e2.getMessage.contains(s"$bare/transcripts"), e2.getMessage)
   }
 
   test("a computed stage costs exactly its snapshot write") {
     val df = SparkTestSession.transcripts.where(col("turn_idx") < 3).localCheckpoint()
     val dir = Files.createTempDirectory("graft-overhead").toString
     val writeJobs = jobsRun(SnapshotTable.commit(df, s"$dir/plain", "transcripts"))
-    val r = new StageRunner(spark, dir, "run-overhead")
+    val r = new StageRunner(spark, dir, "run-overhead", "test-input")
     var back: DataFrame = null
     val stageJobs = jobsRun { back = r.run("transcripts", "conv_id")(df) }
     assert(stageJobs == writeJobs,
       s"StageRunner.run ran $stageJobs jobs; the snapshot write alone runs $writeJobs")
     // the read-back without inference has the schema inference would give
     assert(back.schema == SnapshotTable.read(spark, s"$dir/transcripts").get.schema)
-    assert(r.rowsCommitted("transcripts").contains(df.count()))
+    assert(r.rowsCommitted("transcripts") == df.count())
   }
 
   test("re-run over a complete dir recomputes nothing (snapshot ids frozen)") {
@@ -94,9 +137,10 @@ class ResumeSpec extends SparkSpec {
     val start = new java.sql.Timestamp(System.currentTimeMillis())
     val res = CheckpointedBuild.run(spark, t, dir, "run-lin")
     val end = new java.sql.Timestamp(System.currentTimeMillis())
-    val lin = Lineage.read(spark, res.runner.lineageDir)
-    // one lineage commit per run
-    assert(SnapshotTable.latestSnapshotId(res.runner.lineageDir).contains(1))
+    val lin = Lineage.read(spark, dir)
+    // the lineage lives in the stage manifests, and reading it runs no job
+    assert(!Files.exists(Paths.get(s"$dir/_lineage")), "CheckpointedBuild.run writes no _lineage dir")
+    assert(jobsRun(Lineage.read(spark, dir)) == 0)
     val byStage = lin.groupBy("stage").agg(sum("row_count").as("rows")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // per-partition counts must sum to the committed table sizes
@@ -111,7 +155,7 @@ class ResumeSpec extends SparkSpec {
       val grouped = pairs(SnapshotTable.read(spark, s"$dir/${st.name}").get
         .groupBy(coalesce(col(st.partitionCol).cast("string"), lit("null"))).count())
       assert(observed == grouped, s"${st.name}: lineage counts differ from the committed table")
-      assert(res.runner.rowsCommitted(st.name).contains(grouped.map(_._2).sum))
+      assert(res.runner.rowsCommitted(st.name) == grouped.map(_._2).sum)
     }
     // every stage recorded wall time, and its commit time within the run
     assert(lin.where(col("wall_ms") < 0).isEmpty)

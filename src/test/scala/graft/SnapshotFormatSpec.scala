@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import graft.checkpoint.{PutIfAbsentCommitter, SnapshotTable}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import graft.checkpoint.{AtomicLinkCommitter, PutIfAbsentCommitter, SnapshotTable}
 
 /** A5 JSONL sink (ast/src/utils.rs:17-51, OUTPUT_FORMAT=jsonl) through the
-  * snapshot commit protocol, and the object-store-safe commit variant
-  * (conditional PUT instead of atomic rename).
+  * snapshot commit protocol, the object-store-safe commit variant
+  * (conditional PUT instead of a local atomic publish), and concurrent
+  * writers with their own manifest summaries.
   */
 class SnapshotFormatSpec extends SparkSpec {
   import spark.implicits._
@@ -72,5 +74,44 @@ class SnapshotFormatSpec extends SparkSpec {
       assert(!PutIfAbsentCommitter.publish(d, "_snapshot-9.json", """{"x":1}""".getBytes))
       assert(Files.readString(d.resolve("_snapshot-9.json")) == "{}")
     } finally SnapshotTable.committer = prev
+  }
+
+  test("two writers commit to one table at once: both land, each with its own summary") {
+    val dir = Files.createTempDirectory("graft-twowriters").toString
+    val table = s"$dir/t"
+    // both data writes finish before either publishes, so both race for
+    // snapshot 1
+    val ready = new CountDownLatch(2)
+    def writer(name: String, id: Long): Thread = new Thread(() => {
+      SnapshotTable.commit(Seq((id, name)).toDF("id", "v"), table, name, summary = {
+        ready.countDown()
+        assert(ready.await(60, TimeUnit.SECONDS))
+        Some(SnapshotTable.Json.createObjectNode().put("writer", name))
+      })
+    })
+    val ws = Seq(writer("a", 1L), writer("b", 2L))
+    ws.foreach(_.start())
+    ws.foreach(_.join(120000))
+    assert(SnapshotTable.snapshotIds(table) == Seq(1, 2))
+    val summaries = Seq(1, 2).map(id => SnapshotTable.manifest(table, id).summary.get.get("writer").asText)
+    assert(summaries.sorted == Seq("a", "b"), s"each summary in its own manifest: $summaries")
+    val last = SnapshotTable.readManifest(table, 2)
+    assert(last.size == 2 && Seq("data/a-", "data/b-").forall(p => last.exists(_.startsWith(p))),
+      s"the last manifest lists both data dirs: $last")
+    assert(SnapshotTable.read(spark, table).get.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    // the local primitive never replaces a published manifest
+    val d = java.nio.file.Paths.get(table)
+    assert(AtomicLinkCommitter.publish(d, "_snapshot-9.json", "{}".getBytes))
+    assert(!AtomicLinkCommitter.publish(d, "_snapshot-9.json", """{"x":1}""".getBytes))
+    assert(Files.readString(d.resolve("_snapshot-9.json")) == "{}")
+  }
+
+  test("manifests are read as JSON: a partition-key-like string in a summary is not a file") {
+    val dir = Files.createTempDirectory("graft-jsonmanifest").toString
+    SnapshotTable.commit(Seq((1L, "a")).toDF("id", "v"), s"$dir/t", "s1",
+      summary = Some(SnapshotTable.Json.createObjectNode().put("data/\"x", "data/y")))
+    val m = SnapshotTable.manifest(s"$dir/t", 1)
+    assert(m.files.size == 1 && m.files.head.startsWith("data/s1-1-"), s"files: ${m.files}")
+    assert(m.summary.get.get("data/\"x").asText == "data/y")
   }
 }

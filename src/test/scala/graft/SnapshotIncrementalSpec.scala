@@ -78,8 +78,8 @@ class SnapshotIncrementalSpec extends SparkSpec {
       val added = {
         val newDirs = SnapshotTable
           .readManifest(corpus, SnapshotTable.latestSnapshotId(corpus).get)
-        val oldDirs = SnapshotTable.read(spark, s"$store/corpus_dirs").get
-          .collect().map(_.getString(0)).toSet
+        val stored = SnapshotTable.manifest(s"$store/mentions_store", 1).summary.get
+        val oldDirs = SnapshotTable.readManifest(corpus, stored.get("corpus_snapshot").asInt).toSet
         newDirs.filterNot(oldDirs)
       }
       val dataRoot = java.nio.file.Paths.get(s"$corpus/data")
