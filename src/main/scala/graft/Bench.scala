@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.pipeline.GraphBuild
 import graft.sources.Transcripts
+import graft.util.Session
 
 /** Benchmark main — one JSON line on stdout.
   *
@@ -36,8 +37,8 @@ import graft.sources.Transcripts
   *
   * Env knobs:
   *   SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS    headline local[N] (default 8; local[32]
-  *                       oversubscribes this 32-core box — BASELINE.md)
+  *   SPARK_GRAFT_CPUS    headline local[N] ([[Session.cpus]]: default the
+  *                       JVM's available processors)
   *   SPARK_GRAFT_PARTS   shuffle partitions for the headline session
   *                       (default min(CPUS, 16): beyond 16-way the extra
   *                       task concurrency only feeds the oversubscription)
@@ -82,13 +83,9 @@ object Bench {
     */
   private[graft] def session(master: String, parts: Int): SparkSession = {
     new java.io.File(LocalDir).mkdirs()
-    val b0 = SparkSession
-      .builder()
-      .master(master)
+    val b0 = Session.local("graft-bench", master)
       .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.local.dir", LocalDir)
-      .config("spark.ui.enabled", "false")
     val b =
       if (!master.startsWith("local-cluster")) b0
       else {
@@ -108,9 +105,7 @@ object Bench {
             s"$opens -XX:ActiveProcessorCount=${BuildLeg.ExecCores}")
           .config("spark.executor.memory", s"${BuildLeg.ExecMemMb}m")
       }
-    val s = graft.util.Tuning(b).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Session.start(b)
   }
 
   /** Unpersist every persistent RDD not in `keep` (cache/persist AND
@@ -163,7 +158,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val cpus = Session.cpus
     val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", math.min(cpus, 16).toString).toInt
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "16").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt

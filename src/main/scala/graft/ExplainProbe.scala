@@ -8,8 +8,7 @@ package graft
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Bench.session(s"local[$cpus]", 8)
+    val spark = Bench.session(s"local[${graft.util.Session.cpus}]", 8)
     SparkEntry.prime(spark, sfDir)
     args.foreach { n =>
       println(s"===== $n =====")

@@ -84,6 +84,14 @@ object SparkEntry {
     c
   }
 
+  /** A fresh dir for the tables a query writes and reads back, under the
+    * driver's Spark files root: Spark deletes that root when the context
+    * stops, so the dirs live as long as the session whose frames read them.
+    */
+  private def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()), prefix).toString
+
   /** The transcript corpus ([[Transcripts.fromEvents]]): every query and
     * every other shared table reads it, so the events scan and the
     * (user, day) window that numbers the turns run once per (session,
@@ -206,7 +214,7 @@ object SparkEntry {
   // snapshot the prior run committed its state against), dir 2 = the delta
   // commit (the final day's conversations). Returns (storeDir, corpusTable).
   private val snapStoreOf: Shared[(String, String)] = shared { (s, dir) =>
-    val base = java.nio.file.Files.createTempDirectory("graft-snapinc").toString
+    val base = scratchDir("graft-snapinc")
     val corpus = s"$base/corpus"
     val store = s"$base/store"
     val t = corpusOf(s, dir)
@@ -1236,7 +1244,7 @@ object SparkEntry {
     // the accumulated mention store. Output ≡ the batch build over the same
     // corpus (same oracle as kg_graph_size).
     Entry("st_graph_ingest", { (s, dir) =>
-      val base = java.nio.file.Files.createTempDirectory("graft-stream").toString
+      val base = scratchDir("graft-stream")
       val corpus = s"$base/corpus"
       // 4 files → 4 micro-batches at maxFilesPerTrigger=1: the stream path
       // is genuinely exercised, not a single-batch degenerate case

@@ -3,6 +3,7 @@ package graft.app
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.{CheckpointedBuild, Stages}
 import graft.sources.Transcripts
+import graft.util.Session
 
 /** spark-submit entrypoint for the full KG-construction job:
   *
@@ -23,19 +24,20 @@ object Main {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_out"
     val runId = if (args.length > 2) args(2) else "run-1"
-    val builder = SparkSession.builder().appName("graft-kg-build")
-    // local default for the sandbox; spark-submit --master overrides
-    val spark = (if (spark_master_set) builder else builder.master("local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start(builder)
     val res = run(spark, sfDir, outDir, runId)
-    val nNodes = res.runner.rowsCommitted(Stages.Nodes.name)
-    val nEdges = res.runner.rowsCommitted(Stages.Edges.name)
+    val nNodes = res.runner.rowsCommitted(Stages.Nodes)
+    val nEdges = res.runner.rowsCommitted(Stages.Edges)
     println(s"[graft] build complete: $nNodes nodes, $nEdges edges -> $outDir")
     spark.stop()
+  }
+
+  /** Main's session: every [[Session]] conf; the master from spark-submit,
+    * else `local[N]`. The UI is the deployment's to set.
+    */
+  private[graft] def builder: SparkSession.Builder = {
+    val b = Session.builder("graft-kg-build")
+    if (masterSet) b else b.master(s"local[${Session.cpus}]")
   }
 
   /** The job itself, on a given session: read the corpus under `sfDir` and
@@ -49,6 +51,6 @@ object Main {
   ): CheckpointedBuild.Result =
     CheckpointedBuild.run(spark, Transcripts.fromEvents(spark, sfDir), outDir, runId)
 
-  private def spark_master_set: Boolean =
+  private def masterSet: Boolean =
     sys.props.contains("spark.master") || sys.env.contains("SPARK_MASTER")
 }

@@ -1,6 +1,7 @@
 package graft.checkpoint
 
 import java.sql.Timestamp
+import java.util.UUID
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
@@ -66,18 +67,19 @@ object Lineage {
   * ([[graft.pipeline.CheckpointedBuild.inputIdentity]]); a committed stage
   * that records another (or none) fails the run instead of being read back.
   */
-final class StageRunner(spark: SparkSession, baseDir: String, runId: String, input: String) {
+final class StageRunner(spark: SparkSession, baseDir: String, runId: String, input: String)
+    extends Stages.Sink {
 
-  private def tableDir(stage: String) = s"$baseDir/$stage"
+  private def tableDir(stage: Stages.Stage) = s"$baseDir/${stage.name}"
 
   /** If `stage` has a committed snapshot of this corpus, read and return it
     * (NO recomputation); otherwise compute, commit with the rows counted per
-    * `partitionCol` value, and return the committed read-back (so
-    * downstream consumes exactly what's on disk).
+    * value of the stage's `partitionCol`, and return the committed
+    * read-back (so downstream consumes exactly what's on disk).
     */
-  def run(stage: String, partitionCol: String)(compute: => DataFrame): DataFrame = {
+  def run(stage: Stages.Stage)(compute: => DataFrame): DataFrame = {
     val table = tableDir(stage)
-    SnapshotTable.committed(table, stage) match {
+    SnapshotTable.committed(table, stage.name) match {
       case Some(m) =>
         val recorded = m.summary.flatMap(s => Option(s.get("input"))).fold("not recorded")(_.asText)
         if (recorded != input) throw new IllegalStateException(
@@ -86,13 +88,16 @@ final class StageRunner(spark: SparkSession, baseDir: String, runId: String, inp
       case None =>
         val t0 = System.nanoTime()
         val df = compute
-        val obs = Observation(s"lineage_$stage")
-        SnapshotTable.commit(df.observe(obs, KeyCounts.of(col(partitionCol))), table, stage, summary = {
+        // one name per commit attempt: Spark keys an observation by its name
+        // and the observed frame, so two runners committing one frame at
+        // once on a session would share a key and one would never be told
+        val obs = Observation(s"lineage_${stage.name}_${UUID.randomUUID()}")
+        SnapshotTable.commit(df.observe(obs, KeyCounts.of(col(stage.partitionCol))), table, stage.name, summary = {
           // delivered by the listener bus once the write's query has
           // finished; bounded, so a lost event fails the run instead of
           // hanging it
           val counts = Await.result(obs.future, 5.minutes).getMap[String, Long](0).toSeq.sortBy(_._1)
-          val s = SnapshotTable.Json.createObjectNode().put("run_id", runId).put("stage", stage)
+          val s = SnapshotTable.Json.createObjectNode().put("run_id", runId).put("stage", stage.name)
             .put("input", input).put("wall_ms", (System.nanoTime() - t0) / 1000000)
             .put("committed_at", System.currentTimeMillis())
           val c = s.putObject("counts")
@@ -106,8 +111,8 @@ final class StageRunner(spark: SparkSession, baseDir: String, runId: String, inp
   /** Rows committed to `stage`, from the lineage counts in its manifest —
     * for a stage this runner computed and for one a resume read back alike.
     */
-  def rowsCommitted(stage: String): Long =
-    SnapshotTable.committed(tableDir(stage), stage).flatMap(_.summary)
+  def rowsCommitted(stage: Stages.Stage): Long =
+    SnapshotTable.committed(tableDir(stage), stage.name).flatMap(_.summary)
       .map(_.get("counts").elements().asScala.map(_.asLong).sum)
       .getOrElse(sys.error(s"${tableDir(stage)} has no committed lineage"))
 }

@@ -15,51 +15,15 @@ import org.apache.spark.sql.functions._
   * `lower(regexp_replace(c, "[^a-zA-Z0-9]", ""))` is the hot path of the
   * whole build (two keys per edge, ~4 components per key → tens of millions
   * of regexp evaluations) and measured ~14× slower than a character loop at
-  * bench scale. The sanitizer is therefore a deterministic Scala function
-  * applied ONCE per key (components joined inside), with the exact same
-  * semantics: ASCII letters lowercased, ASCII digits kept, every other byte
-  * dropped (multi-byte UTF-8 chars are non-ASCII bytes → dropped, matching
-  * the regexp class), null components skipped as concat_ws does. The DuckDB
-  * oracle twin stays `lower(regexp_replace(x, '[^a-zA-Z0-9]', '', 'g'))`.
+  * bench scale. Every key is therefore one [[SanitizeKeyParts]] expression
+  * over all its components, a byte loop inside whole-stage codegen with the
+  * exact same semantics: ASCII letters lowercased, ASCII digits kept, every
+  * other byte dropped (multi-byte UTF-8 chars are non-ASCII bytes → dropped,
+  * matching the regexp class), null components skipped as concat_ws does.
+  * The DuckDB oracle twin stays
+  * `lower(regexp_replace(x, '[^a-zA-Z0-9]', '', 'g'))`.
   */
 object Keys {
-
-  /** sanitize_string (utils.rs:219-225): lowercase, ASCII alphanumerics only. */
-  def sanitizeStr(s: String): String = {
-    val n = s.length
-    val out = new java.lang.StringBuilder(n)
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if ((c >= '0' && c <= '9') || (c >= 'a' && c <= 'z')) out.append(c)
-      else if (c >= 'A' && c <= 'Z') out.append((c + 32).toChar)
-      i += 1
-    }
-    out.toString
-  }
-
-  /** concat_ws("-", parts.map(sanitize)) with concat_ws null semantics
-    * (null components skipped entirely, empty strings kept).
-    */
-  def keyOfParts(parts: Seq[String]): String = {
-    val out = new java.lang.StringBuilder(64)
-    var first = true
-    parts.foreach { p =>
-      if (p != null) {
-        if (!first) out.append('-')
-        first = false
-        var i = 0
-        val n = p.length
-        while (i < n) {
-          val c = p.charAt(i)
-          if ((c >= '0' && c <= '9') || (c >= 'a' && c <= 'z')) out.append(c)
-          else if (c >= 'A' && c <= 'Z') out.append((c + 32).toChar)
-          i += 1
-        }
-      }
-    }
-    out.toString
-  }
 
   private def keyCol(parts: Column*): Column =
     org.apache.spark.sql.GraftColumnBridge.column(

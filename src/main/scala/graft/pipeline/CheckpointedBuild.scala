@@ -34,18 +34,7 @@ object CheckpointedBuild {
       runId: String
   ): Result = {
     val r = new StageRunner(spark, baseDir, runId, inputIdentity(transcripts))
-    val validate = sys.env.getOrElse("SPARK_GRAFT_VALIDATE", "0") == "1"
-    val g = Stages.run(spark, transcripts, new Stages.Sink {
-      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
-        r.run(stage.name, stage.partitionCol) {
-          val df = compute
-          // debug-mode invariant guard, before the node table commits:
-          // branches emit key-unique rows by construction; duplicated input
-          // rows would silently break MERGE (A6)
-          if (validate && stage == Stages.Nodes) GraphBuild.validateKeyUniqueness(df)
-          df
-        }
-    })
+    val g = Stages.run(spark, transcripts, r)
     Result(g.nodes, g.edges, r)
   }
 

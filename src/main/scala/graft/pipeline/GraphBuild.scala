@@ -45,9 +45,10 @@ object GraphBuild {
     * dedup exchange: every branch emits key-unique rows by construction.
     * That holds for the current extractors over well-formed input, but
     * duplicated input rows (repeated (conv_id, turn_idx)) would silently
-    * break it — this check makes the assumption executable. Run it in tests
-    * and debug builds (CheckpointedBuild honors SPARK_GRAFT_VALIDATE=1);
-    * it is one count over the node table.
+    * break it — this check makes the assumption executable. The tests run
+    * it over the in-memory build's node table and over the one
+    * `graft.app.Main` commits, whose corpus `Transcripts.fromEvents` makes
+    * (conv_id, turn_idx)-unique; it is one aggregation job over the table.
     */
   def validateKeyUniqueness(nodes: DataFrame): Unit = {
     val dups = nodes
@@ -169,7 +170,7 @@ object GraphBuild {
       Stages.ResolvedEntities -> resolvedEntities,
       Stages.ApiLinks -> apiLinks)
     Stages.run(spark, transcripts, new Stages.Sink {
-      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
+      def run(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
         committed.getOrElse(stage, compute)
     })
   }

@@ -19,7 +19,7 @@ import graft.util.Ckpt._
   * stage's output goes through:
   *
   *  - [[CheckpointedBuild]] (the production job, `graft.app.Main`) commits
-  *    each stage through `StageRunner.run` — one snapshot write, whose
+  *    each stage through `StageRunner` — one snapshot write, whose
   *    manifest carries the stage's lineage, then a read-back that runs no
   *    job — so a resumed run reads committed stages instead of computing them;
   *  - [[GraphBuild.build]] keeps every stage in memory ([[InMemory]]);
@@ -32,8 +32,10 @@ import graft.util.Ckpt._
 object Stages {
 
   /** One stage of the sequence: the table it commits and the column its
-    * lineage rows count by. Stages are declared only below, so [[All]] is
-    * the complete list the sequence can reach.
+    * lineage rows count by. That column is bounded (a role, type, strategy
+    * or verb): the stage's manifest carries one count per value. Stages are
+    * declared only below, so [[All]] is the complete list the sequence can
+    * reach.
     */
   final class Stage private[Stages] (val name: String, val partitionCol: String)
 
@@ -44,7 +46,7 @@ object Stages {
     s
   }
 
-  val Transcripts: Stage = stage("transcripts", "conv_id")
+  val Transcripts: Stage = stage("transcripts", "role")
   val MentionTable: Stage = stage("mentions", "mention_type")
   val ResolvedCalls: Stage = stage("resolved_calls", "strategy")
   val ResolvedEntities: Stage = stage("resolved_entities", "strategy")
@@ -60,7 +62,7 @@ object Stages {
     * run) never builds its plan.
     */
   trait Sink {
-    def apply(stage: Stage)(compute: => DataFrame): DataFrame
+    def run(stage: Stage)(compute: => DataFrame): DataFrame
   }
 
   /** Keeps every stage in this process: later stages read the stage's plan
@@ -69,7 +71,7 @@ object Stages {
     * subtrees).
     */
   object InMemory extends Sink {
-    def apply(stage: Stage)(compute: => DataFrame): DataFrame = compute
+    def run(stage: Stage)(compute: => DataFrame): DataFrame = compute
   }
 
   /** The full sequence over a transcript corpus. */
@@ -103,25 +105,25 @@ object Stages {
     // already bucketed by conv_id and this is a no-op repartition.
     // The checkpoint is LAZY: the first job that runs extraction over it
     // materializes both together.
-    val t = sink(Transcripts)(transcripts).repartition(col("conv_id")).lcp(eager = false)
+    val t = sink.run(Transcripts)(transcripts).repartition(col("conv_id")).lcp(eager = false)
     // localCheckpoint (not cache) on the two hot tables: ~15 downstream
     // branches hang off t/mentions, and with full lineage each branch
     // carries the whole scan->extract plan through analysis + AQE
     // re-planning. Truncating to RDD leaves makes every branch plan
     // O(branch), not O(pipeline).
-    val mentions = sink(MentionTable)(mentionsOf(t)).lcp()
+    val mentions = sink.run(MentionTable)(mentionsOf(t)).lcp()
     // Text-free twin of the corpus checkpoint: resolution and ~6 dimension/
     // edge branches need only (conv_id, turn_idx, role, tool), but an
     // RDD-leaf scan always deserializes whole rows — through the narrow twin
     // they move ~10% of the bytes.
     val tMeta = t.select("conv_id", "turn_idx", "role", "tool").lcp(eager = false)
     def ofType(mt: String) = mentions.where(col("mention_type") === mt)
-    val calls = sink(ResolvedCalls)(
+    val calls = sink.run(ResolvedCalls)(
       CallResolver.resolveCalls(ofType("FunctionCall"), ofType("FunctionDef"), tMeta))
-    val entities = sink(ResolvedEntities)(CallResolver.resolveEntities(spark, ofType("Entity")))
-    val links = sink(ApiLinks)(PathNorm.linkApi(ofType("Request"), ofType("Endpoint")))
+    val entities = sink.run(ResolvedEntities)(CallResolver.resolveEntities(spark, ofType("Entity")))
+    val links = sink.run(ApiLinks)(PathNorm.linkApi(ofType("Request"), ofType("Endpoint")))
     // lazy: a run whose node and edge tables are already committed plans neither
     lazy val g = GraphBuild.materialize(spark, t, tMeta, mentions, calls, entities, links)
-    GraphBuild.Graph(sink(Nodes)(g.nodes), sink(Edges)(g.edges), mentions)
+    GraphBuild.Graph(sink.run(Nodes)(g.nodes), sink.run(Edges)(g.edges), mentions)
   }
 }

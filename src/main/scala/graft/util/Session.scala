@@ -2,10 +2,14 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level Spark conf the pipeline expects everywhere it runs (the
-  * spark-submit deployment passes the same pairs as `--conf`). Derived from
-  * thread-dump profiling of the full build at local[32] (BASELINE.md
-  * round 3):
+/** The engine's one session definition. `graft.app.Main`, Verify, Bench,
+  * ExplainProbe and the test session all start from [[builder]], so
+  * production runs the confs the tests and benchmarks check; this is the
+  * only main code that calls `SparkSession.builder`. Callers add only what
+  * their deployment decides: the master, the UI, Bench's executor shape.
+  *
+  * The engine confs come from thread-dump profiling of the full build at
+  * local[32] (BASELINE.md round 3):
   *
   *  - Kryo serializer: RDD block + shuffle-spill (de)serialization of
   *    `UnsafeRow` under the default JavaSerializer runs through reflective
@@ -20,7 +24,13 @@ import org.apache.spark.sql.SparkSession
   *    (107 s -> 50 s together with Kryo). Plain stream copy is contention-
   *    free at identical throughput for these segment sizes.
   */
-object Tuning {
+object Session {
+
+  /** `SPARK_GRAFT_CPUS`, read once: the shuffle partitions of every session
+    * and the N of the `local[N]` masters; by default the JVM's available
+    * processors.
+    */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
   val confs: Seq[(String, String)] = Seq(
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
@@ -36,9 +46,27 @@ object Tuning {
     // sort of text-bearing rows (UnsafeExternalRowSorter was a top-5 CPU
     // frame). The hash map holds one small tool list per group; 4M entries
     // is well within executor memory at production sizing.
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000"
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4000000",
+    // a correctness setting: conv_id and turn_idx derive from the
+    // session-zone date of each event (graft.sources.Transcripts)
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.shuffle.partitions" -> cpus.toString
   )
 
-  def apply(b: SparkSession.Builder): SparkSession.Builder =
-    confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  /** A builder that carries every engine conf; the caller adds its master. */
+  def builder(appName: String): SparkSession.Builder =
+    confs.foldLeft(SparkSession.builder().appName(appName)) { case (b, (k, v)) => b.config(k, v) }
+
+  /** A builder on a master this process chooses (`local[N]`, or
+    * `local-cluster` for Bench's scaling legs), with the UI off.
+    */
+  def local(appName: String, master: String = s"local[$cpus]"): SparkSession.Builder =
+    builder(appName).master(master).config("spark.ui.enabled", "false")
+
+  /** The session of `b`, logging at WARN. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

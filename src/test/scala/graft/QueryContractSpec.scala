@@ -30,6 +30,29 @@ class QueryContractSpec extends SparkSpec {
       "building the graph after mentionsOf must not extract the corpus again")
   }
 
+  test("the snapshot and streaming queries write only under Spark's files root") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // a session of its own, so the snapshot store is built here
+    val s = spark.newSession()
+    val prefixes = Seq("graft-snapinc", "graft-stream")
+    // the queries' dir names: a prefix and the temp-file suffix's digits
+    val name = "(graft-snapinc|graft-stream)\\d+".r
+    def scratch(in: Path): Set[String] = {
+      val ls = Files.list(in)
+      try ls.iterator.asScala.map(_.getFileName.toString).filter(name.matches).toSet
+      finally ls.close()
+    }
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    val before = scratch(tmp)
+    Seq("kg_incremental_snapshot", "st_graph_ingest").foreach(n => SparkEntry.queries(n)(s, sf0001).count())
+    val leaked = scratch(tmp) -- before
+    assert(leaked.isEmpty, s"written outside Spark's files root, so never deleted: ${leaked.mkString(", ")}")
+    // Spark deletes this root when the context stops
+    val root = Paths.get(org.apache.spark.SparkFiles.getRootDirectory())
+    assert(prefixes.forall(p => scratch(root).exists(_.startsWith(p))))
+  }
+
   Entry.inRunOrder(SparkEntry.registry).foreach { e =>
     test(s"${e.name} meets the output contract") {
       val out = e.run(spark, sf0001)

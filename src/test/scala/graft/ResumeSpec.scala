@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{Lineage, SnapshotTable, StageRunner}
 import graft.app.Main
-import graft.pipeline.{CheckpointedBuild, Stages}
+import graft.pipeline.{CheckpointedBuild, GraphBuild, Stages}
 import graft.extract.Mentions
 import graft.sources.Transcripts
 
@@ -17,7 +17,9 @@ import graft.sources.Transcripts
   *  - a full re-run over an already-complete output dir recomputes nothing;
   *  - a resume over another corpus fails instead of reading its stages back;
   *  - a computed stage costs one Spark job, its snapshot write, and the
-  *    lineage counts its manifest carries equal the committed table's.
+  *    lineage counts its manifest carries equal the committed table's, also
+  *    when two runners commit the same stage at once on one session;
+  *  - the node table the production entry commits is key-unique.
   */
 class ResumeSpec extends SparkSpec {
 
@@ -38,8 +40,8 @@ class ResumeSpec extends SparkSpec {
     // the corpus Main.run reads (the same input identity)
     val input = CheckpointedBuild.inputIdentity(Transcripts.fromEvents(spark, sf0001))
     val r = new StageRunner(spark, dirKilled, "run-killed", input)
-    val t1 = r.run("transcripts", "conv_id")(t)
-    r.run("mentions", "mention_type")(Mentions.extract(t1))
+    val t1 = r.run(Stages.Transcripts)(t)
+    r.run(Stages.MentionTable)(Mentions.extract(t1))
     val idsAfterKill = snapIds(dirKilled)
     assert(idsAfterKill("transcripts").isDefined && idsAfterKill("mentions").isDefined)
     assert(idsAfterKill("nodes").isEmpty, "later stages must not exist yet")
@@ -74,15 +76,15 @@ class ResumeSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-stray").toString
     val input = CheckpointedBuild.inputIdentity(t)
     val killed = new StageRunner(spark, dir, "run-killed", input)
-    val t1 = killed.run("transcripts", "conv_id")(t)
+    val t1 = killed.run(Stages.Transcripts)(t)
     // the killed run wrote the mentions data dir but never published it
     val stray = "data/mentions-1-deadbeef"
     Mentions.extract(t1).write.parquet(s"$dir/mentions/$stray")
     assert(SnapshotTable.latestSnapshotId(s"$dir/mentions").isEmpty)
 
     val resumed = new StageRunner(spark, dir, "run-resumed", input)
-    val t2 = resumed.run("transcripts", "conv_id")(sys.error("transcripts is committed"))
-    val m = resumed.run("mentions", "mention_type")(Mentions.extract(t2))
+    val t2 = resumed.run(Stages.Transcripts)(sys.error("transcripts is committed"))
+    val m = resumed.run(Stages.MentionTable)(Mentions.extract(t2))
     assert(SnapshotTable.snapshotIds(s"$dir/mentions") == Seq(1))
     assert(!SnapshotTable.readManifest(s"$dir/mentions", 1).contains(stray),
       "the stray data dir must stay invisible")
@@ -113,12 +115,52 @@ class ResumeSpec extends SparkSpec {
     val writeJobs = jobsRun(SnapshotTable.commit(df, s"$dir/plain", "transcripts"))
     val r = new StageRunner(spark, dir, "run-overhead", "test-input")
     var back: DataFrame = null
-    val stageJobs = jobsRun { back = r.run("transcripts", "conv_id")(df) }
+    val stageJobs = jobsRun { back = r.run(Stages.Transcripts)(df) }
     assert(stageJobs == writeJobs,
       s"StageRunner.run ran $stageJobs jobs; the snapshot write alone runs $writeJobs")
     // the read-back without inference has the schema inference would give
     assert(back.schema == SnapshotTable.read(spark, s"$dir/transcripts").get.schema)
-    assert(r.rowsCommitted("transcripts") == df.count())
+    assert(r.rowsCommitted(Stages.Transcripts) == df.count())
+  }
+
+  private def keyCounts(df: DataFrame): Seq[(String, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+
+  /** `table`'s rows per value of `st`'s lineage key, as its lineage counts it. */
+  private def grouped(table: DataFrame, st: Stages.Stage): Seq[(String, Long)] =
+    keyCounts(table.groupBy(coalesce(col(st.partitionCol).cast("string"), lit("null"))).count())
+
+  test("two runners commit the same stage at once on one session: both land, each with its own counts") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val t = SparkTestSession.transcripts
+    // two runners over one frame (one observed source), and one over other
+    // rows, so counts delivered to the wrong runner show
+    val inputs = Seq(t, t, t.where(col("turn_idx") < 3))
+    val dirs = inputs.map(_ => Files.createTempDirectory("graft-concurrent").toString)
+    val ready = new java.util.concurrent.CountDownLatch(inputs.size)
+    val runs = dirs.zip(inputs).map { case (dir, df) =>
+      Future {
+        ready.countDown()
+        ready.await()
+        new StageRunner(spark, dir, s"run-$dir", "test-input").run(Stages.Transcripts)(df)
+      }
+    }
+    Await.result(Future.sequence(runs), 10.minutes)
+    dirs.zip(inputs).foreach { case (dir, df) =>
+      val committed = SnapshotTable.read(spark, s"$dir/transcripts").get
+      assert(committed.count() == df.count())
+      val lin = Lineage.read(spark, dir).select("partition_key", "row_count")
+      assert(keyCounts(lin) == grouped(committed, Stages.Transcripts),
+        s"$dir: lineage counts differ from the committed table")
+    }
+  }
+
+  test("the node table Main.run commits is key-unique") {
+    val dir = Files.createTempDirectory("graft-mainkeys").toString
+    Main.run(spark, sf0001, dir, "run-keys")
+    GraphBuild.validateKeyUniqueness(SnapshotTable.read(spark, s"$dir/${Stages.Nodes.name}").get)
   }
 
   test("re-run over a complete dir recomputes nothing (snapshot ids frozen)") {
@@ -150,12 +192,10 @@ class ResumeSpec extends SparkSpec {
     assert(byStage("edges") == res.edges.count())
     // ...and, key by key, equal a groupBy of each committed table
     Stages.All.foreach { st =>
-      def pairs(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
-      val observed = pairs(lin.where(col("stage") === st.name).select("partition_key", "row_count"))
-      val grouped = pairs(SnapshotTable.read(spark, s"$dir/${st.name}").get
-        .groupBy(coalesce(col(st.partitionCol).cast("string"), lit("null"))).count())
-      assert(observed == grouped, s"${st.name}: lineage counts differ from the committed table")
-      assert(res.runner.rowsCommitted(st.name) == grouped.map(_._2).sum)
+      val observed = keyCounts(lin.where(col("stage") === st.name).select("partition_key", "row_count"))
+      val counts = grouped(SnapshotTable.read(spark, s"$dir/${st.name}").get, st)
+      assert(observed == counts, s"${st.name}: lineage counts differ from the committed table")
+      assert(res.runner.rowsCommitted(st) == counts.map(_._2).sum)
     }
     // every stage recorded wall time, and its commit time within the run
     assert(lin.where(col("wall_ms") < 0).isEmpty)
@@ -179,7 +219,7 @@ class ResumeSpec extends SparkSpec {
   test("the stage sequence reaches exactly Stages.All, in order") {
     val seen = scala.collection.mutable.ArrayBuffer.empty[String]
     Stages.run(spark, SparkTestSession.transcripts, new Stages.Sink {
-      def apply(stage: Stages.Stage)(compute: => DataFrame): DataFrame = {
+      def run(stage: Stages.Stage)(compute: => DataFrame): DataFrame = {
         seen += stage.name
         compute
       }
@@ -188,7 +228,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("H1 incremental: only changed conversations re-extract; output equals full rebuild") {
-    import graft.pipeline.{GraphBuild, Incremental}
+    import graft.pipeline.Incremental
     val newT = SparkTestSession.transcripts
     // "previous" corpus: one conversation modified, one since removed (a
     // renamed copy of another conversation), the rest identical
@@ -233,7 +273,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("H1 incremental never re-scans the old corpus: build succeeds after its files are deleted") {
-    import graft.pipeline.{GraphBuild, Incremental}
+    import graft.pipeline.Incremental
     val newT = SparkTestSession.transcripts
     val victim = newT.select("conv_id").orderBy("conv_id").first().getString(0)
     val oldT = newT.where(col("conv_id") =!= victim) // victim conv is "new"

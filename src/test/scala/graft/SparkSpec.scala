@@ -2,21 +2,14 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import graft.util.Session
 
 /** One shared local SparkSession for the whole forked test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = graft.util.Tuning(SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // production's confs; the partition count is pinned so the job budgets
+  // the specs assert do not depend on the box's SPARK_GRAFT_CPUS
+  lazy val spark: SparkSession =
+    Session.start(Session.local("graft-test", "local[4]").config("spark.sql.shuffle.partitions", "4"))
 
   val sf0001 = "/root/testdata/sf0.001"
 

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guards for the bench's result parsing and for the measurement
-  * module: constants that name fields elsewhere fail here, not silently.
+/** Drift guards for the bench's result parsing, the measurement module and
+  * the session definition: constants that name fields elsewhere fail here,
+  * not silently, and so does an entry point that builds its own session.
   */
 class ToolingSpec extends AnyFunSuite {
 
@@ -19,20 +20,39 @@ class ToolingSpec extends AnyFunSuite {
     assert(BuildLeg.parse(Seq(r.line, "noise", r.copy(nodes = 7L).line)) == Seq(r, r.copy(nodes = 7L)))
   }
 
-  test("only graft.obs adds a SparkListener or reads the GC MXBeans") {
-    val root = java.nio.file.Paths.get("src/main")
-    val files = java.nio.file.Files.walk(root)
+  /** The main sources, other than those under `except`, whose text `bad` matches. */
+  private def mainSourcesWhere(except: String)(bad: String => Boolean): List[java.nio.file.Path] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     try {
       import scala.jdk.CollectionConverters._
-      val offenders = files.iterator.asScala
+      files.iterator.asScala
         .filter(_.toString.endsWith(".scala"))
-        .filterNot(_.toString.contains("/graft/obs/"))
-        .filter { p =>
-          val src = java.nio.file.Files.readString(p)
-          src.contains("addSparkListener") || src.contains("getGarbageCollectorMXBeans")
-        }
+        .filterNot(_.toString.contains(except))
+        .filter(p => bad(java.nio.file.Files.readString(p)))
         .toList
-      assert(offenders.isEmpty, s"measure through graft.obs.Meter instead: ${offenders.mkString(", ")}")
     } finally files.close()
+  }
+
+  test("only graft.obs adds a SparkListener or reads the GC MXBeans") {
+    val offenders = mainSourcesWhere("/graft/obs/") { src =>
+      src.contains("addSparkListener") || src.contains("getGarbageCollectorMXBeans")
+    }
+    assert(offenders.isEmpty, s"measure through graft.obs.Meter instead: ${offenders.mkString(", ")}")
+  }
+
+  test("only graft.util.Session builds a SparkSession") {
+    val builder = "SparkSession\\s*\\.\\s*builder".r
+    val offenders = mainSourcesWhere("/graft/util/Session.scala")(builder.findFirstIn(_).isDefined)
+    assert(offenders.isEmpty, s"start from graft.util.Session instead: ${offenders.mkString(", ")}")
+  }
+
+  test("graft.app.Main's session carries every Session conf") {
+    // the builder's options (a Spark-internal member), read without
+    // starting a session
+    val b = graft.app.Main.builder
+    val options = b.getClass.getMethod("options").invoke(b).asInstanceOf[scala.collection.Map[String, String]]
+    graft.util.Session.confs.foreach { case (k, v) =>
+      assert(options.get(k).contains(v), s"Main sets $k to ${options.get(k)}, Session to $v")
+    }
   }
 }
