@@ -372,7 +372,7 @@ object SparkEntry {
   /** The handlers whose definitions kg_mock_inventory's corpus slice drops:
     * every alias of the kafka entity.
     */
-  private val mockedHandlers: Seq[String] =
+  private[graft] val mockedHandlers: Seq[String] =
     Dictionary.aliasTable.collect { case (_, alias, "kafka") => s"${alias}_handler" }
 
   /** Key of the Entity 'postgres' anchor, as a SQL literal. */

@@ -42,7 +42,7 @@ object Canon {
   /** LSH-blocked candidate pairs with exact Jaccard >= `minJaccard`:
     * (name_a, name_b, jaccard), name_a < name_b.
     */
-  def candidatePairs(names: DataFrame, minJaccard: Double = 0.5): DataFrame =
+  def candidatePairs(names: DataFrame, minJaccard: Double): DataFrame =
     Lsh.pairs(shingles(names), Names, minJaccard)
 
   /** UTF-8 byte order — the SAME total order Spark's UTF8String binary
@@ -91,7 +91,7 @@ object Canon {
     * (a small checkpointed `distinct`, as the build passes) the driver path
     * is one Spark job.
     */
-  def clusters(names: DataFrame, minJaccard: Double = 0.5): DataFrame = {
+  def clusters(names: DataFrame, minJaccard: Double): DataFrame = {
     val spark = names.sparkSession
     import spark.implicits._
     def distributed = connectedComponents(names, candidatePairs(names, minJaccard))

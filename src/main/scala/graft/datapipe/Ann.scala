@@ -58,15 +58,6 @@ object Ann {
     }: _*)
   }
 
-  /** G4 twin over NODE vectors (the reference queries node embeddings
-    * directly, queries.ts:549-581): cosine of every node's embedding against
-    * one query node's, top-k — same broadcast-single-row cross join shape as
-    * [[vectorSearch]]. At 100 TB the embedding column is materialized by the
-    * backfill pass; here it derives inline from the honest stub.
-    */
-  def nodeVectorSearch(nodes: DataFrame, queryKey: String, threshold: Double, k: Int): DataFrame =
-    nodeVectorSearchOver(nodeEmbeddings(nodes), queryKey, threshold, k)
-
   /** The node-embedding table (node_key, embedding) — the output of the
     * backfill pass at 100 TB. Materialize ONCE per session and feed every
     * vector consumer ([[nodeVectorSearchOver]], hybrid fusion): the md5
@@ -92,7 +83,11 @@ object Ann {
         ","
       ).cast("binary"))
 
-  /** [[nodeVectorSearch]] over a PRE-materialized embedding table. */
+  /** G4 twin over NODE vectors (the reference queries node embeddings
+    * directly, queries.ts:549-581): cosine of every node's embedding in a
+    * PRE-materialized table ([[nodeEmbeddings]]) against one query node's,
+    * top-k — same broadcast-single-row cross join shape as [[vectorSearch]].
+    */
   def nodeVectorSearchOver(emb: DataFrame, queryKey: String, threshold: Double, k: Int): DataFrame = {
     val q = emb.where(col("node_key") === queryKey).select(col("embedding").as("qv"))
     emb

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** Canonical-identity column functions.
@@ -25,28 +25,19 @@ import org.apache.spark.sql.functions._
   */
 object Keys {
 
-  private def keyCol(parts: Column*): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      SanitizeKeyParts(parts.map(org.apache.spark.sql.GraftColumnBridge.expression))
-    )
-
-  def sanitize(c: Column): Column = keyCol(c)
-
-  /** node_key = sanitize(type)-sanitize(name)-sanitize(conv)-sanitize(turn)
-    * (utils.rs:82-136; verb suffix appended by caller for Endpoint/Request).
-    * Name capped at 2000 chars before sanitize, key semantics per reference.
+  /** node_key = sanitize(type)-sanitize(name)-sanitize(conv)-sanitize(turn),
+    * then sanitize(verb) when a verb is given (utils.rs:82-136: the
+    * reference's NodeKeys carry an optional verb; here only Endpoint keys
+    * set it — Request keys carry none). A null verb is skipped like any null
+    * part. Name capped at 2000 chars before sanitize, key semantics per
+    * reference. The engine's one caller is `graft.pipeline.GraphBuild`'s
+    * `key`, which keys every node and edge endpoint.
     */
-  def nodeKey(nodeType: Column, name: Column, convId: Column, turnIdx: Column): Column =
-    keyCol(nodeType, substring(name, 1, 2000), convId, turnIdx.cast("string"))
-
-  def nodeKeyWithVerb(
-      nodeType: Column,
-      name: Column,
-      convId: Column,
-      turnIdx: Column,
-      verb: Column
-  ): Column =
-    keyCol(nodeType, substring(name, 1, 2000), convId, turnIdx.cast("string"), verb)
+  def nodeKey(nodeType: Column, name: Column, convId: Column, turnIdx: Column,
+      verb: Option[Column] = None): Column = {
+    val parts = Seq(nodeType, substring(name, 1, 2000), convId, turnIdx.cast("string")) ++ verb
+    GraftColumnBridge.column(SanitizeKeyParts(parts.map(GraftColumnBridge.expression)))
+  }
 
   /** Deterministic ref_id (replaces UUID v4; see Scaladoc above). */
   def refId(nodeKey: Column): Column = sha2(nodeKey, 256)

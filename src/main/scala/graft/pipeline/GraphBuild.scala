@@ -6,6 +6,7 @@ import graft.extract.Mentions
 import graft.functions.Keys
 import graft.link.PathNorm
 import graft.schema.{EdgeTypes, NodeTypes}
+import graft.sources.Transcripts
 import graft.util.Ckpt._
 
 /** Graph materialization — the node/edge stage of the transcript analog of
@@ -28,9 +29,10 @@ import graft.util.Ckpt._
   * change detector — fingerprint diff or snapshot-manifest diff), which
   * differs from a full build only in where its mention table comes from.
   *
-  * Node identity follows create_node_key (utils.rs:82-136); function nodes
-  * dedup to their first definition turn per conversation (the reference
-  * dedups by NodeKeys, lang/mod.rs:624-640).
+  * Node identity follows create_node_key (utils.rs:82-136) through one
+  * function, `key`, that keys every node row and every edge endpoint;
+  * function nodes dedup to their first definition turn per conversation
+  * (the reference dedups by NodeKeys, lang/mod.rs:624-640).
   *
   * Scale notes: every per-turn table is keyed by conv_id so the spine,
   * mention, and same-conv resolution work shuffle conv-locally; only the
@@ -70,26 +72,31 @@ object GraphBuild {
   private val emptyMeta: Column = typedLit(Map.empty[String, String])
   private val nullDocs: Column = lit(null).cast("string")
 
-  private def node(
-      nodeType: Column,
-      name: Column,
-      convId: Column,
-      turnIdx: Column,
-      body: Column,
-      verb: Column,
-      docs: Column,
-      meta: Column
-  ): Seq[Column] = {
-    val key = when(verb.isNull, Keys.nodeKey(nodeType, name, convId, turnIdx))
-      .otherwise(Keys.nodeKeyWithVerb(nodeType, name, convId, turnIdx, verb))
-    Seq(
-      nodeType.as("node_type"),
+  /** The one node identity, after create_node_key / create_node_key_from_ref
+    * (utils.rs:82-136,165-217): every node row (through `mkNodes`) and every
+    * edge endpoint is keyed here, so a node and the edges that name it share
+    * one expression. Global node types take the defaults (no conversation,
+    * turn -1); only Endpoint keys carry a verb.
+    */
+  private def key(nodeType: String, name: Column, conv: Column = lit(""),
+      turn: Column = lit(-1), verb: Option[Column] = None): Column =
+    Keys.nodeKey(lit(nodeType), name, conv, turn, verb)
+
+  /** A Turn node's name; its key is `key(Turn, turnName, conv_id, turn_idx)`. */
+  private val turnName: Column = concat(lit("turn-"), col("turn_idx").cast("string"))
+
+  private def mkNodes(df: DataFrame, nodeType: String, name: Column, conv: Column = lit(""),
+      turn: Column = lit(-1), body: Column = lit(""), verb: Option[Column] = None,
+      docs: Column = nullDocs, meta: Column = emptyMeta): DataFrame = {
+    val k = key(nodeType, name, conv, turn, verb)
+    df.select(
+      lit(nodeType).as("node_type"),
       name.as("name"),
-      convId.as("conv_id"),
-      turnIdx.as("turn_idx"),
+      conv.as("conv_id"),
+      turn.as("turn_idx"),
       body.as("body"),
-      key.as("node_key"),
-      Keys.refId(key).as("ref_id"),
+      k.as("node_key"),
+      Keys.refId(k).as("ref_id"),
       // A4 per-document content hash + oversize marker (builder/core.rs:298-364)
       sha2(body, 256).as("hash"),
       (length(body) > Mentions.MaxTurnChars).as("skipped"),
@@ -97,14 +104,8 @@ object GraphBuild {
       // comments (B13); meta carries the typed key/value facts the build
       // computes (verb, group, role, nested_in, date, kind)
       docs.as("docs"),
-      meta.as("meta")
-    )
+      meta.as("meta"))
   }
-
-  private def mkNodes(df: DataFrame, nodeType: String, name: Column, convId: Column,
-      turnIdx: Column, body: Column = lit(""), verb: Column = lit(null).cast("string"),
-      docs: Column = nullDocs, meta: Column = emptyMeta): DataFrame =
-    df.select(node(lit(nodeType), name, convId, turnIdx, body, verb, docs, meta): _*)
 
   /** Containment spine: Corpus / Conversation / Turn / Role (stages 1–3). */
   def spineNodes(spark: SparkSession, transcripts: DataFrame): DataFrame =
@@ -125,20 +126,13 @@ object GraphBuild {
     val turns = tText.select(col("conv_id"), col("turn_idx"), col("text"), col("role"))
     val roles = tMeta.select(col("role")).distinct()
 
-    mkNodes(corpus, NodeTypes.Corpus, col("n"), lit(""), lit(-1))
-      .unionByName(mkNodes(convs, NodeTypes.Conversation, col("conv_id"), col("conv_id"), lit(-1)))
+    mkNodes(corpus, NodeTypes.Corpus, col("n"))
+      .unionByName(mkNodes(convs, NodeTypes.Conversation, col("conv_id"), col("conv_id")))
       .unionByName(
-        mkNodes(
-          turns,
-          NodeTypes.Turn,
-          concat(lit("turn-"), col("turn_idx").cast("string")),
-          col("conv_id"),
-          col("turn_idx"),
+        mkNodes(turns, NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx"),
           body = col("text"), // per-turn text equality invariant lives here
-          meta = map(lit("role"), col("role"))
-        )
-      )
-      .unionByName(mkNodes(roles, NodeTypes.Role, col("role"), lit(""), lit(-1)))
+          meta = map(lit("role"), col("role"))))
+      .unionByName(mkNodes(roles, NodeTypes.Role, col("role")))
   }
 
   /** Full build: nodes + edges + the raw mention table, every stage kept in
@@ -193,6 +187,10 @@ object GraphBuild {
     val endpoints = mentions.where(col("mention_type") === "Endpoint")
     val requests = mentions.where(col("mention_type") === "Request")
     val tools = mentions.where(col("mention_type") === "Tool")
+    val toolTurns = tMeta.where(col("tool").isNotNull)
+    // D14 endpoint group (longest /a/b prefix) and B12 request resource
+    def epGroup(path: Column): Column = regexp_extract(path, "^(/[^/]+/[^/]+)", 1)
+    def apiResource(path: Column): Column = regexp_extract(path, "^/api/([a-z]+)", 1)
 
     // F2 wiring (north rule: canonicalize BEFORE materializing): after the
     // dictionary resolves aliases to canonical ids, MinHash-LSH blocking +
@@ -263,10 +261,9 @@ object GraphBuild {
       mkNodes(varRows, NodeTypes.Var, col("retval"), col("conv_id"), col("turn_idx"))
     val e2eRowsRaw = requests
       .where(col("name").contains("${id}"))
-      .select(col("conv_id"), col("turn_idx"), col("name"),
-        regexp_extract(col("name"), "^/api/([a-z]+)", 1).as("res"))
+      .select(col("conv_id"), col("turn_idx"), col("name"), apiResource(col("name")).as("res"))
     val pageIdsRaw = requests
-      .select(regexp_extract(col("name"), "^/api/([a-z]+)", 1).as("name"))
+      .select(apiResource(col("name")).as("name"))
       .where(length(col("name")) > 0)
       .distinct()
     // D16 data models as graph citizens (btreemap_graph.rs:643-662 + the
@@ -293,8 +290,7 @@ object GraphBuild {
     // Package dimension (reference Package variant, mod.rs:30-56): the
     // tool-prefix namespace, one (prefix, tool) membership pair per distinct
     // tool — feeds the Package node branch plus two CONTAINS edge branches
-    val pkgPairsRaw = tMeta
-      .where(col("tool").isNotNull)
+    val pkgPairsRaw = toolTurns
       .select(split(col("tool"), "_").getItem(0).as("name"), col("tool"))
       .distinct()
     // Concept membership (mod.rs:30-56,83-99): curated topic -> the member
@@ -327,23 +323,21 @@ object GraphBuild {
     // --- nodes ---------------------------------------------------------
     val spine = spineNodes(spark, t, tMeta)
 
-    val toolNodes = mkNodes(tools.select(col("name")).distinct(),
-      NodeTypes.Tool, col("name"), lit(""), lit(-1))
+    val toolNodes = mkNodes(tools.select(col("name")).distinct(), NodeTypes.Tool, col("name"))
 
-    val entityNodes = mkNodes(
-      resolvedEntities.select(col("canonical")).distinct(),
-      NodeTypes.Entity, col("canonical"), lit(""), lit(-1))
+    val entityNodes = mkNodes(resolvedEntities.select(col("canonical")).distinct(),
+      NodeTypes.Entity, col("canonical"))
 
     // B5/B6/D10 typed entity surface: an Instance node per observed alias
     // surface form, kept distinct from the canonical Entity (class analog) —
     // the OF edge below records instance-of (btreemap_graph.rs:238-255)
-    val instanceNodes = mkNodes(instanceIds.select(col("name")).distinct(),
-      NodeTypes.Instance, col("name"), lit(""), lit(-1))
+    val instanceNodes =
+      mkNodes(instanceIds.select(col("name")).distinct(), NodeTypes.Instance, col("name"))
 
     // Function date partition key: the nested_var cascade strategy resolves
     // within this (conv-id date segment); surfacing it as meta makes the
     // find_node_by_name_file_and_meta lookup real (graph.rs:199-204)
-    def fnMeta(convId: Column) = map(lit("date"), substring(convId, 13, 8))
+    def fnMeta(convId: Column) = map(lit("date"), Transcripts.convDay(convId))
 
     // B13 docs attach: a handler definition's docs = nearest preceding user
     // turn (≤2 back); joined onto the Function node's first-definition turn
@@ -356,17 +350,16 @@ object GraphBuild {
       NodeTypes.Function, col("name"), col("conv_id"), col("turn_idx"),
       docs = col("docs"), meta = fnMeta(col("conv_id")))
 
-    // unverified call targets become stub nodes (D13: file "<unverified>")
-    val stubNodes = mkNodes(
-      resolvedCalls.where(col("strategy") === "unverified").select(col("name")).distinct(),
-      NodeTypes.Function, col("name"), lit("unverified"), lit(-1),
+    // unverified call targets become stub nodes (D13: file "<unverified>");
+    // the Mock nodes and their OF edges derive from the same names
+    val stubNames =
+      resolvedCalls.where(col("strategy") === "unverified").select(col("name")).distinct()
+    val stubNodes = mkNodes(stubNames, NodeTypes.Function, col("name"), lit("unverified"),
       meta = fnMeta(lit("unverified")))
 
     // endpoint identity = (canonical path, verb) after D11 dedup + D14 grouping
-    val epNodes = mkNodes(epIds, NodeTypes.Endpoint, col("name"), lit(""), lit(-1),
-      verb = col("verb"),
-      meta = map(lit("verb"), col("verb"),
-        lit("group"), regexp_extract(col("name"), "^(/[^/]+/[^/]+)", 1)))
+    val epNodes = mkNodes(epIds, NodeTypes.Endpoint, col("name"), verb = Some(col("verb")),
+      meta = map(lit("verb"), col("verb"), lit("group"), epGroup(col("name"))))
 
     // Request meta: verb always; nested_in when a handler scope encloses it
     // (map_filter drops the null) — the reference stores both in NodeData
@@ -393,18 +386,18 @@ object GraphBuild {
 
     // B12 pages (get_pages, lang/mod.rs:408-554): the resource surface a
     // user-facing request renders, extracted from the request path
-    val pageNodes = mkNodes(pageIds, NodeTypes.Page, col("name"), lit(""), lit(-1))
+    val pageNodes = mkNodes(pageIds, NodeTypes.Page, col("name"))
 
     // D14 longest-prefix endpoint groups as first-class parent nodes
     // (process_endpoint_groups, btreemap_graph.rs:523-602)
     val groupIds = epIds
-      .select(regexp_extract(col("name"), "^(/[^/]+/[^/]+)", 1).as("name"))
+      .select(epGroup(col("name")).as("name"))
       .where(length(col("name")) > 0)
       .distinct()
-    val groupNodes = mkNodes(groupIds, NodeTypes.EndpointGroup, col("name"), lit(""), lit(-1))
+    val groupNodes = mkNodes(groupIds, NodeTypes.EndpointGroup, col("name"))
 
-    val dmNodes = mkNodes(dmWithin.select(col("cluster")).distinct(),
-      NodeTypes.DataModel, col("cluster"), lit(""), lit(-1))
+    val dmNodes =
+      mkNodes(dmWithin.select(col("cluster")).distinct(), NodeTypes.DataModel, col("cluster"))
 
     // B6 Class/Trait as distinct node types (completing the reference's
     // 21-variant taxonomy, graphs/mod.rs:30-56): a Class per canonical
@@ -415,11 +408,9 @@ object GraphBuild {
     // (queries/mod.rs:156-166). Both dimensions are tiny (distinct
     // canonicals), so these branches add no corpus-scale work.
     val classNodes = mkNodes(clusters.select(col("cluster")).distinct(),
-      NodeTypes.Class, col("cluster"), lit(""), lit(-1),
-      meta = map(lit("kind"), lit("class")))
+      NodeTypes.Class, col("cluster"), meta = map(lit("kind"), lit("class")))
     val traitNodes = mkNodes(clusters.select(col("canonical")).distinct(),
-      NodeTypes.Trait, col("canonical"), lit(""), lit(-1),
-      meta = map(lit("kind"), lit("trait")))
+      NodeTypes.Trait, col("canonical"), meta = map(lit("kind"), lit("trait")))
 
     // UnitTest: a call resolved WITHIN its own defining conversation is the
     // unit-local test analog (reference UnitTest variant + TestType::Unit,
@@ -433,27 +424,22 @@ object GraphBuild {
     // Mock: the stand-in for an unverified call target (reference Mock
     // variant; mock inventory mcp/src/graph/queries.ts:173-211) — one per
     // distinct stub name, OF-linked to the stub Function below
-    val mockNodes = mkNodes(
-      resolvedCalls.where(col("strategy") === "unverified").select(col("name")).distinct(),
-      NodeTypes.Mock, col("name"), lit(""), lit(-1),
-      meta = map(lit("kind"), lit("mock")))
+    val mockNodes =
+      mkNodes(stubNames, NodeTypes.Mock, col("name"), meta = map(lit("kind"), lit("mock")))
 
     // Package: tool-prefix namespace as a first-class node (Package variant,
     // mod.rs:30-56); Corpus -CONTAINS-> Package -CONTAINS-> Tool below
     val packageNodes = mkNodes(pkgPairs.select(col("name")).distinct(),
-      NodeTypes.Package, col("name"), lit(""), lit(-1),
-      meta = map(lit("kind"), lit("package")))
+      NodeTypes.Package, col("name"), meta = map(lit("kind"), lit("package")))
 
     // Concept: curated dictionary topic with observed members (Concept
     // variant + Concept-Includes-anything, mod.rs:30-56,83-99)
     val conceptNodes = mkNodes(conceptMembers.select(col("topic")).distinct(),
-      NodeTypes.Concept, col("topic"), lit(""), lit(-1),
-      meta = map(lit("kind"), lit("concept")))
+      NodeTypes.Concept, col("topic"), meta = map(lit("kind"), lit("concept")))
 
     // import section: one node per conversation, tools concatenated in turn
     // order (B4 combine_import_sections, builder/utils.rs:158-218)
-    val importNodes0 = tMeta
-      .where(col("tool").isNotNull)
+    val importNodes0 = toolTurns
       .groupBy(col("conv_id"))
       .agg(
         min(col("turn_idx")).as("turn_idx"),
@@ -501,74 +487,54 @@ object GraphBuild {
     def callEdgeType: Column =
       when(col("strategy") === "unverified", lit(EdgeTypes.Uses)).otherwise(lit(EdgeTypes.Calls))
 
-    val corpusKey = Keys.nodeKey(lit(NodeTypes.Corpus), lit("corpus"), lit(""), lit(-1))
-    def convKey(c: Column) = Keys.nodeKey(lit(NodeTypes.Conversation), c, c, lit(-1))
-    def turnKey(c: Column, i: Column) =
-      Keys.nodeKey(lit(NodeTypes.Turn), concat(lit("turn-"), i.cast("string")), c, i)
-    def roleKey(r: Column) = Keys.nodeKey(lit(NodeTypes.Role), r, lit(""), lit(-1))
-    def toolKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Tool), n, lit(""), lit(-1))
-    def entityKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Entity), n, lit(""), lit(-1))
-    def fnKey(n: Column, c: Column, i: Column) = Keys.nodeKey(lit(NodeTypes.Function), n, c, i)
-    def epKey(n: Column, v: Column) =
-      Keys.nodeKeyWithVerb(lit(NodeTypes.Endpoint), n, lit(""), lit(-1), v)
-    def reqKey(n: Column, c: Column, i: Column) = Keys.nodeKey(lit(NodeTypes.Request), n, c, i)
-    def pageKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Page), n, lit(""), lit(-1))
-    def groupKey(n: Column) = Keys.nodeKey(lit(NodeTypes.EndpointGroup), n, lit(""), lit(-1))
-    def instKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Instance), n, lit(""), lit(-1))
-    def dmKey(n: Column) = Keys.nodeKey(lit(NodeTypes.DataModel), n, lit(""), lit(-1))
-    def varKey(n: Column, c: Column, i: Column) = Keys.nodeKey(lit(NodeTypes.Var), n, c, i)
-    def itestKey(n: Column, c: Column, i: Column) =
-      Keys.nodeKey(lit(NodeTypes.IntegrationTest), n, c, i)
-    def e2eKey(n: Column, c: Column, i: Column) = Keys.nodeKey(lit(NodeTypes.E2eTest), n, c, i)
-    def classKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Class), n, lit(""), lit(-1))
-    def traitKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Trait), n, lit(""), lit(-1))
-    def utestKey(n: Column, c: Column, i: Column) = Keys.nodeKey(lit(NodeTypes.UnitTest), n, c, i)
-    def mockKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Mock), n, lit(""), lit(-1))
-    def pkgKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Package), n, lit(""), lit(-1))
-    def conceptKey(n: Column) = Keys.nodeKey(lit(NodeTypes.Concept), n, lit(""), lit(-1))
-
     val containsConv = tMeta.select(col("conv_id")).distinct()
-      .select(edge(EdgeTypes.Contains, corpusKey, convKey(col("conv_id"))): _*)
+      .select(edge(EdgeTypes.Contains, key(NodeTypes.Corpus, lit("corpus")),
+        key(NodeTypes.Conversation, col("conv_id"), col("conv_id"))): _*)
     val containsTurn = tMeta
-      .select(edge(EdgeTypes.Contains, convKey(col("conv_id")),
-        turnKey(col("conv_id"), col("turn_idx"))): _*)
+      .select(edge(EdgeTypes.Contains, key(NodeTypes.Conversation, col("conv_id"), col("conv_id")),
+        key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx"))): _*)
     val ofRole = tMeta
-      .select(edge(EdgeTypes.Of, turnKey(col("conv_id"), col("turn_idx")),
-        roleKey(col("role"))): _*)
-    val usesTool = tMeta
-      .where(col("tool").isNotNull)
-      .select(edge(EdgeTypes.Uses, turnKey(col("conv_id"), col("turn_idx")),
-        toolKey(col("tool")), strat = lit("tool_column")): _*)
+      .select(edge(EdgeTypes.Of, key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Role, col("role"))): _*)
+    val usesTool = toolTurns
+      .select(edge(EdgeTypes.Uses, key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Tool, col("tool")), strat = lit("tool_column")): _*)
     // pre-key dedup on compact natural columns (a turn re-mentioning the
     // same canonical entity emits one edge) — dedup BEFORE key strings are
     // built, so the exchange moves 4 small columns, not 2 long keys
     val mentionsE = resolvedEntities
       .select("conv_id", "turn_idx", "canonical", "confidence", "strategy")
       .distinct()
-      .select(edge(EdgeTypes.Mentions, turnKey(col("conv_id"), col("turn_idx")),
-        entityKey(col("canonical")), col("confidence"), col("strategy")): _*)
+      .select(edge(EdgeTypes.Mentions,
+        key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Entity, col("canonical")), col("confidence"), col("strategy")): _*)
+
+    // a handler Function node's first-definition turn, joined on
+    // (fn_name, conv_id) by every edge that targets a defined function
+    val fnFirstDef = fnNodes0.select(col("name").as("fn_name"), col("conv_id"),
+      col("turn_idx").as("def_turn"))
 
     // CALLS: calling turn -> resolved function node (first def turn in the
     // resolved conversation) or unverified stub (D13 semantics). The join is
     // on resolved_name: the operand strategy can retarget a call to a
     // sibling handler of the same canonical entity.
-    val fnFirstDef = fnNodes0.select(col("name"), col("conv_id").as("resolved_conv"),
-      col("turn_idx").as("def_turn"))
     // 2 consumers (turn-src + test-src edges): share the resolved-target join
     val resolvedTargets = resolvedCalls
       .join(
-        fnFirstDef.withColumnRenamed("name", "resolved_name"),
+        fnFirstDef.select(col("fn_name").as("resolved_name"), col("conv_id").as("resolved_conv"),
+          col("def_turn")),
         Seq("resolved_name", "resolved_conv"),
         "left")
       .withColumn(
         "target_key",
-        when(col("def_turn").isNull, fnKey(col("name"), lit("unverified"), lit(-1)))
-          .otherwise(fnKey(col("resolved_name"), col("resolved_conv"), col("def_turn"))))
+        when(col("def_turn").isNull, key(NodeTypes.Function, col("name"), lit("unverified")))
+          .otherwise(
+            key(NodeTypes.Function, col("resolved_name"), col("resolved_conv"), col("def_turn"))))
       .lcp(eager = false)
     val callsFn = resolvedTargets
       .select(edgeC(
         callEdgeType,
-        turnKey(col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
         col("target_key"),
         col("confidence"), col("strategy")): _*)
 
@@ -577,7 +543,7 @@ object GraphBuild {
     val testCallsE = resolvedTargets
       .select(edgeC(
         callEdgeType,
-        itestKey(col("name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.IntegrationTest, col("name"), col("conv_id"), col("turn_idx")),
         col("target_key"),
         col("confidence"), col("strategy")): _*)
 
@@ -585,31 +551,27 @@ object GraphBuild {
     // names (linker.rs:213-235)
     val e2eCallsE = e2eRows
       .select(edge(EdgeTypes.Calls,
-        e2eKey(col("name"), col("conv_id"), col("turn_idx")),
-        pageKey(col("res")), strat = lit("e2e_page")): _*)
+        key(NodeTypes.E2eTest, col("name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Page, col("res")), strat = lit("e2e_page")): _*)
 
     // D10 instance-of: observed alias -OF-> canonical Entity cluster
     // (Edge::of, btreemap_graph.rs:250)
     val ofInstanceE = instanceIds
-      .select(edge(EdgeTypes.Of, instKey(col("name")), entityKey(col("canonical")),
-        strat = lit("instance_of")): _*)
+      .select(edge(EdgeTypes.Of, key(NodeTypes.Instance, col("name")),
+        key(NodeTypes.Entity, col("canonical")), strat = lit("instance_of")): _*)
 
     // D16: defining function -CONTAINS-> the DataModel contracts in its body
     val dmContainsE = dmWithin
-      .join(
-        fnFirstDef
-          .withColumnRenamed("resolved_conv", "conv_id")
-          .withColumnRenamed("name", "fn_name"),
-        Seq("fn_name", "conv_id"))
+      .join(fnFirstDef, Seq("fn_name", "conv_id"))
       .select(edge(EdgeTypes.Contains,
-        fnKey(col("fn_name"), col("conv_id"), col("def_turn")),
-        dmKey(col("cluster")), strat = lit("data_model")): _*)
+        key(NodeTypes.Function, col("fn_name"), col("conv_id"), col("def_turn")),
+        key(NodeTypes.DataModel, col("cluster")), strat = lit("data_model")): _*)
 
     // B5: turn -CONTAINS-> its Var binding (from the Var NODE frame)
     val varContainsE = varNodes
       .select(edge(EdgeTypes.Contains,
-        turnKey(col("conv_id"), col("turn_idx")),
-        varKey(col("name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Var, col("name"), col("conv_id"), col("turn_idx")),
         strat = lit("var_decl")): _*)
 
     // HANDLER: endpoint identity -> handler function of the declaring turn.
@@ -626,138 +588,132 @@ object GraphBuild {
         Seq("conv_id", "turn_idx"))
       .select("ep_name", "verb", "fn_name", "conv_id")
       .distinct()
-      .join(fnFirstDef.withColumnRenamed("resolved_conv", "conv_id")
-          .withColumnRenamed("name", "fn_name"), Seq("fn_name", "conv_id"))
-      .select(edge(EdgeTypes.Handler, epKey(col("ep_name"), col("verb")),
-        fnKey(col("fn_name"), col("conv_id"), col("def_turn")),
+      .join(fnFirstDef, Seq("fn_name", "conv_id"))
+      .select(edge(EdgeTypes.Handler,
+        key(NodeTypes.Endpoint, col("ep_name"), verb = Some(col("verb"))),
+        key(NodeTypes.Function, col("fn_name"), col("conv_id"), col("def_turn")),
         strat = lit("handler")): _*)
 
     // D9 analog: the turn owning a Request gets CALLS(turn -> request),
     // as the reference emits CALLS(fn -> request) (btreemap_graph.rs:257-313)
     val callsReq = requests
-      .select(edge(EdgeTypes.Calls, turnKey(col("conv_id"), col("turn_idx")),
-        reqKey(col("name"), col("conv_id"), col("turn_idx")),
+      .select(edge(EdgeTypes.Calls, key(NodeTypes.Turn, turnName, col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Request, col("name"), col("conv_id"), col("turn_idx")),
         strat = lit("request_in_turn")): _*)
 
     val callsApi = apiLinks
       .select(edge(EdgeTypes.Calls,
-        reqKey(col("req_path"), col("conv_id"), col("turn_idx")),
-        epKey(col("norm_path"), col("verb")), strat = lit("api_link")): _*)
+        key(NodeTypes.Request, col("req_path"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Endpoint, col("norm_path"), verb = Some(col("verb"))),
+        strat = lit("api_link")): _*)
 
     // B15 collect_import_edges analog: the per-conversation Import section
-    // node -IMPORTS-> each Tool it names (parse/collect.rs:424-581)
-    def importKey(c: Column, i: Column) =
-      Keys.nodeKey(lit(NodeTypes.Import), lit("imports"), c, i)
+    // node -IMPORTS-> each Tool it names (parse/collect.rs:424-581);
     // sourced from the text-free meta twin (NOT `t`): same columns, a
     // tenth of the bytes
-    val importsE = tMeta
-      .where(col("tool").isNotNull)
+    val importsE = toolTurns
       .select(col("conv_id"), col("tool"))
       .distinct()
       .join(importNodes0.select(col("conv_id"), col("turn_idx")), Seq("conv_id"))
-      .select(edge(EdgeTypes.Imports, importKey(col("conv_id"), col("turn_idx")),
-        toolKey(col("tool")), strat = lit("import_section")): _*)
+      .select(edge(EdgeTypes.Imports,
+        key(NodeTypes.Import, lit("imports"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Tool, col("tool")), strat = lit("import_section")): _*)
 
     // C5 find_function_parent analog (method -> owning Class operand edge,
     // queries/mod.rs:156-166): the service Tool owns the handler Function
     // its turns define
     val operandE = fnDefs
       .select(col("conv_id"), col("turn_idx"), col("name").as("fn_name"))
-      .join(
-        tMeta.where(col("tool").isNotNull).select(col("conv_id"), col("turn_idx"), col("tool")),
+      .join(toolTurns.select(col("conv_id"), col("turn_idx"), col("tool")),
         Seq("conv_id", "turn_idx"))
-      .join(
-        fnFirstDef
-          .withColumnRenamed("resolved_conv", "conv_id")
-          .withColumnRenamed("name", "fn_name"),
-        Seq("fn_name", "conv_id"))
-      .select(edge(EdgeTypes.Operand, toolKey(col("tool")),
-        fnKey(col("fn_name"), col("conv_id"), col("def_turn")),
+      .join(fnFirstDef, Seq("fn_name", "conv_id"))
+      .select(edge(EdgeTypes.Operand, key(NodeTypes.Tool, col("tool")),
+        key(NodeTypes.Function, col("fn_name"), col("conv_id"), col("def_turn")),
         strat = lit("tool_owner")): _*)
       .distinct()
 
     // D15 class_inherits analog: longest-prefix group -PARENT_OF-> endpoint
     val parentOfE = epIds
-      .withColumn("grp", regexp_extract(col("name"), "^(/[^/]+/[^/]+)", 1))
+      .withColumn("grp", epGroup(col("name")))
       .where(length(col("grp")) > 0)
-      .select(edge(EdgeTypes.ParentOf, groupKey(col("grp")), epKey(col("name"), col("verb")),
+      .select(edge(EdgeTypes.ParentOf, key(NodeTypes.EndpointGroup, col("grp")),
+        key(NodeTypes.Endpoint, col("name"), verb = Some(col("verb"))),
         strat = lit("endpoint_group")): _*)
 
     // B12 renders: page -RENDERS-> the endpoints serving its resource
     val rendersE = epIds
-      .withColumn("res", regexp_extract(col("name"), "^/api/([a-z]+)", 1))
+      .withColumn("res", apiResource(col("name")))
       .join(pageIds.withColumnRenamed("name", "res"), Seq("res"))
-      .select(edge(EdgeTypes.Renders, pageKey(col("res")), epKey(col("name"), col("verb")),
+      .select(edge(EdgeTypes.Renders, key(NodeTypes.Page, col("res")),
+        key(NodeTypes.Endpoint, col("name"), verb = Some(col("verb"))),
         strat = lit("renders")): _*)
+
+    // the canonical entity cluster each handler Function's name derives
+    // from; one row per (fn name, conv) — unique by fnNodes0 grouping
+    val fnClusters = fnNodes0
+      .withColumn("alias", regexp_replace(col("name"), "_handler$", ""))
+      .join(broadcast(dictDf), Seq("alias"))
+      .join(broadcast(clusters), Seq("canonical"))
 
     // B7/D15 implements: a handler function -IMPLEMENTS-> the canonical
     // entity contract its name is derived from (trait analog); targets use
     // the post-canonicalization cluster identity
-    val implementsE = fnNodes0
-      .withColumn("alias", regexp_replace(col("name"), "_handler$", ""))
-      .join(broadcast(dictDf), Seq("alias"))
-      .join(broadcast(clusters), Seq("canonical"))
-      .select(edge(EdgeTypes.Implements, fnKey(col("name"), col("conv_id"), col("turn_idx")),
-        entityKey(col("cluster")), strat = lit("implements")): _*)
+    val implementsE = fnClusters
+      .select(edge(EdgeTypes.Implements,
+        key(NodeTypes.Function, col("name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Entity, col("cluster")), strat = lit("implements")): _*)
 
     // Class -OPERAND-> its method Functions (find_function_parent analog:
     // the handler's owning class is the canonical cluster its name derives
-    // from); one row per (fn name, conv) — unique by fnNodes0 grouping
-    val classMethodE = fnNodes0
-      .withColumn("alias", regexp_replace(col("name"), "_handler$", ""))
-      .join(broadcast(dictDf), Seq("alias"))
-      .join(broadcast(clusters), Seq("canonical"))
-      .select(edge(EdgeTypes.Operand, classKey(col("cluster")),
-        fnKey(col("name"), col("conv_id"), col("turn_idx")),
+    // from)
+    val classMethodE = fnClusters
+      .select(edge(EdgeTypes.Operand, key(NodeTypes.Class, col("cluster")),
+        key(NodeTypes.Function, col("name"), col("conv_id"), col("turn_idx")),
         strat = lit("class_method")): _*)
 
     // Class -IMPLEMENTS-> Trait (class_includes analog): one row per
     // observed canonical in the cluster dimension
     val classImplE = clusters
-      .select(edge(EdgeTypes.Implements, classKey(col("cluster")), traitKey(col("canonical")),
-        strat = lit("class_includes")): _*)
+      .select(edge(EdgeTypes.Implements, key(NodeTypes.Class, col("cluster")),
+        key(NodeTypes.Trait, col("canonical")), strat = lit("class_includes")): _*)
 
     // UnitTest -CALLS-> its same-conversation target (TestType::Unit)
     val unitCallsE = resolvedTargets
       .where(col("strategy") === "same_conv")
       .select(edgeC(lit(EdgeTypes.Calls),
-        utestKey(col("name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.UnitTest, col("name"), col("conv_id"), col("turn_idx")),
         col("target_key"),
         col("confidence"), col("strategy")): _*)
 
     // Mock -OF-> the unverified stub Function it stands in for
-    val mockOfE = resolvedCalls
-      .where(col("strategy") === "unverified")
-      .select(col("name")).distinct()
-      .select(edge(EdgeTypes.Of, mockKey(col("name")),
-        fnKey(col("name"), lit("unverified"), lit(-1)), strat = lit("mock_of")): _*)
+    val mockOfE = stubNames
+      .select(edge(EdgeTypes.Of, key(NodeTypes.Mock, col("name")),
+        key(NodeTypes.Function, col("name"), lit("unverified")), strat = lit("mock_of")): _*)
 
     // NESTED_IN edges from the nested0 range join computed in the node
     // section (it also feeds Request meta)
     val nestedInE = nested0
-      .join(
-        fnFirstDef
-          .withColumnRenamed("resolved_conv", "conv_id")
-          .withColumnRenamed("name", "fn_name"),
-        Seq("fn_name", "conv_id"))
-      .select(edge(EdgeTypes.NestedIn, reqKey(col("req_name"), col("conv_id"), col("turn_idx")),
-        fnKey(col("fn_name"), col("conv_id"), col("def_turn")), strat = lit("nested_scope")): _*)
+      .join(fnFirstDef, Seq("fn_name", "conv_id"))
+      .select(edge(EdgeTypes.NestedIn,
+        key(NodeTypes.Request, col("req_name"), col("conv_id"), col("turn_idx")),
+        key(NodeTypes.Function, col("fn_name"), col("conv_id"), col("def_turn")),
+        strat = lit("nested_scope")): _*)
 
     // Corpus -CONTAINS-> Package -CONTAINS-> Tool: the package namespace
     // spine (reference Package containment); both branches unique by the
     // distinct'd (prefix, tool) dimension
     val pkgCorpusE = pkgPairs
       .select(col("name")).distinct()
-      .select(edge(EdgeTypes.Contains, corpusKey, pkgKey(col("name")),
-        strat = lit("corpus_package")): _*)
+      .select(edge(EdgeTypes.Contains, key(NodeTypes.Corpus, lit("corpus")),
+        key(NodeTypes.Package, col("name")), strat = lit("corpus_package")): _*)
     val pkgToolE = pkgPairs
-      .select(edge(EdgeTypes.Contains, pkgKey(col("name")), toolKey(col("tool")),
-        strat = lit("package_tool")): _*)
+      .select(edge(EdgeTypes.Contains, key(NodeTypes.Package, col("name")),
+        key(NodeTypes.Tool, col("tool")), strat = lit("package_tool")): _*)
 
     // Concept -INCLUDES-> member Entity cluster (mod.rs:83-99)
     val includesE = conceptMembers
-      .select(edge(EdgeTypes.Includes, conceptKey(col("topic")), entityKey(col("cluster")),
-        strat = lit("concept_includes")): _*)
+      .select(edge(EdgeTypes.Includes, key(NodeTypes.Concept, col("topic")),
+        key(NodeTypes.Entity, col("cluster")), strat = lit("concept_includes")): _*)
 
     val edges = Seq(containsConv, containsTurn, ofRole, usesTool, mentionsE, callsFn, handlerE)
       .reduce(_ unionByName _)

@@ -807,19 +807,23 @@ object Query {
   /** Mock inventory (mcp/src/graph/queries.ts:173-211): Mock nodes with the
     * usage count of the stub they stand in for (USES edges into the
     * unverified stub Function), row_number-paginated like [[toolInventory]].
+    * The stub is the target of the Mock's OF edge (strategy `mock_of`), so
+    * the query reads the stub's key off the graph instead of building it.
     * The Mock dimension is tiny, so the unpartitioned window is safe.
     */
   def mockInventory(nodes: DataFrame, edges: DataFrame, offset: Int, limit: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val stubKey = graft.functions.Keys.nodeKey(
-      lit("Function"), col("name"), lit("unverified"), lit(-1))
+    val stubOf = edges
+      .where(col("edge_type") === "OF" && col("strategy") === "mock_of")
+      .select(col("src_key").as("node_key"), col("dst_key"))
     val stubUses = edges
       .where(col("edge_type") === "USES" && col("strategy") === "unverified")
       .groupBy("dst_key")
       .agg(count(lit(1)).as("n_calls"))
     nodes
       .where(col("node_type") === "Mock")
-      .select(col("name"), stubKey.as("dst_key"))
+      .join(stubOf, Seq("node_key"))
+      .select(col("name"), col("dst_key"))
       .join(stubUses, Seq("dst_key"), "left")
       .na.fill(0, Seq("n_calls"))
       .withColumn("rn", row_number().over(Window.orderBy(col("n_calls").desc, col("name"))))

@@ -3,6 +3,7 @@ package graft.resolve
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.Dictionary
+import graft.sources.Transcripts
 import graft.util.Ckpt._
 
 /** Concrete cascade instances for the transcript KG.
@@ -81,11 +82,11 @@ object CallResolver {
       .agg(min(struct(col("def_conv"), col("name"))).as("m"))
       .select(col("cd_canonical"), col("m.def_conv").as("oc_conv"), col("m.name").as("oc_name"))
     val byDate = defConvs
-      .withColumn("date_part", substring(col("def_conv"), 13, 8))
+      .withColumn("date_part", Transcripts.convDay(col("def_conv")))
       .groupBy("name", "date_part")
       .agg(min("def_conv").as("nv_conv"))
     val byUser = defConvs
-      .withColumn("user_prefix", substring(col("def_conv"), 1, 11))
+      .withColumn("user_prefix", Transcripts.convUser(col("def_conv")))
       .groupBy("name", "user_prefix")
       .agg(min("def_conv").as("bu_conv"))
 
@@ -109,8 +110,8 @@ object CallResolver {
       .withColumn("sc_hit", lit(1))
 
     val joined = c
-      .withColumn("date_part", substring(col("conv_id"), 13, 8))
-      .withColumn("user_prefix", substring(col("conv_id"), 1, 11))
+      .withColumn("date_part", Transcripts.convDay(col("conv_id")))
+      .withColumn("user_prefix", Transcripts.convUser(col("conv_id")))
       .withColumn("call_alias", regexp_replace(col("name"), "_handler$", ""))
       .join(broadcast(globallyUnique), Seq("name"), "left")
       .join(sc0, Seq("name", "conv_id"), "left")
@@ -234,14 +235,14 @@ object CallResolver {
     // scope — the corpus is partitioned by day, so the call's enclosing
     // date partition plays the enclosing-var role; smallest same-date conv.
     val byDate = defConvs
-      .withColumn("date_part", substring(col("def_conv"), 13, 8))
+      .withColumn("date_part", Transcripts.convDay(col("def_conv")))
       .groupBy("name", "date_part")
       .agg(min("def_conv").as("resolved_conv"))
 
-    // same_dir analog: same user = conv_id prefix "conv-XXXXXX"; pick the
+    // same_dir analog: same user = the conv_id's user part; pick the
     // lexicographically smallest defining conv for determinism.
     val byUser = defConvs
-      .withColumn("user_prefix", substring(col("def_conv"), 1, 11))
+      .withColumn("user_prefix", Transcripts.convUser(col("def_conv")))
       .groupBy("name", "user_prefix")
       .agg(min("def_conv").as("resolved_conv"))
 
@@ -293,7 +294,7 @@ object CallResolver {
         rem =>
           sameName(
             rem
-              .withColumn("date_part", substring(col("conv_id"), 13, 8))
+              .withColumn("date_part", Transcripts.convDay(col("conv_id")))
               .join(broadcast(byDate), Seq("name", "date_part"))
               .drop("date_part")
           )
@@ -304,7 +305,7 @@ object CallResolver {
         rem =>
           sameName(
             rem
-              .withColumn("user_prefix", substring(col("conv_id"), 1, 11))
+              .withColumn("user_prefix", Transcripts.convUser(col("conv_id")))
               .join(broadcast(byUser), Seq("name", "user_prefix"))
               .drop("user_prefix")
           )

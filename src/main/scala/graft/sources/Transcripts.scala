@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.extract.Dictionary
@@ -26,12 +26,29 @@ import graft.extract.Dictionary
   */
 object Transcripts {
 
-  private def aliasCase(col: org.apache.spark.sql.Column) = {
+  private def aliasCase(col: Column) = {
     val slot = pmod(col, lit(12))
     Dictionary.aliasTable.foldLeft(lit(null).cast("string")) { case (acc, (i, a, _)) =>
       when(slot === i, lit(a)).otherwise(acc)
     }
   }
+
+  /** Digits of the zero-padded user id in a conv_id. */
+  private val UserDigits = 6
+
+  /** A conversation is one user's day: `conv-<user_id padded to 6>-<yyyyMMdd>`.
+    * The engine cuts it apart only through [[convUser]] and [[convDay]]; the
+    * DuckDB oracle's own `substr` cuts stay separate, so they check these.
+    */
+  private def convId(userId: Column, ts: Column): Column =
+    concat(lit("conv-"), lpad(userId.cast("string"), UserDigits, "0"), lit("-"),
+      date_format(ts, "yyyyMMdd"))
+
+  /** The user part of a conv_id, `conv-<user>`: one per user (same_dir scope). */
+  def convUser(convId: Column): Column = substring(convId, 1, 5 + UserDigits)
+
+  /** The day part of a conv_id, `yyyyMMdd` (the nested_var date partition). */
+  def convDay(convId: Column): Column = substring(convId, 7 + UserDigits, 8)
 
   /** Internal: events + derived generator fields. Used only by oracle parity
     * and tests — the engine consumes [[fromEvents]]' six columns.
@@ -78,15 +95,7 @@ object Transcripts {
         when(pmod(col("event_id"), lit(3)) === 0, lit(" via " + Dictionary.hotAlias))
           .otherwise(lit(""))
       )
-      .withColumn(
-        "conv_id",
-        concat(
-          lit("conv-"),
-          lpad(col("user_id").cast("string"), 6, "0"),
-          lit("-"),
-          date_format(col("ts"), "yyyyMMdd")
-        )
-      )
+      .withColumn("conv_id", convId(col("user_id"), col("ts")))
 
     val w = Window
       .partitionBy(col("user_id"), to_date(col("ts")))

@@ -129,7 +129,7 @@ class AdjacencySpec extends SparkSpec {
     assert(Adjacency.leaf(a, Seq(Leg(Nil, true))) ne Adjacency.leaf(b, Seq(Leg(Nil, true))))
 
     // equal PLANS, different rows: two reads of one path around an overwrite
-    val dir = java.nio.file.Files.createTempDirectory("adjacency").toString
+    val dir = tempDir("adjacency")
     frame(Seq(("CALLS", "n1", "p1"))).write.mode("overwrite").parquet(dir)
     assert(rows(Query.expand(spark.read.parquet(dir), start, 2)) == Seq("[n1,0]", "[p1,1]"))
     frame(Seq(("CALLS", "n1", "q1"))).write.mode("overwrite").parquet(dir)
@@ -207,7 +207,7 @@ class AdjacencySpec extends SparkSpec {
     // count, a lineage write, a corpus-identity scan) fails this test.
     val t = SparkTestSession.transcripts
     t.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft-budget").toString
+    val dir = tempDir("graft-budget")
     val jobs = jobsRun(graft.pipeline.CheckpointedBuild.run(spark, t, dir, "run-budget"))
     assert(jobs == 87, s"a committed build ran $jobs jobs, against a budget of 87")
   }

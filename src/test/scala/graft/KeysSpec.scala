@@ -70,7 +70,7 @@ class KeysSpec extends SparkSpec {
     val df = Seq(("Endpoint", "/api/x", "", "-1", "GET"), ("Endpoint", "/api/x", "", "-1", null))
       .toDF("t", "n", "c", "i", "v")
     val got = df
-      .select(Keys.nodeKeyWithVerb(col("t"), col("n"), col("c"), col("i"), col("v")).as("k"))
+      .select(Keys.nodeKey(col("t"), col("n"), col("c"), col("i"), Some(col("v"))).as("k"))
       .as[String]
       .collect()
       .toSeq

@@ -128,22 +128,22 @@ class QuerySpec extends SparkSpec {
 
   test("G14 mockInventory: counts unverified USES per Mock, paginated") {
     // two mocks with 2 and 1 unverified calls, one with none; a verified
-    // USES edge and a CALLS edge must not count
-    val stubKey = (n: org.apache.spark.sql.Column) =>
-      graft.functions.Keys.nodeKey(lit("Function"), n, lit("unverified"), lit(-1))
+    // USES edge and a CALLS edge must not count. Each Mock names the stub
+    // it stands in for by its OF edge (strategy mock_of), as the build emits
     val mocks = Seq("alpha", "beta", "gamma")
       .toDF("name")
       .withColumn("node_type", lit("Mock"))
       .withColumn("node_key", concat(lit("mock|"), col("name")))
     val mkEdges = Seq(
-      ("USES", "t1", "alpha", "unverified"),
-      ("USES", "t2", "alpha", "unverified"),
-      ("USES", "t3", "beta", "unverified"),
-      ("USES", "t4", "gamma", "verified"), // wrong strategy: excluded
-      ("CALLS", "t5", "alpha", "unverified") // wrong edge type: excluded
-    ).toDF("edge_type", "src_key", "dst_name", "strategy")
-      .withColumn("dst_key", stubKey(col("dst_name")))
-      .drop("dst_name")
+      ("OF", "mock|alpha", "stub|alpha", "mock_of"),
+      ("OF", "mock|beta", "stub|beta", "mock_of"),
+      ("OF", "mock|gamma", "stub|gamma", "mock_of"),
+      ("USES", "t1", "stub|alpha", "unverified"),
+      ("USES", "t2", "stub|alpha", "unverified"),
+      ("USES", "t3", "stub|beta", "unverified"),
+      ("USES", "t4", "stub|gamma", "verified"), // wrong strategy: excluded
+      ("CALLS", "t5", "stub|alpha", "unverified") // wrong edge type: excluded
+    ).toDF("edge_type", "src_key", "dst_key", "strategy")
     val out = Query.mockInventory(mocks, mkEdges, 0, 10)
       .select("name", "n_calls", "rn").as[(String, Long, Int)].collect().toSeq
     assert(out == Seq(("alpha", 2L, 1), ("beta", 1L, 2), ("gamma", 0L, 3)))

@@ -135,7 +135,7 @@ class ResidentSpec extends SparkSpec {
   }
 
   test("two reads of one parquet path around an overwrite never share a node leaf") {
-    val dir = java.nio.file.Files.createTempDirectory("resident").toString
+    val dir = tempDir("resident")
     def write(name: String): Unit =
       Seq(("k", "Entity", name, "", "")).toDF("node_key", "node_type", "name", "body", "conv_id")
         .write.mode("overwrite").parquet(dir)

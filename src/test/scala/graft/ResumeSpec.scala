@@ -30,8 +30,8 @@ class ResumeSpec extends SparkSpec {
 
   test("kill-after-stage-2 resume: identical outputs, no recomputation of committed stages") {
     val t = SparkTestSession.transcripts
-    val dirFull = Files.createTempDirectory("graft-full").toString
-    val dirKilled = Files.createTempDirectory("graft-killed").toString
+    val dirFull = tempDir("graft-full")
+    val dirKilled = tempDir("graft-killed")
 
     // uninterrupted run -> the expected final tables
     val full = CheckpointedBuild.run(spark, t, dirFull, "run-full")
@@ -73,7 +73,7 @@ class ResumeSpec extends SparkSpec {
 
   test("a kill between a stage's data write and its manifest: the resume recomputes it") {
     val t = SparkTestSession.transcripts
-    val dir = Files.createTempDirectory("graft-stray").toString
+    val dir = tempDir("graft-stray")
     val input = CheckpointedBuild.inputIdentity(t)
     val killed = new StageRunner(spark, dir, "run-killed", input)
     val t1 = killed.run(Stages.Transcripts)(t)
@@ -97,13 +97,13 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("a resume over another corpus fails, naming the committed table") {
-    val dir = Files.createTempDirectory("graft-othercorpus").toString
+    val dir = tempDir("graft-othercorpus")
     Main.run(spark, sf0001, dir, "run-small")
     val sf001 = Paths.get(sf0001).resolveSibling("sf0.01").toString
     val e = intercept[IllegalStateException](Main.run(spark, sf001, dir, "run-big"))
     assert(e.getMessage.contains(s"$dir/transcripts"), e.getMessage)
     // a committed stage that records no corpus at all fails the same way
-    val bare = Files.createTempDirectory("graft-bare").toString
+    val bare = tempDir("graft-bare")
     SnapshotTable.commit(SparkTestSession.transcripts, s"$bare/transcripts", "transcripts")
     val e2 = intercept[IllegalStateException](Main.run(spark, sf0001, bare, "run-bare"))
     assert(e2.getMessage.contains(s"$bare/transcripts"), e2.getMessage)
@@ -111,7 +111,7 @@ class ResumeSpec extends SparkSpec {
 
   test("a computed stage costs exactly its snapshot write") {
     val df = SparkTestSession.transcripts.where(col("turn_idx") < 3).localCheckpoint()
-    val dir = Files.createTempDirectory("graft-overhead").toString
+    val dir = tempDir("graft-overhead")
     val writeJobs = jobsRun(SnapshotTable.commit(df, s"$dir/plain", "transcripts"))
     val r = new StageRunner(spark, dir, "run-overhead", "test-input")
     var back: DataFrame = null
@@ -138,7 +138,7 @@ class ResumeSpec extends SparkSpec {
     // two runners over one frame (one observed source), and one over other
     // rows, so counts delivered to the wrong runner show
     val inputs = Seq(t, t, t.where(col("turn_idx") < 3))
-    val dirs = inputs.map(_ => Files.createTempDirectory("graft-concurrent").toString)
+    val dirs = inputs.map(_ => tempDir("graft-concurrent"))
     val ready = new java.util.concurrent.CountDownLatch(inputs.size)
     val runs = dirs.zip(inputs).map { case (dir, df) =>
       Future {
@@ -158,14 +158,14 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("the node table Main.run commits is key-unique") {
-    val dir = Files.createTempDirectory("graft-mainkeys").toString
+    val dir = tempDir("graft-mainkeys")
     Main.run(spark, sf0001, dir, "run-keys")
     GraphBuild.validateKeyUniqueness(SnapshotTable.read(spark, s"$dir/${Stages.Nodes.name}").get)
   }
 
   test("re-run over a complete dir recomputes nothing (snapshot ids frozen)") {
     val t = SparkTestSession.transcripts
-    val dir = Files.createTempDirectory("graft-rerun").toString
+    val dir = tempDir("graft-rerun")
     CheckpointedBuild.run(spark, t, dir, "run-a")
     val ids1 = snapIds(dir)
     val again = CheckpointedBuild.run(spark, t, dir, "run-b")
@@ -175,7 +175,7 @@ class ResumeSpec extends SparkSpec {
 
   test("lineage rows carry per-partition counts and stage metrics") {
     val t = SparkTestSession.transcripts
-    val dir = Files.createTempDirectory("graft-lineage").toString
+    val dir = tempDir("graft-lineage")
     val start = new java.sql.Timestamp(System.currentTimeMillis())
     val res = CheckpointedBuild.run(spark, t, dir, "run-lin")
     val end = new java.sql.Timestamp(System.currentTimeMillis())
@@ -208,7 +208,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("committed and in-memory builds hold the same nodes, edges and mentions") {
-    val dir = Files.createTempDirectory("graft-sinks").toString
+    val dir = tempDir("graft-sinks")
     val res = CheckpointedBuild.run(spark, SparkTestSession.transcripts, dir, "run-sinks")
     val g = SparkTestSession.graph
     assertSameRows(g.nodes, res.nodes)
@@ -280,8 +280,8 @@ class ResumeSpec extends SparkSpec {
 
     // the prior run commits its state to the store, THEN its corpus files
     // are deleted — any read of the old corpus from here on throws
-    val storeDir = Files.createTempDirectory("graft-incstore").toString
-    val oldDir = Files.createTempDirectory("graft-oldcorpus").resolve("t").toString
+    val storeDir = tempDir("graft-incstore")
+    val oldDir = s"${tempDir("graft-oldcorpus")}/t"
     oldT.write.parquet(oldDir)
     val oldFromDisk = spark.read.parquet(oldDir)
     Incremental.commitState(spark, storeDir, oldFromDisk, Mentions.extract(oldFromDisk))
@@ -314,7 +314,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("snapshot commit is atomic: a stray tmp manifest is never visible") {
-    val dir = Files.createTempDirectory("graft-atomic").toString
+    val dir = tempDir("graft-atomic")
     import spark.implicits._
     val df = Seq((1, "a"), (2, "b")).toDF("id", "v")
     SnapshotTable.commit(df, s"$dir/t", "s1")

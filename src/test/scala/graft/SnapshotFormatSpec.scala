@@ -13,7 +13,7 @@ class SnapshotFormatSpec extends SparkSpec {
   import spark.implicits._
 
   test("A5: JSONL commit round-trips through the snapshot protocol") {
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl")
     val df = Seq((1L, "a", "x"), (2L, "b", "y"), (3L, "c", null))
       .toDF("id", "name", "opt")
     SnapshotTable.commit(df, s"$dir/t", "export", format = "json")
@@ -34,7 +34,7 @@ class SnapshotFormatSpec extends SparkSpec {
   }
 
   test("mixed-format snapshots: parquet + jsonl stages union on read") {
-    val dir = Files.createTempDirectory("graft-mixed").toString
+    val dir = tempDir("graft-mixed")
     val a = Seq((1L, "p")).toDF("id", "v")
     val b = Seq((2L, "j")).toDF("id", "v")
     SnapshotTable.commit(a, s"$dir/t", "s1")
@@ -45,7 +45,7 @@ class SnapshotFormatSpec extends SparkSpec {
   }
 
   test("object-store commit: conditional PUT loses the race and retries with N+1") {
-    val dir = Files.createTempDirectory("graft-putifabsent").toString
+    val dir = tempDir("graft-putifabsent")
     val prev = SnapshotTable.committer
     SnapshotTable.committer = PutIfAbsentCommitter
     try {
@@ -77,7 +77,7 @@ class SnapshotFormatSpec extends SparkSpec {
   }
 
   test("two writers commit to one table at once: both land, each with its own summary") {
-    val dir = Files.createTempDirectory("graft-twowriters").toString
+    val dir = tempDir("graft-twowriters")
     val table = s"$dir/t"
     // both data writes finish before either publishes, so both race for
     // snapshot 1
@@ -107,7 +107,7 @@ class SnapshotFormatSpec extends SparkSpec {
   }
 
   test("manifests are read as JSON: a partition-key-like string in a summary is not a file") {
-    val dir = Files.createTempDirectory("graft-jsonmanifest").toString
+    val dir = tempDir("graft-jsonmanifest")
     SnapshotTable.commit(Seq((1L, "a")).toDF("id", "v"), s"$dir/t", "s1",
       summary = Some(SnapshotTable.Json.createObjectNode().put("data/\"x", "data/y")))
     val m = SnapshotTable.manifest(s"$dir/t", 1)

@@ -30,8 +30,8 @@ class SnapshotIncrementalSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(convs.size >= 3, "fixture needs at least 3 conversations")
     val (g2, g3) = (convs(0), convs(1)) // modified, dropped
-    val corpus = Files.createTempDirectory("graft-snapcorpus").resolve("t").toString
-    val store = Files.createTempDirectory("graft-snapstore").toString
+    val corpus = s"${tempDir("graft-snapcorpus")}/t"
+    val store = tempDir("graft-snapstore")
 
     // v1: dir A = stable convs; dir B = g2 with OLD text + g3
     SnapshotTable.commit(
@@ -65,7 +65,7 @@ class SnapshotIncrementalSpec extends SparkSpec {
     */
   private def inputs(): Seq[(String, String, Set[String], Set[String], DataFrame)] = {
     val changedInput @ (corpus, _, _, _, v2) = fixture()
-    val storeNow = Files.createTempDirectory("graft-snapstore-now").toString
+    val storeNow = tempDir("graft-snapstore-now")
     Incremental.commitStateSnapshot(spark, storeNow, corpus,
       Mentions.extract(SnapshotTable.read(spark, corpus).get))
     Seq(changedInput, (corpus, storeNow, Set.empty[String], Set.empty[String], v2))

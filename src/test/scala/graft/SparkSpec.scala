@@ -30,6 +30,17 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   def sf0001: String = SparkTestSession.sf0001
 
+  /** A fresh dir under Spark's files root (`SparkFiles.getRootDirectory`),
+    * which Spark deletes when the context stops: a spec's tables leave
+    * nothing behind in the temp dir. Every spec makes its dirs here
+    * (ToolingSpec guards it).
+    */
+  def tempDir(prefix: String): String = {
+    spark.sparkContext // the root exists once the context has started
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(org.apache.spark.SparkFiles.getRootDirectory()), prefix).toString
+  }
+
   /** Spark jobs that `f` runs. */
   def jobsRun(f: => Unit): Int =
     graft.obs.Meter.measure(spark.sparkContext)(f)._2.jobs.toInt

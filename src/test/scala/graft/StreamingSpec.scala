@@ -80,7 +80,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming KG ingest: exactly-once mention store across restarts + delta-only catch-up") {
     import graft.extract.Mentions
     import graft.streaming.GraphStream
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-spec").toString
+    val base = tempDir("graft-stream-spec")
     val corpus = s"$base/corpus"
     val sink = s"$base/mentions"
     val ckpt = s"$base/ckpt"

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Drift guards for the bench's result parsing, the measurement module and
-  * the session definition: constants that name fields elsewhere fail here,
-  * not silently, and so does an entry point that builds its own session.
+/** Drift guards for the bench's result parsing, the measurement module,
+  * the session definition and the specs' scratch dirs: constants that name
+  * fields elsewhere fail here, not silently, and so does an entry point that
+  * builds its own session or a spec that leaves a dir in the temp dir.
   */
 class ToolingSpec extends AnyFunSuite {
 
@@ -20,21 +21,24 @@ class ToolingSpec extends AnyFunSuite {
     assert(BuildLeg.parse(Seq(r.line, "noise", r.copy(nodes = 7L).line)) == Seq(r, r.copy(nodes = 7L)))
   }
 
-  /** The main sources, other than those under `except`, whose text `bad` matches. */
-  private def mainSourcesWhere(except: String)(bad: String => Boolean): List[java.nio.file.Path] = {
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+  /** The sources under `root`, other than those whose path contains one of
+    * `except`, whose text `bad` matches.
+    */
+  private def sourcesWhere(root: String, except: String*)(bad: String => Boolean)
+      : List[java.nio.file.Path] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try {
       import scala.jdk.CollectionConverters._
       files.iterator.asScala
         .filter(_.toString.endsWith(".scala"))
-        .filterNot(_.toString.contains(except))
+        .filterNot(p => except.exists(p.toString.contains))
         .filter(p => bad(java.nio.file.Files.readString(p)))
         .toList
     } finally files.close()
   }
 
   test("only graft.obs adds a SparkListener or reads the GC MXBeans") {
-    val offenders = mainSourcesWhere("/graft/obs/") { src =>
+    val offenders = sourcesWhere("src/main", "/graft/obs/") { src =>
       src.contains("addSparkListener") || src.contains("getGarbageCollectorMXBeans")
     }
     assert(offenders.isEmpty, s"measure through graft.obs.Meter instead: ${offenders.mkString(", ")}")
@@ -42,8 +46,16 @@ class ToolingSpec extends AnyFunSuite {
 
   test("only graft.util.Session builds a SparkSession") {
     val builder = "SparkSession\\s*\\.\\s*builder".r
-    val offenders = mainSourcesWhere("/graft/util/Session.scala")(builder.findFirstIn(_).isDefined)
+    val offenders =
+      sourcesWhere("src/main", "/graft/util/Session.scala")(builder.findFirstIn(_).isDefined)
     assert(offenders.isEmpty, s"start from graft.util.Session instead: ${offenders.mkString(", ")}")
+  }
+
+  test("specs make their dirs through SparkSpec.tempDir, which Spark deletes") {
+    // a dir made in java.io.tmpdir outlives the test JVM
+    val offenders = sourcesWhere("src/test", "/SparkSpec.scala", "/ToolingSpec.scala")(
+      _.contains("createTempDirectory"))
+    assert(offenders.isEmpty, s"use SparkSpec.tempDir instead: ${offenders.mkString(", ")}")
   }
 
   test("graft.app.Main's session carries every Session conf") {

@@ -63,6 +63,20 @@ class TranscriptSpec extends SparkSpec {
     assert(GraftTestHooks.cachedPlans(spark) == before, "a build registered a cached plan it never releases")
   }
 
+  test("conv_id's user and day parts cut back to its user_id and ts") {
+    val e = Transcripts.enrichedFromEvents(spark, sf0001)
+    val day = Transcripts.convDay(col("conv_id"))
+    val badDay = e.where(day =!= date_format(col("ts"), "yyyyMMdd")).select("conv_id", "ts")
+    assert(badDay.isEmpty,
+      s"convDay is not the turn's day: ${badDay.limit(3).collect().mkString(", ")}")
+    // one user part per user_id and one user_id per user part
+    val pairs = e.select(Transcripts.convUser(col("conv_id")).as("u"), col("user_id")).distinct()
+    val n = pairs.count()
+    assert(n > 1)
+    assert(pairs.select("u").distinct().count() == n, "two user_ids share one convUser")
+    assert(pairs.select("user_id").distinct().count() == n, "one user_id has two convUsers")
+  }
+
   test("duplicated input rows are caught by the key-uniqueness guard") {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
@@ -105,7 +119,7 @@ class TranscriptSpec extends SparkSpec {
   }
 
   test("A4: the committed build extracts nothing from oversize turns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-a4").toString
+    val dir = tempDir("graft-a4")
     val res = CheckpointedBuild.run(spark, oversizeFixture, dir, "run-a4")
     val mentions = graft.checkpoint.SnapshotTable.read(spark, s"$dir/mentions").get
     assert(mentions.where(col("turn_idx") === 1).isEmpty)
