@@ -164,11 +164,8 @@ object SparkEntry {
   private val pagerankOf: Shared[DataFrame] = shared { (s, dir) =>
     val g = graphOf(s, dir)
     val proj = g.nodes.where(col("node_type").isin("Request", "Endpoint", "Function"))
-    val projKeys = proj.select("node_key")
-    val projEdges = g.edges
-      .where(col("edge_type").isin("CALLS", "HANDLER"))
-      .join(projKeys.withColumnRenamed("node_key", "src_key"), Seq("src_key"), "left_semi")
-      .join(projKeys.withColumnRenamed("node_key", "dst_key"), Seq("dst_key"), "left_semi")
+    val projEdges =
+      GraphOps.induced(g.edges.where(col("edge_type").isin("CALLS", "HANDLER")), proj.select("node_key"))
     Query.pagerank(proj, projEdges).lcp()
   }
 
@@ -1440,7 +1437,7 @@ object SparkEntry {
     Entry("kg_link_shared_ids", { (s, dir) =>
       val m = mentionsOf(s, dir)
       def withIds(df: org.apache.spark.sql.DataFrame) = df
-        .withColumn("res", regexp_extract(col("name"), "^/api/([a-z]+)", 1))
+        .withColumn("res", PathNorm.apiResource(col("name")))
         .withColumn("shared_id", regexp_extract(col("name"), "/([0-9]+)$", 1))
         .where(length(col("shared_id")) > 0)
       val reqIds = withIds(m.where(col("mention_type") === "Request"))
@@ -1465,7 +1462,7 @@ object SparkEntry {
       val t = corpusOf(s, dir)
       val pages = mentionsOf(s, dir)
         .where(col("mention_type") === "Request")
-        .select(regexp_extract(col("name"), "^/api/([a-z]+)", 1).as("page"))
+        .select(PathNorm.apiResource(col("name")).as("page"))
         .where(length(col("page")) > 0)
         .distinct()
       t.select("conv_id", "turn_idx", "text")

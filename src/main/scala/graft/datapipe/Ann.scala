@@ -103,35 +103,29 @@ object Ann {
   /** Exact top-k per query vector by quantized inner product; queries =
     * vec_id < nQueries. Deterministic tie-break (score desc, vec_id asc).
     */
-  def bruteTopKDot(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val q = emb
-      .where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = q
-      .crossJoin(emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv")))
-      .where(col("query_id") =!= col("cand_id"))
-      .withColumn("score", dotInt("qv", "cv"))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("cand_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "cand_id", "score", "rank")
-  }
+  def bruteTopKDot(emb: DataFrame, nQueries: Int, k: Int): DataFrame =
+    bruteTopK(emb, nQueries, k, "score", dotInt("qv", "cv"))
 
   /** Exact top-k per query by float cosine (HOF pipeline, no UDF). */
-  def bruteTopKCosine(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
+  def bruteTopKCosine(emb: DataFrame, nQueries: Int, k: Int): DataFrame =
+    bruteTopK(emb, nQueries, k, "cos", cosine("qv", "cv"))
+
+  /** Every query vector (vec_id < nQueries) against every other vector,
+    * scored by `score` over (qv, cv) into column `name`; the k best per
+    * query by (`name` desc, cand_id), ranked from 1.
+    */
+  private def bruteTopK(emb: DataFrame, nQueries: Int, k: Int, name: String, score: Column): DataFrame = {
     val q = emb
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = q
+    val w = Window.partitionBy("query_id").orderBy(col(name).desc, col("cand_id"))
+    q
       .crossJoin(emb.select(col("vec_id").as("cand_id"), col("embedding").as("cv")))
       .where(col("query_id") =!= col("cand_id"))
-      .withColumn("cos", cosine("qv", "cv"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    scored
+      .withColumn(name, score)
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      .select("query_id", "cand_id", "cos", "rank")
+      .select("query_id", "cand_id", name, "rank")
   }
 
   /** G4 vector search (mcp/src/graph/queries.ts:549-581): all candidates

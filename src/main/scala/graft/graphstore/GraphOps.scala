@@ -2,6 +2,7 @@ package graft.graphstore
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.link.PathNorm
 import graft.query.Resident
 
 /** Graph-store operator surface — re-expression of the reference's `Graph`
@@ -114,12 +115,17 @@ object GraphOps {
     val kept = nodes
       .join(convFilter, Seq("conv_id"), "left_semi")
       .unionByName(nodes.where(col("conv_id") === ""))
-    val keptKeys = kept.select(col("node_key"))
-    val keptEdges = edges
-      .join(keptKeys.withColumnRenamed("node_key", "src_key"), Seq("src_key"), "left_semi")
-      .join(keptKeys.withColumnRenamed("node_key", "dst_key"), Seq("dst_key"), "left_semi")
-    (kept, keptEdges)
+    (kept, induced(edges, kept.select(col("node_key"))))
   }
+
+  /** The edges of the subgraph induced by `keys` (one column, `node_key`):
+    * those whose `src_key` and `dst_key` are both keys. Two left-semi prunes
+    * of the edge table against the key set.
+    */
+  def induced(edges: DataFrame, keys: DataFrame): DataFrame =
+    edges
+      .join(keys.withColumnRenamed("node_key", "src_key"), Seq("src_key"), "left_semi")
+      .join(keys.withColumnRenamed("node_key", "dst_key"), Seq("dst_key"), "left_semi")
 
   /** D23 get_graph_size / key sets: per-type counts for parity checks. */
   def graphSize(nodes: DataFrame, edges: DataFrame): DataFrame =
@@ -247,7 +253,7 @@ object GraphOps {
     */
   def endpointGroups(endpointIds: DataFrame): DataFrame =
     endpointIds
-      .withColumn("grp", regexp_extract(col("name"), "^(/[^/]+/[^/]+)", 1))
+      .withColumn("grp", PathNorm.endpointGroup(col("name")))
       .groupBy("grp")
       .agg(
         count(lit(1)).as("n_endpoints"),

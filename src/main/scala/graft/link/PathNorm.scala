@@ -49,18 +49,16 @@ object PathNorm {
   private def rtrimSlash(c: Column): Column =
     when(c =!= "/", regexp_replace(c, "/+$", "")).otherwise(c)
 
-  /** link_api_nodes (E1, linker.rs:362-396): Request→Endpoint CALLS edges on
-    * (canonical path, verb).
-    *
-    * The reference first DEDUPLICATES endpoints by (name, file, verb)
-    * (D11, btreemap_graph.rs:352-372) and links requests against that
-    * endpoint index — never against every declaration site. We do the same:
-    * the build side is `distinct (canonical path, verb)` (dimension-sized →
-    * broadcast), so a request links to exactly one endpoint identity and the
-    * join can never blow up quadratically on popular endpoints.
-    *
-    * Output: one row per request mention with its endpoint identity key.
+  /** D14 endpoint group (btreemap_graph.rs:523-602): a path's `/a/b`
+    * prefix, "" for a shorter path.
     */
+  def endpointGroup(path: Column): Column = regexp_extract(path, "^(/[^/]+/[^/]+)", 1)
+
+  /** B12 API resource: the lower-case `x` of a path `/api/x...`, "" for
+    * any other path.
+    */
+  def apiResource(path: Column): Column = regexp_extract(path, "^/api/([a-z]+)", 1)
+
   /** E4 INDIRECT test linking (linker.rs:96-134): requests reachable from an
     * IntegrationTest through its helper functions — test -CALLS-> helper,
     * helper -CALLS-> nested helper (ONE recursion level, matching
@@ -136,6 +134,18 @@ object PathNorm {
       .distinct()
   }
 
+  /** link_api_nodes (E1, linker.rs:362-396): Request→Endpoint CALLS edges on
+    * (canonical path, verb).
+    *
+    * The reference first DEDUPLICATES endpoints by (name, file, verb)
+    * (D11, btreemap_graph.rs:352-372) and links requests against that
+    * endpoint index — never against every declaration site. We do the same:
+    * the build side is `distinct (canonical path, verb)` (dimension-sized →
+    * broadcast), so a request links to exactly one endpoint identity and the
+    * join can never blow up quadratically on popular endpoints.
+    *
+    * Output: one row per request mention with its endpoint identity key.
+    */
   def linkApi(requests: DataFrame, endpoints: DataFrame): DataFrame = {
     val req = requests
       .withColumn("norm_path", canonical(normalizeFrontend(col("path"))))

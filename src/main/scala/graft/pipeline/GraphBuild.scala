@@ -139,7 +139,7 @@ object GraphBuild {
     * memory.
     */
   def build(spark: SparkSession, transcripts: DataFrame): Graph =
-    Stages.run(spark, transcripts, Stages.InMemory)
+    Stages.run(spark, transcripts, Stages.InMemory())
 
   /** The stage sequence over upstream stages that are already committed
     * tables read back from disk: mentions, call resolution, entity
@@ -156,18 +156,13 @@ object GraphBuild {
       resolvedCalls: DataFrame,
       resolvedEntities: DataFrame,
       apiLinks: DataFrame
-  ): Graph = {
-    val committed = Map(
+  ): Graph =
+    Stages.run(spark, transcripts, Stages.InMemory(Map(
       Stages.Transcripts -> transcripts,
       Stages.MentionTable -> mentions,
       Stages.ResolvedCalls -> resolvedCalls,
       Stages.ResolvedEntities -> resolvedEntities,
-      Stages.ApiLinks -> apiLinks)
-    Stages.run(spark, transcripts, new Stages.Sink {
-      def run(stage: Stages.Stage)(compute: => DataFrame): DataFrame =
-        committed.getOrElse(stage, compute)
-    })
-  }
+      Stages.ApiLinks -> apiLinks)))
 
   /** The node/edge stage: everything downstream of resolution. `t` is the
     * conv_id-partitioned corpus checkpoint and `tMeta` its text-free twin;
@@ -188,9 +183,7 @@ object GraphBuild {
     val requests = mentions.where(col("mention_type") === "Request")
     val tools = mentions.where(col("mention_type") === "Tool")
     val toolTurns = tMeta.where(col("tool").isNotNull)
-    // D14 endpoint group (longest /a/b prefix) and B12 request resource
-    def epGroup(path: Column): Column = regexp_extract(path, "^(/[^/]+/[^/]+)", 1)
-    def apiResource(path: Column): Column = regexp_extract(path, "^/api/([a-z]+)", 1)
+    import PathNorm.{apiResource, endpointGroup}
 
     // F2 wiring (north rule: canonicalize BEFORE materializing): after the
     // dictionary resolves aliases to canonical ids, MinHash-LSH blocking +
@@ -359,7 +352,7 @@ object GraphBuild {
 
     // endpoint identity = (canonical path, verb) after D11 dedup + D14 grouping
     val epNodes = mkNodes(epIds, NodeTypes.Endpoint, col("name"), verb = Some(col("verb")),
-      meta = map(lit("verb"), col("verb"), lit("group"), epGroup(col("name"))))
+      meta = map(lit("verb"), col("verb"), lit("group"), endpointGroup(col("name"))))
 
     // Request meta: verb always; nested_in when a handler scope encloses it
     // (map_filter drops the null) — the reference stores both in NodeData
@@ -391,7 +384,7 @@ object GraphBuild {
     // D14 longest-prefix endpoint groups as first-class parent nodes
     // (process_endpoint_groups, btreemap_graph.rs:523-602)
     val groupIds = epIds
-      .select(epGroup(col("name")).as("name"))
+      .select(endpointGroup(col("name")).as("name"))
       .where(length(col("name")) > 0)
       .distinct()
     val groupNodes = mkNodes(groupIds, NodeTypes.EndpointGroup, col("name"))
@@ -634,7 +627,7 @@ object GraphBuild {
 
     // D15 class_inherits analog: longest-prefix group -PARENT_OF-> endpoint
     val parentOfE = epIds
-      .withColumn("grp", epGroup(col("name")))
+      .withColumn("grp", endpointGroup(col("name")))
       .where(length(col("grp")) > 0)
       .select(edge(EdgeTypes.ParentOf, key(NodeTypes.EndpointGroup, col("grp")),
         key(NodeTypes.Endpoint, col("name"), verb = Some(col("verb"))),

@@ -24,10 +24,9 @@ import graft.util.Ckpt._
   *    job — so a resumed run reads committed stages instead of computing them;
   *  - [[GraphBuild.build]] keeps every stage in memory ([[InMemory]]);
   *  - [[GraphBuild.buildFromStages]] serves already-committed upstream
-  *    tables back to the sequence.
-  *
-  * The incremental rebuild and streaming ingest maintain the mention table
-  * themselves and enter at the mentions stage ([[fromMentions]]).
+  *    tables back to the sequence (an [[InMemory]] that holds them);
+  *  - the incremental rebuild and streaming ingest maintain the mention
+  *    table themselves and serve it to the sequence ([[fromMentions]]).
   */
 object Stages {
 
@@ -65,18 +64,14 @@ object Stages {
     def run(stage: Stage)(compute: => DataFrame): DataFrame
   }
 
-  /** Keeps every stage in this process: later stages read the stage's plan
-    * itself, truncated only by the local checkpoints the sequence takes for
-    * every sink (corpus, mentions and the node/edge stage's shared
-    * subtrees).
+  /** Keeps every stage in this process: serves the stages it holds and
+    * computes the rest. Later stages read a stage's plan itself, truncated
+    * only by the local checkpoints the sequence takes for every sink
+    * (corpus, mentions and the node/edge stage's shared subtrees).
     */
-  object InMemory extends Sink {
-    def run(stage: Stage)(compute: => DataFrame): DataFrame = compute
+  final case class InMemory(stages: Map[Stage, DataFrame] = Map.empty) extends Sink {
+    def run(stage: Stage)(compute: => DataFrame): DataFrame = stages.getOrElse(stage, compute)
   }
-
-  /** The full sequence over a transcript corpus. */
-  def run(spark: SparkSession, transcripts: DataFrame, sink: Sink): GraphBuild.Graph =
-    sequence(spark, transcripts, sink, Mentions.extract)
 
   /** The sequence over a mention table the caller maintains — the one
     * incremental rebuild ([[Incremental.rebuild]]: committed mentions of
@@ -90,14 +85,10 @@ object Stages {
       transcripts: DataFrame,
       mentions: DataFrame
   ): GraphBuild.Graph =
-    sequence(spark, transcripts, InMemory, _ => mentions)
+    run(spark, transcripts, InMemory(Map(MentionTable -> mentions)))
 
-  private def sequence(
-      spark: SparkSession,
-      transcripts: DataFrame,
-      sink: Sink,
-      mentionsOf: DataFrame => DataFrame
-  ): GraphBuild.Graph = {
+  /** The full sequence over a transcript corpus, each stage through `sink`. */
+  def run(spark: SparkSession, transcripts: DataFrame, sink: Sink): GraphBuild.Graph = {
     // Spread the corpus across shuffle.partitions tasks keyed by conv_id
     // before anything reads it: the raw input is often few/small parquet
     // files (one scan task), which would serialize the extraction pass and
@@ -111,7 +102,7 @@ object Stages {
     // carries the whole scan->extract plan through analysis + AQE
     // re-planning. Truncating to RDD leaves makes every branch plan
     // O(branch), not O(pipeline).
-    val mentions = sink.run(MentionTable)(mentionsOf(t)).lcp()
+    val mentions = sink.run(MentionTable)(Mentions.extract(t)).lcp()
     // Text-free twin of the corpus checkpoint: resolution and ~6 dimension/
     // edge branches need only (conv_id, turn_idx, role, tool), but an
     // RDD-leaf scan always deserializes whole rows — through the narrow twin

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.graphstore.GraphOps
 import graft.schema.{EdgeTypes, NodeTypes}
 import graft.util.Ckpt._
 
@@ -43,14 +44,11 @@ object Importance {
     val pn = nodes
       .where(col("node_type").isin(ProjTypes: _*))
       .select("node_key", "node_type")
-    val keys = pn.select("node_key")
-    val pe = edges
+    val pairs = edges
       .where(col("edge_type").isin(ProjEdges: _*))
       .select("src_key", "dst_key")
       .distinct()
-      .join(keys.withColumnRenamed("node_key", "src_key"), Seq("src_key"), "left_semi")
-      .join(keys.withColumnRenamed("node_key", "dst_key"), Seq("dst_key"), "left_semi")
-    (pn, pe)
+    (pn, GraphOps.induced(pairs, pn.select("node_key")))
   }
 
   /** Floor-index percentile (detector.ts:12-16): the value at 0-based index

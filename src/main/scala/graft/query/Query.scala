@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.graphstore.GraphOps
 import graft.util.Ckpt._
 
 /** Query/serving operators over the materialized graph (reference §2.G:
@@ -77,56 +78,59 @@ object Query {
   ): DataFrame =
     bfs(Adjacency.leaf(edges, Seq(Adjacency.Leg(edgeTypes, forward = !reverse))), start, depth)
 
-  /** Min-depth BFS of `start` over a resident (from, to) leaf. The start and
-    * every level are LAZY checkpoints: one job per level both materializes
-    * the level and counts it for the loop test. The test is a full
-    * aggregate, never `take(1)`/`head`: those read partitions incrementally
-    * and would leave a lazy checkpoint partly computed, for a job of its own
-    * to fill in. The level at `depth` needs no test, so it stays lazy until
-    * the caller's action reads it.
+  /** The one level walk behind [[bfs]], [[repoMap]] and [[shortestPath]]
+    * (APOC expandConfig, queries.ts:616-849). `start` is level 0;
+    * `step(level, seen, d)` builds level d + 1, where `seen` is the union of
+    * `keep(level)` over levels 0..d (a deduplicating step anti-joins it, so
+    * `keep` holds only what the step reads). `more(level, d)` is asked after
+    * each level d = 1..depth: return false at d == `depth` to leave the last
+    * level lazy, or read the last level there, as [[shortestPath]] does.
+    * Each level is a LAZY checkpoint that the one job of a full aggregate in
+    * `more` materializes; never `take(1)`/`head`, which read partitions
+    * incrementally and would leave it partly computed. Returns `seen`.
     */
-  private def bfs(leaf: DataFrame, start: DataFrame, depth: Int): DataFrame = withAqeOff(leaf.sparkSession) {
-    var visited = start.select(col("node_key"), lit(0).as("depth"))
-      .repartition(col("node_key")).lcp(eager = false)
-    var frontier = visited
-    var more = true
+  private def levels(start: DataFrame, depth: Int, keep: DataFrame => DataFrame = identity)(
+      step: (DataFrame, DataFrame, Int) => DataFrame)(
+      more: (DataFrame, Int) => Boolean): DataFrame = withAqeOff(start.sparkSession) {
+    var level = start.lcp(eager = false)
+    var seen = keep(level)
     var d = 0
-    while (d < depth && more) {
-      // shuffled-hash: build on the (small) frontier, STREAM the
-      // pre-partitioned edge leaf — no per-level sort of |E|
-      val next = frontier
-        .hint("shuffle_hash")
-        .join(leaf, frontier("node_key") === leaf("from"))
-        .select(col("to").as("node_key"))
-        .distinct() // on node_key alone (depth is constant this level), so
-        // the dedup shuffle lands on hash(node_key) and the anti-join below
-        // plus the NEXT level's edge join both line up exchange-free
-        .withColumn("depth", lit(d + 1))
-        // hash, never broadcast: a small visited set would otherwise be
-        // broadcast, a job of its own per level, where the hash join reads
-        // it inside the level's one job
-        .join(visited.select("node_key").hint("shuffle_hash"), Seq("node_key"), "left_anti")
-        .lcp(eager = false) // truncate iterative lineage (SURVEY.md §7.5)
-      // the level's one job, where another level could follow (an empty
-      // start ends here)
-      more = d + 1 < depth && next.count() > 0
-      // visited accumulates as a LAZY union of the per-level checkpoints —
-      // re-checkpointing it each level would rewrite the whole visited set
-      // (O(depth x |visited|) materialized rows); the anti-join above scans
-      // the <= depth checkpointed leaves instead, which is strictly less
-      // work. For DEEP expansions the union would still grow the logical
-      // plan quadratically (each level re-plans a union of d leaves), so the
-      // accumulator is compacted to a single leaf every 8 levels — bounded
-      // plan width at depth >> the query surface's usual <= 4, while the
-      // shallow common case never pays a rewrite. The compaction is lazy
-      // too: the next level's job (or the caller's action) fills it.
-      visited = visited.unionByName(next)
-      if ((d + 1) % 8 == 0) visited = visited.lcp(eager = false)
-      frontier = next
+    var go = true
+    while (d < depth && go) {
+      level = step(level, seen, d).lcp(eager = false) // truncate iterative lineage (SURVEY.md §7.5)
       d += 1
+      go = more(level, d)
+      // a LAZY union of the level checkpoints, which an anti-join scans
+      // leaf by leaf (re-checkpointing it each level would rewrite it
+      // whole); compacted, lazily, every 8 levels so that a deep walk's plan
+      // stays bounded while the usual depth <= 4 never pays a rewrite
+      seen = seen.unionByName(keep(level))
+      if (d % 8 == 0) seen = seen.lcp(eager = false)
     }
-    visited
+    seen
   }
+
+  /** Min-depth BFS of `start` over a resident (from, to) leaf: each level
+    * keeps the nodes no earlier level reached, at the level's depth.
+    */
+  private def bfs(leaf: DataFrame, start: DataFrame, depth: Int): DataFrame =
+    levels(start.select(col("node_key"), lit(0).as("depth")).repartition(col("node_key")), depth) {
+      (level, seen, d) =>
+        // shuffled-hash: build on the (small) level, STREAM the
+        // pre-partitioned edge leaf — no per-level sort of |E|
+        level
+          .hint("shuffle_hash")
+          .join(leaf, level("node_key") === leaf("from"))
+          .select(col("to").as("node_key"))
+          .distinct() // on node_key alone (depth is constant this level), so
+          // the dedup shuffle lands on hash(node_key) and the anti-join below
+          // plus the NEXT level's edge join both line up exchange-free
+          .withColumn("depth", lit(d + 1))
+          // hash, never broadcast: a small seen set would otherwise be
+          // broadcast, a job of its own per level, where the hash join reads
+          // it inside the level's one job
+          .join(seen.select("node_key").hint("shuffle_hash"), Seq("node_key"), "left_anti")
+    } { (level, d) => d < depth && level.count() > 0 } // an empty start ends here
 
   /** G9 shortest_path: BFS distance from src to dst over both directions;
     * returns min distance (queries.ts:820-849 — APOC shortestPath analog).
@@ -186,24 +190,22 @@ object Query {
     */
   def repoMap(nodes: DataFrame, edges: DataFrame, maxDepth: Int): DataFrame = withAqeOff(nodes.sparkSession) {
     // the resident CONTAINS leaf keeps its partitioning, as does the labels
-    // checkpoint: the per-level joins re-shuffle neither relation
+    // checkpoint (taken with AQE off, so it records its hash partitioning):
+    // the per-level joins re-shuffle neither relation
     val contains = Adjacency.leaf(edges, Seq(Adjacency.Leg(Seq("CONTAINS"), forward = true)))
     val labels = nodes
       .select(col("node_key"), col("node_type"), col("name"))
       .repartition(col("node_key"))
       .lcp(eager = false)
-    var level = nodes
+    val root = nodes
       .where(col("node_type") === "Corpus")
       .select(col("node_key"), col("node_type"), col("name"), lit(0).as("depth"),
         col("name").as("sort_path"))
-      .lcp(eager = false)
-    var out = level
-    var more = true
-    var d = 0
-    while (d < maxDepth && more) {
+    // CONTAINS is a tree: no level reaches a node twice, so no dedup
+    levels(root, maxDepth) { (level, _, d) =>
       // both joins hash-build on the level-sized side and stream the leaf
       // and labels; as in bfs, a broadcast would cost a job of its own
-      val next = level
+      level
         .select(col("node_key").as("from"), col("sort_path").as("parent_path"))
         .hint("shuffle_hash")
         .join(contains, Seq("from"))
@@ -212,15 +214,10 @@ object Query {
         .join(labels, Seq("node_key"))
         .select(col("node_key"), col("node_type"), col("name"), lit(d + 1).as("depth"),
           concat(col("parent_path"), lit("/"), col("name")).as("sort_path"))
-        .lcp(eager = false) // truncate iterative lineage
-      more = d + 1 < maxDepth && next.count() > 0 // the level's one job, as in bfs
-      out = out.unionByName(next)
-      level = next
-      d += 1
-    }
-    out.select(
-      col("sort_path"),
-      concat(expr("repeat('  ', depth)"), col("node_type"), lit(" "), col("name")).as("render"))
+    } { (level, d) => d < maxDepth && level.count() > 0 }
+      .select(
+        col("sort_path"),
+        concat(expr("repeat('  ', depth)"), col("node_type"), lit(" "), col("name")).as("render"))
   }
 
   /** G7 get_file_map (mcp/src/graph/graph.ts:417-434): suffix lookup of one
@@ -262,17 +259,14 @@ object Query {
   /** G9 node-type constraint (mcp/src/graph/queries.ts:820-849): the
     * reference's shortest_path restricts traversal to
     * Page|Function|Request|Endpoint|Datamodel nodes — the BFS edge relation
-    * keeps only edges whose BOTH ends are in the typed projection. Two
-    * left-semi prunes of the edge table against the (small) typed key set;
-    * at scale both are broadcast-able dimension joins, and the pruned
-    * relation is what [[shortestPath]]'s resident leaf partitions.
+    * keeps only edges whose BOTH ends are in the typed projection
+    * ([[GraphOps.induced]]: two left-semi prunes of the edge table against
+    * the small typed key set); at scale both are broadcast-able dimension
+    * joins, and the pruned relation is what [[shortestPath]]'s resident
+    * leaf partitions.
     */
-  def typeProjectedEdges(nodes: DataFrame, edges: DataFrame, types: Seq[String]): DataFrame = {
-    val keys = nodes.where(col("node_type").isin(types: _*)).select("node_key")
-    edges
-      .join(keys.withColumnRenamed("node_key", "src_key"), Seq("src_key"), "left_semi")
-      .join(keys.withColumnRenamed("node_key", "dst_key"), Seq("dst_key"), "left_semi")
-  }
+  def typeProjectedEdges(nodes: DataFrame, edges: DataFrame, types: Seq[String]): DataFrame =
+    GraphOps.induced(edges, nodes.where(col("node_type").isin(types: _*)).select("node_key"))
 
   /** The reference's G9 traversal projection (queries.ts:820-849). */
   val PathNodeTypes: Seq[String] =
@@ -289,42 +283,38 @@ object Query {
       startKey: String,
       targetKey: String,
       maxDepth: Int
-  ): DataFrame = withAqeOff(edges.sparkSession) {
+  ): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // resident, deduplicated 2|E| leaf partitioned on `from`: the per-level
     // join below never re-shuffles it
     val undirected = Adjacency.leaf(edges, Adjacency.Undirected)
-
-    // each node carries its path: the path of its min parent, then itself
-    var visited = Seq(startKey).toDF("node_key").lcp(eager = false)
-    var frontier = Seq((startKey, startKey)).toDF("node_key", "path")
-    var found = if (startKey == targetKey) Some(startKey) else None
-    var exhausted = false
-    var d = 0
-    while (d < maxDepth && found.isEmpty && !exhausted) {
-      val next = frontier
-        .hint("shuffle_hash") // build on the frontier, stream the 2|E| leaf
-        .join(undirected, frontier("node_key") === undirected("from"))
-        .groupBy(col("to").as("node_key"))
-        // min over (parent, path): the min parent, with the path through it
-        .agg(min(struct(col("from").as("parent"), concat(col("path"), lit("->"), col("to")).as("path")))
-          .getField("path").as("path"))
-        .join(visited.hint("shuffle_hash"), Seq("node_key"), "left_anti") // as in bfs
-        .lcp(eager = false)
-      // lazy union (see bfs) + ONE job per level: the fused aggregate that
-      // answers both loop conditions — frontier emptiness and the target's
-      // path — is also what materializes the level
-      visited = visited.unionByName(next.select("node_key"))
-      frontier = next
-      val (n, hit) = next
+    // (path, depth) of the target, once a level reaches it
+    var found = if (startKey == targetKey) Some((startKey, 0)) else None
+    // each node carries its path: the path of its min parent, then itself;
+    // `seen` keeps node keys only, all the anti-join reads
+    levels(Seq((startKey, startKey)).toDF("node_key", "path"), if (found.isEmpty) maxDepth else 0,
+      keep = _.select("node_key")) {
+      (level, seen, _) =>
+        level
+          .hint("shuffle_hash") // build on the level, stream the 2|E| leaf
+          .join(undirected, level("node_key") === undirected("from"))
+          .groupBy(col("to").as("node_key"))
+          // min over (parent, path): the min parent, with the path through it
+          .agg(min(struct(col("from").as("parent"), concat(col("path"), lit("->"), col("to")).as("path")))
+            .getField("path").as("path"))
+          .join(seen.hint("shuffle_hash"), Seq("node_key"), "left_anti") // as in bfs
+    } { (level, d) =>
+      // asked at every level, the last included: the one fused aggregate
+      // answers both loop conditions — level emptiness and the target's
+      // path — and is also what materializes the level
+      val (n, hit) = level
         .agg(count(lit(1)), min(when(col("node_key") === targetKey, col("path"))))
         .as[(Long, Option[String])].first()
-      exhausted = n == 0L
-      found = hit
-      d += 1
+      found = hit.map((_, d))
+      n > 0L && hit.isEmpty
     }
-    found.map(p => (p, d)).toSeq.toDF("path", "depth")
+    found.toSeq.toDF("path", "depth")
   }
 
   /** G10 pagerank: fixed 20 iterations, damping 0.85 over the projected
@@ -349,7 +339,7 @@ object Query {
     // exactly ONCE per iteration (the contribs join), which keeps the loop's
     // checkpoint on the SMALL post-aggregation table instead of the full
     // rank table and drops the per-iteration dangling semi-join/scan.
-    val sink = " dangling-sink " //   cannot appear in node keys
+    val sink = "\u0000dangling-sink\u0000" // NUL cannot appear in node keys
     val outDeg = edges.groupBy(col("src_key")).agg(count(lit(1)).as("out_deg"))
     val realLinks = edges
       .select("src_key", "dst_key")

@@ -26,16 +26,7 @@ import graft.util.Ckpt._
   */
 object CallResolver {
 
-  /** defs: FunctionDef mentions (conv_id, turn_idx, name). calls:
-    * FunctionCall mentions (conv_id, turn_idx, name). transcripts: the
-    * six-column corpus (supplies the per-conversation import/tool map for
-    * the `import` strategy, C3). Output: (conv_id, turn_idx, name,
-    * resolved_conv, resolved_name, confidence, strategy) — resolved_name
-    * differs from name only for the `operand` strategy, which resolves
-    * through the alias dictionary to a sibling handler of the same
-    * canonical entity (the receiver's data_type, call_finder.rs:90-108).
-    */
-  /** Default resolution path: the same 7-strategy semantics expressed as a
+  /** Default resolution path: the 7-strategy semantics expressed as a
     * SINGLE chain of left joins + a priority CASE — exactly the shape of the
     * DuckDB oracle's rcalls CTE. Because every strategy index is a
     * deterministic per-row function, the first-hit-wins remainder chain and
@@ -43,6 +34,15 @@ object CallResolver {
     * [[resolveCallsCascade]]); the flat form runs as ONE job with no
     * per-pass materialization barriers, which removes the cascade's
     * driver-sequential Amdahl term (~25 s of fixed cost at bench scale).
+    *
+    * defs: FunctionDef mentions (conv_id, turn_idx, name). calls:
+    * FunctionCall mentions (conv_id, turn_idx, name). transcripts: the
+    * six-column corpus (supplies the per-conversation import/tool map for
+    * the `import` strategy, C3). Output: (conv_id, turn_idx, name,
+    * resolved_conv, resolved_name, confidence, strategy) — resolved_name
+    * differs from name only for the `operand` strategy, which resolves
+    * through the alias dictionary to a sibling handler of the same
+    * canonical entity (the receiver's data_type, call_finder.rs:90-108).
     */
   def resolveCalls(calls: DataFrame, defs: DataFrame, transcripts: DataFrame): DataFrame = {
     val spark = transcripts.sparkSession

@@ -11,30 +11,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arrives as a stream; these give the engine its Structured Streaming
   * surface:
   *
-  *  - [[windowedCounts]]: tumbling-window aggregation (batch twin is
-  *    oracle-checked; the streaming twin over the same source is asserted
-  *    equal in StreamingSpec via readStream + processAllAvailable).
+  *  - [[windowedCounts]]: tumbling-window aggregation, one definition for
+  *    a batch and a streaming source (the batch result is oracle-checked;
+  *    the streaming result over the same rows is asserted equal in
+  *    StreamingSpec via a memory stream + processAllAvailable).
   *  - [[sessionize]]: 30-min-gap sessionization — batch twin uses a lag
   *    window; the streaming twin uses flatMapGroupsWithState.
   */
 object Sessions {
 
   /** Tumbling 1-hour windows per event_type: count + value cents (integer
-    * cents avoid cross-engine float-sum drift in the oracle).
+    * cents avoid cross-engine float-sum drift in the oracle). The 2-hour
+    * watermark bounds a stream's state; a batch plan drops it (Catalyst's
+    * `EliminateEventTimeWatermark`).
     */
   def windowedCounts(events: DataFrame): DataFrame =
-    events
-      .groupBy(
-        window(col("ts"), "1 hour").getField("start").as("window_start"),
-        col("event_type")
-      )
-      .agg(
-        count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents")
-      )
-
-  /** Streaming twin of [[windowedCounts]] (same plan shape + watermark). */
-  def windowedCountsStream(events: DataFrame): DataFrame =
     events
       .withWatermark("ts", "2 hours")
       .groupBy(

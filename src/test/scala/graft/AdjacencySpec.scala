@@ -99,6 +99,28 @@ class AdjacencySpec extends SparkSpec {
     assert(map == rows(Query.repoMap(nodes, fresh(edges), 2)))
   }
 
+  test("a 19-level walk crosses the level loop's compaction and keeps its rows") {
+    // a 20-node CONTAINS chain c0 -> c1 -> ... -> c19: the union of levels
+    // is compacted after levels 8 and 16
+    val n = 20
+    val chain = frame((0 until n - 1).map(i => ("CONTAINS", s"c$i", s"c${i + 1}")))
+    def prefix(i: Int, sep: String, name: Int => String) = (0 to i).map(name).mkString(sep)
+    assert(rows(Query.expand(chain, Seq("c0").toDF("node_key"), n - 1)) ==
+      (0 until n).map(i => s"[c$i,$i]").sorted)
+    assert(rows(Query.shortestPath(chain, "c0", s"c${n - 1}", n - 1)) ==
+      Seq(s"[${prefix(n - 1, "->", j => s"c$j")},${n - 1}]"))
+
+    val nodes = (0 until n)
+      .map(i => (s"c$i", if (i == 0) "Corpus" else "Turn", s"m$i"))
+      .toDF("node_key", "node_type", "name")
+    val map = Query.repoMap(nodes, chain, n - 1)
+    val leaves = map.queryExecution.analyzed.collectLeaves().size
+    assert(leaves <= 9, s"a ${n - 1}-level repoMap plan holds $leaves leaves")
+    assert(rows(map) == (0 until n).map { i =>
+      s"[${prefix(i, "/", j => s"m$j")},${"  " * i}${if (i == 0) "Corpus" else "Turn"} m$i]"
+    }.sorted)
+  }
+
   test("a repeat expand over the same edge frame shuffles frontier-sized data") {
     val big = frame(edgeRows(n = 20000, m = 40000, seed = 11))
     val firstBytes = shuffleWritten(Query.expand(big, start, 2).count())

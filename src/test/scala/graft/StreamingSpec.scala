@@ -31,7 +31,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(rows.toIndexedSeq)
     val streamDf = mem.toDF().toDF("event_id", "ts", "event_type", "value")
     val q = Sessions
-      .windowedCountsStream(streamDf)
+      .windowedCounts(streamDf)
       .writeStream
       .format("memory")
       .queryName("wc_stream")

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drift guards for the bench's result parsing, the measurement module,
-  * the session definition and the specs' scratch dirs: constants that name
-  * fields elsewhere fail here, not silently, and so does an entry point that
-  * builds its own session or a spec that leaves a dir in the temp dir.
+  * the session definition, the specs' scratch dirs and the sources' bytes:
+  * constants that name fields elsewhere fail here, not silently, and so does
+  * an entry point that builds its own session, a spec that leaves a dir in
+  * the temp dir or a source that grep cannot read as text.
   */
 class ToolingSpec extends AnyFunSuite {
 
@@ -56,6 +57,13 @@ class ToolingSpec extends AnyFunSuite {
     val offenders = sourcesWhere("src/test", "/SparkSpec.scala", "/ToolingSpec.scala")(
       _.contains("createTempDirectory"))
     assert(offenders.isEmpty, s"use SparkSpec.tempDir instead: ${offenders.mkString(", ")}")
+  }
+
+  test("no Scala source holds a control character other than tab, newline or CR") {
+    // grep reads a file with a raw control byte as binary and skips it
+    def control(c: Char) = Character.isISOControl(c) && c != '\t' && c != '\n' && c != '\r'
+    val offenders = Seq("src", "kgbench/src").flatMap(sourcesWhere(_)(_.exists(control)))
+    assert(offenders.isEmpty, s"write control characters as escapes: ${offenders.mkString(", ")}")
   }
 
   test("graft.app.Main's session carries every Session conf") {
